@@ -1,6 +1,11 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.Consolidate
 
@@ -25,7 +30,10 @@ import graft.operators.Consolidate
   *    identical schemas (pandas' utf-8-sig does the same).
   *
   * Scale note: a multi-file CSV read is one partitioned scan (splittable
-  * per-file); the drift-tolerant consolidation is a no-shuffle union.
+  * per-file). The sniffed reads run one scan per (separator, header)
+  * group and build its schema from the sniffed header line, so they submit
+  * no job; the union of the groups is no-shuffle. A grouped scan does
+  * not keep file order: `orderCol` is [[consolidate]]'s order contract.
   */
 object CsvIngest {
   val CorruptCol = "_corrupt"
@@ -34,23 +42,45 @@ object CsvIngest {
     read(spark, Seq(path), sep)
 
   /** Multi-path variant of [[read]] — one partitioned scan over an
-    * explicit file list (the shape [[readSniffed]] needs to read each
-    * detected-dialect group in a single pass). */
-  def read(spark: SparkSession, paths: Seq[String], sep: String): DataFrame = {
-    def reader = spark.read
-      .option("sep", sep)
-      .option("header", "true")
-      .option("encoding", "UTF-8")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-    // The corrupt-record column only materializes when present in the
-    // schema; first pass reads just the header (no inferSchema → all
-    // strings), second pass appends the corrupt field.
-    val headerSchema = reader.csv(paths: _*).schema
-    val withCorrupt = org.apache.spark.sql.types.StructType(
-      headerSchema.fields :+ org.apache.spark.sql.types.StructField(
-        CorruptCol, org.apache.spark.sql.types.StringType, nullable = true))
-    stripBom(reader.schema(withCorrupt).csv(paths: _*))
+    * explicit file list. The header schema comes from Spark's own
+    * inference (one small job); [[readSniffed]] and [[consolidate]]
+    * skip that job by building the schema from the sniffed header line
+    * instead. */
+  def read(spark: SparkSession, paths: Seq[String], sep: String): DataFrame =
+    scan(spark, paths, sep, reader(spark, sep).csv(paths: _*).schema)
+
+  private def reader(spark: SparkSession, sep: String) = spark.read
+    .option("sep", sep)
+    .option("header", "true")
+    .option("encoding", "UTF-8")
+    .option("mode", "PERMISSIVE")
+    .option("columnNameOfCorruptRecord", CorruptCol)
+
+  /** The PERMISSIVE scan proper: the corrupt-record column only
+    * materializes when present in the schema, so it is appended to the
+    * (all-string) header schema here. */
+  private def scan(spark: SparkSession, paths: Seq[String], sep: String,
+                   header: StructType): DataFrame =
+    stripBom(reader(spark, sep).schema(header.add(CorruptCol, StringType))
+      .csv(paths: _*))
+
+  /** Spark's header schema for a file whose first non-empty line is
+    * `line`, built without a job by Spark's own inference rules
+    * (`TextInputCSVDataSource.inferFromDataset` with
+    * `inferSchema=false`): univocity-parse the line with the read's
+    * parser settings, name the fields with `makeSafeHeader` (empty →
+    * `_c<i>`, duplicates → `<name><i>`, case-folded unless
+    * `spark.sql.caseSensitive`), all strings. No line → no columns. */
+  private def headerSchema(spark: SparkSession, sep: String,
+                           line: Option[String]): StructType = {
+    val opts = new CSVOptions(Map("sep" -> sep, "header" -> "true",
+      "encoding" -> "UTF-8"), true, spark.conf.get("spark.sql.session.timeZone"))
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    line.flatMap(l => Option(new CsvParser(opts.asParserSettings).parseLine(l)))
+      .fold(new StructType()) { row =>
+        StructType(CSVUtils.makeSafeHeader(row, caseSensitive, opts)
+          .map(StructField(_, StringType, nullable = true)).toSeq)
+      }
   }
 
   /** Separator candidates the sniffer considers — the dialects the
@@ -108,10 +138,12 @@ object CsvIngest {
     *
     * `path` may be a file, a directory, or a glob. Hidden/metadata
     * entries (`_SUCCESS`, dotfiles) are skipped like Spark's own
-    * listing does. */
+    * listing does. Files are taken in path order, so the first-seen
+    * column order does not depend on the listing order. */
   def readSniffed(spark: SparkSession, path: String,
                   sampleBytes: Int = 8192): DataFrame = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
+    require(sampleBytes > 0, s"readSniffed: sampleBytes must be > 0, got $sampleBytes")
+    val hadoopPath = new Path(path)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val matched = Option(fs.globStatus(hadoopPath))
       .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
@@ -121,11 +153,25 @@ object CsvIngest {
     }.map(_.getPath)
       .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
     require(files.nonEmpty, s"readSniffed: no files match $path")
-    val byDialect = files.groupBy(sniffFileDialect(fs, _, sampleBytes))
-    Consolidate(byDialect.toSeq.sortBy(_._1.toString)
-      .map { case ((sep, _), fsGroup) =>
-        read(spark, fsGroup.map(_.toString).toSeq, sep)
-      })
+    Consolidate(readByDialect(spark, files.toSeq.sortBy(_.toString),
+      sampleBytes))
+  }
+
+  /** The read path shared by [[readSniffed]] and [[consolidate]]: sniff
+    * every file, group the files by (separator, header line) in
+    * first-seen order, and read each group in ONE explicit-schema scan
+    * whose header schema comes from the sniffed line ([[headerSchema]]),
+    * so no Spark job runs. Every file in a group has the same columns in
+    * the same order, which is what a positional multi-file scan needs. */
+  private def readByDialect(spark: SparkSession, files: Seq[Path],
+                            sampleBytes: Int): Seq[DataFrame] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dialects = files.map(f =>
+      sniffFileDialect(f.getFileSystem(conf), f, sampleBytes))
+    dialects.distinct.map { case d @ (sep, line) =>
+      val group = files.zip(dialects).collect { case (f, `d`) => f.toString }
+      scan(spark, group, sep, headerSchema(spark, sep, line))
+    }
   }
 
   /** Read a Hive-partitioned CSV layout (`yr=1997/...csv`). No corrupt
@@ -248,25 +294,33 @@ object CsvIngest {
     }
   }
 
-  /** Head-sample dialect of one file: (separator, raw header line).
-    * The shared per-file detector behind [[readSniffed]] and
-    * [[consolidate]]. */
-  private def sniffFileDialect(fs: org.apache.hadoop.fs.FileSystem,
-                               f: org.apache.hadoop.fs.Path,
-                               sampleBytes: Int): (String, String) = {
+  /** Head-sample dialect of one file: (separator, header line). The
+    * header line is the first non-empty line, the one Spark's header
+    * inference takes (Hadoop's line reader drops a BOM at file start and
+    * ends lines at `\n`, `\r\n` or `\r`; SQL `trim` only drops spaces).
+    * A header longer than `sampleBytes` grows the sample to its end. */
+  private def sniffFileDialect(fs: FileSystem, f: Path,
+                               sampleBytes: Int): (String, Option[String]) = {
     val in = fs.open(f)
     try {
-      val buf = new Array[Byte](sampleBytes)
+      var buf = new Array[Byte](sampleBytes)
       var off = 0
-      var n = 0
-      while (off < buf.length && n >= 0) {
-        n = in.read(buf, off, buf.length - off)
-        if (n > 0) off += n
-      }
-      val sample = new String(buf, 0, off,
+      var eof = false
+      def sample = new String(buf, 0, off,
         java.nio.charset.StandardCharsets.UTF_8)
-      val header = sample.stripPrefix("﻿").split("\r?\n", 2)(0)
-      (sniffSep(sample, truncated = off == buf.length), header)
+      var header = Option.empty[String]
+      do {
+        if (off == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * off)
+        while (off < buf.length && !eof) {
+          val n = in.read(buf, off, buf.length - off)
+          if (n < 0) eof = true else off += n
+        }
+        // before EOF the final piece is cut mid-line: never a header
+        val lines = sample.stripPrefix("﻿").split("\r\n|\r|\n", -1)
+        header = (if (eof) lines else lines.dropRight(1))
+          .find(_.exists(_ != ' '))
+      } while (header.isEmpty && !eof)
+      (sniffSep(sample, truncated = !eof), header)
     } finally in.close()
   }
 
@@ -274,23 +328,25 @@ object CsvIngest {
     * monthly file WITH per-file separator detection (the reference
     * consolidator reads every monthly file `sep=None` —
     * `file_utils.py:36-42` — and this is that read), align schemas BY
-    * NAME (missing → NULL), keep first-seen column order, order by the
-    * month key. On a uniformly `;`-separated directory the sniff
-    * detects `;` everywhere and the result is byte-identical to the
-    * fixed-separator read. */
+    * NAME (missing → NULL) and keep first-seen column order. Files that
+    * share a (separator, header) are read in one scan, so the call
+    * submits no Spark job and a year of monthly files with one mid-year
+    * header drift is two scans, not twelve.
+    *
+    * Row order: rows come out in `orderCol` order when it is given —
+    * that is how the reference's month order is reproduced. Without it,
+    * the order across files is whatever Spark's file packing gives a
+    * grouped scan (largest files first), not the order of `paths`. On a
+    * uniformly `;`-separated directory the sniff detects `;` everywhere
+    * and the result equals the fixed-separator read. */
   def consolidate(spark: SparkSession, paths: Seq[String],
                   orderCol: Option[String] = None): DataFrame = {
     // pandas on_bad_lines='warn' drops bad lines from the consolidated
     // output; the corrupt column is a read-side diagnostic only.
-    val dfs = paths.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (sep, _) = sniffFileDialect(fs, hp, 8192)
-      read(spark, Seq(p), sep).drop(CorruptCol)
-    }
-    val unioned = Consolidate(dfs)
-    val cols = Consolidate.orderedColumns(dfs)
-    val selected = unioned.select(cols.map(org.apache.spark.sql.functions.col): _*)
+    val dfs = readByDialect(spark, paths.map(new Path(_)), 8192)
+      .map(_.drop(CorruptCol))
+    val selected = Consolidate(dfs).select(Consolidate.orderedColumns(dfs)
+      .map(org.apache.spark.sql.functions.col): _*)
     orderCol.fold(selected)(c => selected.orderBy(c))
   }
 }
