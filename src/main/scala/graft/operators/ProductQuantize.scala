@@ -306,13 +306,15 @@ object ProductQuantize {
   private[operators] def pqEncodeRaw(vectors: DataFrame, idCol: String,
                                      vecCol: String,
                                      codebooks: DataFrame,
-                                     m: Int): DataFrame = {
-    val entries = codebooks
-      .select(col("subspace"), col("code"), col("cvec")).collect()
-      .map(r => (r.getAs[Long]("subspace"), r.getAs[Long]("code"),
-        r.getAs[scala.collection.Seq[Double]]("cvec").toVector
-          : Seq[Double]))
-      .sortBy(t => (t._1, t._2)).toSeq
+                                     m: Int): DataFrame =
+    pqEncodeRows(vectors, idCol, vecCol, bookRows(codebooks), m)
+
+  /** [[pqEncodeRaw]] over already-collected codebook rows
+    * ([[bookRows]] / the [[bookRowsAt]] memo). */
+  private def pqEncodeRows(vectors: DataFrame, idCol: String,
+                           vecCol: String, books: Seq[BookRow],
+                           m: Int): DataFrame = {
+    val entries = books.sortBy(t => (t._1, t._2))
     require(entries.nonEmpty, "pqEncode: empty codebooks")
     val entryLen = entries.head._3.length
     require(entries.forall(_._3.length == entryLen),
@@ -680,6 +682,26 @@ object ProductQuantize {
             : Boolean = size() > 4096
       })
 
+  /** One codebook entry: (subspace, code, cvec). */
+  private[graft] type BookRow = (Long, Long, Vector[Double])
+
+  /** The rows of a codebooks frame, in scan order — the one driver-side
+    * collect both the encode and the drift-stats LUT build start from. */
+  private def bookRows(codebooks: DataFrame): IndexedSeq[BookRow] =
+    codebooks.select(col("subspace"), col("code"), col("cvec")).collect()
+      .toIndexedSeq.map(r => (r.getAs[Long](0), r.getAs[Long](1),
+        r.getAs[scala.collection.Seq[Double]](2).toVector))
+
+  private val bookRowsMemo
+      : java.util.Map[(String, Long), IndexedSeq[BookRow]] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[(String, Long), IndexedSeq[BookRow]](
+          16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(String, Long), IndexedSeq[BookRow]])
+            : Boolean = size() > 64
+      })
+
   private def booksMtime(spark: SparkSession, loc: String): Long = {
     val p = new org.apache.hadoop.fs.Path(loc)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -714,6 +736,22 @@ object ProductQuantize {
         Seq("subspace", "code"), "bvec")
       bookFpMemo.put(key, java.lang.Long.valueOf(fp))
       fp
+    }
+  }
+
+  /** The rows of a written codebooks file ([[bookRows]]), memoized
+    * like [[mOf]], so the refresh encode and the drift-stats LUT build
+    * pay no collect job per wave. m·k rows by contract; the LRU bound
+    * caps the memo at 64 files. */
+  private[graft] def bookRowsAt(spark: SparkSession,
+                                loc: String): IndexedSeq[BookRow] = {
+    val key = (loc, booksMtime(spark, loc))
+    val hit = bookRowsMemo.get(key)
+    if (hit != null) hit
+    else {
+      val rows = bookRows(readBooks(spark, loc))
+      bookRowsMemo.put(key, rows)
+      rows
     }
   }
 
@@ -943,7 +981,7 @@ object ProductQuantize {
     // m through the (loc, mtime) memo — the aggregate was one job per
     // wave for a constant of the written file
     val booksLoc = governingBooksLoc(spark, path)
-    val cb = readBooks(spark, booksLoc)
+    val books = bookRowsAt(spark, booksLoc)
     val m = mOf(spark, booksLoc)
     val changed = cached(
       changes.filter(col("status") =!= "unchanged"))
@@ -956,11 +994,13 @@ object ProductQuantize {
     val freshRows = newSnap.join(freshKeys, Seq(idCol))
     val freshAssigned = cached(
       if (!residual)
-        pqEncode(freshRows, idCol, vecCol, cb, m)
+        pqEncodeRows(unitVectors(freshRows, vecCol, Seq(idCol)), idCol,
+            "_uv", books, m)
           .join(Similarity.ivfAssignCosine(freshRows, cents, idCol,
             vecCol), Seq(idCol))
           .select(col(idCol), col("codes"), col("centroid_id"))
-      else encodeResidual(freshRows, cents, idCol, vecCol, cb, m))
+      else encodeResidualRows(freshRows, cents, idCol, vecCol, books,
+        m))
     // dedupe via one global collect_set aggregate — map-side partial
     // sets bound shuffle and driver read at ≤|cells| ids no matter
     // the delta size, without the relational distinct's AQE re-plan
@@ -1046,10 +1086,8 @@ object ProductQuantize {
     // parity spec pins kernel ≡ relational on a real index. Falls
     // back to the relational pipeline on degenerate geometry (sparse
     // giant code ids would blow the dense arrays).
-    val cbRows = readBooks(spark, booksLoc)
-      .select(col("subspace"), col("code"), col("cvec")).collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        r.getAs[scala.collection.Seq[Double]](2).toArray))
+    val cbRows = bookRowsAt(spark, booksLoc)
+      .map { case (s, c, bvec) => (s, c, bvec.toArray) }
     val centRows = cents.select(col("centroid_id"), col("cvec"))
       .collect()
       .map(r => (r.getLong(0),
@@ -1239,14 +1277,22 @@ object ProductQuantize {
     * (idCol, codes, centroid_id); zero-norm rows drop, as at write. */
   def encodeResidual(vectors: DataFrame, cents: DataFrame,
                      idCol: String, vecCol: String,
-                     codebooks: DataFrame, m: Int): DataFrame = {
+                     codebooks: DataFrame, m: Int): DataFrame =
+    encodeResidualRows(vectors, cents, idCol, vecCol, bookRows(codebooks),
+      m)
+
+  /** [[encodeResidual]] over already-collected codebook rows. */
+  private def encodeResidualRows(vectors: DataFrame, cents: DataFrame,
+                                 idCol: String, vecCol: String,
+                                 books: Seq[BookRow], m: Int)
+      : DataFrame = {
     val res = unitVectors(vectors, vecCol, Seq(idCol))
       .join(Similarity.ivfAssignCosine(vectors, cents, idCol, vecCol),
         Seq(idCol))
       .join(broadcast(cents), Seq("centroid_id"))
       .select(col(idCol), col("centroid_id"),
         zip_with(col("_uv"), col("cvec"), (a, b) => a - b).as("_res"))
-    pqEncodeRaw(res, idCol, "_res", codebooks, m)
+    pqEncodeRows(res, idCol, "_res", books, m)
       .join(res.select(col(idCol), col("centroid_id")), Seq(idCol))
       .select(col(idCol), col("codes"), col("centroid_id"))
   }

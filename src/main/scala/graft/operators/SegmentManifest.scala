@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** GENERATION MANIFESTS for the segmented lexical index — the
   * Delta-log / Lucene-SegmentInfos commit protocol that turns the
@@ -701,30 +706,36 @@ object SegmentManifest {
   def revDir(gen: Int): String =
     s"_rev/g$gen-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  /** Read one layout of a pinned generation: per-entry leaf reads
-    * with the segment number attached as a literal (the hive dir is
-    * not discovered, so the column is supplied — same schema as the
-    * legacy discovery read). None when the layout has no members
-    * (callers supply their empty-schema fallback). Pushed predicates
-    * (`term IN`, prefixes) reach every leaf scan unchanged; a filter
-    * on `seg` constant-folds per branch, pruning whole segments.
-    * `schema` (when given) makes each leaf read explicit-schema: a
-    * member directory holding no parquet files (empty crash debris a
-    * legacy bootstrap folded in) then reads as zero rows instead of
-    * failing schema inference. Without it, the schema is inferred
-    * ONCE from the first entry and supplied explicitly to the rest —
-    * a layout's members share one schema by construction, and
-    * per-entry inference was a hidden footer-read job per member
-    * (measured 16 of a maintenance wave's 48 jobs, WaveJobProbe).
-    * The inference is additionally MEMOIZED by the member's absolute
-    * location: member directories are write-once under the manifest
-    * protocol (new segments are new dirs, rewrites go under `_rev/`;
-    * the one sanctioned in-place rewrite — a replayed append — runs
-    * the same writer shape, so a location's schema cannot change
-    * while referenced), making the footer read a pure function of
-    * the location. Without the memo every probe's layout read paid
-    * one inference job per call (r19 WaveJobProbe: 2 of a refresh
-    * wave's 33 jobs plus their planning gaps). */
+  /** Read one layout of a pinned generation as ONE partitioned file
+    * scan: a single `HadoopFsRelation` whose file index carries a
+    * user-specified partition spec mapping each member directory to
+    * its key (`keyCol`, IntegerType — the member's `seg`), so the
+    * hive directory names are never parsed and the key column has the
+    * same schema as the legacy discovery read. None when the layout
+    * has no members (callers supply their empty-schema fallback).
+    * Pushed predicates (`term IN`, prefixes) reach the one scan
+    * unchanged, and a filter on the key becomes `PartitionFilters`:
+    * whole members prune before any of their files is opened.
+    *
+    * Each member directory is listed ONCE, on the driver; that
+    * listing feeds schema inference, seeds the scan's file index
+    * (through a `FileStatusCache` client, so the index never lists
+    * again — nor launches a parallel-listing job on wide layouts) and
+    * picks the read shape: a member whose parquet files sit one level
+    * below its directory (a partitioned member) is invisible to a
+    * partition spec that names only member directories, so such a
+    * layout keeps the per-member union, each branch with the key
+    * attached as a literal. A missing member fails the listing loudly.
+    *
+    * `schema` (when given) makes the read explicit-schema: a member
+    * directory holding no parquet files (empty crash debris a legacy
+    * bootstrap folded in) then reads as zero rows instead of failing
+    * schema inference. Without it, the schema is inferred ONCE from
+    * the first member holding data — a layout's members share one
+    * schema by construction. The inference is MEMOIZED by (member
+    * location, dir mtime) ([[schemaMemo]]): member directories are
+    * write-once under the manifest protocol, and the mtime key makes a
+    * rewrite in place miss instead of serving a stale schema. */
   def read(spark: SparkSession, path: String, m: Manifest,
            layout: String, keyCol: String = "seg",
            schema: Option[org.apache.spark.sql.types.StructType] = None)
@@ -732,6 +743,16 @@ object SegmentManifest {
     val es = m.entries(layout)
     if (es.isEmpty) None
     else {
+      val fs = fsOf(spark, path)
+      val dirs = es.map(e => fs.makeQualified(new Path(s"$path/${e.loc}")))
+      // located statuses, as Spark's own listing keeps them: block
+      // locations drive scan-task locality on HDFS-class stores
+      val listed = dirs.map { d =>
+        val it = fs.listLocatedStatus(d)
+        val b = Array.newBuilder[FileStatus]
+        while (it.hasNext) b += it.next()
+        b.result()
+      }
       val sch = schema.getOrElse {
         // infer from the first member whose directory actually holds
         // data files: an empty member dir (crash debris a legacy
@@ -740,22 +761,6 @@ object SegmentManifest {
         // WHOLE layout even though its own read is well-defined
         // (zero rows). All-empty layouts still fail loudly on the
         // head entry — there is no schema to read them under.
-        val fs = fsOf(spark, path)
-        def isData(st: org.apache.hadoop.fs.FileStatus) =
-          st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith(".")
-        // a member's data may sit one level down (a partitioned
-        // member dir) — recurse one level before classifying the
-        // member as empty, so inference doesn't skip a member that
-        // actually holds data (or fail on the head when it does)
-        def holdsData(d: Path): Boolean =
-          fs.exists(d) && {
-            val ls = fs.listStatus(d)
-            ls.exists(isData) || ls.exists(st =>
-              st.isDirectory && !st.getPath.getName.startsWith("_") &&
-                !st.getPath.getName.startsWith(".") &&
-                fs.listStatus(st.getPath).exists(isData))
-          }
         def mtimeOf(p: Path): Option[Long] =
           try Some(fs.getFileStatus(p).getModificationTime)
           catch { case _: java.io.FileNotFoundException => None }
@@ -780,8 +785,9 @@ object SegmentManifest {
           .flatMap { case (k, mt) => Option(schemaMemo.get((k, mt))) }
           .nextOption()
         val sch0 = hit.getOrElse {
-          val withData = es.find(e => holdsData(new Path(s"$path/${e.loc}")))
-            .getOrElse(es.head)
+          val withData = es.zip(listed)
+            .find { case (_, ls) => holdsData(fs, ls) }
+            .map(_._1).getOrElse(es.head)
           spark.read.parquet(s"$path/${withData.loc}").schema
         }
         // propagate to the probed sibling members: the read below
@@ -794,12 +800,43 @@ object SegmentManifest {
         probes.foreach { case (k, mt) => schemaMemo.put((k, mt), sch0) }
         sch0
       }
-      Some(es.map { e =>
-        spark.read.schema(sch).parquet(s"$path/${e.loc}")
-          .withColumn(keyCol, lit(e.seg))
-      }.reduce(_ unionByName _))
+      if (listed.exists(_.exists(isSubdir)))
+        Some(es.map { e =>
+          spark.read.schema(sch).parquet(s"$path/${e.loc}")
+            .withColumn(keyCol, lit(e.seg))
+        }.reduce(_ unionByName _))
+      else {
+        val cache = FileStatusCache.getOrCreate(spark)
+        dirs.zip(listed).foreach { case (d, ls) =>
+          cache.putLeafFiles(d, ls.filter(isData)) }
+        val keySchema = StructType(Seq(
+          StructField(keyCol, IntegerType, nullable = false)))
+        val spec = PartitionSpec(keySchema, es.zip(dirs).map {
+          case (e, d) => PartitionPath(InternalRow(e.seg), d) })
+        val index = new InMemoryFileIndex(spark, dirs, Map.empty, None,
+          cache, Some(spec))
+        Some(spark.baseRelationToDataFrame(HadoopFsRelation(index,
+          keySchema, sch, None, new ParquetFileFormat(), Map.empty)(spark)))
+      }
     }
   }
+
+  private def hidden(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    n.startsWith("_") || n.startsWith(".")
+  }
+
+  private def isData(st: FileStatus): Boolean =
+    st.isFile && !hidden(st)
+
+  private def isSubdir(st: FileStatus): Boolean =
+    st.isDirectory && !hidden(st)
+
+  /** Whether a member directory, given its listing `ls`, holds a data
+    * file — directly or one level down (a partitioned member). */
+  private def holdsData(fs: FileSystem, ls: Array[FileStatus]): Boolean =
+    ls.exists(isData) || ls.exists(st =>
+      isSubdir(st) && fs.listStatus(st.getPath).exists(isData))
 
   /** CLONE one pinned generation to a fresh path — the snapshot
     * PUBLISH/EXPORT step of the MVCC story (Delta's `CLONE`, Lucene's
@@ -1096,16 +1133,6 @@ object SegmentManifest {
           Seq(CellLayout, BooksLayout).filter(sp =>
             present.contains(sp.name))
       }
-    def isData(st: org.apache.hadoop.fs.FileStatus) =
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")
-    def holdsData(d: Path): Boolean = {
-      val ls = fs.listStatus(d)
-      ls.exists(isData) || ls.exists(st =>
-        st.isDirectory && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") &&
-          fs.listStatus(st.getPath).exists(isData))
-    }
     val markerLayouts = Set(ModelMarker)
     val findings = for {
       (g, m) <- manifests
@@ -1115,7 +1142,7 @@ object SegmentManifest {
       d = new Path(s"$path/${e.loc}")
       problem <- {
         if (!fs.exists(d)) Some("missing")
-        else if (!holdsData(d)) Some("empty")
+        else if (!holdsData(fs, fs.listStatus(d))) Some("empty")
         else None
       }
     } yield AuditFinding(g, layout, e.loc, problem)

@@ -609,9 +609,9 @@ object Similarity {
     * the LATEST SEALED composition, so a probe planned here never
     * races a refresh wave's commit; legacy layouts (every
     * [[ivfWriteIndexQuantized]] scratch index) keep hive discovery
-    * and its `PartitionFilters` pruning. Under a manifest, a probe's
-    * `centroid_id IN` filter constant-folds per union branch — whole
-    * cells prune at optimization, the same IO class. */
+    * and its `PartitionFilters` pruning. Under a manifest the cells
+    * read as one scan keyed by `centroid_id`, so a probe's
+    * `centroid_id IN` filter is a partition filter there too. */
   private[graft] def readQuantizedIndex(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String): DataFrame =
@@ -644,7 +644,7 @@ object Similarity {
     * the pin-once entry for readers that must resolve cells AND model
     * through one manifest ([[graft.streaming.StreamingVectorIndex
     * .probeLiveQuantized]]): the cell restriction still prunes whole
-    * union branches / partitions, the scoring is the same int8
+    * cell partitions, the scoring is the same int8
     * arithmetic. */
   private[graft] def ivfProbeCodesQuantized(codes: DataFrame,
                                             cents: DataFrame,

@@ -1013,7 +1013,7 @@ object TextAnalysis {
       .add(idCol, LongType).add("dl", LongType).add("seg", IntegerType)
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-    // explicit per-entry schema: a legacy layout whose bootstrap
+    // explicit member schema: a legacy layout whose bootstrap
     // folded in an EMPTY tombstones/seg=N dir (crash debris with no
     // parquet files) must read as zero rows, not fail inference
     val entrySchema = new StructType()
@@ -1970,10 +1970,11 @@ object TextAnalysis {
     next
   }
 
-  /** One layout of a pinned snapshot: per-entry leaf reads with the
-    * segment number attached as a literal — one read shape for sealed
-    * and in-memory (legacy bootstrap) manifests alike. Layouts that
-    * can be legitimately EMPTY (tombstones, a legacy termdict) go
+  /** One layout of a pinned snapshot: one scan over the members with
+    * the segment number as its `seg` partition column — one read
+    * shape for sealed and in-memory (legacy bootstrap) manifests
+    * alike. Layouts that can be legitimately EMPTY (tombstones, a
+    * legacy termdict) go
     * through [[readTombstones]] / [[termDict]], which supply their
     * fallbacks. */
   private def readLayout(spark: org.apache.spark.sql.SparkSession,
