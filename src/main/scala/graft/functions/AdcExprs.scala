@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -17,131 +15,28 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *     the lookup structure (inner-join semantics — a null code
   *     element, a position ≥ m, or a code outside the book simply
   *     drops, exactly like the unmatched exploded row);
-  *   - a row with ZERO matched positions yields NULL (the join emitted
-  *     no row for it, so it vanished from the aggregate) — callers
-  *     filter nulls to keep the old row-set bit for bit;
+  *   - a row with ZERO matched positions, or a key outside the
+  *     tables, yields NULL (the join emitted no row for it, so it
+  *     vanished from the aggregate) — callers filter nulls to keep the
+  *     old row-set bit for bit;
   *   - sums are exact integer sums, order-free by construction.
   */
 object AdcExprs {
-  /** Lookup tables as (values, presence) pairs: `present(s)(c)` gates
-    * `values(s)(c)` so an absent (subspace, code) key keeps
-    * inner-join drop semantics without a sentinel value. */
-  final case class Lut(values: IndexedSeq[IndexedSeq[Long]],
-                       present: IndexedSeq[IndexedSeq[Boolean]])
-}
-
-/** Σ over array positions of `lut(pos)(code)` — the single-query ADC
-  * score numerator ([[graft.operators.ProductQuantize]]'s adcScore),
-  * NULL when no position matched. */
-case class CodeLutSumExpr(child: Expression, lut: AdcExprs.Lut)
-    extends UnaryExpression {
-
-  @transient private lazy val vals: Array[Array[Long]] =
-    lut.values.map(_.toArray).toArray
-  @transient private lazy val pres: Array[Array[Boolean]] =
-    lut.present.map(_.toArray).toArray
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<bigint> input, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val codes = v.asInstanceOf[ArrayData]
-    val n = codes.numElements()
-    var s = 0L
-    var matched = false
-    var pos = 0
-    while (pos < n) {
-      if (pos < vals.length && !codes.isNullAt(pos)) {
-        val c = codes.getLong(pos)
-        if (c >= 0 && c < vals(pos).length && pres(pos)(c.toInt)) {
-          s += vals(pos)(c.toInt)
-          matched = true
-        }
-      }
-      pos += 1
-    }
-    if (matched) s else null
+  /** Dense lookup tables: `vals(i)(s)(c)` belongs to the i-th of the
+    * ascending `keys`; the shared `present(s)(c)` gates every table,
+    * so an absent (subspace, code) key keeps inner-join drop semantics
+    * without a sentinel value. */
+  final case class Luts(keys: Array[Long],
+                        vals: Array[Array[Array[Long]]],
+                        present: Array[Array[Boolean]]) {
+    /** Index of `key` in `keys`, negative when absent. */
+    def indexOf(key: Long): Int = java.util.Arrays.binarySearch(keys, key)
   }
 
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val vl = ctx.addReferenceObj("adcLutVals", vals, "long[][]")
-      val pr = ctx.addReferenceObj("adcLutPres", pres, "boolean[][]")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val matched = ctx.freshName("matched")
-      val pos = ctx.freshName("pos")
-      val c = ctx.freshName("c")
-      s"""
-         |final int $n = $v.numElements();
-         |long $s = 0L; boolean $matched = false;
-         |for (int $pos = 0; $pos < $n; $pos++) {
-         |  if ($pos < $vl.length && !$v.isNullAt($pos)) {
-         |    final long $c = $v.getLong($pos);
-         |    if ($c >= 0 && $c < $vl[$pos].length && $pr[$pos][(int) $c]) {
-         |      $s += $vl[$pos][(int) $c];
-         |      $matched = true;
-         |    }
-         |  }
-         |}
-         |if ($matched) { ${ev.value} = $s; } else { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CodeLutSumExpr = copy(child = newChild)
-  override def prettyName: String = "adc_lut_sum"
-}
-
-/** [[CodeLutSumExpr]] keyed by query id — the PANEL ADC numerator:
-  * `luts` holds one table per qid (the join key the relational form
-  * matched on), a qid outside the panel yields NULL (the join emitted
-  * nothing for it), presence gating as in the single-query kernel.
-  * Duplicate panel rows fold into their qid's table at build time
-  * exactly as the relational LUT's duplicate rows summed in the
-  * aggregate. */
-case class QidCodeLutSumExpr(left: Expression, right: Expression,
-                             qids: IndexedSeq[Long],
-                             vals: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
-                             present: IndexedSeq[IndexedSeq[Boolean]])
-    extends BinaryExpression {
-
-  @transient private lazy val qidIdx: java.util.HashMap[Long, Integer] = {
-    val m = new java.util.HashMap[Long, Integer]()
-    qids.zipWithIndex.foreach { case (q, i) => m.put(q, i) }
-    m
-  }
-  @transient private lazy val valArr: Array[Array[Array[Long]]] =
-    vals.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val presArr: Array[Array[Boolean]] =
-    present.map(_.toArray).toArray
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (bigint, array<bigint>), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(qidV: Any, codesV: Any): Any = {
-    val qi = qidIdx.get(qidV.asInstanceOf[Long])
-    if (qi == null) return null
-    val lut = valArr(qi.intValue())
-    val codes = codesV.asInstanceOf[ArrayData]
+  /** Σ `lut(pos)(code)` over the matched positions of one code row;
+    * null when none matched. */
+  def lutSum(lut: Array[Array[Long]], present: Array[Array[Boolean]],
+             codes: ArrayData): Any = {
     val n = codes.numElements()
     var s = 0L
     var matched = false
@@ -149,7 +44,7 @@ case class QidCodeLutSumExpr(left: Expression, right: Expression,
     while (pos < n) {
       if (pos < lut.length && !codes.isNullAt(pos)) {
         val c = codes.getLong(pos)
-        if (c >= 0 && c < lut(pos).length && presArr(pos)(c.toInt)) {
+        if (c >= 0 && c < lut(pos).length && present(pos)(c.toInt)) {
           s += lut(pos)(c.toInt)
           matched = true
         }
@@ -158,47 +53,31 @@ case class QidCodeLutSumExpr(left: Expression, right: Expression,
     }
     if (matched) s else null
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, v) => {
-      // RAW map type + explicit boxing: janino compiles no generics
-      // and no autoboxing — a parameterized reference type fails the
-      // whole generated class and silently drops the stage to
-      // interpreted eval (caught as CodeGenerator ERRORs in the r20
-      // mid-round bench)
-      val idx = ctx.addReferenceObj("qidLutIdx", qidIdx,
-        "java.util.HashMap")
-      val vl = ctx.addReferenceObj("qidLutVals", valArr, "long[][][]")
-      val pr = ctx.addReferenceObj("qidLutPres", presArr, "boolean[][]")
-      val qi = ctx.freshName("qi")
-      val lut = ctx.freshName("lut")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val matched = ctx.freshName("matched")
-      val pos = ctx.freshName("pos")
-      val c = ctx.freshName("c")
-      s"""
-         |final Integer $qi =
-         |  (Integer) $idx.get(java.lang.Long.valueOf($q));
-         |if ($qi == null) { ${ev.isNull} = true; } else {
-         |  final long[][] $lut = $vl[$qi.intValue()];
-         |  final int $n = $v.numElements();
-         |  long $s = 0L; boolean $matched = false;
-         |  for (int $pos = 0; $pos < $n; $pos++) {
-         |    if ($pos < $lut.length && !$v.isNullAt($pos)) {
-         |      final long $c = $v.getLong($pos);
-         |      if ($c >= 0 && $c < $lut[$pos].length
-         |          && $pr[$pos][(int) $c]) {
-         |        $s += $lut[$pos][(int) $c];
-         |        $matched = true;
-         |      }
-         |    }
-         |  }
-         |  if ($matched) { ${ev.value} = $s; } else { ${ev.isNull} = true; }
-         |}
-       """.stripMargin
-    })
+/** The ADC score numerator keyed by query id: `luts` holds one table
+  * per qid (the join key the relational form matched on), and a qid
+  * outside the tables yields NULL. A single query is the one-key case.
+  * Duplicate panel rows fold into their qid's table at build time
+  * exactly as the relational LUT's duplicate rows summed in the
+  * aggregate. */
+case class QidCodeLutSumExpr(left: Expression, right: Expression,
+                             luts: AdcExprs.Luts)
+    extends BinaryExpression with NativeKernel {
+
+  protected def tables: Seq[AnyRef] =
+    Seq(luts.keys, luts.vals, luts.present)
+  override def inputTypes: Seq[DataType] =
+    Seq(LongType, ArrayType(LongType))
+  override def dataType: DataType = LongType
+
+  override protected def nullSafeEval(qid: Any, codes: Any): Any =
+    run(qid.asInstanceOf[Long], codes.asInstanceOf[ArrayData])
+
+  def run(qid: Long, codes: ArrayData): Any = {
+    val i = luts.indexOf(qid)
+    if (i < 0) null else AdcExprs.lutSum(luts.vals(i), luts.present, codes)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): QidCodeLutSumExpr =
@@ -211,116 +90,35 @@ case class QidCodeLutSumExpr(left: Expression, right: Expression,
   * cd_fp = floor((1 − (Σip/1e7)/(√(Σnn/1e7)·‖centroid‖))·1e7 + 0.5)
   * over the row's matched (cell, subspace, code) lookups — the exact
   * Column arithmetic of the relational form, evaluated in the same
-  * IEEE order, with the cell's ip table and norm resolved from
-  * reference maps instead of a broadcast join. NULL when the cell is
-  * not in the table or no position matched (the inner join emitted no
-  * rows for that id — callers filter nulls). */
+  * IEEE order, with the cell's ip table (`ip`, keyed by cell id), the
+  * entry norms `nn` and the cell's norm `norms(i)` read from driver
+  * arrays instead of a broadcast join. NULL when the cell is not in
+  * the table or no position matched (the inner join emitted no rows
+  * for that id — callers filter nulls). */
 case class PqCdFpExpr(left: Expression, right: Expression,
-                      cellIds: IndexedSeq[Long],
-                      ipFp: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
-                      nnFp: IndexedSeq[IndexedSeq[Long]],
-                      present: IndexedSeq[IndexedSeq[Boolean]],
-                      cnorm: IndexedSeq[Double])
-    extends BinaryExpression {
+                      ip: AdcExprs.Luts, nn: Array[Array[Long]],
+                      norms: Array[Double])
+    extends BinaryExpression with NativeKernel {
 
-  @transient private lazy val cellIdx: java.util.HashMap[Long, Integer] = {
-    val m = new java.util.HashMap[Long, Integer]()
-    cellIds.zipWithIndex.foreach { case (c, i) => m.put(c, i) }
-    m
-  }
-  @transient private lazy val ips: Array[Array[Array[Long]]] =
-    ipFp.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val nns: Array[Array[Long]] =
-    nnFp.map(_.toArray).toArray
-  @transient private lazy val pres: Array[Array[Boolean]] =
-    present.map(_.toArray).toArray
-  @transient private lazy val norms: Array[Double] = cnorm.toArray
-
+  protected def tables: Seq[AnyRef] =
+    Seq(ip.keys, ip.vals, ip.present, nn, norms)
+  override def inputTypes: Seq[DataType] =
+    Seq(LongType, ArrayType(LongType))
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (bigint, array<bigint>), got ($l, $r)")
-    }
+  override protected def nullSafeEval(cell: Any, codes: Any): Any =
+    run(cell.asInstanceOf[Long], codes.asInstanceOf[ArrayData])
 
-  override protected def nullSafeEval(cellV: Any, codesV: Any): Any = {
-    val ci = cellIdx.get(cellV.asInstanceOf[Long])
-    if (ci == null) return null
-    val codes = codesV.asInstanceOf[ArrayData]
-    val n = codes.numElements()
-    val cellIp = ips(ci.intValue())
-    var sIp = 0L
-    var sNn = 0L
-    var matched = false
-    var pos = 0
-    while (pos < n) {
-      if (pos < cellIp.length && !codes.isNullAt(pos)) {
-        val c = codes.getLong(pos)
-        if (c >= 0 && c < cellIp(pos).length && pres(pos)(c.toInt)) {
-          sIp += cellIp(pos)(c.toInt)
-          sNn += nns(pos)(c.toInt)
-          matched = true
-        }
-      }
-      pos += 1
-    }
-    if (!matched) null
-    else math.floor((1.0 - (sIp / 1e7) /
-      (math.sqrt(sNn / 1e7) * norms(ci.intValue()))) * 1e7 + 0.5).toLong
+  def run(cell: Long, codes: ArrayData): Any = {
+    val i = ip.indexOf(cell)
+    if (i < 0) return null
+    val sIp = AdcExprs.lutSum(ip.vals(i), ip.present, codes)
+    if (sIp == null) return null
+    // same matched positions as sIp: nn shares the presence gate
+    val sNn = AdcExprs.lutSum(nn, ip.present, codes).asInstanceOf[Long]
+    math.floor((1.0 - (sIp.asInstanceOf[Long] / 1e7) /
+      (math.sqrt(sNn / 1e7) * norms(i))) * 1e7 + 0.5).toLong
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (cell, v) => {
-      // raw type + explicit boxing — janino generics limit (see
-      // QidCodeLutSumExpr)
-      val idx = ctx.addReferenceObj("pqCellIdx", cellIdx,
-        "java.util.HashMap")
-      val ipsR = ctx.addReferenceObj("pqIps", ips, "long[][][]")
-      val nnsR = ctx.addReferenceObj("pqNns", nns, "long[][]")
-      val prR = ctx.addReferenceObj("pqPres", pres, "boolean[][]")
-      val nmR = ctx.addReferenceObj("pqNorms", norms, "double[]")
-      val ci = ctx.freshName("ci")
-      val n = ctx.freshName("n")
-      val cellIp = ctx.freshName("cellIp")
-      val sIp = ctx.freshName("sIp")
-      val sNn = ctx.freshName("sNn")
-      val matched = ctx.freshName("matched")
-      val pos = ctx.freshName("pos")
-      val c = ctx.freshName("c")
-      s"""
-         |final Integer $ci =
-         |  (Integer) $idx.get(java.lang.Long.valueOf($cell));
-         |if ($ci == null) { ${ev.isNull} = true; } else {
-         |  final int $n = $v.numElements();
-         |  final long[][] $cellIp = $ipsR[$ci.intValue()];
-         |  long $sIp = 0L; long $sNn = 0L; boolean $matched = false;
-         |  for (int $pos = 0; $pos < $n; $pos++) {
-         |    if ($pos < $cellIp.length && !$v.isNullAt($pos)) {
-         |      final long $c = $v.getLong($pos);
-         |      if ($c >= 0 && $c < $cellIp[$pos].length
-         |          && $prR[$pos][(int) $c]) {
-         |        $sIp += $cellIp[$pos][(int) $c];
-         |        $sNn += $nnsR[$pos][(int) $c];
-         |        $matched = true;
-         |      }
-         |    }
-         |  }
-         |  if (!$matched) { ${ev.isNull} = true; }
-         |  else {
-         |    ${ev.value} = (long) java.lang.Math.floor(
-         |      (1.0 - ($sIp / 1.0E7) /
-         |        (java.lang.Math.sqrt($sNn / 1.0E7)
-         |          * $nmR[$ci.intValue()])) * 1.0E7 + 0.5);
-         |  }
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqCdFpExpr =

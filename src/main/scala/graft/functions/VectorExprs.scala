@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native codegen'd vector kernels (§2.10 custom-expression tier).
   *
@@ -93,6 +95,83 @@ case class DotProductExpr(left: Expression, right: Expression)
   override def prettyName: String = "vec_dot"
 }
 
+/** Base of the native kernels: expressions whose per-row loop reads
+  * driver-built arrays (codebooks, centroids, lookup tables).
+  *
+  * Each kernel writes its loop ONCE, in Scala, as a public `run` over
+  * its children's non-null values that returns the boxed result, or
+  * null for SQL NULL. Interpreted eval calls `run` directly; generated
+  * code evaluates the children, registers the kernel itself under its
+  * concrete class name and calls the same `run`. So eval and codegen
+  * cannot drift, and janino compiles one cast and one virtual call —
+  * never a generic type or an implicit boxing conversion, either of
+  * which fails the whole generated class and silently drops the stage
+  * to interpreted eval. A NULL input yields NULL unless the kernel
+  * overrides [[onNullInput]]. Plans print each table's shape and one
+  * content fingerprint, never the tables themselves. */
+trait NativeKernel extends Expression with ExpectsInputTypes {
+  /** The driver arrays `run` reads. */
+  protected def tables: Seq[AnyRef]
+
+  /** The result for a NULL input. */
+  def onNullInput(): Any = null
+
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+
+  @transient private lazy val tableDigest: String =
+    tables.map(NativeKernel.shape).mkString(" ") +
+      f" #${java.util.Arrays.deepHashCode(tables.toArray)}%08x"
+
+  override protected def stringArgs: Iterator[Any] =
+    children.iterator ++ Iterator(tableDigest)
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj(prettyName, this, getClass.getName)
+    val ins = children.map(_.genCode(ctx))
+    val r = ctx.freshName("r")
+    val jt = CodeGenerator.javaType(dataType)
+    val unboxed =
+      if (CodeGenerator.isPrimitiveType(dataType))
+        s"((${CodeGenerator.boxedType(dataType)}) $r).${jt}Value()"
+      else s"($jt) $r"
+    ev.copy(code = ins.map(_.code).reduce(_ + _) + code"""
+      final Object $r = (${ins.map(_.isNull).mkString(" || ")})
+        ? $self.onNullInput()
+        : $self.run(${ins.map(_.value).mkString(", ")});
+      boolean ${ev.isNull} = $r == null;
+      $jt ${ev.value} = ${ev.isNull}
+        ? ${CodeGenerator.defaultValue(dataType)} : $unboxed;
+    """)
+  }
+}
+
+object NativeKernel {
+  /** `long[4][8][16]`: element type and dimensions (along the first
+    * row, for ragged tables). */
+  def shape(table: AnyRef): String = {
+    def dims(x: Any): String = x match {
+      case a: Array[_] =>
+        s"[${a.length}]" + (if (a.isEmpty) "" else dims(a(0)))
+      case _ => ""
+    }
+    table.getClass.getSimpleName.takeWhile(_ != '[') + dims(table)
+  }
+
+  /** One strict-less step of the argmin kernels' (d, id) struct-min
+    * in ascending id order — Catalyst's struct ordering: a NULL d
+    * sorts first, doubles by SQLOrderingUtil.compareDoubles, ties keep
+    * the incumbent (the smaller id). */
+  def structLess(first: Boolean, d: Double, dNull: Boolean,
+                 bestD: Double, bestNull: Boolean): Boolean =
+    if (first) true
+    else if (dNull && bestNull) false
+    else if (dNull) true
+    else if (bestNull) false
+    else SQLOrderingUtil.compareDoubles(d, bestD) < 0
+}
+
 /** PQ codebook argmin — the encode kernel ([[graft.operators
   * .ProductQuantize.pqEncodeRaw]]'s per-row body as ONE native
   * expression): for each subspace j, the code of the squared-L2
@@ -116,45 +195,37 @@ case class DotProductExpr(left: Expression, right: Expression)
   *     which sorts FIRST (Catalyst's nulls-first field ordering);
   *   - the per-row guards raise with the messages the spec pins:
   *     dimension not divisible by m, subvector length != entry length.
-  * `perSub(j)` lists subspace j's (code, entry) pairs in ascending
-  * code order; `entryLen` is the shared entry length. */
+  * `books(j)` holds subspace j's entries and `codes(j)` their codes, in
+  * ascending code order; every entry has the same length. */
 case class PqEncodeCodesExpr(child: Expression,
-                             perSub: Seq[Seq[(Long, Seq[Double])]],
-                             entryLen: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private val m = perSub.length
+                             books: Array[Array[Array[Double]]],
+                             codes: Array[Array[Long]])
+    extends UnaryExpression with NativeKernel {
+  private def m = books.length
 
-  @transient private lazy val bookVals: Array[Array[Array[Double]]] =
-    perSub.map(_.map(_._2.toArray).toArray).toArray
-  @transient private lazy val bookCodes: Array[Array[Long]] =
-    perSub.map(_.map(_._1).toArray).toArray
+  protected def tables: Seq[AnyRef] = Seq(books, codes)
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType))
 
   // containsNull mirrors the HOF form's transform output; the column
   // itself was non-nullable there (transform over a literal sequence)
-  // and stays so here — a NULL input vector THROWS (below), exactly
-  // like the old raise_error guard, never a silent null code row
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = true)
+  // and stays so here — a NULL input vector THROWS, exactly like the
+  // old raise_error guard, never a silent null code row
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = false
+  override def nullIntolerant: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<double> input, got $other")
-    }
+  override def onNullInput(): Any = throw new RuntimeException(
+    s"pqEncode: null vector — dim not divisible by m=$m")
 
-  override def eval(
-      input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+  override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
-    if (v == null) throw new RuntimeException(
-      s"pqEncode: null vector — dim not divisible by m=$m")
-    nullSafeEval(v)
+    if (v == null) onNullInput() else run(v.asInstanceOf[ArrayData])
   }
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
+  def run(vec: ArrayData): ArrayData = {
     val n = vec.numElements()
+    val entryLen = books(0)(0).length
     if (n % m != 0) throw new RuntimeException(
       s"pqEncode: vector dim $n not divisible by m=$m")
     if (n / m != entryLen) throw new RuntimeException(
@@ -163,8 +234,7 @@ case class PqEncodeCodesExpr(child: Expression,
     val out = new Array[Long](m)
     var j = 0
     while (j < m) {
-      val ents = bookVals(j)
-      val cs = bookCodes(j)
+      val ents = books(j)
       val off = j * entryLen
       var bestC = 0L
       var bestD = 0.0
@@ -184,97 +254,15 @@ case class PqEncodeCodesExpr(child: Expression,
           }
           i += 1
         }
-        val less =
-          if (first) true
-          else if (dNull && bestNull) false
-          else if (dNull) true
-          else if (bestNull) false
-          else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-            .compareDoubles(d, bestD) < 0
-        if (less) { bestC = cs(e); bestD = d; bestNull = dNull; first = false }
+        if (NativeKernel.structLess(first, d, dNull, bestD, bestNull)) {
+          bestC = codes(j)(e); bestD = d; bestNull = dNull; first = false
+        }
         e += 1
       }
       out(j) = bestC
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val body = { v: String =>
-      val books = ctx.addReferenceObj("pqBooks", bookVals, "double[][][]")
-      val codes = ctx.addReferenceObj("pqCodes", bookCodes, "long[][]")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val e = ctx.freshName("e")
-      val i = ctx.freshName("i")
-      val off = ctx.freshName("off")
-      val ents = ctx.freshName("ents")
-      val cs = ctx.freshName("cs")
-      val bestC = ctx.freshName("bestC")
-      val bestD = ctx.freshName("bestD")
-      val bestNull = ctx.freshName("bestNull")
-      val first = ctx.freshName("first")
-      val d = ctx.freshName("d")
-      val dNull = ctx.freshName("dNull")
-      val t = ctx.freshName("t")
-      val less = ctx.freshName("less")
-      val entV = ctx.freshName("entV")
-      s"""
-         |final int $n = $v.numElements();
-         |if ($n % $m != 0) throw new RuntimeException(
-         |  "pqEncode: vector dim " + $n + " not divisible by m=$m");
-         |if ($n / $m != $entryLen) throw new RuntimeException(
-         |  "pqEncode: codebook entry length $entryLen != subvector length "
-         |    + ($n / $m));
-         |final long[] $out = new long[$m];
-         |for (int $j = 0; $j < $m; $j++) {
-         |  final double[][] $ents = $books[$j];
-         |  final long[] $cs = $codes[$j];
-         |  final int $off = $j * $entryLen;
-         |  long $bestC = 0L; double $bestD = 0.0;
-         |  boolean $bestNull = false; boolean $first = true;
-         |  for (int $e = 0; $e < $ents.length; $e++) {
-         |    final double[] $entV = $ents[$e];
-         |    double $d = 0.0; boolean $dNull = false;
-         |    for (int $i = 0; $i < $entryLen; $i++) {
-         |      if ($v.isNullAt($off + $i)) { $dNull = true; break; }
-         |      final double $t = $v.getDouble($off + $i) - $entV[$i];
-         |      $d += $t * $t;
-         |    }
-         |    final boolean $less = $first ? true
-         |      : ($dNull && $bestNull) ? false
-         |      : $dNull ? true
-         |      : $bestNull ? false
-         |      : org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-         |          .compareDoubles($d, $bestD) < 0;
-         |    if ($less) {
-         |      $bestC = $cs[$e]; $bestD = $d;
-         |      $bestNull = $dNull; $first = false;
-         |    }
-         |  }
-         |  $out[$j] = $bestC;
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    }
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val resultCode = body(childGen.value.toString)
-    ev.copy(code = code"""
-      ${childGen.code}
-      if (${childGen.isNull}) throw new RuntimeException(
-        "pqEncode: null vector — dim not divisible by m=$m");
-      ${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-        .javaType(dataType)} ${ev.value} =
-        ${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-          .defaultValue(dataType)};
-      $resultCode
-    """, isNull = FalseLiteral)
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(
@@ -306,7 +294,7 @@ case class PqEncodeCodesExpr(child: Expression,
   * lists (cid, centroid) in ascending cid order. */
 case class CosineArgminCellExpr(child: Expression,
                                 cents: Seq[(Long, Seq[Double])])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with NativeKernel {
 
   @transient private lazy val centVals: Array[Array[Double]] =
     cents.map(_._2.toArray).toArray
@@ -319,19 +307,15 @@ case class CosineArgminCellExpr(child: Expression,
       math.sqrt(s)
     }
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
+  protected def tables: Seq[AnyRef] = Seq(centIds, centVals)
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType))
+  override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<double> input, got $other")
-    }
+  override protected def nullSafeEval(v: Any): Any =
+    run(v.asInstanceOf[ArrayData])
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
+  def run(vec: ArrayData): Any = {
     val n = vec.numElements()
     // ‖vec‖ once (the unroll computed it per centroid — same value):
     // a null element poisons every distance, handled per centroid
@@ -351,7 +335,7 @@ case class CosineArgminCellExpr(child: Expression,
     var e = 0
     while (e < centVals.length) {
       val c = centVals(e)
-      var dNull = vNull || c.length != n
+      val dNull = vNull || c.length != n
       var d = 0.0
       if (!dNull) {
         var dotv = 0.0
@@ -359,78 +343,13 @@ case class CosineArgminCellExpr(child: Expression,
         while (j < n) { dotv += vec.getDouble(j) * c(j); j += 1 }
         d = 1.0 - dotv / (nv * centNorms(e))
       }
-      val less =
-        if (first) true
-        else if (dNull && bestNull) false
-        else if (dNull) true
-        else if (bestNull) false
-        else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-          .compareDoubles(d, bestD) < 0
-      if (less) { bestC = centIds(e); bestD = d; bestNull = dNull; first = false }
+      if (NativeKernel.structLess(first, d, dNull, bestD, bestNull)) {
+        bestC = centIds(e); bestD = d; bestNull = dNull; first = false
+      }
       e += 1
     }
     if (first) null else bestC
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cvs = ctx.addReferenceObj("argminCents", centVals, "double[][]")
-      val cids = ctx.addReferenceObj("argminIds", centIds, "long[]")
-      val cns = ctx.addReferenceObj("argminNorms", centNorms, "double[]")
-      val n = ctx.freshName("n")
-      val vNorm = ctx.freshName("vNorm")
-      val vNull = ctx.freshName("vNull")
-      val nv = ctx.freshName("nv")
-      val bestC = ctx.freshName("bestC")
-      val bestD = ctx.freshName("bestD")
-      val bestNull = ctx.freshName("bestNull")
-      val first = ctx.freshName("first")
-      val e = ctx.freshName("e")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val d = ctx.freshName("d")
-      val dNull = ctx.freshName("dNull")
-      val dotv = ctx.freshName("dotv")
-      val x = ctx.freshName("x")
-      val less = ctx.freshName("less")
-      s"""
-         |final int $n = $v.numElements();
-         |double $vNorm = 0.0; boolean $vNull = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($v.isNullAt($i)) { $vNull = true; break; }
-         |  final double $x = $v.getDouble($i);
-         |  $vNorm += $x * $x;
-         |}
-         |final double $nv = java.lang.Math.sqrt($vNorm);
-         |long $bestC = 0L; double $bestD = 0.0;
-         |boolean $bestNull = false; boolean $first = true;
-         |for (int $e = 0; $e < $cvs.length; $e++) {
-         |  final double[] $c = $cvs[$e];
-         |  boolean $dNull = $vNull || $c.length != $n;
-         |  double $d = 0.0;
-         |  if (!$dNull) {
-         |    double $dotv = 0.0;
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $dotv += $v.getDouble($j) * $c[$j];
-         |    }
-         |    $d = 1.0 - $dotv / ($nv * $cns[$e]);
-         |  }
-         |  final boolean $less = $first ? true
-         |    : ($dNull && $bestNull) ? false
-         |    : $dNull ? true
-         |    : $bestNull ? false
-         |    : org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-         |        .compareDoubles($d, $bestD) < 0;
-         |  if ($less) {
-         |    $bestC = $cids[$e]; $bestD = $d;
-         |    $bestNull = $dNull; $first = false;
-         |  }
-         |}
-         |if ($first) { ${ev.isNull} = true; } else { ${ev.value} = $bestC; }
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): CosineArgminCellExpr = copy(child = newChild)

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.LongType
 
 import graft.engine.Caching.cached
 import graft.functions.VectorFns
@@ -285,14 +288,13 @@ object ProductQuantize {
     * normalization — the residual path).
     *
     * The codebook is m·k rows BY CONTRACT (the same boundedness as
-    * the ADC lookup tables), so it collects once and ships as ONE
-    * typedlit payload — PRE-GROUPED by subspace on the driver into an
-    * array-of-per-subspace-arrays indexed by `element_at(j+1)`, so
-    * each subspace's argmin scans exactly its own k entries (a flat
-    * literal filtered per subspace per row would re-scan all m·k
-    * structs m times per vector — O(m²k), ~65k struct scans/row at
-    * FAISS-standard m=16, k=256). Encoding is then a stateless narrow
-    * map — per vector, m k-entry array_min argmins — with NO explode,
+    * the ADC lookup tables), so it collects once and ships as the
+    * encode kernel's driver arrays — PRE-GROUPED by subspace, so each
+    * subspace's argmin scans exactly its own k entries (a flat list
+    * filtered per subspace per row would re-scan all m·k entries m
+    * times per vector — O(m²k), ~65k scans/row at FAISS-standard
+    * m=16, k=256). Encoding is then a stateless narrow
+    * map — per vector, m k-entry argmins — with NO explode,
     * NO join, and NO shuffle back to (id → codes). At 100 TB that is
     * a pure scan-shaped pass instead of two corpus×m exchanges.
     * Argmin semantics (lexicographic (d², code) struct min = smallest
@@ -323,11 +325,9 @@ object ProductQuantize {
     require(subsSeen == (0L until m.toLong),
       s"pqEncode: codebooks must cover subspaces 0..${m - 1} exactly, " +
         s"got [${subsSeen.mkString(", ")}]")
-    // driver-side pre-group: perSub(j) = subspace j's (code, cvec)
-    // entries in ascending code order (the argmin tiebreak order)
-    val perSub: Seq[Seq[(Long, Seq[Double])]] =
-      (0L until m.toLong).map(j =>
-        entries.filter(_._1 == j).map(t => (t._2, t._3)))
+    // driver-side pre-group: perSub(j) = subspace j's entries in
+    // ascending code order (the argmin tiebreak order)
+    val perSub = (0L until m.toLong).map(j => entries.filter(_._1 == j))
     // ONE native expression per row ([[graft.functions
     // .PqEncodeCodesExpr]]): the former nested-HOF form (transform ∘
     // array_min ∘ transform over the typedlit codebook) paid m·k
@@ -337,12 +337,10 @@ object ProductQuantize {
     // in the expression's scaladoc and pinned by the parity spec; the
     // codebook ships as reference arrays, so m·k can never blow the
     // generated method size the way a literal unroll would.
-    vectors.select(col(idCol),
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.functions.PqEncodeCodesExpr(
-          org.apache.spark.sql.graftbridge.Bridge
-            .expression(col(vecCol)),
-          perSub, entryLen)).as("codes"))
+    vectors.select(col(idCol), Bridge.column(
+      graft.functions.PqEncodeCodesExpr(Bridge.expression(col(vecCol)),
+        perSub.map(_.map(_._3).toArray).toArray,
+        perSub.map(_.map(_._2).toArray).toArray)).as("codes"))
   }
 
   /** Trains and encodes, writing `codebooks/` (one file — m·k rows)
@@ -359,116 +357,147 @@ object ProductQuantize {
       .write.mode("overwrite").parquet(s"$path/codes")
   }
 
-  /** The per-query ADC lookup table: m·k rows of fixed-point
-    * query-subvector · codebook-entry inner products (floor(ip·1e7 +
-    * 0.5) — the suite's engine-portable rounding). ONE definition for
-    * both the flat and the IVF-pruned probe. */
-  private def adcLut(cb: DataFrame, queryVec: DataFrame,
+  /** The relational ADC lookup table: per panel query (`qid`,
+    * `qvec`), m·k rows of fixed-point query-subvector ·
+    * codebook-entry inner products (floor(ip·1e7 + 0.5) — the suite's
+    * engine-portable rounding). The fallback of every ADC scorer past
+    * the LUT byte budget; [[lutTables]] is its driver-side replica. */
+  private def adcLut(cb: DataFrame, queries: DataFrame,
                      m: Int): DataFrame =
-    cb.crossJoin(broadcast(queryVec))
+    cb.crossJoin(broadcast(queries))
       .withColumn("_sublen", subLen(col("qvec"), m, "adcLut"))
       .withColumn("_qs", slice(col("qvec"),
         (col("subspace") * col("_sublen") + 1).cast("int"),
         col("_sublen").cast("int")))
-      .select(col("subspace"), col("code"),
+      .select(col("qid"), col("subspace"), col("code"),
         floor(guardedIp(col("cvec"), col("_qs"), "adcLut") * 1e7 + 0.5)
           .cast("long").as("ip_fp"))
 
-  /** Integer ADC scoring of a codes relation against a broadcast
-    * lookup table: m lookups summed per vector, fixed-point → the
-    * suite's 4-decimal surface. The fallback shape — the single-query
-    * probes score through [[adcScoreFused]]. */
-  private def adcScore(codes: DataFrame, lut: DataFrame, idCol: String,
-                       k: Int): DataFrame =
-    codes
-      .select(col(idCol),
-        posexplode(col("codes")).as(Seq("_pos", "code")))
-      .withColumn("subspace", col("_pos").cast("long"))
-      .join(broadcast(lut), Seq("subspace", "code"))
-      .groupBy(col(idCol))
-      .agg(round(sum(col("ip_fp")) / 1e7, 4).as("adc_score"))
-      .orderBy(col("adc_score").desc, col(idCol))
-      .limit(k)
+  /** Bytes the dense kernel tables may take on the driver (and in each
+    * task's copy of the plan): tables × subspaces × codes × 9 B (an
+    * 8-byte value and its presence flag). Past it the callers run the
+    * relational form. */
+  private val LutBudgetBytes = 64L << 20
 
-  /** Driver-side replica of [[adcLut]] for the fused scorer:
-    * lut(s)(c) = Σ over query rows of floor(dot(bvec, qs)·1e7 + 0.5)
-    * — bit-identical values (same slice, the dot kernel's fold order,
-    * same rounding, the same per-row guards raised with [[adcLut]]'s
-    * messages), presence gated per (s, c) so zero query rows or a
-    * sparse book keep the join's drop semantics. None on degenerate
-    * geometry (sparse giant code ids would blow the dense arrays) —
-    * callers fall back to the relational [[adcScore]]. */
-  private def adcLutDriver(cb: DataFrame, queryVec: DataFrame,
-                           m: Int): Option[graft.functions.AdcExprs.Lut] = {
-    val cbRows = cb.select(col("subspace"), col("code"), col("cvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        r.getAs[scala.collection.Seq[Double]](2).toArray))
-    val maxSub = if (cbRows.isEmpty) -1L else cbRows.map(_._1).max
-    val minSub = if (cbRows.isEmpty) 0L else cbRows.map(_._1).min
-    val maxCode = if (cbRows.isEmpty) -1L else cbRows.map(_._2).max
-    val minCode = if (cbRows.isEmpty) 0L else cbRows.map(_._2).min
-    if (minSub < 0 || maxSub >= 1024 || minCode < 0 ||
-        maxCode >= 65536) return None
-    val mSub = math.max(maxSub.toInt + 1, 0)
-    val kCode = math.max(maxCode.toInt + 1, 0)
-    val vals = Array.fill(mSub)(new Array[Long](kCode))
-    val pres = Array.fill(mSub)(new Array[Boolean](kCode))
-    val qRows = queryVec.select(col("qvec")).collect()
-      .map(_.getAs[scala.collection.Seq[Double]](0).toArray)
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    qRows.foreach { qvec =>
-      if (qvec.length % m != 0) throw new RuntimeException(
-        s"adcLut: vector dim ${qvec.length} not divisible by m=$m")
-      val sublen = qvec.length / m
-      cbRows.foreach { case (s, c, bvec) =>
-        val start = (s * sublen).toInt
-        val qs = qvec.slice(start, start + sublen)
-        if (bvec.length != qs.length) throw new RuntimeException(
-          s"adcLut: codebook entry length ${bvec.length} " +
-            s"!= subvector length ${qs.length}")
-        vals(s.toInt)(c.toInt) +=
-          math.floor(dotD(bvec, qs) * 1e7 + 0.5).toLong
-        pres(s.toInt)(c.toInt) = true
-      }
-    }
-    import scala.collection.immutable.ArraySeq.{unsafeWrapArray => wrap}
-    Some(graft.functions.AdcExprs.Lut(
-      wrap(vals.map(a => wrap(a): IndexedSeq[Long])),
-      wrap(pres.map(a => wrap(a): IndexedSeq[Boolean]))))
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
   }
 
-  /** [[adcScore]] with the per-row fused kernel ([[graft.functions
-    * .CodeLutSumExpr]]): the relational form exploded every candidate
-    * row m× and broadcast-joined the LUT just to sum m integer
-    * lookups — an m× row blow-up ahead of the aggregate (guide §2.3:
-    * shuffle fewer bytes). The per-id groupBy is kept (exact parity
-    * even under duplicate-id inputs); unmatched rows (zero join
-    * matches) yield NULL and are filtered — the rows the join never
-    * emitted. Falls back to the relational shape on degenerate book
-    * geometry. */
-  private def adcScoreFused(codes: DataFrame, cb: DataFrame,
-                            queryVec: DataFrame, m: Int, idCol: String,
-                            k: Int): DataFrame =
-    adcLutDriver(cb, queryVec, m) match {
-      case Some(lut) =>
-        codes
-          .withColumn("_ips",
-            org.apache.spark.sql.graftbridge.Bridge.column(
-              graft.functions.CodeLutSumExpr(
-                org.apache.spark.sql.graftbridge.Bridge
-                  .expression(col("codes")), lut)))
-          .filter(col("_ips").isNotNull)
-          .groupBy(col(idCol))
-          .agg(round(sum(col("_ips")) / 1e7, 4).as("adc_score"))
-          .orderBy(col("adc_score").desc, col(idCol))
-          .limit(k)
-      case None => adcScore(codes, adcLut(cb, queryVec, m), idCol, k)
+  /** floor(dot·1e7 + 0.5) with the dot kernel's left-to-right fold —
+    * the relational LUT builds' value, bit for bit. */
+  private def fixedDot(a: Array[Double], b: Array[Double]): Long =
+    math.floor(dot(a, b) * 1e7 + 0.5).toLong
+
+  /** The ONE driver-side LUT build, for the ADC kernel and the drift
+    * kernel: table(key)(s)(c) = Σ over the `rows` with that key of
+    * [[fixedDot]](entry, the row vector's subspace-s slice) — the
+    * relational builds' values, with their per-row guards and
+    * messages (prefixed `who`). `m` gives ADC's slicing (a vector
+    * splits into m subvectors and must divide); None slices by entry
+    * length, the drift form's `size(bvec)`. Presence is set per book
+    * entry, so a sparse book keeps the join's drop semantics.
+    *
+    * None when the tables (`rows`' distinct keys plus `extraTables`)
+    * would pass [[LutBudgetBytes]], or on a negative id — the caller
+    * then runs the relational form. */
+  private def lutTables(books: IndexedSeq[BookRow],
+                        rows: Seq[(Long, Array[Double])], m: Option[Int],
+                        who: String, extraTables: Int = 0)
+      : Option[graft.functions.AdcExprs.Luts] = {
+    val keys = rows.map(_._1).distinct.sorted.toArray
+    val subs = if (books.isEmpty) 0L else books.map(_._1).max + 1
+    val codes = if (books.isEmpty) 0L else books.map(_._2).max + 1
+    val tables = math.max(keys.length + extraTables, 1)
+    if (books.exists(b => b._1 < 0 || b._2 < 0) ||
+        tables.toDouble * subs * codes * 9 > LutBudgetBytes) return None
+    val present = Array.ofDim[Boolean](subs.toInt, codes.toInt)
+    books.foreach(b => present(b._1.toInt)(b._2.toInt) = true)
+    val vals = Array.fill(keys.length)(
+      Array.ofDim[Long](subs.toInt, codes.toInt))
+    rows.foreach { case (key, vec) =>
+      val sublen = m.map { mm =>
+        if (vec.length % mm != 0) throw new RuntimeException(
+          s"$who: vector dim ${vec.length} not divisible by m=$mm")
+        vec.length / mm
+      }
+      val table = vals(java.util.Arrays.binarySearch(keys, key))
+      books.foreach { case (s, c, bvec) =>
+        val len = sublen.getOrElse(bvec.length)
+        val start = (s * len).toInt
+        // scala slice clamps past the end exactly like Spark's — a
+        // short vector then fails the guard, as guardedIp raises
+        val sub = vec.slice(start, start + len)
+        if (bvec.length != sub.length) throw new RuntimeException(
+          s"$who: codebook entry length ${bvec.length} " +
+            s"!= subvector length ${sub.length}")
+        table(s.toInt)(c.toInt) += fixedDot(bvec, sub)
+      }
     }
+    Some(graft.functions.AdcExprs.Luts(keys, vals, present))
+  }
+
+  /** Σ of the ADC lookups per `keys` group (which include `qid`) —
+    * the one scoring core of the flat, IVF, residual and panel probes.
+    * `queries` carries (`qid`, `qvec`); `codes` either carries `qid`
+    * (candidates already fanned out per query) or scores against every
+    * query. Within the LUT byte budget each code row is m lookups
+    * summed by the native kernel ([[graft.functions
+    * .QidCodeLutSumExpr]]) — the relational form exploded every row m×
+    * and broadcast-joined the LUT just to sum them. Rows with no
+    * matched position yield NULL and drop: the rows the join never
+    * emitted. Past the budget, or with a non-long qid, the relational
+    * explode → broadcast-LUT join runs instead. The per-group sum is
+    * kept on both paths (exact parity under duplicate-id inputs);
+    * the result column is `_ip_fp`. */
+  private def adcSums(codes: DataFrame, books: IndexedSeq[BookRow],
+                      queries: DataFrame, m: Int,
+                      keys: Seq[String]): DataFrame = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    val hasQid = codes.columns.contains("qid")
+    val luts =
+      if (queries.schema("qid").dataType != LongType) None
+      else lutTables(books, queries.select(col("qid"), col("qvec"))
+        .collect().toSeq.map(r => (r.getLong(0),
+          r.getAs[scala.collection.Seq[Double]](1).toArray)),
+        Some(m), "adcLut")
+    luts match {
+      case Some(t) =>
+        (if (hasQid) codes
+         else codes.crossJoin(broadcast(t.keys.toSeq.toDF("qid"))))
+          .withColumn("_ip", Bridge.column(graft.functions
+            .QidCodeLutSumExpr(Bridge.expression(col("qid")),
+              Bridge.expression(col("codes")), t)))
+          .filter(col("_ip").isNotNull)
+          .groupBy(keys.map(col): _*)
+          .agg(sum(col("_ip")).as("_ip_fp"))
+      case None =>
+        val cb = books.map(b => (b._1, b._2, b._3.toSeq))
+          .toDF("subspace", "code", "cvec")
+        codes
+          .select(keys.filter(codes.columns.contains).map(col) :+
+            posexplode(col("codes")).as(Seq("_pos", "code")): _*)
+          .withColumn("subspace", col("_pos").cast("long"))
+          .join(broadcast(adcLut(cb, queries, m)),
+            (if (hasQid) Seq("qid") else Nil) ++ Seq("subspace", "code"))
+          .groupBy(keys.map(col): _*)
+          .agg(sum(col("ip_fp")).as("_ip_fp"))
+    }
+  }
+
+  /** ADC top-k of one query over a codes relation, fixed-point sums →
+    * the suite's 4-decimal surface. `queryVec` rows all score as the
+    * one query (their tables sum, as the relational LUT's rows did). */
+  private def adcTopK(codes: DataFrame, books: IndexedSeq[BookRow],
+                      queryVec: DataFrame, m: Int, idCol: String,
+                      k: Int): DataFrame =
+    adcSums(codes.withColumn("qid", lit(0L)), books,
+        queryVec.withColumn("qid", lit(0L)), m, Seq("qid", idCol))
+      .select(col(idCol), round(col("_ip_fp") / 1e7, 4).as("adc_score"))
+      .orderBy(col("adc_score").desc, col(idCol))
+      .limit(k)
 
   /** ADC top-k over a flat [[pqWriteIndex]] layout. `queryVec` is one
     * row with an `array<double>` column `qvec` (used raw — a positive
@@ -476,9 +505,9 @@ object ProductQuantize {
   def pqProbeADC(spark: SparkSession, path: String,
                  queryVec: DataFrame, idCol: String,
                  k: Int): DataFrame = {
-    val cb = readBooks(spark, s"$path/codebooks")
-    adcScoreFused(spark.read.parquet(s"$path/codes"), cb, queryVec,
-      mOf(spark, s"$path/codebooks"), idCol, k)
+    val books = bookRowsAt(spark, s"$path/codebooks")
+    adcTopK(spark.read.parquet(s"$path/codes"), books, queryVec,
+      mOfRows(books), idCol, k)
   }
 
   /** Materialize the IVF-PQ layout — the FAISS production shape, both
@@ -566,9 +595,9 @@ object ProductQuantize {
     * sealed manifest both resolve through the SAME generation (a
     * recenter sealing mid-probe changes neither — the codes/books
     * pairing is atomic); legacy layouts read the live hive tree and
-    * the live `codebooks` copy. */
+    * the live `codebooks` copy. Returns (codes, books location). */
   private def pinnedCodesAndBooks(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame, String) =
+      : (DataFrame, String) =
     resolveCodesAndBooks(spark, path,
       SegmentManifest.latest(spark, s"$path/codes"))
 
@@ -576,13 +605,11 @@ object ProductQuantize {
     * pinned — the one-resolution entry for readers that also derive
     * the centroid model from the same manifest
     * ([[graft.streaming.StreamingVectorIndex.probeLiveIvfPq]]).
-    * Returns (codes, books, books location) — the location feeds the
-    * (loc, mtime)-keyed [[mOf]] memo so probes stop paying one
-    * m-aggregate job per call. */
+    * Returns (codes, books location) — the location feeds the
+    * [[bookRowsAt]] memo, so probes pay no codebook job per call. */
   private[graft] def resolveCodesAndBooks(
       spark: SparkSession, path: String,
-      mfOpt: Option[SegmentManifest.Manifest])
-      : (DataFrame, DataFrame, String) = {
+      mfOpt: Option[SegmentManifest.Manifest]): (DataFrame, String) = {
     val indexPath = s"$path/codes"
     mfOpt match {
       case Some(mf) =>
@@ -603,16 +630,14 @@ object ProductQuantize {
           .getOrElse(throw new IllegalStateException(
             s"IVF-PQ index at $indexPath: generation ${mf.gen} has " +
               "no cells"))
-        val bl = booksLocFor(path, Some(mf))
-        (codes, readBooks(spark, bl), bl)
+        (codes, booksLocFor(path, Some(mf)))
       case None =>
         // true legacy/manifest-less: plain reads — NOT
         // readQuantizedIndex, whose centroid normalization would
         // break the FLAT (cell-less) PQ store pqProbeADCMulti also
         // serves; hive layouts keep their centroid_id partition
         // column as discovered
-        (spark.read.parquet(indexPath),
-          readBooks(spark, s"$path/codebooks"), s"$path/codebooks")
+        (spark.read.parquet(indexPath), s"$path/codebooks")
     }
   }
 
@@ -631,7 +656,7 @@ object ProductQuantize {
     * fingerprint, the streaming loop's model snapshot) resolves here. */
   private[graft] def governingBooks(spark: SparkSession,
                                     path: String): DataFrame =
-    booksFor(spark, path, SegmentManifest.latest(spark, s"$path/codes"))
+    readBooks(spark, governingBooksLoc(spark, path))
 
   /** The ONE "which books govern" rule, shared by the pinned probe
     * reads ([[resolveCodesAndBooks]]) and the write-side consumers
@@ -647,130 +672,93 @@ object ProductQuantize {
       case _ => s"$path/codebooks"
     }
 
-  private def booksFor(spark: SparkSession, path: String,
-                       mf: Option[SegmentManifest.Manifest]): DataFrame =
-    readBooks(spark, booksLocFor(path, mf))
-
-  /** [[governingBooks]]' location — for the (loc, mtime)-keyed model
-    * memos below. */
+  /** [[governingBooks]]' location — for the model memos below. */
   private[graft] def governingBooksLoc(spark: SparkSession,
                                        path: String): String =
     booksLocFor(path, SegmentManifest.latest(spark, s"$path/codes"))
 
-  /** Model-geometry and model-identity memos for WRITTEN codebook
-    * files, keyed by (location, dir mtime) — both are pure functions
-    * of the file, but were recomputed as one Spark JOB per call: the
-    * `m` aggregate ran once per IVF-PQ probe (40× in the probe-hammer
-    * rows) and once per refresh wave; the books-half fingerprint ran
-    * once per wave's drift stats (r20 WaveJobProbe). Metadata-scale,
-    * LRU-bounded; the mtime key re-reads a rewritten file. */
-  private val mMemo: java.util.Map[(String, Long), java.lang.Integer] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), java.lang.Integer](
-          16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), java.lang.Integer])
-            : Boolean = size() > 4096
-      })
-
-  private val bookFpMemo: java.util.Map[(String, Long), java.lang.Long] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), java.lang.Long](
-          16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), java.lang.Long])
-            : Boolean = size() > 4096
-      })
-
   /** One codebook entry: (subspace, code, cvec). */
-  private[graft] type BookRow = (Long, Long, Vector[Double])
+  private[graft] type BookRow = (Long, Long, Array[Double])
 
   /** The rows of a codebooks frame, in scan order — the one driver-side
-    * collect both the encode and the drift-stats LUT build start from. */
+    * collect the encode and every LUT build start from. */
   private def bookRows(codebooks: DataFrame): IndexedSeq[BookRow] =
     codebooks.select(col("subspace"), col("code"), col("cvec")).collect()
       .toIndexedSeq.map(r => (r.getAs[Long](0), r.getAs[Long](1),
-        r.getAs[scala.collection.Seq[Double]](2).toVector))
+        r.getAs[scala.collection.Seq[Double]](2).toArray))
 
-  private val bookRowsMemo
-      : java.util.Map[(String, Long), IndexedSeq[BookRow]] =
+  /** m (= max subspace + 1) of a book. */
+  private def mOfRows(books: IndexedSeq[BookRow]): Int =
+    books.map(_._1).max.toInt + 1
+
+  /** Memo key of a written codebooks directory: (location, newest
+    * entry mtime, total bytes, entry count), all from one listing — a
+    * rewrite that lands within the filesystem's timestamp granularity
+    * still changes the bytes or the count. */
+  private type BooksKey = (String, Long, Long, Int)
+
+  private def booksKey(spark: SparkSession, loc: String): BooksKey = {
+    val p = new org.apache.hadoop.fs.Path(loc)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p)
+    (loc, st.map(_.getModificationTime).maxOption.getOrElse(0L),
+      st.map(_.getLen).sum, st.length)
+  }
+
+  /** Model memos for WRITTEN codebook files, keyed by [[booksKey]]:
+    * the rows (m·k by contract) and the books-half fingerprint are
+    * pure functions of the file, but were one Spark job per call —
+    * per probe, per refresh encode, per wave's drift stats (r20
+    * WaveJobProbe). LRU-bounded. */
+  private def lruMemo[V](cap: Int): java.util.Map[BooksKey, V] =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), IndexedSeq[BookRow]](
-          16, 0.75f, true) {
+      new java.util.LinkedHashMap[BooksKey, V](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), IndexedSeq[BookRow]])
-            : Boolean = size() > 64
+            e: java.util.Map.Entry[BooksKey, V]): Boolean = size() > cap
       })
 
-  private def booksMtime(spark: SparkSession, loc: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(loc)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
+  private val bookRowsMemo = lruMemo[IndexedSeq[BookRow]](64)
+  private val bookFpMemo = lruMemo[java.lang.Long](4096)
+
+  private def memoized[V <: AnyRef](memo: java.util.Map[BooksKey, V],
+                                    spark: SparkSession, loc: String)
+                                   (compute: => V): V = {
+    val key = booksKey(spark, loc)
+    val hit = memo.get(key)
+    if (hit != null) hit
+    else { val v = compute; memo.put(key, v); v }
   }
 
-  /** m (= max subspace + 1) of a written codebooks file, memoized. */
-  private[graft] def mOf(spark: SparkSession, loc: String): Int = {
-    val key = (loc, booksMtime(spark, loc))
-    val hit = mMemo.get(key)
-    if (hit != null) hit.intValue()
-    else {
-      val m = readBooks(spark, loc)
-        .agg(max(col("subspace"))).head().getLong(0).toInt + 1
-      mMemo.put(key, java.lang.Integer.valueOf(m))
-      m
-    }
-  }
+  /** The rows of a written codebooks file ([[bookRows]]), memoized. */
+  private[graft] def bookRowsAt(spark: SparkSession,
+                                loc: String): IndexedSeq[BookRow] =
+    memoized(bookRowsMemo, spark, loc)(bookRows(readBooks(spark, loc)))
 
   /** The books half of the IVF-PQ model fingerprint
     * ([[Similarity.modelFingerprint]] over (subspace, code, bvec)),
     * memoized per written codebooks file. */
   private[graft] def booksFingerprintAt(spark: SparkSession,
-                                        loc: String): Long = {
-    val key = (loc, booksMtime(spark, loc))
-    val hit = bookFpMemo.get(key)
-    if (hit != null) hit.longValue()
-    else {
-      val fp = Similarity.modelFingerprint(
+                                        loc: String): Long =
+    memoized(bookFpMemo, spark, loc)(java.lang.Long.valueOf(
+      Similarity.modelFingerprint(
         readBooks(spark, loc).select(col("subspace"), col("code"),
           col("cvec").as("bvec")),
-        Seq("subspace", "code"), "bvec")
-      bookFpMemo.put(key, java.lang.Long.valueOf(fp))
-      fp
-    }
-  }
+        Seq("subspace", "code"), "bvec"))).longValue()
 
-  /** The rows of a written codebooks file ([[bookRows]]), memoized
-    * like [[mOf]], so the refresh encode and the drift-stats LUT build
-    * pay no collect job per wave. m·k rows by contract; the LRU bound
-    * caps the memo at 64 files. */
-  private[graft] def bookRowsAt(spark: SparkSession,
-                                loc: String): IndexedSeq[BookRow] = {
-    val key = (loc, booksMtime(spark, loc))
-    val hit = bookRowsMemo.get(key)
-    if (hit != null) hit
-    else {
-      val rows = bookRows(readBooks(spark, loc))
-      bookRowsMemo.put(key, rows)
-      rows
-    }
-  }
-
-  /** ADC probe over an already-resolved (codes, codebooks) pair — the
+  /** ADC probe over already-resolved codes and books location — the
     * second half of [[ivfPqProbe]], exposed so pin-once callers reuse
     * the identical cell restriction + scoring. */
   private[graft] def ivfPqProbeResolved(codes: DataFrame,
-                                        cb: DataFrame, cents: DataFrame,
+                                        booksLoc: String,
+                                        cents: DataFrame,
                                         queryVec: DataFrame,
                                         idCol: String, k: Int,
-                                        nProbe: Int,
-                                        mO: Option[Int] = None)
-      : DataFrame = {
+                                        nProbe: Int): DataFrame = {
+    val books = bookRowsAt(codes.sparkSession, booksLoc)
     val probed = Similarity.probedCellIds(cents, queryVec, nProbe)
-    val m = mO.getOrElse(
-      cb.agg(max(col("subspace"))).head().getLong(0).toInt + 1)
-    adcScoreFused(codes.filter(col("centroid_id")
+    adcTopK(codes.filter(col("centroid_id")
         .isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(probed): _*)),
-      cb, queryVec, m, idCol, k)
+      books, queryVec, mOfRows(books), idCol, k)
   }
 
   /** Probe an IVF-PQ index: cell ranking + literal-`isin` partition
@@ -782,9 +770,8 @@ object ProductQuantize {
   def ivfPqProbe(spark: SparkSession, path: String, cents: DataFrame,
                  queryVec: DataFrame, idCol: String, k: Int,
                  nProbe: Int): DataFrame = {
-    val (allCodes, cb, bl) = pinnedCodesAndBooks(spark, path)
-    ivfPqProbeResolved(allCodes, cb, cents, queryVec, idCol, k, nProbe,
-      mO = Some(mOf(spark, bl)))
+    val (allCodes, bl) = pinnedCodesAndBooks(spark, path)
+    ivfPqProbeResolved(allCodes, bl, cents, queryVec, idCol, k, nProbe)
   }
 
   /** The IVF-PQ probe SEMANTICS replayed against a corpus snapshot
@@ -802,10 +789,9 @@ object ProductQuantize {
   def ivfPqProbeSnapshot(snapshot: DataFrame, cents: DataFrame,
                          codebooks: DataFrame, queryVec: DataFrame,
                          idCol: String, vecCol: String, k: Int,
-                         nProbe: Int,
-                         mO: Option[Int] = None): DataFrame = {
-    val m = mO.getOrElse(codebooks.agg(max(col("subspace"))).head()
-      .getLong(0).toInt + 1)
+                         nProbe: Int): DataFrame = {
+    val books = bookRows(codebooks)
+    val m = mOfRows(books)
     val probed = Similarity.probedCellIds(cents, queryVec, nProbe)
     val members = snapshot.join(
         Similarity.ivfAssignCosine(snapshot, cents, idCol, vecCol),
@@ -820,9 +806,10 @@ object ProductQuantize {
     // sub-second at sf0.1 (5k vectors). The frame is members-sized
     // (nProbe cells' worth of (id, m codes) rows), so the eager local
     // checkpoint is tiny and pins the derivation exactly once.
-    val encoded = pqEncode(members, idCol, vecCol, codebooks, m)
+    val encoded = pqEncodeRows(unitVectors(members, vecCol, Seq(idCol)),
+        idCol, "_uv", books, m)
       .localCheckpoint()
-    adcScoreFused(encoded, codebooks, queryVec, m, idCol, k)
+    adcTopK(encoded, books, queryVec, m, idCol, k)
   }
 
   /** EXACT-REFINE rung (FAISS's IndexRefineFlat): the ADC probe keeps
@@ -863,8 +850,9 @@ object ProductQuantize {
   def pqProbeADCMulti(spark: SparkSession, path: String,
                       queries: DataFrame, idCol: String,
                       k: Int): DataFrame = {
-    val (codes, cb, bl) = pinnedCodesAndBooks(spark, path)
-    adcScoreMultiFused(codes, cb, queries, mOf(spark, bl), idCol, k)
+    val (codes, bl) = pinnedCodesAndBooks(spark, path)
+    val books = bookRowsAt(spark, bl)
+    adcTopKMulti(codes, books, queries, mOfRows(books), idCol, k)
   }
 
   /** Batch IVF-PQ probe, relational cell restriction: per-query top
@@ -875,30 +863,28 @@ object ProductQuantize {
   def ivfPqProbeMulti(spark: SparkSession, path: String,
                       cents: DataFrame, queries: DataFrame,
                       idCol: String, k: Int, nProbe: Int): DataFrame = {
-    val (codesRaw, cb, bl) = pinnedCodesAndBooks(spark, path)
-    ivfPqProbeResolvedMulti(codesRaw, cb, cents, queries, idCol, k,
-      nProbe, mO = Some(mOf(spark, bl)))
+    val (codesRaw, bl) = pinnedCodesAndBooks(spark, path)
+    ivfPqProbeResolvedMulti(codesRaw, bl, cents, queries, idCol, k,
+      nProbe)
   }
 
   /** [[ivfPqProbeResolved]]'s panel sibling over already-resolved
-    * (codes, codebooks): the ONE cast + m-derivation + batch-ADC
-    * composition, shared by the pinned path above and the streaming
-    * loop's pin-once panel probe ([[graft.streaming
-    * .StreamingVectorIndex.probeLiveIvfPqMulti]]) so the two can
-    * never desynchronize on it. */
+    * (codes, books location): the ONE cast + batch-ADC composition,
+    * shared by the pinned path above and the streaming loop's
+    * pin-once panel probe ([[graft.streaming.StreamingVectorIndex
+    * .probeLiveIvfPqMulti]]) so the two can never desynchronize on
+    * it. */
   private[graft] def ivfPqProbeResolvedMulti(codesRaw: DataFrame,
-                                             cb: DataFrame,
+                                             booksLoc: String,
                                              cents: DataFrame,
                                              queries: DataFrame,
                                              idCol: String, k: Int,
-                                             nProbe: Int,
-                                             mO: Option[Int] = None)
-      : DataFrame = {
-    val m = mO.getOrElse(
-      cb.agg(max(col("subspace"))).head().getLong(0).toInt + 1)
+                                             nProbe: Int): DataFrame = {
+    val books = bookRowsAt(codesRaw.sparkSession, booksLoc)
     val codes = codesRaw
       .withColumn("centroid_id", col("centroid_id").cast("long"))
-    ivfPqScoreCodesMulti(codes, cb, cents, queries, idCol, k, nProbe, m)
+    ivfPqScoreRowsMulti(codes, books, cents, queries, idCol, k, nProbe,
+      mOfRows(books))
   }
 
   /** Flat ADC top-k per panel query over IN-MEMORY codes + codebooks —
@@ -908,7 +894,7 @@ object ProductQuantize {
   def pqScoreCodesMulti(codes: DataFrame, cb: DataFrame,
                         queries: DataFrame, idCol: String, k: Int,
                         m: Int): DataFrame =
-    adcScoreMultiFused(codes, cb, queries, m, idCol, k)
+    adcTopKMulti(codes, bookRows(cb), queries, m, idCol, k)
 
   /** [[ivfPqProbeMulti]] over in-memory frames (`codes` carries
     * `centroid_id`): per-query top-nProbe cells restrict candidates,
@@ -916,19 +902,51 @@ object ProductQuantize {
   def ivfPqScoreCodesMulti(codes: DataFrame, cb: DataFrame,
                            cents: DataFrame, queries: DataFrame,
                            idCol: String, k: Int, nProbe: Int,
-                           m: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("_cd"), col("centroid_id"))
-    val probed = cents.crossJoin(broadcast(queries))
+                           m: Int): DataFrame =
+    ivfPqScoreRowsMulti(codes, bookRows(cb), cents, queries, idCol, k,
+      nProbe, m)
+
+  private def ivfPqScoreRowsMulti(codes: DataFrame,
+                                  books: IndexedSeq[BookRow],
+                                  cents: DataFrame, queries: DataFrame,
+                                  idCol: String, k: Int, nProbe: Int,
+                                  m: Int): DataFrame =
+    adcTopKMulti(codes.join(broadcast(probedPerQuery(cents, queries,
+        nProbe).select(col("qid"), col("centroid_id"))),
+        Seq("centroid_id")),
+      books, queries, m, idCol, k)
+
+  /** Per panel query, its top-nProbe cells by centroid cosine (ties to
+    * the smaller cell) with the fixed-point q·centroid constant
+    * `cell_fp` the residual scores add — a |cells|·|panel| frame. */
+  private def probedPerQuery(cents: DataFrame, queries: DataFrame,
+                             nProbe: Int): DataFrame =
+    cents.crossJoin(broadcast(queries))
       .withColumn("_cd",
         lit(1.0) - VectorFns.cosine(col("cvec"), col("qvec")))
-      .withColumn("_rn", row_number().over(wc))
+      .withColumn("_rn", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("_cd"), col("centroid_id"))))
       .filter(col("_rn") <= nProbe)
-      .select(col("qid"), col("centroid_id"))
-    adcScoreMultiFused(codes.join(broadcast(probed), Seq("centroid_id")),
-      cb, queries, m, idCol, k)
-  }
+      .select(col("qid"), col("centroid_id"),
+        floor(VectorFns.dot(col("cvec"), col("qvec")) * 1e7 + 0.5)
+          .cast("long").as("cell_fp"))
+
+  /** ADC top-k per panel query (`queries`: `qid`, `qvec`) over a codes
+    * relation, per-qid window. */
+  private def adcTopKMulti(codes: DataFrame, books: IndexedSeq[BookRow],
+                           queries: DataFrame, m: Int, idCol: String,
+                           k: Int): DataFrame =
+    topKPerQid(adcSums(codes, books, queries, m, Seq("qid", idCol))
+      .select(col("qid"), col(idCol),
+        round(col("_ip_fp") / 1e7, 4).as("adc_score")), idCol, k)
+
+  private def topKPerQid(scored: DataFrame, idCol: String,
+                         k: Int): DataFrame =
+    scored
+      .withColumn("_rn", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("adc_score").desc, col(idCol))))
+      .filter(col("_rn") <= k)
+      .select(col("qid"), col(idCol), col("adc_score"))
 
   /** CELL-INCREMENTAL refresh of an [[ivfPqWriteIndex]] layout — the
     * maintenance story the int8 inverted file already has
@@ -978,11 +996,9 @@ object ProductQuantize {
       vecCol: String, residual: Boolean): Seq[Long] = {
     val indexPath = s"$path/codes"
     // the GOVERNING books, manifest-resolved — never the live cache;
-    // m through the (loc, mtime) memo — the aggregate was one job per
-    // wave for a constant of the written file
-    val booksLoc = governingBooksLoc(spark, path)
-    val books = bookRowsAt(spark, booksLoc)
-    val m = mOf(spark, booksLoc)
+    // their rows through the memo (a collect per wave otherwise)
+    val books = bookRowsAt(spark, governingBooksLoc(spark, path))
+    val m = mOfRows(books)
     val changed = cached(
       changes.filter(col("status") =!= "unchanged"))
     val gone = changed.filter(col("status").isin("removed", "modified"))
@@ -1054,7 +1070,7 @@ object ProductQuantize {
     // the PQ rows are valid under BOTH model artifacts — seal the
     // pair (a recenter retrains the books too, so the carried-stats
     // check must see that as a model change). The books half rides
-    // the (loc, mtime) memo; callers whose cents come from a written
+    // the codebook memo; callers whose cents come from a written
     // gen-keyed store pass the whole pair memoized (modelFpO) — the
     // two inline collects were jobs per streaming wave
     val modelFp = modelFpO.getOrElse(
@@ -1078,84 +1094,37 @@ object ProductQuantize {
     // at scale an m× row blow-up plus an exchange for a scan-shaped
     // map (guide §2: remove shuffles outright). Both model artifacts
     // are broadcast-sized BY CONTRACT, so they collect once and ride
-    // the kernel as reference arrays; the LUT values replicate the
-    // relational build's expressions bit for bit (same slice, the
-    // dot kernel's fold order, floor(·1e7 + 0.5)), the kernel
+    // the kernel as driver arrays built by the one [[lutTables]]
+    // (the relational build's values bit for bit); the kernel
     // replicates the inner join's skip/drop semantics, and the
     // surviving arithmetic keeps the identical Column form — the
-    // parity spec pins kernel ≡ relational on a real index. Falls
-    // back to the relational pipeline on degenerate geometry (sparse
-    // giant code ids would blow the dense arrays).
-    val cbRows = bookRowsAt(spark, booksLoc)
-      .map { case (s, c, bvec) => (s, c, bvec.toArray) }
-    val centRows = cents.select(col("centroid_id"), col("cvec"))
-      .collect()
-      .map(r => (r.getLong(0),
+    // parity spec pins kernel ≡ relational on a real index. Past the
+    // LUT byte budget the relational pipeline runs instead.
+    val books = bookRowsAt(spark, booksLoc)
+    val cellVecs = cents.select(col("centroid_id"), col("cvec")).collect()
+      .toSeq.map(r => (r.getLong(0),
         r.getAs[scala.collection.Seq[Double]](1).toArray))
-    val maxSub = if (cbRows.isEmpty) -1L else cbRows.map(_._1).max
-    val minSub = if (cbRows.isEmpty) 0L else cbRows.map(_._1).min
-    val maxCode = if (cbRows.isEmpty) -1L else cbRows.map(_._2).max
-    val minCode = if (cbRows.isEmpty) 0L else cbRows.map(_._2).min
-    if (cbRows.isEmpty || minSub < 0 || maxSub >= 1024 ||
-        minCode < 0 || maxCode >= 65536 ||
-        centRows.length.toLong * (maxSub + 1) * (maxCode + 1) >
-          50000000L)
-      return ivfPqDriftStatsRelational(spark, booksLoc, cents, codes,
-        idCol, modelFp)
-    val mSub = maxSub.toInt + 1
-    val kCode = maxCode.toInt + 1
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
+    lutTables(books, cellVecs, None, "ivfPqDriftStats",
+        extraTables = 1) match {
+      case None => ivfPqDriftStatsRelational(spark, booksLoc, cents,
+        codes, idCol, modelFp)
+      case Some(ip) =>
+        val nn = ip.present.map(p => new Array[Long](p.length))
+        books.foreach { case (s, c, b) =>
+          nn(s.toInt)(c.toInt) = fixedDot(b, b) }
+        val vecOf = cellVecs.toMap
+        val norms = ip.keys.map(c => math.sqrt(dot(vecOf(c), vecOf(c))))
+        codes
+          .withColumn("cd_fp", Bridge.column(graft.functions.PqCdFpExpr(
+            Bridge.expression(col("centroid_id")),
+            Bridge.expression(col("codes")), ip, nn, norms)))
+          .filter(col("cd_fp").isNotNull)
+          .groupBy(col("centroid_id"))
+          .agg(count(lit(1)).as("n"), sum(col("cd_fp")).as("cd_fp_sum"))
+          .select(col("centroid_id"), col("n"),
+            round(col("cd_fp_sum") / col("n") / 1e7, 4).as("mean_cd"),
+            col("cd_fp_sum"), lit(modelFp).as("model_fp"))
     }
-    val present = Array.fill(mSub)(new Array[Boolean](kCode))
-    val nnFp = Array.fill(mSub)(new Array[Long](kCode))
-    cbRows.foreach { case (s, c, bvec) =>
-      present(s.toInt)(c.toInt) = true
-      nnFp(s.toInt)(c.toInt) =
-        math.floor(dotD(bvec, bvec) * 1e7 + 0.5).toLong
-    }
-    val cellIds = centRows.map(_._1)
-    val ipFp = centRows.map { case (_, cvec) =>
-      val perSub = Array.fill(mSub)(new Array[Long](kCode))
-      cbRows.foreach { case (s, c, bvec) =>
-        val sublen = bvec.length
-        val start = (s * sublen).toInt
-        // scala slice clamps past the end exactly like Spark's —
-        // a short centroid then fails the guard below, same as the
-        // relational form's guardedIp raise
-        val cs = cvec.slice(start, start + sublen)
-        if (cs.length != bvec.length) throw new RuntimeException(
-          s"ivfPqDriftStats: codebook entry length ${bvec.length} " +
-            s"!= subvector length ${cs.length}")
-        perSub(s.toInt)(c.toInt) =
-          math.floor(dotD(bvec, cs) * 1e7 + 0.5).toLong
-      }
-      perSub
-    }
-    val cnorms = centRows.map { case (_, cvec) =>
-      math.sqrt(dotD(cvec, cvec)) }
-    import scala.collection.immutable.ArraySeq.{unsafeWrapArray => wrap}
-    val expr = graft.functions.PqCdFpExpr(
-      org.apache.spark.sql.graftbridge.Bridge
-        .expression(col("centroid_id")),
-      org.apache.spark.sql.graftbridge.Bridge.expression(col("codes")),
-      wrap(cellIds),
-      wrap(ipFp.map(p => wrap(p.map(a => wrap(a)
-        : IndexedSeq[Long])): IndexedSeq[IndexedSeq[Long]])),
-      wrap(nnFp.map(a => wrap(a): IndexedSeq[Long])),
-      wrap(present.map(a => wrap(a): IndexedSeq[Boolean])),
-      wrap(cnorms))
-    codes
-      .withColumn("cd_fp",
-        org.apache.spark.sql.graftbridge.Bridge.column(expr))
-      .filter(col("cd_fp").isNotNull)
-      .groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("n"), sum(col("cd_fp")).as("cd_fp_sum"))
-      .select(col("centroid_id"), col("n"),
-        round(col("cd_fp_sum") / col("n") / 1e7, 4).as("mean_cd"),
-        col("cd_fp_sum"), lit(modelFp).as("model_fp"))
   }
 
   /** The pre-kernel relational drift-stats pipeline — the fallback
@@ -1345,8 +1314,7 @@ object ProductQuantize {
     val probed = Similarity.probedCellIds(cents, queryVec, nProbe)
     val probedSeq =
       scala.collection.immutable.ArraySeq.unsafeWrapArray(probed)
-    val cb = readBooks(spark, s"$path/codebooks")
-    val m = mOf(spark, s"$path/codebooks")
+    val books = bookRowsAt(spark, s"$path/codebooks")
     val cellConst = cents.filter(col("centroid_id").isin(probedSeq: _*))
       .crossJoin(broadcast(queryVec))
       .select(col("centroid_id"),
@@ -1355,42 +1323,15 @@ object ProductQuantize {
     val codes = Similarity.readQuantizedIndex(spark, s"$path/codes")
       .filter(col("centroid_id").isin(probedSeq: _*))
       .withColumn("centroid_id", col("centroid_id").cast("long"))
-    // same fused treatment as [[adcScoreFused]] — the residual sum is
-    // the per-row LUT fold; the per-(id, cell) groupBy is kept for
-    // exact parity, the cell constant joins as before
-    adcLutDriver(cb, queryVec, m) match {
-      case Some(lut) =>
-        codes
-          .withColumn("_row_fp",
-            org.apache.spark.sql.graftbridge.Bridge.column(
-              graft.functions.CodeLutSumExpr(
-                org.apache.spark.sql.graftbridge.Bridge
-                  .expression(col("codes")), lut)))
-          .filter(col("_row_fp").isNotNull)
-          .groupBy(col(idCol), col("centroid_id"))
-          .agg(sum(col("_row_fp")).as("_res_fp"))
-          .join(broadcast(cellConst), Seq("centroid_id"))
-          .select(col(idCol),
-            round((col("_res_fp") + col("cell_fp")) / 1e7, 4)
-              .as("adc_score"))
-          .orderBy(col("adc_score").desc, col(idCol))
-          .limit(k)
-      case None =>
-        codes
-          .select(col(idCol), col("centroid_id"),
-            posexplode(col("codes")).as(Seq("_pos", "code")))
-          .withColumn("subspace", col("_pos").cast("long"))
-          .join(broadcast(adcLut(cb, queryVec, m)),
-            Seq("subspace", "code"))
-          .groupBy(col(idCol), col("centroid_id"))
-          .agg(sum(col("ip_fp")).as("_res_fp"))
-          .join(broadcast(cellConst), Seq("centroid_id"))
-          .select(col(idCol),
-            round((col("_res_fp") + col("cell_fp")) / 1e7, 4)
-              .as("adc_score"))
-          .orderBy(col("adc_score").desc, col(idCol))
-          .limit(k)
-    }
+      .withColumn("qid", lit(0L))
+    // the residual sum per (id, cell), then the cell constant
+    adcSums(codes, books, queryVec.withColumn("qid", lit(0L)),
+        mOfRows(books), Seq("qid", idCol, "centroid_id"))
+      .join(broadcast(cellConst), Seq("centroid_id"))
+      .select(col(idCol),
+        round((col("_ip_fp") + col("cell_fp")) / 1e7, 4).as("adc_score"))
+      .orderBy(col("adc_score").desc, col(idCol))
+      .limit(k)
   }
 
   /** Batch residual probe (the recall-panel scorer): per-query probed
@@ -1399,201 +1340,15 @@ object ProductQuantize {
                               cents: DataFrame, queries: DataFrame,
                               idCol: String, k: Int,
                               nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cb = readBooks(spark, s"$path/codebooks")
-    val m = mOf(spark, s"$path/codebooks")
-    val wc = Window.partitionBy(col("qid"))
-      .orderBy(col("_cd"), col("centroid_id"))
-    val probed = cents.crossJoin(broadcast(queries))
-      .withColumn("_cd",
-        lit(1.0) - VectorFns.cosine(col("cvec"), col("qvec")))
-      .withColumn("_rn", row_number().over(wc))
-      .filter(col("_rn") <= nProbe)
-      .select(col("qid"), col("centroid_id"),
-        floor(VectorFns.dot(col("cvec"), col("qvec")) * 1e7 + 0.5)
-          .cast("long").as("cell_fp"))
+    val books = bookRowsAt(spark, s"$path/codebooks")
     val codes = Similarity.readQuantizedIndex(spark, s"$path/codes")
       .withColumn("centroid_id", col("centroid_id").cast("long"))
-      .join(broadcast(probed), Seq("centroid_id"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_score").desc, col(idCol))
-    // fused residual sum (same treatment as [[adcScoreMultiFused]];
-    // the per-(qid, id, cell_fp) groupBy and the cell constant stay)
-    adcLutMultiDriver(cb, queries, m) match {
-      case Some((qids, vals, pres)) =>
-        codes
-          .withColumn("_row_fp",
-            org.apache.spark.sql.graftbridge.Bridge.column(
-              graft.functions.QidCodeLutSumExpr(
-                org.apache.spark.sql.graftbridge.Bridge
-                  .expression(col("qid")),
-                org.apache.spark.sql.graftbridge.Bridge
-                  .expression(col("codes")),
-                qids, vals, pres)))
-          .filter(col("_row_fp").isNotNull)
-          .groupBy(col("qid"), col(idCol), col("cell_fp"))
-          .agg(sum(col("_row_fp")).as("_res_fp"))
-          .select(col("qid"), col(idCol),
-            round((col("_res_fp") + col("cell_fp")) / 1e7, 4)
-              .as("adc_score"))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") <= k)
-          .select(col("qid"), col(idCol), col("adc_score"))
-      case None =>
-        codes
-          .select(col(idCol), col("qid"), col("cell_fp"),
-            posexplode(col("codes")).as(Seq("_pos", "code")))
-          .withColumn("subspace", col("_pos").cast("long"))
-          .join(broadcast(adcLutMulti(cb, queries, m)),
-            Seq("qid", "subspace", "code"))
-          .groupBy(col("qid"), col(idCol), col("cell_fp"))
-          .agg(sum(col("ip_fp")).as("_res_fp"))
-          .select(col("qid"), col(idCol),
-            round((col("_res_fp") + col("cell_fp")) / 1e7, 4)
-              .as("adc_score"))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") <= k)
-          .select(col("qid"), col(idCol), col("adc_score"))
-    }
-  }
-
-  /** Driver-side [[adcLutMulti]] for the fused panel scorer: one
-    * table per qid ([[adcLutDriver]]'s derivation per panel row —
-    * bit-identical values, same guards/messages; duplicate panel rows
-    * fold into their qid's table exactly as the relational LUT's
-    * duplicate rows summed in the aggregate). None when qid is not
-    * LongType or the book geometry is degenerate — callers fall back
-    * to the relational shape. */
-  private def adcLutMultiDriver(cb: DataFrame, queries: DataFrame,
-                                m: Int)
-      : Option[(IndexedSeq[Long],
-        IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
-        IndexedSeq[IndexedSeq[Boolean]])] = {
-    if (queries.schema.fields.find(_.name == "qid")
-        .map(_.dataType)
-        .getOrElse(org.apache.spark.sql.types.NullType)
-          != org.apache.spark.sql.types.LongType) return None
-    val cbRows = cb.select(col("subspace"), col("code"), col("cvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        r.getAs[scala.collection.Seq[Double]](2).toArray))
-    val maxSub = if (cbRows.isEmpty) -1L else cbRows.map(_._1).max
-    val minSub = if (cbRows.isEmpty) 0L else cbRows.map(_._1).min
-    val maxCode = if (cbRows.isEmpty) -1L else cbRows.map(_._2).max
-    val minCode = if (cbRows.isEmpty) 0L else cbRows.map(_._2).min
-    if (minSub < 0 || maxSub >= 1024 || minCode < 0 ||
-        maxCode >= 65536) return None
-    val mSub = math.max(maxSub.toInt + 1, 0)
-    val kCode = math.max(maxCode.toInt + 1, 0)
-    val pres = Array.fill(mSub)(new Array[Boolean](kCode))
-    cbRows.foreach { case (s, c, _) => pres(s.toInt)(c.toInt) = true }
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val perQid =
-      new java.util.LinkedHashMap[Long, Array[Array[Long]]]()
-    queries.select(col("qid"), col("qvec")).collect().foreach { r =>
-      val qid = r.getLong(0)
-      val qvec = r.getAs[scala.collection.Seq[Double]](1).toArray
-      if (qvec.length % m != 0) throw new RuntimeException(
-        s"adcLut: vector dim ${qvec.length} not divisible by m=$m")
-      val sublen = qvec.length / m
-      val lut = perQid.computeIfAbsent(qid,
-        _ => Array.fill(mSub)(new Array[Long](kCode)))
-      cbRows.foreach { case (s, c, bvec) =>
-        val start = (s * sublen).toInt
-        val qs = qvec.slice(start, start + sublen)
-        if (bvec.length != qs.length) throw new RuntimeException(
-          s"adcLut: codebook entry length ${bvec.length} " +
-            s"!= subvector length ${qs.length}")
-        lut(s.toInt)(c.toInt) +=
-          math.floor(dotD(bvec, qs) * 1e7 + 0.5).toLong
-      }
-    }
-    import scala.collection.immutable.ArraySeq.{unsafeWrapArray => wrap}
-    val qids = scala.jdk.CollectionConverters
-      .SetHasAsScala(perQid.keySet()).asScala.toIndexedSeq
-    val vals = qids.map(q => wrap(perQid.get(q).map(a =>
-      wrap(a): IndexedSeq[Long])): IndexedSeq[IndexedSeq[Long]])
-    Some((qids, vals,
-      wrap(pres.map(a => wrap(a): IndexedSeq[Boolean]))))
-  }
-
-  /** [[adcScoreMulti]] with the per-row fused kernel
-    * ([[graft.functions.QidCodeLutSumExpr]]) — the panel analog of
-    * [[adcScoreFused]]: a qid-less codes relation fans out by a
-    * crossJoin with the DISTINCT panel qids (the explode+join fanned
-    * it m× wider), a qid-carrying one scores in place; per-(qid, id)
-    * groupBy kept, NULL (unmatched) rows filtered. Falls back to the
-    * relational shape on degenerate geometry or a non-long qid. */
-  private def adcScoreMultiFused(codes: DataFrame, cb: DataFrame,
-                                 queries: DataFrame, m: Int,
-                                 idCol: String, k: Int): DataFrame =
-    adcLutMultiDriver(cb, queries, m) match {
-      case Some((qids, vals, pres)) =>
-        import org.apache.spark.sql.expressions.Window
-        val spark = codes.sparkSession
-        import spark.implicits._
-        val withQid =
-          if (codes.columns.contains("qid")) codes
-          else codes.crossJoin(broadcast(qids.toDF("qid")))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("adc_score").desc, col(idCol))
-        withQid
-          .withColumn("_ips",
-            org.apache.spark.sql.graftbridge.Bridge.column(
-              graft.functions.QidCodeLutSumExpr(
-                org.apache.spark.sql.graftbridge.Bridge
-                  .expression(col("qid")),
-                org.apache.spark.sql.graftbridge.Bridge
-                  .expression(col("codes")),
-                qids, vals, pres)))
-          .filter(col("_ips").isNotNull)
-          .groupBy(col("qid"), col(idCol))
-          .agg(round(sum(col("_ips")) / 1e7, 4).as("adc_score"))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") <= k)
-          .select(col("qid"), col(idCol), col("adc_score"))
-      case None =>
-        adcScoreMulti(codes, adcLutMulti(cb, queries, m), idCol, k)
-    }
-
-  /** [[adcLut]] for a query panel: |panel|·m·k rows keyed by qid. */
-  private def adcLutMulti(cb: DataFrame, queries: DataFrame,
-                          m: Int): DataFrame =
-    cb.crossJoin(broadcast(queries))
-      .withColumn("_sublen", subLen(col("qvec"), m, "adcLut"))
-      .withColumn("_qs", slice(col("qvec"),
-        (col("subspace") * col("_sublen") + 1).cast("int"),
-        col("_sublen").cast("int")))
-      .select(col("qid"), col("subspace"), col("code"),
-        floor(guardedIp(col("cvec"), col("_qs"), "adcLut") * 1e7 + 0.5)
-          .cast("long").as("ip_fp"))
-
-  /** [[adcScore]] for a panel: the lookup join fans each code row out
-    * per query (or per that query's probed cells when `codes` already
-    * carries a qid), top-k per qid via window. */
-  private def adcScoreMulti(codes: DataFrame, lut: DataFrame,
-                            idCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hasQid = codes.columns.contains("qid")
-    val joinKeys =
-      if (hasQid) Seq("qid", "subspace", "code")
-      else Seq("subspace", "code")
-    val keep =
-      if (hasQid) Seq(col(idCol), col("qid")) else Seq(col(idCol))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_score").desc, col(idCol))
-    codes
-      .select(keep :+ posexplode(col("codes")).as(Seq("_pos", "code")): _*)
-      .withColumn("subspace", col("_pos").cast("long"))
-      .join(broadcast(lut), joinKeys)
-      .groupBy(col("qid"), col(idCol))
-      .agg(round(sum(col("ip_fp")) / 1e7, 4).as("adc_score"))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .select(col("qid"), col(idCol), col("adc_score"))
+      .join(broadcast(probedPerQuery(cents, queries, nProbe)),
+        Seq("centroid_id"))
+    topKPerQid(adcSums(codes, books, queries, mOfRows(books),
+        Seq("qid", idCol, "cell_fp"))
+      .select(col("qid"), col(idCol),
+        round((col("_ip_fp") + col("cell_fp")) / 1e7, 4)
+          .as("adc_score")), idCol, k)
   }
 }

@@ -212,9 +212,9 @@ object StreamingVectorIndex {
                    idCol: String, cells: Option[Seq[Long]]): DataFrame =
       ProductQuantize.ivfPqDriftStats(spark, s"$root/index", cents,
         idCol, cells, modelFpO = Some(modelFp(spark, root, cents)))
-    // both halves memoized by (location, mtime) — the QuantizedOps
-    // rule for cents (readCents at the max gen by the wave protocol),
-    // the governing-books location for the books half
+    // both halves memoized by location — the QuantizedOps rule for
+    // cents (readCents at the max gen by the wave protocol), the
+    // governing-books location for the books half
     def modelFp(spark: SparkSession, root: String,
                 cents: DataFrame): Long =
       Similarity.centroidFingerprintAt(spark,
@@ -993,17 +993,16 @@ object StreamingVectorIndex {
   def probeLiveIvfPq(spark: SparkSession, root: String,
                      queryVec: DataFrame, idCol: String, k: Int,
                      nProbe: Int): DataFrame = {
-    val (codes, books, booksLoc, cents) = resolveLiveIvfPq(spark, root)
-    ProductQuantize.ivfPqProbeResolved(codes, books, cents, queryVec,
-      idCol, k, nProbe,
-      mO = Some(ProductQuantize.mOf(spark, booksLoc)))
+    val (codes, booksLoc, cents) = resolveLiveIvfPq(spark, root)
+    ProductQuantize.ivfPqProbeResolved(codes, booksLoc, cents, queryVec,
+      idCol, k, nProbe)
   }
 
-  /** The one pinned (codes, books, centroids) resolution both live
-    * IVF-PQ probes share — single-query and panel paths can never
-    * desynchronize on which generation answers. */
+  /** The one pinned (codes, books location, centroids) resolution
+    * both live IVF-PQ probes share — single-query and panel paths can
+    * never desynchronize on which generation answers. */
   private def resolveLiveIvfPq(spark: SparkSession, root: String)
-      : (DataFrame, DataFrame, String, DataFrame) = {
+      : (DataFrame, String, DataFrame) = {
     val path = s"$root/index"
     val mfOpt = SegmentManifest.latest(spark, s"$path/codes")
     require(mfOpt.nonEmpty,
@@ -1013,9 +1012,9 @@ object StreamingVectorIndex {
       .lastOption.map(_.seg)
       .getOrElse(gens(spark, root, "cents").max) // pre-marker layout
     val cents = spark.read.parquet(s"$root/cents/gen=$modelGen")
-    val (codes, books, booksLoc) = ProductQuantize
+    val (codes, booksLoc) = ProductQuantize
       .resolveCodesAndBooks(spark, path, mfOpt)
-    (codes, books, booksLoc, cents)
+    (codes, booksLoc, cents)
   }
 
   /** [[probeLiveIvfPq]] for a query PANEL (`queries` carries
@@ -1026,10 +1025,9 @@ object StreamingVectorIndex {
   def probeLiveIvfPqMulti(spark: SparkSession, root: String,
                           queries: DataFrame, idCol: String, k: Int,
                           nProbe: Int): DataFrame = {
-    val (codes, books, booksLoc, cents) = resolveLiveIvfPq(spark, root)
-    ProductQuantize.ivfPqProbeResolvedMulti(codes, books, cents,
-      queries, idCol, k, nProbe,
-      mO = Some(ProductQuantize.mOf(spark, booksLoc)))
+    val (codes, booksLoc, cents) = resolveLiveIvfPq(spark, root)
+    ProductQuantize.ivfPqProbeResolvedMulti(codes, booksLoc, cents,
+      queries, idCol, k, nProbe)
   }
 
   /** One BATCH maintenance wave of the IVF-PQ loop — the foreachBatch
@@ -1080,8 +1078,7 @@ object StreamingVectorIndex {
     val books = spark.read.parquet(booksPath)
     val snap = readSnapshot(spark, root, gen, idCol, vecCol)
     ProductQuantize.ivfPqProbeSnapshot(snap, cents, books, queryVec,
-      idCol, vecCol, k, nProbe,
-      mO = Some(ProductQuantize.mOf(spark, booksPath)))
+      idCol, vecCol, k, nProbe)
   }
 
   /** Bootstrap the IVF-PQ loop state (codebooks + centroids fit at

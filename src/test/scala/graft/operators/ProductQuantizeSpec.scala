@@ -370,8 +370,8 @@ class ProductQuantizeSpec extends SparkSpec {
       val panel = base.filter(col("vec_id") % 41 === 1)
         .select(col("vec_id").as("qid"),
           VectorFns.toDouble(col("embedding")).as("qvec"))
-      // PqCdFpExpr (drift kernel), CodeLutSumExpr (single ADC),
-      // QidCodeLutSumExpr (panel ADC), PqEncodeCodesExpr (the write
+      // PqCdFpExpr (drift kernel), QidCodeLutSumExpr (single and
+      // panel ADC), PqEncodeCodesExpr (the write
       // path above already encoded through it with fallback off)
       assert(ProductQuantize
         .ivfPqDriftStats(spark, path, cents, "vec_id")
@@ -391,6 +391,29 @@ class ProductQuantizeSpec extends SparkSpec {
             org.apache.spark.sql.graftbridge.Bridge.expression(
               VectorFns.toDouble(col("embedding"))), cl)).as("cid"))
         .collect().length == 50)
+      // the remaining kernel call sites: flat ADC (single and panel),
+      // residual ADC (single and panel), and the MaxSim cell argmin
+      val flat = scratch("pq_codegen_flat").toString
+      ProductQuantize.pqWriteIndex(base, "vec_id", "embedding", m = 8,
+        k = 16, flat)
+      assert(ProductQuantize.pqProbeADC(spark, flat, qv, "vec_id", k = 5)
+        .collect().nonEmpty)
+      assert(ProductQuantize.pqProbeADCMulti(spark, flat, panel, "vec_id",
+        k = 3).collect().nonEmpty)
+      val res = scratch("pq_codegen_res").toString
+      ProductQuantize.ivfPqWriteIndexResidual(base, cents, "vec_id",
+        "embedding", m = 8, k = 16, res)
+      assert(ProductQuantize.ivfPqProbeResidual(spark, res, cents, qv,
+        "vec_id", k = 5, nProbe = 2).collect().nonEmpty)
+      assert(ProductQuantize.ivfPqProbeResidualMulti(spark, res, cents,
+        panel, "vec_id", k = 3, nProbe = 2).collect().nonEmpty)
+      val toks = base.limit(60).select((col("vec_id") % 12).as("doc_id"),
+        VectorFns.toDouble(col("embedding")).as("tokvec"))
+      val qtoks = base.filter(col("vec_id") < 5).select(
+        col("vec_id").as("qtok_id"),
+        VectorFns.toDouble(col("embedding")).as("qvec"))
+      assert(Similarity.maxSimTopKPruned(toks, qtoks, "doc_id", k = 3,
+        kCells = 4, nProbe = 2).collect().nonEmpty)
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
   }
 
