@@ -291,9 +291,15 @@ case class PqEncodeCodesExpr(child: Expression,
   * unroll's nulls-first struct ordering placed it; ties keep the
   * smaller cid. (A whole-NULL array cannot arise from the operator's
   * `array(…)` derivations; this expression maps it to NULL.) `cents`
-  * lists (cid, centroid) in ascending cid order. */
+  * lists (cid, centroid) in ascending cid order.
+  *
+  * `skipNulls` is the IVF assignment's `min_by(cid, d)` rule instead
+  * ([[graft.operators.Similarity.ivfAssignCosine]]): a NULL distance
+  * (a NULL vector element, a length mismatch) takes no part in the
+  * min, and a row with no non-NULL distance gets a NULL cell. */
 case class CosineArgminCellExpr(child: Expression,
-                                cents: Seq[(Long, Seq[Double])])
+                                cents: Seq[(Long, Seq[Double])],
+                                skipNulls: Boolean = false)
     extends UnaryExpression with NativeKernel {
 
   @transient private lazy val centVals: Array[Array[Double]] =
@@ -343,7 +349,8 @@ case class CosineArgminCellExpr(child: Expression,
         while (j < n) { dotv += vec.getDouble(j) * c(j); j += 1 }
         d = 1.0 - dotv / (nv * centNorms(e))
       }
-      if (NativeKernel.structLess(first, d, dNull, bestD, bestNull)) {
+      if (!(dNull && skipNulls) &&
+          NativeKernel.structLess(first, d, dNull, bestD, bestNull)) {
         bestC = centIds(e); bestD = d; bestNull = dNull; first = false
       }
       e += 1
@@ -353,7 +360,8 @@ case class CosineArgminCellExpr(child: Expression,
 
   override protected def withNewChildInternal(
       newChild: Expression): CosineArgminCellExpr = copy(child = newChild)
-  override def prettyName: String = "cosine_argmin_cell"
+  override def prettyName: String =
+    if (skipNulls) "cosine_assign_cell" else "cosine_argmin_cell"
 }
 
 /** Σ (xᵢ−yᵢ)² — the IVF centroid-assignment metric (q31). */

@@ -315,7 +315,14 @@ object ProductQuantize {
     * ([[bookRows]] / the [[bookRowsAt]] memo). */
   private def pqEncodeRows(vectors: DataFrame, idCol: String,
                            vecCol: String, books: Seq[BookRow],
-                           m: Int): DataFrame = {
+                           m: Int): DataFrame =
+    vectors.select(col(idCol), encodeCodes(col(vecCol), books, m)
+      .as("codes"))
+
+  /** The PQ codes of an `array<double>` column: the encode kernel over
+    * validated, subspace-grouped codebook rows. */
+  private def encodeCodes(v: Column, books: Seq[BookRow],
+                          m: Int): Column = {
     val entries = books.sortBy(t => (t._1, t._2))
     require(entries.nonEmpty, "pqEncode: empty codebooks")
     val entryLen = entries.head._3.length
@@ -337,11 +344,28 @@ object ProductQuantize {
     // in the expression's scaladoc and pinned by the parity spec; the
     // codebook ships as reference arrays, so m·k can never blow the
     // generated method size the way a literal unroll would.
-    vectors.select(col(idCol), Bridge.column(
-      graft.functions.PqEncodeCodesExpr(Bridge.expression(col(vecCol)),
+    Bridge.column(
+      graft.functions.PqEncodeCodesExpr(Bridge.expression(v),
         perSub.map(_.map(_._3).toArray).toArray,
-        perSub.map(_.map(_._2).toArray).toArray)).as("codes"))
+        perSub.map(_.map(_._2).toArray).toArray))
   }
+
+  /** Fresh rows' codes AND cell in ONE projection: [[pqEncode]]'s
+    * unit-vector codes and [[Similarity.ivfAssignCosine]]'s cell of
+    * the same raw vector — the two sides the write path joined on the
+    * id, without the join. Zero-norm and NULL-element rows drop, as the
+    * encode drops them. Returns (idCol, codes, centroid_id). */
+  private def encodeWithCell(vectors: DataFrame, idCol: String,
+                             vecCol: String, books: Seq[BookRow], m: Int,
+                             cents: Similarity.CentRows): DataFrame =
+    vectors
+      .select(col(idCol), VectorFns.toDouble(col(vecCol)).as("_vd"))
+      .withColumn("_n", VectorFns.norm(col("_vd")))
+      .filter(col("_n") > 0)
+      .select(col(idCol),
+        encodeCodes(VectorFns.unitNormalizeWith(col("_vd"), col("_n")),
+          books, m).as("codes"),
+        Similarity.cellOf(col("_vd"), cents).as("centroid_id"))
 
   /** Trains and encodes, writing `codebooks/` (one file — m·k rows)
     * and `codes/` under `path`. The codes table is the ONLY
@@ -691,13 +715,15 @@ object ProductQuantize {
   private def mOfRows(books: IndexedSeq[BookRow]): Int =
     books.map(_._1).max.toInt + 1
 
-  /** Memo key of a written codebooks directory: (location, newest
-    * entry mtime, total bytes, entry count), all from one listing — a
-    * rewrite that lands within the filesystem's timestamp granularity
-    * still changes the bytes or the count. */
-  private type BooksKey = (String, Long, Long, Int)
+  /** Memo key of a written model artifact directory (codebooks,
+    * centroids): (location, newest entry mtime, total bytes, entry
+    * count), all from one listing — a rewrite that lands within the
+    * filesystem's timestamp granularity still changes the bytes or the
+    * count. */
+  private[operators] type ArtifactKey = (String, Long, Long, Int)
 
-  private def booksKey(spark: SparkSession, loc: String): BooksKey = {
+  private[operators] def artifactKey(spark: SparkSession,
+                                     loc: String): ArtifactKey = {
     val p = new org.apache.hadoop.fs.Path(loc)
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(p)
@@ -705,25 +731,28 @@ object ProductQuantize {
       st.map(_.getLen).sum, st.length)
   }
 
-  /** Model memos for WRITTEN codebook files, keyed by [[booksKey]]:
-    * the rows (m·k by contract) and the books-half fingerprint are
-    * pure functions of the file, but were one Spark job per call —
-    * per probe, per refresh encode, per wave's drift stats (r20
+  /** Model memos for WRITTEN artifact files, keyed by [[artifactKey]]:
+    * the codebook rows (m·k by contract), the books-half fingerprint
+    * and the centroid rows ([[Similarity.centroidRowsAt]]) are pure
+    * functions of the file, but were one Spark job per call — per
+    * probe, per refresh encode, per wave's drift stats (r20
     * WaveJobProbe). LRU-bounded. */
-  private def lruMemo[V](cap: Int): java.util.Map[BooksKey, V] =
+  private[operators] def lruMemo[V](cap: Int)
+      : java.util.Map[ArtifactKey, V] =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[BooksKey, V](16, 0.75f, true) {
+      new java.util.LinkedHashMap[ArtifactKey, V](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[BooksKey, V]): Boolean = size() > cap
+            e: java.util.Map.Entry[ArtifactKey, V]): Boolean =
+          size() > cap
       })
 
   private val bookRowsMemo = lruMemo[IndexedSeq[BookRow]](64)
   private val bookFpMemo = lruMemo[java.lang.Long](4096)
 
-  private def memoized[V <: AnyRef](memo: java.util.Map[BooksKey, V],
-                                    spark: SparkSession, loc: String)
-                                   (compute: => V): V = {
-    val key = booksKey(spark, loc)
+  private[operators] def memoized[V <: AnyRef](
+      memo: java.util.Map[ArtifactKey, V], spark: SparkSession,
+      loc: String)(compute: => V): V = {
+    val key = artifactKey(spark, loc)
     val hit = memo.get(key)
     if (hit != null) hit
     else { val v = compute; memo.put(key, v); v }
@@ -994,52 +1023,57 @@ object ProductQuantize {
       spark: SparkSession, path: String, cents: DataFrame,
       newSnap: DataFrame, changes: DataFrame, idCol: String,
       vecCol: String, residual: Boolean): Seq[Long] = {
-    val indexPath = s"$path/codes"
-    // the GOVERNING books, manifest-resolved — never the live cache;
-    // their rows through the memo (a collect per wave otherwise)
-    val books = bookRowsAt(spark, governingBooksLoc(spark, path))
-    val m = mOfRows(books)
     val changed = cached(
       changes.filter(col("status") =!= "unchanged"))
+    // cached: the fresh rows feed the dirty query AND the rev write,
+    // and each lazy re-evaluation rescans the corpus-sized newSnap for
+    // the semi-join
+    val freshRows = cached(newSnap.join(
+      changed.filter(col("status").isin("added", "modified"))
+        .select(col(idCol)), Seq(idCol)))
     val gone = changed.filter(col("status").isin("removed", "modified"))
       .select(col(idCol))
-    val freshKeys = changed
-      .filter(col("status").isin("added", "modified"))
-      .select(col(idCol))
-    val idx = Similarity.readQuantizedIndex(spark, indexPath)
-    val freshRows = newSnap.join(freshKeys, Seq(idCol))
-    val freshAssigned = cached(
-      if (!residual)
-        pqEncodeRows(unitVectors(freshRows, vecCol, Seq(idCol)), idCol,
-            "_uv", books, m)
-          .join(Similarity.ivfAssignCosine(freshRows, cents, idCol,
-            vecCol), Seq(idCol))
-          .select(col(idCol), col("codes"), col("centroid_id"))
-      else encodeResidualRows(freshRows, cents, idCol, vecCol, books,
-        m))
-    // dedupe via one global collect_set aggregate — map-side partial
-    // sets bound shuffle and driver read at ≤|cells| ids no matter
-    // the delta size, without the relational distinct's AQE re-plan
-    // stages (the int8 refresh's rule; WaveJobProbe)
-    val dirty = idx.join(gone, Seq(idCol)).select(col("centroid_id"))
-      .union(freshAssigned.select(col("centroid_id")))
-      .agg(collect_set(col("centroid_id")))
-      .head().getSeq[Long](0).sorted
-    if (dirty.isEmpty) {
-      freshAssigned.unpersist(); changed.unpersist()
-      return dirty
+    lazy val centRows = Similarity.centroidRows(cents)
+    try refreshPqCells(spark, path, gone, idCol, deltaCents = None) {
+        (books, m) =>
+          if (!residual)
+            encodeWithCell(freshRows, idCol, vecCol, books, m, centRows)
+          else encodeResidualRows(freshRows, cents, idCol, vecCol, books, m)
+      }.dirty
+    finally { freshRows.unpersist(); changed.unpersist() }
+  }
+
+  /** The IVF-PQ refresh of a streaming wave: `fresh` (idCol, vecCol)
+    * are the upserts themselves and `gone` every delta key, so no
+    * diff join runs. The dirty query also returns each dirty cell's
+    * (Δn, Δcd_fp_sum) by [[ivfPqDriftStats]]' per-row kernel — None
+    * past its LUT byte budget. */
+  private[graft] def ivfPqRefreshRows(spark: SparkSession, path: String,
+                                      cents: Similarity.CentRows,
+                                      fresh: DataFrame, gone: DataFrame,
+                                      idCol: String, vecCol: String)
+      : Similarity.Refreshed =
+    refreshPqCells(spark, path, gone, idCol, Some(cents)) { (books, m) =>
+      encodeWithCell(fresh, idCol, vecCol, books, m, cents)
     }
-    val dirtyLits = scala.collection.immutable.ArraySeq
-      .unsafeWrapArray(dirty.toArray)
-    val survivors = idx
-      .filter(col("centroid_id").isin(dirtyLits: _*))
-      .join(gone, Seq(idCol), "left_anti")
-      .select(col(idCol), col("codes"), col("centroid_id"))
-    val unioned = survivors.unionByName(freshAssigned)
-      .repartition(col("centroid_id"))
-    Similarity.commitCellRefreshMvcc(spark, indexPath, unioned, dirty)
-    freshAssigned.unpersist(); changed.unpersist()
-    dirty
+
+  /** The IVF-PQ refresh body: ONE pin of the codes manifest resolves
+    * the cells read, the governing books (manifest-resolved — never
+    * the live cache; their rows through the memo) and the seal
+    * ([[Similarity.refreshCells]]). `encode` derives the fresh rows
+    * (idCol, codes, centroid_id) through those books. */
+  private def refreshPqCells(spark: SparkSession, path: String,
+                             gone: DataFrame, idCol: String,
+                             deltaCents: Option[Similarity.CentRows])(
+      encode: (IndexedSeq[BookRow], Int) => DataFrame)
+      : Similarity.Refreshed = {
+    val latest = SegmentManifest.latest(spark, s"$path/codes")
+    val books = bookRowsAt(spark, booksLocFor(path, latest))
+    val cdFp = deltaCents.flatMap(c => cdFpKernel(books, c)).map(k =>
+      (rows: DataFrame) => rows.withColumn("cd_fp", k)
+        .withColumn("_counted", col("cd_fp").isNotNull))
+    Similarity.refreshCells(spark, s"$path/codes", latest,
+      encode(books, mOfRows(books)), gone, idCol, cdFp)
   }
 
   /** Per-cell DRIFT statistics of an IVF-PQ index, computed from the
@@ -1062,7 +1096,19 @@ object ProductQuantize {
   def ivfPqDriftStats(spark: SparkSession, path: String,
                       cents: DataFrame, idCol: String,
                       cells: Option[Seq[Long]] = None,
-                      modelFpO: Option[Long] = None): DataFrame = {
+                      modelFpO: Option[Long] = None): DataFrame =
+    ivfPqDriftStatsRows(spark, path, Similarity.centroidRows(cents), idCol,
+      cells, modelFpO)
+
+  /** [[ivfPqDriftStats]] over already-collected centroid rows (the
+    * streaming wave reads them from the [[Similarity.centroidRowsAt]]
+    * memo, so no collect job). */
+  private[graft] def ivfPqDriftStatsRows(spark: SparkSession, path: String,
+                                         cents: Similarity.CentRows,
+                                         idCol: String,
+                                         cells: Option[Seq[Long]],
+                                         modelFpO: Option[Long])
+      : DataFrame = {
     // manifest-resolved governing books: the stats LUT and the sealed
     // model_fp must describe the books the sealed cells were encoded
     // with, not a possibly-stale live cache
@@ -1071,10 +1117,9 @@ object ProductQuantize {
     // pair (a recenter retrains the books too, so the carried-stats
     // check must see that as a model change). The books half rides
     // the codebook memo; callers whose cents come from a written
-    // gen-keyed store pass the whole pair memoized (modelFpO) — the
-    // two inline collects were jobs per streaming wave
+    // gen-keyed store pass the whole pair memoized (modelFpO)
     val modelFp = modelFpO.getOrElse(
-      Similarity.centroidFingerprint(cents) ^
+      Similarity.centroidFingerprintOf(cents) ^
         booksFingerprintAt(spark, booksLoc))
     // `cells` restricts to the named cells (pruned scan) — the
     // incremental-gauge read, same rule as Similarity.ivfDriftStats:
@@ -1088,42 +1133,52 @@ object ProductQuantize {
           cs.toArray): _*))
       case None => allCodes
     }
-    // FUSED per-row displacement ([[graft.functions.PqCdFpExpr]]):
-    // the relational pipeline exploded every code row m× and shuffled
-    // the corpus back by (cell, id) just to sum m integer lookups —
-    // at scale an m× row blow-up plus an exchange for a scan-shaped
-    // map (guide §2: remove shuffles outright). Both model artifacts
-    // are broadcast-sized BY CONTRACT, so they collect once and ride
-    // the kernel as driver arrays built by the one [[lutTables]]
-    // (the relational build's values bit for bit); the kernel
-    // replicates the inner join's skip/drop semantics, and the
-    // surviving arithmetic keeps the identical Column form — the
-    // parity spec pins kernel ≡ relational on a real index. Past the
-    // LUT byte budget the relational pipeline runs instead.
-    val books = bookRowsAt(spark, booksLoc)
-    val cellVecs = cents.select(col("centroid_id"), col("cvec")).collect()
-      .toSeq.map(r => (r.getLong(0),
-        r.getAs[scala.collection.Seq[Double]](1).toArray))
-    lutTables(books, cellVecs, None, "ivfPqDriftStats",
-        extraTables = 1) match {
-      case None => ivfPqDriftStatsRelational(spark, booksLoc, cents,
-        codes, idCol, modelFp)
-      case Some(ip) =>
-        val nn = ip.present.map(p => new Array[Long](p.length))
-        books.foreach { case (s, c, b) =>
-          nn(s.toInt)(c.toInt) = fixedDot(b, b) }
-        val vecOf = cellVecs.toMap
-        val norms = ip.keys.map(c => math.sqrt(dot(vecOf(c), vecOf(c))))
+    // FUSED per-row displacement ([[cdFpKernel]]): the relational
+    // pipeline exploded every code row m× and shuffled the corpus back
+    // by (cell, id) just to sum m integer lookups — at scale an m× row
+    // blow-up plus an exchange for a scan-shaped map (guide §2: remove
+    // shuffles outright). Past the LUT byte budget the relational
+    // pipeline runs instead.
+    cdFpKernel(bookRowsAt(spark, booksLoc), cents) match {
+      case None =>
+        import spark.implicits._
+        ivfPqDriftStatsRelational(spark, booksLoc,
+          cents.toDF("centroid_id", "cvec"), codes, idCol, modelFp)
+      case Some(cdFp) =>
         codes
-          .withColumn("cd_fp", Bridge.column(graft.functions.PqCdFpExpr(
-            Bridge.expression(col("centroid_id")),
-            Bridge.expression(col("codes")), ip, nn, norms)))
+          .withColumn("cd_fp", cdFp)
           .filter(col("cd_fp").isNotNull)
           .groupBy(col("centroid_id"))
           .agg(count(lit(1)).as("n"), sum(col("cd_fp")).as("cd_fp_sum"))
           .select(col("centroid_id"), col("n"),
             round(col("cd_fp_sum") / col("n") / 1e7, 4).as("mean_cd"),
             col("cd_fp_sum"), lit(modelFp).as("model_fp"))
+    }
+  }
+
+  /** One code row's cosine displacement from its cell centroid in 1e-7
+    * fixed point, over (centroid_id, codes) — the per-row term of
+    * [[ivfPqDriftStats]] and of the refresh's stat deltas. Both model
+    * artifacts are broadcast-sized BY CONTRACT, so they ride the
+    * native kernel ([[graft.functions.PqCdFpExpr]]) as driver arrays
+    * built by the one [[lutTables]] (the relational build's values bit
+    * for bit); the kernel replicates the inner join's skip/drop
+    * semantics (NULL: the row drops), and the surviving arithmetic
+    * keeps the identical Column form — the parity spec pins kernel ≡
+    * relational on a real index. None past the LUT byte budget. */
+  private def cdFpKernel(books: IndexedSeq[BookRow],
+                         cents: Similarity.CentRows): Option[Column] = {
+    val cellVecs = cents.map { case (c, v) => (c, v.toArray) }
+    lutTables(books, cellVecs, None, "ivfPqDriftStats",
+        extraTables = 1).map { ip =>
+      val nn = ip.present.map(p => new Array[Long](p.length))
+      books.foreach { case (s, c, b) =>
+        nn(s.toInt)(c.toInt) = fixedDot(b, b) }
+      val vecOf = cellVecs.toMap
+      val norms = ip.keys.map(c => math.sqrt(dot(vecOf(c), vecOf(c))))
+      Bridge.column(graft.functions.PqCdFpExpr(
+        Bridge.expression(col("centroid_id")),
+        Bridge.expression(col("codes")), ip, nn, norms))
     }
   }
 

@@ -245,19 +245,49 @@ object Similarity {
     * the LOWEST cosine distance (1 − cosine similarity) — the metric
     * match for [[learnedCentroids]]' spherical cells. Scale-invariant
     * in both arguments, so raw vectors assign correctly without a
-    * normalization pass. */
+    * normalization pass.
+    *
+    * One narrow projection over the collected centroid table
+    * ([[withCell]]) — no cross join, no shuffle — and THE assignment
+    * rule of every IVF path: rebuilds, refreshes (whose fresh rows get
+    * their codes and cell in the same projection) and snapshot probes.
+    * Semantics are `min_by(centroid_id, cd)` over the centroids with
+    * ties to the smaller id; a vector with a NULL element gets a NULL
+    * cell, and a zero-norm vector (no direction) is dropped. */
   def ivfAssignCosine(vectors: DataFrame, cents: DataFrame, idCol: String,
                       vecCol: String): DataFrame =
-    // toDouble projected below the crossJoin — once per vector instead
-    // of once per (vector × centroid), and cd stays codegen (see
-    // [[scoreAgainst]])
-    vectors.select(col(idCol),
-        VectorFns.toDouble(col(vecCol)).as("_vd"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cd",
-        lit(1.0) - VectorFns.cosine(col("_vd"), col("cvec")))
-      .groupBy(col(idCol))
-      .agg(min_by(col("centroid_id"), col("cd")).as("centroid_id"))
+    withCell(vectors.select(col(idCol), col(vecCol)), centroidRows(cents),
+        vecCol)
+      .select(col(idCol), col("centroid_id")
+        .cast(cents.schema("centroid_id").dataType).as("centroid_id"))
+
+  /** A centroid table held driver-side: (centroid_id, cvec) in
+    * ascending id order — k rows by contract. */
+  private[graft] type CentRows = IndexedSeq[(Long, Seq[Double])]
+
+  /** The rows of a centroid frame ([[CentRows]]). */
+  private[graft] def centroidRows(cents: DataFrame): CentRows =
+    cents.select(col("centroid_id").cast("long"), col("cvec")).collect()
+      .map(r => (r.getLong(0),
+        r.getAs[scala.collection.Seq[Double]](1).toVector: Seq[Double]))
+      .sortBy(_._1).toIndexedSeq
+
+  /** The cell column of a `array<double>` vector column under
+    * [[ivfAssignCosine]]'s rule (the native argmin kernel). */
+  private[graft] def cellOf(vd: Column, cents: CentRows): Column =
+    org.apache.spark.sql.graftbridge.Bridge.column(
+      graft.functions.CosineArgminCellExpr(
+        org.apache.spark.sql.graftbridge.Bridge.expression(vd), cents,
+        skipNulls = true))
+
+  /** `df` plus its `centroid_id` under [[ivfAssignCosine]]'s rule,
+    * zero-norm rows dropped. */
+  private[graft] def withCell(df: DataFrame, cents: CentRows,
+                              vecCol: String): DataFrame =
+    df.withColumn("_vd", VectorFns.toDouble(col(vecCol)))
+      .filter(coalesce(VectorFns.norm(col("_vd")) =!= 0.0, lit(true)))
+      .withColumn("centroid_id", cellOf(col("_vd"), cents))
+      .drop("_vd")
 
   /** The query's centroid ranking under cosine — THE one definition
     * every cosine probe path shares (in-memory, materialized,
@@ -615,7 +645,14 @@ object Similarity {
   private[graft] def readQuantizedIndex(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String): DataFrame =
-    SegmentManifest.latest(spark, indexPath) match {
+    readCellsAt(spark, indexPath, SegmentManifest.latest(spark, indexPath))
+
+  /** [[readQuantizedIndex]] at a manifest the caller already pinned
+    * (None: the legacy hive read). */
+  private[operators] def readCellsAt(
+      spark: org.apache.spark.sql.SparkSession, indexPath: String,
+      mf: Option[SegmentManifest.Manifest]): DataFrame =
+    mf match {
       case Some(m) =>
         SegmentManifest.read(spark, indexPath, m, "cells",
             "centroid_id")
@@ -786,10 +823,12 @@ object Similarity {
     * path when drift accumulates.
     *
     * Mechanics:
-    *   1. dirty-out cells: index rows of removed/modified keys (a
-    *      column-pruned scan of (id, centroid_id) only);
-    *   2. dirty-in cells: fresh cosine assignment of added/modified
-    *      snapshot rows against the broadcast centroid table;
+    *   1. fresh rows: added/modified snapshot rows get their int8
+    *      codes and cosine cell in one projection over the collected
+    *      centroid table ([[withCell]]);
+    *   2. dirty cells: ONE aggregate over the removed/modified keys'
+    *      index rows (dirty-out) and the fresh rows (dirty-in)
+    *      ([[refreshCells]]);
     *   3. survivors: partition-pruned read of the dirty cells minus
     *      the removed/modified keys — reused codes, no re-quantization;
     *   4. COMMIT by MVCC ([[commitCellRefreshMvcc]], the engine's ONE
@@ -799,8 +838,9 @@ object Similarity {
     *      dirty cells' entries all-or-nothing. A reader pinned before
     *      the seal keeps its generation's untouched directories —
     *      there is no commit window at all; a legacy hive layout
-    *      upgrades by folding in as generation 0 on its first wave
-    *      ([[pinCellBase]]). History is reclaimed by
+    *      upgrades by folding in as generation 0 on its first wave.
+    *      The base is pinned ONCE: the cells are read at the manifest
+    *      the seal replaces entries of. History is reclaimed by
     *      [[ivfVacuumQuantized]] on the caller's retention dial.
     *
     * `changes` is [[graft.operators.Upsert.diffByKey]] output (key,
@@ -817,58 +857,121 @@ object Similarity {
       cents: DataFrame, newSnap: DataFrame, changes: DataFrame,
       idCol: String, vecCol: String): Seq[Long] = {
     // cached: `gone` feeds the dirty-cell lookup AND the survivor
-    // anti-join, `freshKeys` both the quantize and the assign pass —
+    // anti-join, the fresh rows the dirty query AND the rev write —
     // left lazy, the upstream diff (a corpus-sized full-outer join
-    // when `changes` is diffByKey output) re-runs once per consumer
-    // (measured 5× on the probe before this materialization)
+    // when `changes` is diffByKey output) and the corpus-sized newSnap
+    // semi-join re-run once per consumer
     val changed = graft.engine.Caching.cached(
       changes.filter(col("status") =!= "unchanged"))
-    val gone = changed.filter(col("status").isin("removed", "modified"))
-      .select(col(idCol))
-    val freshKeys = changed.filter(col("status").isin("added", "modified"))
-      .select(col(idCol))
-    // pin-aware: under MVCC the live hive tree is stale for cells a
-    // prior wave rewrote — the manifest composition is the truth
-    // (readQuantizedIndex also normalizes the hive INT back to long)
-    val idx = readQuantizedIndex(spark, indexPath)
-    val freshRows = newSnap.join(freshKeys, Seq(idCol))
-    // cached: consumed by the dirty-cell union AND the rev write —
-    // delta-sized, but each lazy re-evaluation rescans the corpus-sized
-    // newSnap for the semi-join
-    val freshAssigned = graft.engine.Caching.cached(
-      Quantize.quantized(freshRows, vecCol, "codes")
-        .join(ivfAssignCosine(freshRows, cents, idCol, vecCol), Seq(idCol))
-        .select(col(idCol), col("codes"), col("codes_scale"),
-          col("centroid_id")))
-    // dedupe via one global collect_set aggregate: the map-side
-    // partial sets bound the shuffle AND the driver read at ≤|cells|
-    // ids regardless of delta size (a raw collect materializes one
-    // row per changed key — millions at recrawl scale), while still
-    // skipping the relational distinct's AQE re-plan stages that cost
-    // the wave several jobs for a handful of rows (WaveJobProbe)
-    val dirty = idx.join(gone, Seq(idCol)).select(col("centroid_id"))
-      .union(freshAssigned.select(col("centroid_id")))
-      .agg(collect_set(col("centroid_id")))
-      .head().getSeq[Long](0).sorted
-    // unpersist on BOTH exits: a long-running caller (the streaming
+    val freshRows = graft.engine.Caching.cached(newSnap.join(
+      changed.filter(col("status").isin("added", "modified"))
+        .select(col(idCol)), Seq(idCol)))
+    // unpersist on every exit: a long-running caller (the streaming
     // maintenance loop) refreshes every micro-batch, and leaked
     // per-wave caches accumulate in the BlockManager
-    if (dirty.isEmpty) {
-      freshAssigned.unpersist(); changed.unpersist()
-      return dirty
-    }
-    val dirtyLits = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-      dirty.toArray)
-    val survivors = idx
-      .filter(col("centroid_id").isin(dirtyLits: _*))
-      .join(gone, Seq(idCol), "left_anti")
+    try refreshQuantizedCells(spark, indexPath, centroidRows(cents),
+        freshRows, changed.filter(col("status").isin("removed",
+          "modified")).select(col(idCol)), idCol, vecCol,
+        deltas = false).dirty
+    finally { freshRows.unpersist(); changed.unpersist() }
+  }
+
+  /** The int8 refresh body over the fresh rows themselves (`fresh`:
+    * idCol, vecCol) and the keys whose indexed rows go (`gone`) — the
+    * streaming wave's entry, where both come straight from the delta.
+    * Fresh rows get their codes and cell in one projection; with
+    * `deltas` the dirty query also returns each dirty cell's
+    * (Δn, Δcd_fp_sum) by the [[ivfDriftStats]] per-row rule
+    * ([[int8CdFp]], rows outside the model's cells uncounted). */
+  private[graft] def refreshQuantizedCells(
+      spark: org.apache.spark.sql.SparkSession, indexPath: String,
+      cents: CentRows, fresh: DataFrame, gone: DataFrame, idCol: String,
+      vecCol: String, deltas: Boolean): Refreshed = {
+    val freshAssigned = withCell(Quantize.quantized(
+        fresh.select(col(idCol), col(vecCol)), vecCol, "codes"),
+        cents, vecCol)
       .select(col(idCol), col("codes"), col("codes_scale"),
         col("centroid_id"))
-    val unioned = survivors.unionByName(freshAssigned)
-      .repartition(col("centroid_id")) // cell compaction, as the writers
-    commitCellRefreshMvcc(spark, indexPath, unioned, dirty)
-    freshAssigned.unpersist(); changed.unpersist()
-    dirty
+    val cdFp =
+      if (!deltas) None
+      else {
+        import spark.implicits._
+        val centsDf = cents.toDF("centroid_id", "cvec")
+        Some((rows: DataFrame) => rows
+          .withColumn("_vd", VectorFns.toDouble(col("codes")))
+          .join(broadcast(centsDf), Seq("centroid_id"), "left")
+          .withColumn("cd_fp", int8CdFp(col("_vd"), col("cvec")))
+          .withColumn("_counted", col("cvec").isNotNull))
+      }
+    refreshCells(spark, indexPath, SegmentManifest.latest(spark, indexPath),
+      freshAssigned, gone, idCol, cdFp)
+  }
+
+  /** What one cell refresh did: the dirty cells (ascending), the
+    * index generation it pinned as its base and the one it sealed (the
+    * base when nothing was dirty), and — when the family's per-row
+    * cd_fp rode the dirty query — each dirty cell's (Δn, Δcd_fp_sum):
+    * + over the fresh rows, − over the gone keys' rows at the base. */
+  private[graft] final case class Refreshed(
+      dirty: Seq[Long], baseGen: Int, gen: Int,
+      deltas: Option[Map[Long, (Long, Long)]])
+
+  /** The cell-refresh core both families share, against ONE pinned
+    * base (`latest`; the legacy hive tree folds in as generation 0):
+    * the base's cells are read, and the seal replaces entries of the
+    * same base.
+    *
+    * ONE aggregate over the touched rows — the gone keys' indexed rows
+    * (sign −1) and the fresh rows (sign +1) — finds the dirty cells
+    * and, when `cdFp` adds the family's per-row `cd_fp` and `_counted`
+    * columns, their stat deltas. The group-by partial-aggregates
+    * map-side, so shuffle and driver read stay ≤|cells| rows whatever
+    * the delta size; the NULL cell of a fresh vector with a NULL
+    * element dirties nothing (dropped on the driver, so the filter
+    * never re-runs the assignment kernel below the union). Dirty cells' survivors
+    * ∪ the fresh rows then commit by MVCC ([[commitCellRefreshMvcc]]).
+    * `fresh` carries idCol, codes[, codes_scale], centroid_id. */
+  private[operators] def refreshCells(
+      spark: org.apache.spark.sql.SparkSession, indexPath: String,
+      latest: Option[SegmentManifest.Manifest], fresh: DataFrame,
+      gone: DataFrame, idCol: String,
+      cdFp: Option[DataFrame => DataFrame]): Refreshed = {
+    val idx = readCellsAt(spark, indexPath, latest)
+    val base = pinCellBase(spark, indexPath, latest)
+    val touched = idx.join(gone, Seq(idCol))
+      .select(col("centroid_id"), col("codes"), lit(-1L).as("_sign"))
+      .unionByName(fresh.select(col("centroid_id"), col("codes"),
+        lit(1L).as("_sign")))
+    val scored = cdFp.map(_(touched)).getOrElse(touched
+      .withColumn("cd_fp", lit(null).cast("long"))
+      .withColumn("_counted", lit(false)))
+    val perCell = graft.engine.Steps.scoped("refresh.dirty") {
+      scored.groupBy(col("centroid_id"))
+        .agg(sum(when(col("_counted"), col("_sign")).otherwise(lit(0L)))
+            .as("_dn"),
+          coalesce(sum(when(col("_counted"),
+            col("_sign") * col("cd_fp"))), lit(0L)).as("_ds"))
+        .collect()
+        .filterNot(_.isNullAt(0))
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    }
+    val dirty = perCell.keys.toSeq.sorted
+    val deltas = cdFp.map(_ => perCell)
+    if (dirty.isEmpty) Refreshed(dirty, base.gen, base.gen, deltas)
+    else {
+      val survivors = idx
+        .filter(col("centroid_id").isin(
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(
+            dirty.toArray): _*))
+        .join(gone, Seq(idCol), "left_anti")
+        .select(fresh.columns.toSeq.map(col): _*)
+      val unioned = survivors.unionByName(fresh)
+        .repartition(col("centroid_id")) // cell compaction, as the writers
+      val gen = graft.engine.Steps.scoped("refresh.commit") {
+        commitCellRefreshMvcc(spark, indexPath, unioned, dirty, base)
+      }
+      Refreshed(dirty, base.gen, gen, deltas)
+    }
   }
 
   /** The MVCC commit of a cell refresh (the streaming loop's mode):
@@ -884,26 +987,29 @@ object Similarity {
     * A RECENTER rides the same recipe via [[ivfRebuildQuantizedMvcc]]
     * (a full-replacement seal instead of a dirty-cell replace), so
     * EVERY maintenance op of an MVCC layout — refresh wave and
-    * rebuild alike — is snapshot-isolated from live readers. */
+    * rebuild alike — is snapshot-isolated from live readers. `base`
+    * is the manifest the op read its cells at; returns the sealed
+    * generation. */
   private[operators] def commitCellRefreshMvcc(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      unioned: DataFrame, dirty: Seq[Long]): Unit = {
-    val base = pinCellBase(spark, indexPath)
+      unioned: DataFrame, dirty: Seq[Long],
+      base: SegmentManifest.Manifest): Int = {
     val (gen, entries) = stageCellRev(spark, indexPath, unioned, base)
     SegmentManifest.seal(spark, indexPath, base
       .replace("cells", dirty.map(_.toInt).toSet, entries)
       .copy(gen = gen))
+    gen
   }
 
   /** The manifest a maintenance op builds AGAINST — the latest sealed
     * generation, or the legacy hive tree folded in as generation 0
-    * (the upgrade path). Resolved ONCE per op. */
+    * (the upgrade path). Resolved ONCE per op, from the op's one
+    * `latest` read. */
   private[operators] def pinCellBase(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): SegmentManifest.Manifest =
-    SegmentManifest.latest(spark, indexPath)
-      .getOrElse(SegmentManifest.bootstrap(spark, indexPath,
-        Seq(SegmentManifest.CellLayout)))
+      spark: org.apache.spark.sql.SparkSession, indexPath: String,
+      latest: Option[SegmentManifest.Manifest]): SegmentManifest.Manifest =
+    latest.getOrElse(SegmentManifest.bootstrap(spark, indexPath,
+      Seq(SegmentManifest.CellLayout)))
 
   /** Stage one write-once cell revision against the generation AFTER
     * `base`: write `rows` cell-partitioned under a fresh `_rev/` dir
@@ -966,7 +1072,8 @@ object Similarity {
       .select(col(idCol), col("codes"), col("codes_scale"),
         col("centroid_id"))
       .repartition(col("centroid_id"))
-    val base = pinCellBase(spark, indexPath)
+    val base = pinCellBase(spark, indexPath,
+      SegmentManifest.latest(spark, indexPath))
     val (gen, entries) = stageCellRev(spark, indexPath, rows, base)
     SegmentManifest.seal(spark, indexPath, SegmentManifest.Manifest(gen,
       base.layouts
@@ -998,52 +1105,53 @@ object Similarity {
   def modelFingerprint(model: DataFrame, keyCols: Seq[String],
                        vecCol: String): Long =
     model.select((keyCols.map(col) :+ col(vecCol)): _*).collect()
-      .map { r =>
-        var h = 0x9E3779B97F4A7C15L
-        for (i <- keyCols.indices)
-          h = java.lang.Long.rotateLeft(h ^ r.getLong(i) * 0xC2B2AE3D27D4EB4FL, 31)
-        val v = r.getAs[scala.collection.Seq[Double]](keyCols.length)
-        for (x <- v)
-          h = java.lang.Long.rotateLeft(
-            h ^ java.lang.Double.doubleToLongBits(x) * 0xC2B2AE3D27D4EB4FL, 27)
-        h * 0x165667B19E3779F9L
-      }.foldLeft(0L)(_ ^ _)
+      .map(r => rowFingerprint(keyCols.indices.map(r.getLong),
+        r.getAs[scala.collection.Seq[Double]](keyCols.length)))
+      .foldLeft(0L)(_ ^ _)
+
+  /** One model row's term of [[modelFingerprint]]. */
+  private def rowFingerprint(keys: Seq[Long],
+                             v: scala.collection.Seq[Double]): Long = {
+    var h = 0x9E3779B97F4A7C15L
+    for (k <- keys)
+      h = java.lang.Long.rotateLeft(h ^ k * 0xC2B2AE3D27D4EB4FL, 31)
+    for (x <- v)
+      h = java.lang.Long.rotateLeft(
+        h ^ java.lang.Double.doubleToLongBits(x) * 0xC2B2AE3D27D4EB4FL, 27)
+    h * 0x165667B19E3779F9L
+  }
 
   /** [[modelFingerprint]] of an IVF centroid table. */
   def centroidFingerprint(cents: DataFrame): Long =
     modelFingerprint(cents, Seq("centroid_id"), "cvec")
 
-  /** [[centroidFingerprint]] of a WRITTEN centroid store directory,
-    * memoized by (dir, mtime): the fingerprint is a pure function of
-    * the gen-keyed file, but computing it from a parquet-read frame
-    * was one collect JOB per maintenance wave (r20 WaveJobProbe —
-    * `collect at Similarity.scala` in every wave's driftStats).
-    * Metadata-scale (one long per live model generation), LRU-bounded;
-    * the mtime key re-reads a rewritten store (replays, tests) —
-    * [[graft.streaming.StreamingVectorIndex]]'s baselineCache rule. */
-  private val fpMemo: java.util.Map[(String, Long), java.lang.Long] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long), java.lang.Long](
-          16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long), java.lang.Long])
-            : Boolean = size() > 4096
-      })
+  /** [[centroidFingerprint]] of already-collected centroid rows. */
+  private[graft] def centroidFingerprintOf(rows: CentRows): Long =
+    rows.map { case (c, v) => rowFingerprint(Seq(c), v) }
+      .foldLeft(0L)(_ ^ _)
 
+  /** The rows of a WRITTEN centroid store directory, memoized under
+    * [[ProductQuantize.artifactKey]] (location, newest entry mtime,
+    * total bytes, entry count — one listing, so a rewrite in the same
+    * timestamp tick still misses on bytes or count). The rows are a
+    * pure function of the gen-keyed file, and every streaming wave
+    * needs them three times (the fresh rows' cell projection, the
+    * drift kernel's cell vectors, the model fingerprint) — each a
+    * collect job when read through Spark. k rows per entry,
+    * LRU-bounded. */
+  private val centRowsMemo = ProductQuantize.lruMemo[CentRows](64)
+
+  private[graft] def centroidRowsAt(
+      spark: org.apache.spark.sql.SparkSession, dir: String): CentRows =
+    ProductQuantize.memoized(centRowsMemo, spark, dir)(centroidRows(
+      spark.read.schema("centroid_id BIGINT, cvec ARRAY<DOUBLE>")
+        .parquet(dir)))
+
+  /** [[centroidFingerprint]] of a written centroid store, from the
+    * [[centroidRowsAt]] memo. */
   private[graft] def centroidFingerprintAt(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val key = (dir, fs.getFileStatus(p).getModificationTime)
-    val hit = fpMemo.get(key)
-    if (hit != null) hit.longValue()
-    else {
-      val fp = centroidFingerprint(spark.read
-        .schema("centroid_id BIGINT, cvec ARRAY<DOUBLE>").parquet(dir))
-      fpMemo.put(key, java.lang.Long.valueOf(fp))
-      fp
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Long =
+    centroidFingerprintOf(centroidRowsAt(spark, dir))
 
   /** Per-cell DRIFT statistics of a quantized cosine inverted file —
     * the monitoring read that closes the loop
@@ -1084,9 +1192,7 @@ object Similarity {
       // this is purely the codegen-boundary win
       .withColumn("_vd", VectorFns.toDouble(col("codes")))
       .join(broadcast(cents), Seq("centroid_id"))
-      .withColumn("cd_fp", floor(
-        (lit(1.0) - VectorFns.cosine(col("_vd"),
-          col("cvec"))) * lit(1e7) + lit(0.5)).cast("long"))
+      .withColumn("cd_fp", int8CdFp(col("_vd"), col("cvec")))
       .groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n"), sum(col("cd_fp")).as("cd_fp_sum"))
       .select(col("centroid_id"), col("n"),
@@ -1101,6 +1207,13 @@ object Similarity {
         lit(modelFpO.getOrElse(centroidFingerprint(cents)))
           .as("model_fp"))
   }
+
+  /** One stored row's cosine displacement from its cell centroid in
+    * 1e-7 fixed point — the per-row term of [[ivfDriftStats]] and of
+    * the refresh's stat deltas. */
+  private def int8CdFp(vd: Column, cvec: Column): Column =
+    floor((lit(1.0) - VectorFns.cosine(vd, cvec)) * lit(1e7) + lit(0.5))
+      .cast("long")
 
   /** THE drift-trigger comparison — ONE definition shared by the two
     * batch loops ([[ivfRefreshOrRecenter]],

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -66,7 +66,10 @@ import graft.operators.{ProductQuantize, SegmentManifest, Similarity}
   *      sealed generation; a crash AFTER the seal makes the replay's
   *      wave a logical no-op (its gone keys are already absent, its
   *      fresh rows re-stage identical content into one more
-  *      generation) — either way the composition converges.
+  *      generation) — either way the composition converges. The
+  *      drift stats a crash after the seal left behind describe the
+  *      pre-crash generation, so the replay resets them with a full
+  *      scan instead of updating them ([[waveDriftStats]]).
   *   4. RECENTER: the breach decision is made ONCE, sealed by the
   *      `_RECENTER_PENDING` marker BEFORE the rebuild. Recovery (the
   *      next wave, or a replay) sees the marker and REPLAYS THE
@@ -109,19 +112,27 @@ object StreamingVectorIndex {
 
   /** The family-specific pieces: the int8 quantized IVF file and the
     * IVF-PQ layout run the identical wave protocol. (Unsealed so the
-    * crash-point specs can wrap an ops with fault injection.) */
+    * crash-point specs can wrap an ops with fault injection.) Model
+    * reads name the written centroid store (`centsLoc`, a
+    * `cents/gen=<g>` dir) the caller resolved, and ride its row memo
+    * ([[Similarity.centroidRowsAt]]). */
   private[graft] trait IndexOps {
-    /** Cell-incremental refresh; returns the DIRTY cell ids (the
-      * ≤|cells| driver-side list the underlying refresh already
-      * produces) so the wave's drift-stat update can stay
-      * delta-bounded. */
-    def refresh(spark: SparkSession, root: String, cents: DataFrame,
-                upserts: DataFrame, changes: DataFrame, idCol: String,
-                vecCol: String): Seq[Long]
+    /** The manifest-bearing index path: its sealed generation tags
+      * the drift-stats artifact ([[StatRow.index_gen]]). */
+    def cellsPath(root: String): String
+    /** Cell-incremental refresh of one wave: `fresh` (idCol, vecCol)
+      * are the upserts themselves and `gone` every delta key — changes
+      * come from the delta alone. Returns the dirty cells, the pinned
+      * base and sealed generations, and each dirty cell's
+      * (Δn, Δcd_fp_sum) when the family's per-row kernel fits. */
+    def refresh(spark: SparkSession, root: String, centsLoc: String,
+                fresh: DataFrame, gone: DataFrame, idCol: String,
+                vecCol: String): Similarity.Refreshed
     /** Per-cell drift stats (centroid_id, n, mean_cd, cd_fp_sum,
-      * model_fp) of the index under `cents` — restricted to `cells`
-      * when given (the pruned incremental read; None = full scan). */
-    def driftStats(spark: SparkSession, root: String, cents: DataFrame,
+      * model_fp) of the index under the centroids at `centsLoc` —
+      * restricted to `cells` when given (the pruned incremental read;
+      * None = full scan). */
+    def driftStats(spark: SparkSession, root: String, centsLoc: String,
                    idCol: String, cells: Option[Seq[Long]]): DataFrame
     /** Fingerprint of the model artifacts the family's stats rows are
       * valid under ([[graft.operators.Similarity.modelFingerprint]]) —
@@ -129,7 +140,7 @@ object StreamingVectorIndex {
       * IVF-PQ. The wave's carried-stats check compares this against
       * the seal in the previous generation's artifact. */
     def modelFp(spark: SparkSession, root: String,
-                cents: DataFrame): Long
+                centsLoc: String): Long
     /** Full rebuild under the generation-`gen` model — MVCC-committed
       * (write-once `_rev` cells + one exclusive seal), so a live
       * probe pinned before a recenter keeps its generation's
@@ -152,73 +163,73 @@ object StreamingVectorIndex {
 
   private[graft] final case class QuantizedOps(k: Int, seed: Long)
       extends IndexOps {
-    def refresh(spark: SparkSession, root: String, cents: DataFrame,
-                upserts: DataFrame, changes: DataFrame, idCol: String,
-                vecCol: String): Seq[Long] =
+    def cellsPath(root: String): String = s"$root/index"
+    def refresh(spark: SparkSession, root: String, centsLoc: String,
+                fresh: DataFrame, gone: DataFrame, idCol: String,
+                vecCol: String): Similarity.Refreshed =
       // MVCC commit: the wave's dirty cells land write-once + one
       // exclusive seal, so LIVE probes pinned before the seal never
       // race this refresh; the recenter's rebuild seals the same way
       // (ivfRebuildQuantizedMvcc)
-      Similarity.ivfRefreshQuantizedIncremental(spark, s"$root/index",
-        cents, upserts, changes, idCol, vecCol)
+      Similarity.refreshQuantizedCells(spark, cellsPath(root),
+        Similarity.centroidRowsAt(spark, centsLoc), fresh, gone, idCol,
+        vecCol, deltas = true)
     /** Bound the write-once cell history: keep enough generations
       * for in-flight pinned probes (the retention dial), reclaim the
       * rest — a per-wave driver-side sweep. */
     override def vacuumIndex(spark: SparkSession, root: String,
                              keep: Int): Unit =
-      if (SegmentManifest.generations(spark, s"$root/index").nonEmpty) {
-        Similarity.ivfVacuumQuantized(spark, s"$root/index", keep)
+      if (SegmentManifest.generations(spark, cellsPath(root)).nonEmpty) {
+        Similarity.ivfVacuumQuantized(spark, cellsPath(root), keep)
         ()
       }
-    def driftStats(spark: SparkSession, root: String, cents: DataFrame,
-                   idCol: String, cells: Option[Seq[Long]]): DataFrame =
-      Similarity.ivfDriftStats(spark, s"$root/index", cents, cells,
-        modelFpO = Some(modelFp(spark, root, cents)))
-    // `cents` is always the CURRENT generation's written store in the
-    // wave protocol (readCents at the max gen — recoverPending runs
-    // first, and finishRecenter writes its cents before its stats), so
-    // the fingerprint rides the (dir, mtime) memo instead of one
-    // collect job per wave
+    def driftStats(spark: SparkSession, root: String, centsLoc: String,
+                   idCol: String, cells: Option[Seq[Long]]): DataFrame = {
+      import spark.implicits._
+      Similarity.ivfDriftStats(spark, cellsPath(root),
+        Similarity.centroidRowsAt(spark, centsLoc)
+          .toDF("centroid_id", "cvec"),
+        cells, modelFpO = Some(modelFp(spark, root, centsLoc)))
+    }
     def modelFp(spark: SparkSession, root: String,
-                cents: DataFrame): Long =
-      Similarity.centroidFingerprintAt(spark,
-        s"$root/cents/gen=${gens(spark, root, "cents").max}")
+                centsLoc: String): Long =
+      Similarity.centroidFingerprintAt(spark, centsLoc)
     def rebuild(snapshot: DataFrame, cents: DataFrame, idCol: String,
                 vecCol: String, root: String, gen: Int): Unit =
       Similarity.ivfRebuildQuantizedMvcc(snapshot.sparkSession,
-        s"$root/index", snapshot, cents, idCol, vecCol, modelGen = gen)
+        cellsPath(root), snapshot, cents, idCol, vecCol, modelGen = gen)
     def fitCentroids(snapshot: DataFrame, vecCol: String): DataFrame =
       Similarity.learnedCentroids(snapshot, vecCol, k, seed)
   }
 
   private[graft] final case class IvfPqOps(kCells: Int, m: Int, k: Int,
                                     seed: Long) extends IndexOps {
-    def refresh(spark: SparkSession, root: String, cents: DataFrame,
-                upserts: DataFrame, changes: DataFrame, idCol: String,
-                vecCol: String): Seq[Long] =
+    def cellsPath(root: String): String = s"$root/index/codes"
+    def refresh(spark: SparkSession, root: String, centsLoc: String,
+                fresh: DataFrame, gone: DataFrame, idCol: String,
+                vecCol: String): Similarity.Refreshed =
       // same refresh-wave MVCC as the quantized loop: write-once
       // cell revs under codes/_rev + one exclusive seal
-      ProductQuantize.ivfPqRefreshIncremental(spark, s"$root/index",
-        cents, upserts, changes, idCol, vecCol)
+      ProductQuantize.ivfPqRefreshRows(spark, s"$root/index",
+        Similarity.centroidRowsAt(spark, centsLoc), fresh, gone, idCol,
+        vecCol)
     override def vacuumIndex(spark: SparkSession, root: String,
                              keep: Int): Unit =
-      if (SegmentManifest.generations(spark,
-          s"$root/index/codes").nonEmpty) {
-        Similarity.ivfVacuumQuantized(spark, s"$root/index/codes", keep,
+      if (SegmentManifest.generations(spark, cellsPath(root)).nonEmpty) {
+        Similarity.ivfVacuumQuantized(spark, cellsPath(root), keep,
           Seq(SegmentManifest.CellLayout, SegmentManifest.BooksLayout))
         ()
       }
-    def driftStats(spark: SparkSession, root: String, cents: DataFrame,
+    def driftStats(spark: SparkSession, root: String, centsLoc: String,
                    idCol: String, cells: Option[Seq[Long]]): DataFrame =
-      ProductQuantize.ivfPqDriftStats(spark, s"$root/index", cents,
-        idCol, cells, modelFpO = Some(modelFp(spark, root, cents)))
-    // both halves memoized by location — the QuantizedOps rule for
-    // cents (readCents at the max gen by the wave protocol), the
-    // governing-books location for the books half
+      ProductQuantize.ivfPqDriftStatsRows(spark, s"$root/index",
+        Similarity.centroidRowsAt(spark, centsLoc), idCol, cells,
+        modelFpO = Some(modelFp(spark, root, centsLoc)))
+    // both halves memoized by location: the centroid store the caller
+    // read, and the governing books
     def modelFp(spark: SparkSession, root: String,
-                cents: DataFrame): Long =
-      Similarity.centroidFingerprintAt(spark,
-        s"$root/cents/gen=${gens(spark, root, "cents").max}") ^
+                centsLoc: String): Long =
+      Similarity.centroidFingerprintAt(spark, centsLoc) ^
         ProductQuantize.booksFingerprintAt(spark,
           ProductQuantize.governingBooksLoc(spark, s"$root/index"))
     // a recenter retrains BOTH artifacts (centroids and codebooks) —
@@ -250,18 +261,18 @@ object StreamingVectorIndex {
     * so the injected failure can never drift from the spec'd one. */
   private[graft] def crashAfterRebuild(inner: IndexOps): IndexOps =
     new IndexOps {
-      def refresh(spark: SparkSession, root: String, cents: DataFrame,
-                  upserts: DataFrame, changes: DataFrame, idCol: String,
-                  vecCol: String): Seq[Long] =
-        inner.refresh(spark, root, cents, upserts, changes, idCol,
-          vecCol)
+      def cellsPath(root: String): String = inner.cellsPath(root)
+      def refresh(spark: SparkSession, root: String, centsLoc: String,
+                  fresh: DataFrame, gone: DataFrame, idCol: String,
+                  vecCol: String): Similarity.Refreshed =
+        inner.refresh(spark, root, centsLoc, fresh, gone, idCol, vecCol)
       def driftStats(spark: SparkSession, root: String,
-                     cents: DataFrame, idCol: String,
+                     centsLoc: String, idCol: String,
                      cells: Option[Seq[Long]]): DataFrame =
-        inner.driftStats(spark, root, cents, idCol, cells)
+        inner.driftStats(spark, root, centsLoc, idCol, cells)
       def modelFp(spark: SparkSession, root: String,
-                  cents: DataFrame): Long =
-        inner.modelFp(spark, root, cents)
+                  centsLoc: String): Long =
+        inner.modelFp(spark, root, centsLoc)
       def rebuild(snapshot: DataFrame, cents: DataFrame, idCol: String,
                   vecCol: String, root: String, gen: Int): Unit = {
         inner.rebuild(snapshot, cents, idCol, vecCol, root, gen)
@@ -315,25 +326,26 @@ object StreamingVectorIndex {
   }
 
   /** One driftstats-artifact row, held driver-side through the wave's
-    * COLLECT-ONCE stats phase: the previous generation's rows are
-    * collected once and reused for the model-seal check, the
-    * clean-cell carry, the gauge fold, AND the commit write — where
-    * the frame-shaped pipeline paid a Spark job per step (seal probe,
-    * stats write, gauge re-read of the written file), the row array
-    * pays two (prev collect + dirty-cell rescan). ≤|cells| rows by
-    * construction. */
+    * stats phase: the previous generation's rows are reused for the
+    * model-seal check, the carry, the gauge fold AND the commit write.
+    * `index_gen` is the index generation the rows describe — the
+    * manifest a refresh must have pinned as its base for the rows to
+    * carry (a replay after a crash between the refresh seal and the
+    * stats commit pins a LATER base, so it never carries them).
+    * ≤|cells| rows by construction. */
   private[graft] final case class StatRow(centroid_id: Long, n: Long,
                                           mean_cd: Double,
                                           cd_fp_sum: Long,
-                                          model_fp: Long)
+                                          model_fp: Long,
+                                          index_gen: Long)
 
   /** The carried-stats memo: [[commitDriftStats]] writes generation
     * g's artifact from driver-side rows, and the very next wave's
-    * [[waveDriftStats]] re-read those same rows back (one parquet-read
-    * job + one collect job per wave). Keyed by (root, gen, file mtime)
-    * — the baselineCache rule: the FILE stays the source of truth, a
-    * rewritten artifact (replay, out-of-band tooling) misses on mtime
-    * and re-reads. ≤|cells| rows per entry, LRU-bounded. */
+    * [[waveDriftStats]] updates those same rows. Keyed by (root, gen,
+    * file mtime) — the baselineCache rule: the FILE stays the source
+    * of truth, a rewritten artifact (replay, out-of-band tooling)
+    * misses on mtime and re-reads. ≤|cells| rows per entry,
+    * LRU-bounded. */
   private val statsCache: java.util.Map[(String, Int, Long), Seq[StatRow]] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[(String, Int, Long), Seq[StatRow]](
@@ -348,24 +360,35 @@ object StreamingVectorIndex {
     fsOf(spark, root).getFileStatus(new org.apache.hadoop.fs.Path(
       s"$root/driftstats/gen=$gen")).getModificationTime
 
-  private def collectStats(df: DataFrame): Seq[StatRow] =
+  /** A stats frame's rows, tagged with `indexGen` (a literal for a
+    * fresh scan, the stored column for a written artifact). */
+  private def collectStats(df: DataFrame,
+                           indexGen: Column): Seq[StatRow] =
     scala.collection.immutable.ArraySeq.unsafeWrapArray(
       df.select(col("centroid_id").cast("long"), col("n"),
-          col("mean_cd"), col("cd_fp_sum"), col("model_fp"))
+          col("mean_cd"), col("cd_fp_sum"), col("model_fp"),
+          indexGen.cast("long"))
         .collect()
         .map(r => StatRow(r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getLong(3), r.getLong(4))))
+          r.getLong(3), r.getLong(4), r.getLong(5))))
+
+  /** A written artifact's rows; None when it lacks the model seal or
+    * the index-generation tag (a legacy artifact — reset, not carried). */
+  private def readStats(spark: SparkSession, root: String,
+                        gen: Int): Option[Seq[StatRow]] = {
+    val df = spark.read.parquet(s"$root/driftstats/gen=$gen")
+    if (!Seq("model_fp", "index_gen").forall(df.columns.contains)) None
+    else Some(collectStats(df, col("index_gen")))
+  }
 
   /** Write generation `gen`'s per-cell drift stats (≤|cells| rows,
     * one coalesced file) and return the GAUGES folded from the SAME
     * driver-side rows the file is written from — the artifact is the
     * wave's decision input AND the next wave's carried baseline, and
     * because the rows ARE the storage payload the fold and the file
-    * cannot diverge (the old frame-shaped pipeline re-read the
-    * written file to guarantee this, one extra job per wave). Prunes
-    * stats generations below the keep floor (only the newest is ever
-    * read; the floor keeps the previous one for the replay of the
-    * current wave). */
+    * cannot diverge. Prunes stats generations below the keep floor
+    * (only the newest is ever read; the floor keeps the previous one
+    * for the replay of the current wave). */
   private def commitDriftStats(spark: SparkSession, root: String,
                                gen: Int, rows: Seq[StatRow],
                                keepBelow: Int): (Long, Long) = {
@@ -385,76 +408,94 @@ object StreamingVectorIndex {
     Similarity.ivfDriftGaugesOf(rows.map(r => (r.n, r.cd_fp_sum)))
   }
 
-  /** The wave's post-refresh drift stats, DELTA-BOUNDED (the scale
-    * fix the per-wave full-index gauge needed): a cell's
+  /** The wave's post-refresh drift stats, DELTA-BOUNDED: a cell's
     * (n, cd_fp_sum) is a pure function of its codes under FIXED
-    * centroids, so only the wave's DIRTY cells are rescanned (a
-    * pruned read) and every clean cell's row is carried verbatim
-    * from the previous generation's stats artifact. Falls back to
-    * one full scan when no artifact exists yet (bootstrap of the
-    * store, or a legacy root). Bit-identical to the full scan by
-    * construction — the parity spec pins it, emptied cells
-    * included (a cell whose rows all died simply has no recomputed
-    * row). */
+    * model artifacts, and both are a count and an exact long sum.
+    *
+    *   - Δ path: when the previous artifact's rows are memo-held,
+    *     sealed under the current model and tagged with the index
+    *     generation the refresh pinned as its base, each cell's new
+    *     stats are carried + the refresh's (Δn, Δcd_fp_sum) —
+    *     bit-exact, and no index read at all. A cell whose n reaches
+    *     0 loses its row, as the full scan has none.
+    *   - Rescan path: rows read back from the file (a fresh process)
+    *     with the same seal and tag carry their clean cells verbatim
+    *     and only the dirty cells are rescanned (a pruned read).
+    *   - Otherwise one full scan: no artifact yet, a legacy artifact
+    *     (no seal or no tag), a model change, or a tag below the base
+    *     (a replay after a crash between the refresh seal and the
+    *     stats commit, whose refresh saw the crashed attempt's seal).
+    * All three equal the full scan row for row — the parity specs
+    * pin it, emptied cells included. */
   private def waveDriftStats(spark: SparkSession, root: String,
-                             ops: IndexOps, cents: DataFrame,
+                             ops: IndexOps, centsLoc: String,
                              idCol: String, gen: Int,
-                             dirty: Seq[Long]): Seq[StatRow] = {
-    val prevGens = gens(spark, root, "driftstats").filter(_ < gen)
-    def full = collectStats(ops.driftStats(spark, root, cents, idCol,
-      None))
-    prevGens.maxOption match {
+                             r: Similarity.Refreshed): Seq[StatRow] = {
+    def scan(cells: Option[Seq[Long]]) = collectStats(
+      ops.driftStats(spark, root, centsLoc, idCol, cells), lit(r.gen))
+    gens(spark, root, "driftstats").filter(_ < gen).maxOption match {
+      case None => scan(None)
       case Some(pg) =>
         // the previous generation's rows usually sit in the memo
-        // (commitDriftStats wrote them last wave in this process);
-        // a miss — fresh process, rewritten file — re-reads the file
+        // (commitDriftStats wrote them last wave in this process)
         val memoHit = Option(
           statsCache.get((root, pg, statsMtime(spark, root, pg))))
-        lazy val prevDf = spark.read.parquet(s"$root/driftstats/gen=$pg")
-        // the carried artifact is MODEL-SEALED: its per-cell rows are
-        // valid only under the model that produced them. A legacy
-        // artifact (no seal) or one written under another model
-        // (out-of-band recenter) self-heals with one full scan
-        // instead of silently wrong gauges. The check is zero extra
-        // jobs on the common path: the freshly rescanned dirty rows
-        // already carry the CURRENT model's fingerprint, and the
-        // previous rows were collected anyway for the carry.
-        if (memoHit.isEmpty && !prevDf.columns.contains("model_fp")) full
-        else {
-          val prev = memoHit.getOrElse(collectStats(prevDf))
-          // EVERY carried row must be sealed under the current model
-          // — Similarity.requireSameModel's rule: a partially-written
-          // or mixed-fp artifact (two models' rows interleaved) is as
-          // invalid as a wrong head row, and would otherwise carry
-          // rows sealed under another model into the gauge fold
-          def sealedBy(fp: Long): Boolean =
-            prev.nonEmpty && prev.forall(_.model_fp == fp)
-          if (dirty.isEmpty) {
-            // nothing rescanned this wave — the rare path that still
-            // pays a fingerprint job to verify the seal
-            if (sealedBy(ops.modelFp(spark, root, cents))) prev
-            else full
-          } else {
-            val fresh = collectStats(
-              ops.driftStats(spark, root, cents, idCol, Some(dirty)))
-            val fpNow = fresh.headOption.map(_.model_fp)
-              .getOrElse(ops.modelFp(spark, root, cents))
-            if (!sealedBy(fpNow)) full
-            else {
-              val dirtySet = dirty.toSet
-              prev.filterNot(r =>
-                dirtySet.contains(r.centroid_id)) ++ fresh
+        val fpNow = ops.modelFp(spark, root, centsLoc)
+        // EVERY carried row must be sealed under the current model and
+        // describe the refresh's base — Similarity.requireSameModel's
+        // rule: a partially-written or mixed-fp artifact is as invalid
+        // as a wrong head row
+        memoHit.orElse(readStats(spark, root, pg)).filter(prev =>
+            prev.nonEmpty && prev.forall(p =>
+              p.model_fp == fpNow && p.index_gen == r.baseGen)) match {
+          case None => scan(None)
+          case Some(prev) =>
+            val retag = prev.map(_.copy(index_gen = r.gen))
+            r.deltas.filter(_ => memoHit.nonEmpty) match {
+              case Some(d) => withDeltas(retag, d)
+              case None if r.dirty.isEmpty => retag
+              case None =>
+                val dirtySet = r.dirty.toSet
+                retag.filterNot(p => dirtySet.contains(p.centroid_id)) ++
+                  scan(Some(r.dirty))
             }
-          }
         }
-      case None => full
     }
   }
 
+  /** Carried rows + per-cell (Δn, Δcd_fp_sum), in cell order; mean_cd
+    * by the stats query's own arithmetic (Spark's `round(cd_fp_sum /
+    * n / 1e7, 4)`: double divisions, then HALF_UP on the double's
+    * decimal form). */
+  private def withDeltas(prev: Seq[StatRow],
+                         deltas: Map[Long, (Long, Long)]): Seq[StatRow] = {
+    val byCell = prev.map(p => p.centroid_id -> p).toMap
+    val (fp, tag) = (prev.head.model_fp, prev.head.index_gen)
+    (byCell.keySet ++ deltas.keySet).toSeq.sorted.flatMap { c =>
+      deltas.get(c) match {
+        case None => byCell.get(c)
+        case Some((dn, ds)) =>
+          val n = byCell.get(c).map(_.n).getOrElse(0L) + dn
+          val sum = byCell.get(c).map(_.cd_fp_sum).getOrElse(0L) + ds
+          require(n > 0 || (n == 0 && sum == 0),
+            s"StreamingVectorIndex: cell $c stat delta leaves n=$n, " +
+              s"cd_fp_sum=$sum")
+          if (n == 0) None
+          else Some(StatRow(c, n, java.math.BigDecimal.valueOf(
+              sum.toDouble / n.toDouble / 1e7)
+            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue(),
+            sum, fp, tag))
+      }
+    }
+  }
+
+  /** The written centroid store of model generation `gen`. */
+  private def centsLoc(root: String, gen: Int): String =
+    s"$root/cents/gen=$gen"
+
   private def writeCents(spark: SparkSession, root: String, gen: Int,
                          cents: DataFrame): Unit =
-    cents.coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/cents/gen=$gen")
+    cents.coalesce(1).write.mode("overwrite").parquet(centsLoc(root, gen))
 
   /** Explicit-schema read of a model generation — the centroid store
     * has one fixed shape, and schema inference on it was a hidden
@@ -462,7 +503,7 @@ object StreamingVectorIndex {
   private def readCents(spark: SparkSession, root: String,
                         gen: Int): DataFrame =
     spark.read.schema("centroid_id BIGINT, cvec ARRAY<DOUBLE>")
-      .parquet(s"$root/cents/gen=$gen")
+      .parquet(centsLoc(root, gen))
 
   private def writeBaseline(spark: SparkSession, root: String,
                             gen: Int, bl: (Long, Long)): Unit = {
@@ -608,47 +649,51 @@ object StreamingVectorIndex {
     * bootstrap body. */
   private def finishRecenter(spark: SparkSession, root: String,
                              gen: Int, idCol: String, vecCol: String,
-                             ops: IndexOps, retain: Int = 0): Unit = {
-    compactSnapshot(spark, root, gen, idCol, vecCol, retain)
-    val snap = spark.read.parquet(s"$root/snapfull/gen=$gen")
-      .select(col(idCol), col(vecCol))
-    // no checkpoint: both IndexOps fitCentroids run the ML fit EAGERLY
-    // inside learnedCentroids and return a driver-local relation, so
-    // re-planning never re-fits — the old pin was one wasted job per
-    // recenter/bootstrap (it is also consumed exactly once, by
-    // writeCents below; everything downstream reads the WRITTEN file)
-    val fitted = ops.fitCentroids(snap, vecCol)
-    // publish `cents/gen=<gen>` BEFORE the rebuild seals a manifest
-    // whose ModelMarker names generation `gen`: probeLive* resolves
-    // the model gen from the sealed manifest and reads this path —
-    // sealing first would open a window where the marked cents dir is
-    // missing (AnalysisException) or mid-write (silently empty probe),
-    // breaking the "cells and model paired atomically" contract. The
-    // write is generation-keyed and a pure function of the WRITTEN
-    // full snapshot + seed, so a recovery replay overwrites it with
-    // identical content; reading the fit back from the published file
-    // keeps the rebuild + gauges on the exact stored values.
-    writeCents(spark, root, gen, fitted)
-    val cents2 = readCents(spark, root, gen)
-    ops.rebuild(snap, cents2, idCol, vecCol, root, gen)
-    ops.snapshotModel(spark, root, gen)
-    // the rebuild re-encoded everything, so the stats artifact resets
-    // with one full scan (the recenter pays the corpus read anyway);
-    // subsequent waves go back to dirty-cell increments
-    val bl2 = commitDriftStats(spark, root, gen,
-      collectStats(ops.driftStats(spark, root, cents2, idCol, None)),
-      retain)
-    writeBaseline(spark, root, gen, bl2)
-    val fs = fsOf(spark, root)
-    require(fs.delete(markerPath(root), false) ||
-        !fs.exists(markerPath(root)),
-      s"StreamingVectorIndex: failed to clear recenter marker at $root")
-    // the rebuild's seal left the pre-recenter cell generations on
-    // disk for pinned readers — reclaim by the same retention dial as
-    // the refresh waves (never below 2: a probe pinned one wave back
-    // must always survive the vacuum that follows)
-    ops.vacuumIndex(spark, root, math.max(retain + 1, 2))
-  }
+                             ops: IndexOps, retain: Int = 0): Unit =
+    graft.engine.Steps.scoped("recenter") {
+      compactSnapshot(spark, root, gen, idCol, vecCol, retain)
+      val snap = spark.read.parquet(s"$root/snapfull/gen=$gen")
+        .select(col(idCol), col(vecCol))
+      // no checkpoint: both IndexOps fitCentroids run the ML fit EAGERLY
+      // inside learnedCentroids and return a driver-local relation, so
+      // re-planning never re-fits — the old pin was one wasted job per
+      // recenter/bootstrap (it is also consumed exactly once, by
+      // writeCents below; everything downstream reads the WRITTEN file)
+      val fitted = ops.fitCentroids(snap, vecCol)
+      // publish `cents/gen=<gen>` BEFORE the rebuild seals a manifest
+      // whose ModelMarker names generation `gen`: probeLive* resolves
+      // the model gen from the sealed manifest and reads this path —
+      // sealing first would open a window where the marked cents dir is
+      // missing (AnalysisException) or mid-write (silently empty probe),
+      // breaking the "cells and model paired atomically" contract. The
+      // write is generation-keyed and a pure function of the WRITTEN
+      // full snapshot + seed, so a recovery replay overwrites it with
+      // identical content; reading the fit back from the published file
+      // keeps the rebuild + gauges on the exact stored values.
+      writeCents(spark, root, gen, fitted)
+      val cents2 = readCents(spark, root, gen)
+      ops.rebuild(snap, cents2, idCol, vecCol, root, gen)
+      ops.snapshotModel(spark, root, gen)
+      // the rebuild re-encoded everything, so the stats artifact resets
+      // with one full scan (the recenter pays the corpus read anyway),
+      // tagged with the generation the rebuild sealed; subsequent waves
+      // go back to delta updates
+      val bl2 = commitDriftStats(spark, root, gen,
+        collectStats(ops.driftStats(spark, root, centsLoc(root, gen), idCol,
+          None), lit(SegmentManifest.latestGen(spark,
+            ops.cellsPath(root)).getOrElse(0))),
+        retain)
+      writeBaseline(spark, root, gen, bl2)
+      val fs = fsOf(spark, root)
+      require(fs.delete(markerPath(root), false) ||
+          !fs.exists(markerPath(root)),
+        s"StreamingVectorIndex: failed to clear recenter marker at $root")
+      // the rebuild's seal left the pre-recenter cell generations on
+      // disk for pinned readers — reclaim by the same retention dial as
+      // the refresh waves (never below 2: a probe pinned one wave back
+      // must always survive the vacuum that follows)
+      ops.vacuumIndex(spark, root, math.max(retain + 1, 2))
+    }
 
   /** Replay a sealed-but-unfinished recenter decision (crash between
     * the marker and the model write). The gauge is NOT re-consulted —
@@ -729,43 +774,48 @@ object StreamingVectorIndex {
       // dot-dirs, so debris here would accumulate unbounded
       val deltaStaging = new org.apache.hadoop.fs.Path(
         s"$root/snapdelta/.staging_$gen")
-      require(fs.delete(deltaStaging, true) || !fs.exists(deltaStaging),
-        s"StreamingVectorIndex: failed to clear stale $deltaStaging")
-      deltaC.select(col(idCol), col(vecCol), col("op"),
-          opStatus.as("status"))
-        .write.mode("overwrite").parquet(deltaStaging.toString)
-      require(fs.delete(deltaDir, true) || !fs.exists(deltaDir),
-        s"StreamingVectorIndex: failed to clear a replayed delta at " +
-          s"$deltaDir")
-      require(fs.rename(deltaStaging, deltaDir),
-        s"StreamingVectorIndex: failed to commit snapshot delta " +
-          s"gen=$gen")
+      graft.engine.Steps.scoped("wave.delta") {
+        require(fs.delete(deltaStaging, true) || !fs.exists(deltaStaging),
+          s"StreamingVectorIndex: failed to clear stale $deltaStaging")
+        deltaC.select(col(idCol), col(vecCol), col("op"),
+            opStatus.as("status"))
+          .write.mode("overwrite").parquet(deltaStaging.toString)
+        require(fs.delete(deltaDir, true) || !fs.exists(deltaDir),
+          s"StreamingVectorIndex: failed to clear a replayed delta at " +
+            s"$deltaDir")
+        require(fs.rename(deltaStaging, deltaDir),
+          s"StreamingVectorIndex: failed to commit snapshot delta " +
+            s"gen=$gen")
+      }
       // 2. changes from the DELTA alone (replay-safety step 2): every
       //    upsert is "modified" — an actually-new key just dirties no
-      //    outgoing cell — and every delete is "removed"
-      val changes = deltaC.select(col(idCol), opStatus.as("status"))
+      //    outgoing cell — and every delete is "removed", so every
+      //    delta key's indexed row goes and the upsert rows are
+      //    exactly the fresh rows (the delta write above already
+      //    raised on an unknown op)
       // 3. cell-incremental refresh under the CURRENT model; the
-      //    upsert rows are the only "snapshot" the refresh needs
-      //    (freshRows = newSnap ⋈ freshKeys ⊆ upserts), so the wave
-      //    never rescans the corpus
+      //    upsert rows are the only "snapshot" the refresh needs, so
+      //    the wave never rescans the corpus
       val mGen = gens(spark, root, "cents").max
-      val cents = readCents(spark, root, mGen)
       val baseline = readBaseline(spark, root, mGen)
-      val dirty = ops.refresh(spark, root, cents, upserts, changes,
-        idCol, vecCol)
+      val refreshed = ops.refresh(spark, root, centsLoc(root, mGen),
+        upserts, deltaC.select(col(idCol)), idCol, vecCol)
       // 4. drift decision — DELTA-BOUNDED: the gauges fold the stats
-      //    artifact, whose dirty cells were just rescanned (pruned)
-      //    and whose clean cells carried over; bit-identical to the
-      //    old full-index scan (parity spec) at delta cost. Sealed
-      //    BEFORE the rebuild (replay-safety step 4), then executed
-      //    by the same deterministic path the recovery replays (which
-      //    also materializes the fold as the new full snapshot — the
+      //    artifact, updated by the refresh's per-cell deltas
+      //    ([[waveDriftStats]]); bit-identical to the full-index scan
+      //    (parity spec) at delta cost. Sealed BEFORE the rebuild
+      //    (replay-safety step 4), then executed by the same
+      //    deterministic path the recovery replays (which also
+      //    materializes the fold as the new full snapshot — the
       //    recenter pays the corpus read anyway, so it doubles as a
       //    chain compaction)
-      val gauges = commitDriftStats(spark, root, gen,
-        waveDriftStats(spark, root, ops, cents, idCol, gen, dirty)
-          .toSeq,
-        historyRetention)
+      val stats = graft.engine.Steps.scoped("drift.stats") {
+        waveDriftStats(spark, root, ops, centsLoc(root, mGen), idCol, gen,
+          refreshed)
+      }
+      val gauges = graft.engine.Steps.scoped("drift.commit") {
+        commitDriftStats(spark, root, gen, stats, historyRetention)
+      }
       if (Similarity.driftBreached(gauges, baseline,
           cdFactorX100, skewFactorX100)) {
         sealMarker(spark, root, gen)
@@ -779,15 +829,19 @@ object StreamingVectorIndex {
         val base = gens(spark, root, "snapfull").max
         if (gens(spark, root, "snapdelta").count(_ > base)
             >= compactEvery)
-          compactSnapshot(spark, root, gen, idCol, vecCol,
-            historyRetention)
+          graft.engine.Steps.scoped("wave.compact") {
+            compactSnapshot(spark, root, gen, idCol, vecCol,
+              historyRetention)
+          }
         // index-history retention rides the same dial: keep enough
         // sealed cell generations for pinned readers, reclaim the
         // rest — floored at 2 so the DEFAULT (historyRetention = 0)
         // never deletes the one generation a probe pinned just before
         // this wave may still be reading (the advertised "live probes
         // never race a wave" must hold without raising the dial)
-        ops.vacuumIndex(spark, root, math.max(historyRetention + 1, 2))
+        graft.engine.Steps.scoped("vacuum") {
+          ops.vacuumIndex(spark, root, math.max(historyRetention + 1, 2))
+        }
       }
     } finally deltaC.unpersist()
   }

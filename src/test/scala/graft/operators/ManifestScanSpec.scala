@@ -166,7 +166,7 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("IVF-PQ refresh wave at bench geometry (2,000 x 64-d, 16 cells, " +
       "m=8, k=16; 40 new, 40 modified, 20 deleted): one broadcast in " +
-      "the commit plan, at most 21 jobs") {
+      "the commit plan, at most 8 jobs") {
     import spark.implicits._
     val rnd = new scala.util.Random(21)
     def draw(): Seq[Float] = {
@@ -211,6 +211,6 @@ class ManifestScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(broadcasts.size == 1,
       s"${broadcasts.size} broadcasts in the commit plan:\n" +
         commits.head._2.treeString)
-    assert(jobs <= 21, s"refresh wave ran $jobs jobs")
+    assert(jobs <= 8, s"refresh wave ran $jobs jobs")
   }
 }
