@@ -1151,7 +1151,7 @@ object ProductQuantize {
           .groupBy(col("centroid_id"))
           .agg(count(lit(1)).as("n"), sum(col("cd_fp")).as("cd_fp_sum"))
           .select(col("centroid_id"), col("n"),
-            round(col("cd_fp_sum") / col("n") / 1e7, 4).as("mean_cd"),
+            Similarity.meanCdCol(col("n"), col("cd_fp_sum")).as("mean_cd"),
             col("cd_fp_sum"), lit(modelFp).as("model_fp"))
     }
   }
@@ -1220,7 +1220,7 @@ object ProductQuantize {
       .groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n"), sum(col("cd_fp")).as("cd_fp_sum"))
       .select(col("centroid_id"), col("n"),
-        round(col("cd_fp_sum") / col("n") / 1e7, 4).as("mean_cd"),
+        Similarity.meanCdCol(col("n"), col("cd_fp_sum")).as("mean_cd"),
         col("cd_fp_sum"), lit(modelFp).as("model_fp"))
   }
 

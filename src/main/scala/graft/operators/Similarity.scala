@@ -253,7 +253,12 @@ object Similarity {
     * their codes and cell in the same projection) and snapshot probes.
     * Semantics are `min_by(centroid_id, cd)` over the centroids with
     * ties to the smaller id; a vector with a NULL element gets a NULL
-    * cell, and a zero-norm vector (no direction) is dropped. */
+    * cell, and a zero-norm vector (no direction) is dropped.
+    *
+    * The drop is part of the contract: the IVF builds and rebuilds
+    * inner-join on this result, so a zero-norm vector is not indexed
+    * (no cell can hold it by cosine) instead of failing the build with
+    * a division by zero. */
   def ivfAssignCosine(vectors: DataFrame, cents: DataFrame, idCol: String,
                       vecCol: String): DataFrame =
     withCell(vectors.select(col(idCol), col(vecCol)), centroidRows(cents),
@@ -928,8 +933,9 @@ object Similarity {
     * map-side, so shuffle and driver read stay ≤|cells| rows whatever
     * the delta size; the NULL cell of a fresh vector with a NULL
     * element dirties nothing (dropped on the driver, so the filter
-    * never re-runs the assignment kernel below the union). Dirty cells' survivors
-    * ∪ the fresh rows then commit by MVCC ([[commitCellRefreshMvcc]]).
+    * never re-runs the assignment kernel below the union). Dirty
+    * cells' survivors ∪ the fresh rows then commit by MVCC
+    * ([[commitCellRefreshMvcc]]).
     * `fresh` carries idCol, codes[, codes_scale], centroid_id. */
   private[operators] def refreshCells(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
@@ -938,7 +944,10 @@ object Similarity {
       cdFp: Option[DataFrame => DataFrame]): Refreshed = {
     val idx = readCellsAt(spark, indexPath, latest)
     val base = pinCellBase(spark, indexPath, latest)
-    val touched = idx.join(gone, Seq(idCol))
+    // a semi join: a key repeated in `gone` (a re-delivered delete, an
+    // upsert and a delete of one id) still takes its indexed row once,
+    // as the anti join below removes it once
+    val touched = idx.join(gone, Seq(idCol), "left_semi")
       .select(col("centroid_id"), col("codes"), lit(-1L).as("_sign"))
       .unionByName(fresh.select(col("centroid_id"), col("codes"),
         lit(1L).as("_sign")))
@@ -1196,7 +1205,7 @@ object Similarity {
       .groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n"), sum(col("cd_fp")).as("cd_fp_sum"))
       .select(col("centroid_id"), col("n"),
-        round(col("cd_fp_sum") / col("n") / lit(1e7), 4).as("mean_cd"),
+        meanCdCol(col("n"), col("cd_fp_sum")).as("mean_cd"),
         col("cd_fp_sum"),
         // the model identity these rows are valid under — carried
         // with the artifact so a delta-bounded reuse can verify the
@@ -1214,6 +1223,22 @@ object Similarity {
   private def int8CdFp(vd: Column, cvec: Column): Column =
     floor((lit(1.0) - VectorFns.cosine(vd, cvec)) * lit(1e7) + lit(0.5))
       .cast("long")
+
+  /** A drift-stats row's `mean_cd` from its exact (n, cd_fp_sum) — the
+    * one rule of every stats query (both families, full and pruned). */
+  private[graft] def meanCdCol(n: Column, cdFpSum: Column): Column =
+    round(cdFpSum / n / lit(1e7), 4)
+
+  /** [[meanCdCol]] on the driver (the streaming wave's carried + Δ
+    * rows). It must equal Spark's `round` on a double bit for bit: the
+    * same two double divisions, then HALF_UP at scale 4 on the
+    * double's shortest decimal form, NaN and infinities unchanged. */
+  private[graft] def meanCd(n: Long, cdFpSum: Long): Double = {
+    val d = cdFpSum.toDouble / n.toDouble / 1e7
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
 
   /** THE drift-trigger comparison — ONE definition shared by the two
     * batch loops ([[ivfRefreshOrRecenter]],

@@ -411,20 +411,24 @@ object StreamingVectorIndex {
   /** The wave's post-refresh drift stats, DELTA-BOUNDED: a cell's
     * (n, cd_fp_sum) is a pure function of its codes under FIXED
     * model artifacts, and both are a count and an exact long sum.
+    * The previous artifact's rows come from the memo when this
+    * process wrote them, else from the file (a fresh process); the
+    * memo is only a cache of that file, so both carry alike.
     *
-    *   - Δ path: when the previous artifact's rows are memo-held,
-    *     sealed under the current model and tagged with the index
-    *     generation the refresh pinned as its base, each cell's new
-    *     stats are carried + the refresh's (Δn, Δcd_fp_sum) —
-    *     bit-exact, and no index read at all. A cell whose n reaches
-    *     0 loses its row, as the full scan has none.
-    *   - Rescan path: rows read back from the file (a fresh process)
-    *     with the same seal and tag carry their clean cells verbatim
-    *     and only the dirty cells are rescanned (a pruned read).
+    *   - Δ path: when every carried row is sealed under the current
+    *     model and tagged with the index generation the refresh
+    *     pinned as its base, each cell's new stats are carried + the
+    *     refresh's (Δn, Δcd_fp_sum) — bit-exact, and no index read.
+    *     A cell whose n reaches 0 loses its row, as the full scan has
+    *     none.
+    *   - Pruned rescan: the same seal and tag, but the refresh
+    *     returned no deltas (IVF-PQ past the LUT budget): clean cells
+    *     carry verbatim and only the dirty cells are rescanned.
     *   - Otherwise one full scan: no artifact yet, a legacy artifact
     *     (no seal or no tag), a model change, or a tag below the base
     *     (a replay after a crash between the refresh seal and the
-    *     stats commit, whose refresh saw the crashed attempt's seal).
+    *     stats commit, whose refresh saw the crashed attempt's seal —
+    *     its deltas are against that seal, not the carried rows).
     * All three equal the full scan row for row — the parity specs
     * pin it, emptied cells included. */
   private def waveDriftStats(spark: SparkSession, root: String,
@@ -433,40 +437,32 @@ object StreamingVectorIndex {
                              r: Similarity.Refreshed): Seq[StatRow] = {
     def scan(cells: Option[Seq[Long]]) = collectStats(
       ops.driftStats(spark, root, centsLoc, idCol, cells), lit(r.gen))
-    gens(spark, root, "driftstats").filter(_ < gen).maxOption match {
-      case None => scan(None)
-      case Some(pg) =>
-        // the previous generation's rows usually sit in the memo
-        // (commitDriftStats wrote them last wave in this process)
-        val memoHit = Option(
+    val prior = gens(spark, root, "driftstats").filter(_ < gen).maxOption
+      .flatMap(pg => Option(
           statsCache.get((root, pg, statsMtime(spark, root, pg))))
-        val fpNow = ops.modelFp(spark, root, centsLoc)
-        // EVERY carried row must be sealed under the current model and
-        // describe the refresh's base — Similarity.requireSameModel's
-        // rule: a partially-written or mixed-fp artifact is as invalid
-        // as a wrong head row
-        memoHit.orElse(readStats(spark, root, pg)).filter(prev =>
-            prev.nonEmpty && prev.forall(p =>
-              p.model_fp == fpNow && p.index_gen == r.baseGen)) match {
-          case None => scan(None)
-          case Some(prev) =>
-            val retag = prev.map(_.copy(index_gen = r.gen))
-            r.deltas.filter(_ => memoHit.nonEmpty) match {
-              case Some(d) => withDeltas(retag, d)
-              case None if r.dirty.isEmpty => retag
-              case None =>
-                val dirtySet = r.dirty.toSet
-                retag.filterNot(p => dirtySet.contains(p.centroid_id)) ++
-                  scan(Some(r.dirty))
-            }
+        .orElse(readStats(spark, root, pg)))
+    lazy val fpNow = ops.modelFp(spark, root, centsLoc)
+    // EVERY carried row must be sealed under the current model and
+    // describe the refresh's base — Similarity.requireSameModel's rule:
+    // a partially-written or mixed-fp artifact is as invalid as a wrong
+    // head row
+    prior.filter(prev => prev.nonEmpty && prev.forall(p =>
+        p.model_fp == fpNow && p.index_gen == r.baseGen)) match {
+      case None => scan(None)
+      case Some(prev) =>
+        val retag = prev.map(_.copy(index_gen = r.gen))
+        r.deltas match {
+          case Some(d) => withDeltas(retag, d)
+          case None =>
+            val dirtySet = r.dirty.toSet
+            retag.filterNot(p => dirtySet.contains(p.centroid_id)) ++
+              (if (r.dirty.isEmpty) Nil else scan(Some(r.dirty)))
         }
     }
   }
 
   /** Carried rows + per-cell (Δn, Δcd_fp_sum), in cell order; mean_cd
-    * by the stats query's own arithmetic (Spark's `round(cd_fp_sum /
-    * n / 1e7, 4)`: double divisions, then HALF_UP on the double's
-    * decimal form). */
+    * by the stats queries' own rule ([[Similarity.meanCd]]). */
   private def withDeltas(prev: Seq[StatRow],
                          deltas: Map[Long, (Long, Long)]): Seq[StatRow] = {
     val byCell = prev.map(p => p.centroid_id -> p).toMap
@@ -481,10 +477,7 @@ object StreamingVectorIndex {
             s"StreamingVectorIndex: cell $c stat delta leaves n=$n, " +
               s"cd_fp_sum=$sum")
           if (n == 0) None
-          else Some(StatRow(c, n, java.math.BigDecimal.valueOf(
-              sum.toDouble / n.toDouble / 1e7)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue(),
-            sum, fp, tag))
+          else Some(StatRow(c, n, Similarity.meanCd(n, sum), sum, fp, tag))
       }
     }
   }

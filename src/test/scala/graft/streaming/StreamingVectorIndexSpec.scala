@@ -774,7 +774,8 @@ class StreamingVectorIndexSpec extends SparkSpec {
       historyRetention = 4)
     // wave 2 will DELETE key 0, dirtying exactly key 0's cell — the
     // corruption below targets a DIFFERENT cell, so only the carry
-    // path (never the dirty rescan) could serve the poisoned row
+    // (a clean cell's row, never a delta-updated one) could serve the
+    // poisoned row
     val c0 = Similarity.readQuantizedIndex(spark, s"$root/index")
       .filter(col("vec_id") === 0L)
       .select(col("centroid_id").cast("long")).head().getLong(0)
@@ -787,16 +788,22 @@ class StreamingVectorIndexSpec extends SparkSpec {
         "which even the old head-only check caught")
     // the corruption: ONE row carries poisoned values under a flipped
     // fingerprint; every other row (the head included) keeps the
-    // correct seal. A head-only check carries the poison into the
-    // gauges; the all-rows rule must reset with a full rescan.
+    // correct seal, and every row keeps its index-generation tag (so
+    // only the seal rule, not the legacy-artifact exit, can reject
+    // it). A head-only check carries the poison into the gauges; the
+    // all-rows rule must reset with a full rescan.
+    require(g1.head.schema.fieldNames.toSeq == Seq("centroid_id", "n",
+        "mean_cd", "cd_fp_sum", "model_fp", "index_gen"),
+      s"fixture drifted: ${g1.head.schema.fieldNames.mkString(",")}")
     g1.map { r =>
       if (r.getLong(0) == poisonId)
         (r.getLong(0), r.getLong(1) + 9999L, r.getDouble(2),
-          r.getLong(3) + 1234567L, r.getLong(4) ^ 1L)
+          r.getLong(3) + 1234567L, r.getLong(4) ^ 1L, r.getLong(5))
       else (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3),
-        r.getLong(4))
+        r.getLong(4), r.getLong(5))
     }.toSeq
-      .toDF("centroid_id", "n", "mean_cd", "cd_fp_sum", "model_fp")
+      .toDF("centroid_id", "n", "mean_cd", "cd_fp_sum", "model_fp",
+        "index_gen")
       .coalesce(1).sortWithinPartitions("centroid_id")
       .write.mode("overwrite").parquet(s"$root/driftstats/gen=1")
     StreamingVectorIndex.applyWave(spark, root,

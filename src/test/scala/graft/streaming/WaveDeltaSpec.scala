@@ -169,11 +169,45 @@ class WaveDeltaSpec extends SparkSpec {
       historyRetention = 4))._2
   }
 
+  /** `inner` with each refresh result passed through `onRefresh` and
+    * each stats scan's `cells` argument recorded in `scans`. */
+  private class Intercepted(inner: StreamingVectorIndex.IndexOps,
+      onRefresh: Similarity.Refreshed => Similarity.Refreshed)
+      extends StreamingVectorIndex.IndexOps {
+    val scans = scala.collection.mutable.ArrayBuffer[Option[Seq[Long]]]()
+    def cellsPath(root: String): String = inner.cellsPath(root)
+    def refresh(spark: org.apache.spark.sql.SparkSession, root: String,
+                centsLoc: String, fresh: DataFrame, gone: DataFrame,
+                idCol: String, vecCol: String): Similarity.Refreshed =
+      onRefresh(inner.refresh(spark, root, centsLoc, fresh, gone, idCol,
+        vecCol))
+    def driftStats(spark: org.apache.spark.sql.SparkSession, root: String,
+                   centsLoc: String, idCol: String,
+                   cells: Option[Seq[Long]]): DataFrame = {
+      scans += cells
+      inner.driftStats(spark, root, centsLoc, idCol, cells)
+    }
+    def modelFp(spark: org.apache.spark.sql.SparkSession, root: String,
+                centsLoc: String): Long = inner.modelFp(spark, root, centsLoc)
+    def rebuild(snapshot: DataFrame, cents: DataFrame, idCol: String,
+                vecCol: String, root: String, gen: Int): Unit =
+      inner.rebuild(snapshot, cents, idCol, vecCol, root, gen)
+    def fitCentroids(snapshot: DataFrame, vecCol: String): DataFrame =
+      inner.fitCentroids(snapshot, vecCol)
+    override def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
+                             root: String, keep: Int): Unit =
+      inner.vacuumIndex(spark, root, keep)
+    override def snapshotModel(spark: org.apache.spark.sql.SparkSession,
+                               root: String, gen: Int): Unit =
+      inner.snapshotModel(spark, root, gen)
+  }
+
   for (pq <- Seq(false, true)) {
     val family = if (pq) "IVF-PQ" else "int8"
     test(s"$family: the delta-updated drift stats equal the full scan " +
         "row for row after every wave — mixed, delete-only, " +
-        "cell-emptying, no-op and re-filling waves — and read nothing") {
+        "cell-emptying, no-op, re-filling and repeated-key waves — and " +
+        "read nothing") {
       val root = tmp(s"wave_delta_$family")
       bootstrap(root, pq)
       val members = () => Similarity.readQuantizedIndex(spark,
@@ -194,7 +228,15 @@ class WaveDeltaSpec extends SparkSpec {
         () => (100L until 110L).map(i => (i, vec(i, 0.2), "upsert")) ++
           Seq((20L, vec(20L, -0.2), "upsert")),
         () => Seq((21L, vec(21L, 0.05), "upsert"),
-          (22L, vec(22L), "delete")))
+          (22L, vec(22L), "delete")),
+        // repeated keys in one batch: a re-delivered delete, and an
+        // upsert and a delete of one id — each indexed row goes once
+        () => {
+          val ids = members().map(_._1).sorted
+          Seq((ids(0), vec(ids(0)), "delete"), (ids(0), vec(ids(0)), "delete"),
+            (ids(1), vec(ids(1), 0.15), "upsert"),
+            (ids(1), vec(ids(1)), "delete"))
+        })
       waves.zipWithIndex.foreach { case (rows, w) =>
         val cellsBefore = members().map(_._2).toSet
         val labels = wave(root, pq, w.toLong, rows())
@@ -216,29 +258,8 @@ class WaveDeltaSpec extends SparkSpec {
         "the full scan, then returns to delta updates") {
       val root = tmp(s"wave_replay_$family")
       bootstrap(root, pq)
-      val inner = opsOf(pq)
-      val crashing = new StreamingVectorIndex.IndexOps {
-        def cellsPath(root: String): String = inner.cellsPath(root)
-        def refresh(spark: org.apache.spark.sql.SparkSession,
-                    root: String, centsLoc: String, fresh: DataFrame,
-                    gone: DataFrame, idCol: String, vecCol: String)
-            : Similarity.Refreshed = {
-          inner.refresh(spark, root, centsLoc, fresh, gone, idCol, vecCol)
-          throw new RuntimeException("injected crash after refresh seal")
-        }
-        def driftStats(spark: org.apache.spark.sql.SparkSession,
-                       root: String, centsLoc: String, idCol: String,
-                       cells: Option[Seq[Long]]): DataFrame =
-          inner.driftStats(spark, root, centsLoc, idCol, cells)
-        def modelFp(spark: org.apache.spark.sql.SparkSession,
-                    root: String, centsLoc: String): Long =
-          inner.modelFp(spark, root, centsLoc)
-        def rebuild(snapshot: DataFrame, cents: DataFrame, idCol: String,
-                    vecCol: String, root: String, gen: Int): Unit =
-          inner.rebuild(snapshot, cents, idCol, vecCol, root, gen)
-        def fitCentroids(snapshot: DataFrame, vecCol: String): DataFrame =
-          inner.fitCentroids(snapshot, vecCol)
-      }
+      val crashing = new Intercepted(opsOf(pq), _ =>
+        throw new RuntimeException("injected crash after refresh seal"))
       wave(root, pq, 0L, Seq((60L, vec(60L), "upsert")))
       // moved and deleted keys: a carry of the pre-crash rows, or a
       // delta against the crashed attempt's seal, would miscount them
@@ -258,5 +279,88 @@ class WaveDeltaSpec extends SparkSpec {
       assert(statRows(spark.read.parquet(s"$root/driftstats/gen=3")) ==
         fullScan(root, pq), "stats diverged after the replay")
     }
+
+    test(s"$family: carried rows read back from the file (a fresh " +
+        "process: the memo misses) take the delta path, with no stats " +
+        "scan, and equal the full scan") {
+      val root = tmp(s"wave_file_$family")
+      bootstrap(root, pq)
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val waves = Seq(
+        Seq((60L, vec(60L), "upsert"), (3L, vec(3L, 0.3), "upsert"),
+          (7L, vec(7L), "delete")),
+        Seq((11L, vec(11L), "delete"), (12L, vec(12L), "delete")),
+        Seq((13L, vec(13L, -0.2), "upsert"), (62L, vec(62L), "upsert")))
+      waves.zipWithIndex.foreach { case (rows, w) =>
+        // the carried artifact's mtime moves, so its memo entry misses
+        val carried = new org.apache.hadoop.fs.Path(
+          s"$root/driftstats/gen=$w")
+        fs.setTimes(carried,
+          fs.getFileStatus(carried).getModificationTime + 60000L, -1L)
+        val ops = new Intercepted(opsOf(pq), identity)
+        wave(root, pq, w.toLong, rows, ops)
+        assert(ops.scans.isEmpty,
+          s"wave $w: file-read carried rows took a stats scan " +
+            ops.scans.mkString(","))
+        assert(statRows(spark.read.parquet(
+            s"$root/driftstats/gen=${w + 1}")) == fullScan(root, pq),
+          s"wave $w: stats from file rows + delta diverged from the " +
+            "full scan")
+      }
+    }
+
+    test(s"$family: a refresh without stat deltas (IVF-PQ past the LUT " +
+        "budget) carries the clean cells and rescans only the dirty " +
+        "ones, equal to the full scan") {
+      val root = tmp(s"wave_nodelta_$family")
+      bootstrap(root, pq)
+      val dirties = scala.collection.mutable.ArrayBuffer[Seq[Long]]()
+      val ops = new Intercepted(opsOf(pq), { r =>
+        dirties += r.dirty
+        r.copy(deltas = None)
+      })
+      val waves = Seq(
+        Seq((60L, vec(60L), "upsert"), (3L, vec(3L, 0.3), "upsert"),
+          (7L, vec(7L), "delete")),
+        Seq((11L, vec(11L), "delete")),
+        Seq((999L, vec(999L), "delete")),
+        Seq((13L, vec(13L, -0.2), "upsert"), (62L, vec(62L), "upsert")))
+      waves.zipWithIndex.foreach { case (rows, w) =>
+        wave(root, pq, w.toLong, rows, ops)
+        assert(statRows(spark.read.parquet(
+            s"$root/driftstats/gen=${w + 1}")) == fullScan(root, pq),
+          s"wave $w: the pruned rescan diverged from the full scan")
+      }
+      assert(dirties.length == waves.length && dirties(2).isEmpty,
+        s"refreshes $dirties")
+      assert(ops.scans.toSeq == dirties.filter(_.nonEmpty).map(Some(_)),
+        s"scans ${ops.scans} for dirty cells $dirties")
+    }
+  }
+
+  test("the driver-side mean_cd equals the stats queries' Spark column " +
+      "bit for bit, rounding ties and extreme sums included") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val edges = Seq((1L, 0L), (1L, 5L), (1L, 500L), (1L, 1500L),
+      (2L, 1L), (3L, 10000000L), (7L, 1000500L), (4L, 2000000L),
+      (1L, 20000000L), (1L, -500L), (1L, Long.MaxValue),
+      (3L, Long.MinValue), (Long.MaxValue, 1L), (1L, 4999L), (1L, 5001L))
+    val ties = (0 until 500).map { _ =>
+      val n = 1L + rnd.nextInt(1000)
+      (n, n * (1000L * rnd.nextInt(20000) + 500L))
+    }
+    val randoms = (0 until 2000).map(_ =>
+      (1L + rnd.nextInt(100000), rnd.nextLong() >> rnd.nextInt(63)))
+    val pairs = edges ++ ties ++ randoms
+    val got = pairs.toDF("n", "cd_fp_sum")
+      .select(col("n"), col("cd_fp_sum"),
+        Similarity.meanCdCol(col("n"), col("cd_fp_sum")))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got.length == pairs.length)
+    val diverged = got.filterNot { case (n, s, m) =>
+      java.lang.Double.compare(Similarity.meanCd(n, s), m) == 0 }
+    assert(diverged.isEmpty, diverged.take(5).mkString(", "))
   }
 }
