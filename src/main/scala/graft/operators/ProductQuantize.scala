@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 
+import graft.engine.ArtifactMemo
 import graft.engine.Caching.cached
 import graft.functions.VectorFns
 
@@ -715,64 +716,23 @@ object ProductQuantize {
   private def mOfRows(books: IndexedSeq[BookRow]): Int =
     books.map(_._1).max.toInt + 1
 
-  /** Memo key of a written model artifact directory (codebooks,
-    * centroids): (location, newest entry mtime, total bytes, entry
-    * count), all from one listing — a rewrite that lands within the
-    * filesystem's timestamp granularity still changes the bytes or the
-    * count. */
-  private[operators] type ArtifactKey = (String, Long, Long, Int)
+  /** The rows (m·k by contract) of a written codebooks file
+    * ([[bookRows]]), memoized: a pure function of the file, but one
+    * Spark job per call — per probe, per refresh encode, per wave's
+    * drift stats (r20 WaveJobProbe). */
+  private val bookRowsMemo = new ArtifactMemo[IndexedSeq[BookRow]](64)
 
-  private[operators] def artifactKey(spark: SparkSession,
-                                     loc: String): ArtifactKey = {
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p)
-    (loc, st.map(_.getModificationTime).maxOption.getOrElse(0L),
-      st.map(_.getLen).sum, st.length)
-  }
-
-  /** Model memos for WRITTEN artifact files, keyed by [[artifactKey]]:
-    * the codebook rows (m·k by contract), the books-half fingerprint
-    * and the centroid rows ([[Similarity.centroidRowsAt]]) are pure
-    * functions of the file, but were one Spark job per call — per
-    * probe, per refresh encode, per wave's drift stats (r20
-    * WaveJobProbe). LRU-bounded. */
-  private[operators] def lruMemo[V](cap: Int)
-      : java.util.Map[ArtifactKey, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[ArtifactKey, V](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[ArtifactKey, V]): Boolean =
-          size() > cap
-      })
-
-  private val bookRowsMemo = lruMemo[IndexedSeq[BookRow]](64)
-  private val bookFpMemo = lruMemo[java.lang.Long](4096)
-
-  private[operators] def memoized[V <: AnyRef](
-      memo: java.util.Map[ArtifactKey, V], spark: SparkSession,
-      loc: String)(compute: => V): V = {
-    val key = artifactKey(spark, loc)
-    val hit = memo.get(key)
-    if (hit != null) hit
-    else { val v = compute; memo.put(key, v); v }
-  }
-
-  /** The rows of a written codebooks file ([[bookRows]]), memoized. */
   private[graft] def bookRowsAt(spark: SparkSession,
                                 loc: String): IndexedSeq[BookRow] =
-    memoized(bookRowsMemo, spark, loc)(bookRows(readBooks(spark, loc)))
+    bookRowsMemo.get(spark, loc)(bookRows(readBooks(spark, loc)))
 
   /** The books half of the IVF-PQ model fingerprint
-    * ([[Similarity.modelFingerprint]] over (subspace, code, bvec)),
-    * memoized per written codebooks file. */
+    * ([[Similarity.modelFingerprint]] over (subspace, code, cvec)) of a
+    * written codebooks file, folded from its [[bookRowsAt]] memo. */
   private[graft] def booksFingerprintAt(spark: SparkSession,
                                         loc: String): Long =
-    memoized(bookFpMemo, spark, loc)(java.lang.Long.valueOf(
-      Similarity.modelFingerprint(
-        readBooks(spark, loc).select(col("subspace"), col("code"),
-          col("cvec").as("bvec")),
-        Seq("subspace", "code"), "bvec"))).longValue()
+    bookRowsAt(spark, loc).map { case (s, c, v) =>
+      Similarity.rowFingerprint(Seq(s, c), v) }.foldLeft(0L)(_ ^ _)
 
   /** ADC probe over already-resolved codes and books location — the
     * second half of [[ivfPqProbe]], exposed so pin-once callers reuse

@@ -7,7 +7,10 @@ import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
+  MapType, StructField, StructType}
+
+import graft.engine.ArtifactMemo
 
 /** GENERATION MANIFESTS for the segmented lexical index — the
   * Delta-log / Lucene-SegmentInfos commit protocol that turns the
@@ -53,63 +56,36 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * and small: one line per live segment per layout. */
 object SegmentManifest {
 
-  /** Schema-inference memo for [[read]], keyed by (absolute member
-    * location, directory mtime). The protocol already makes member
-    * dirs write-once, but the mtime key makes the invalidation
-    * MACHINE-CHECKED instead of convention-only (r19 verdict item 3):
-    * any rewrite that lands files in a memoized directory — a replayed
-    * append, an unsanctioned in-place edit — bumps the dir mtime and
-    * misses, so a stale schema can never serve. Caches METADATA only —
-    * never rows — bounded by PER-ENTRY LRU eviction (the old
-    * clear-on-growth guard wiped every entry at once). */
-  private val schemaMemo: java.util.Map[(String, Long),
-      org.apache.spark.sql.types.StructType] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long),
-          org.apache.spark.sql.types.StructType](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long),
-              org.apache.spark.sql.types.StructType]): Boolean =
-          size() > 8192
-      })
+  /** Schema-inference memo for [[read]], one entry per member location
+    * under the [[ArtifactMemo]] key. Member dirs are write-once by
+    * protocol; the key makes that MACHINE-CHECKED (r19 verdict item 3):
+    * a rewrite in place (a replayed append, an unsanctioned edit)
+    * misses, so a stale schema never serves. */
+  private val memberSchemas = new ArtifactMemo[StructType](8192)
 
-  /** Writer-side warm-up of the schema memo: a maintenance writer
-    * that just staged member directories under `locs` declares their
-    * shared schema, so the NEXT read of the layout skips footer
-    * inference even when EVERY member is fresh — the all-dirty wave /
-    * tiered-fold shape, where no carried-over sibling survives to
-    * serve a memo hit and each wave re-inferred its predecessor's rev
-    * dirs forever (r20 WaveJobProbe: one inference job per wave after
-    * the sibling-hit fix alone). The declared schema is widened
-    * `asNullable`, which can only ADD null handling relative to footer
-    * inference — never claim non-null on nullable data — so a read
-    * under it is value-identical. Keyed (loc, mtime) like every other
-    * entry; a later rewrite invalidates normally. */
-  private def widenNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = dt match {
-    case s: org.apache.spark.sql.types.StructType =>
-      org.apache.spark.sql.types.StructType(s.fields.map(f =>
-        f.copy(dataType = widenNullable(f.dataType), nullable = true)))
-    case a: org.apache.spark.sql.types.ArrayType =>
-      a.copy(elementType = widenNullable(a.elementType),
-        containsNull = true)
-    case m: org.apache.spark.sql.types.MapType =>
-      m.copy(keyType = widenNullable(m.keyType),
-        valueType = widenNullable(m.valueType),
-        valueContainsNull = true)
+  private def widenNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = widenNullable(f.dataType), nullable = true)))
+    case a: ArrayType =>
+      a.copy(elementType = widenNullable(a.elementType), containsNull = true)
+    case m: MapType => m.copy(keyType = widenNullable(m.keyType),
+      valueType = widenNullable(m.valueType), valueContainsNull = true)
     case other => other
   }
 
-  private[operators] def declareSchema(
-      spark: SparkSession, path: String, locs: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val sch = widenNullable(schema)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val fs = fsOf(spark, path)
+  /** Writer-side warm-up of the schema memo: a maintenance writer that
+    * just staged member directories under `locs` declares their shared
+    * schema, so the NEXT read of the layout skips footer inference even
+    * when EVERY member is fresh (the all-dirty wave / tiered-fold
+    * shape, where no carried-over sibling serves a hit). The schema is
+    * widened to nullable, which only ADDS null handling relative to
+    * footer inference, so a read under it is value-identical. */
+  private[graft] def declareSchema(spark: SparkSession, path: String,
+                                   locs: Seq[String],
+                                   schema: StructType): Unit = {
+    val sch = widenNullable(schema).asInstanceOf[StructType]
     locs.take(64).foreach { loc =>
-      val p = new Path(s"$path/$loc")
-      try schemaMemo.put(
-        (s"$path/$loc", fs.getFileStatus(p).getModificationTime), sch)
+      try memberSchemas.put(ArtifactMemo.keyOf(spark, s"$path/$loc"), sch)
       catch { case _: java.io.FileNotFoundException => () }
     }
   }
@@ -732,13 +708,11 @@ object SegmentManifest {
     * bootstrap folded in) then reads as zero rows instead of failing
     * schema inference. Without it, the schema is inferred ONCE from
     * the first member holding data — a layout's members share one
-    * schema by construction. The inference is MEMOIZED by (member
-    * location, dir mtime) ([[schemaMemo]]): member directories are
-    * write-once under the manifest protocol, and the mtime key makes a
-    * rewrite in place miss instead of serving a stale schema. */
+    * schema by construction — and MEMOIZED per member
+    * ([[memberSchemas]]), keyed from that member's listing above. */
   def read(spark: SparkSession, path: String, m: Manifest,
            layout: String, keyCol: String = "seg",
-           schema: Option[org.apache.spark.sql.types.StructType] = None)
+           schema: Option[StructType] = None)
       : Option[DataFrame] = {
     val es = m.entries(layout)
     if (es.isEmpty) None
@@ -754,50 +728,31 @@ object SegmentManifest {
         b.result()
       }
       val sch = schema.getOrElse {
-        // infer from the first member whose directory actually holds
-        // data files: an empty member dir (crash debris a legacy
-        // bootstrap folded in, the exact case the schema parameter
-        // was added for) would otherwise fail inference for the
-        // WHOLE layout even though its own read is well-defined
-        // (zero rows). All-empty layouts still fail loudly on the
-        // head entry — there is no schema to read them under.
-        def mtimeOf(p: Path): Option[Long] =
-          try Some(fs.getFileStatus(p).getModificationTime)
-          catch { case _: java.io.FileNotFoundException => None }
-        // a layout's members share ONE schema by construction (the
-        // basis of the infer-once rule below), so a memo hit on ANY
-        // member serves the whole read. This is what keeps the
-        // maintenance loops inference-free: every wave's fresh `_rev`
+        // a layout's members share ONE schema, so a memo hit on ANY
+        // member serves the whole read: every wave's fresh `_rev`
         // member misses by location, but its carried-over siblings
-        // hit (r19's location-only memo re-inferred once per wave —
-        // WaveJobProbe job at SegmentManifest.read in every wave).
-        // Probe bounded at 8 members so an all-fresh composition (a
-        // recenter's full rewrite) pays bounded driver-side stats, not
-        // |layout| of them, before falling through to one inference.
-        // mtimes captured BEFORE any footer read: a rewrite landing
-        // between the two would otherwise memoize the old schema
-        // under the new mtime.
-        val probes = es.take(8).flatMap { e =>
-          val key = s"$path/${e.loc}"
-          mtimeOf(new Path(key)).map(mt => (key, mt))
+        // hit. Probe bounded at 8 members. Keys come from the listing,
+        // taken BEFORE any footer read: a rewrite landing between the
+        // two would otherwise memoize the old schema under the new key.
+        val probes = es.take(8).zip(listed).map { case (e, ls) =>
+          ArtifactMemo.keyOf(s"$path/${e.loc}", ls.toSeq)
         }
-        val hit = probes.iterator
-          .flatMap { case (k, mt) => Option(schemaMemo.get((k, mt))) }
-          .nextOption()
+        val hit = probes.iterator.flatMap(memberSchemas.peek).nextOption()
         val sch0 = hit.getOrElse {
+          // infer from the first member holding data files: an empty
+          // member dir (crash debris a legacy bootstrap folded in)
+          // reads as zero rows and must not fail the WHOLE layout.
+          // All-empty layouts fail loudly on the head entry.
           val withData = es.zip(listed)
             .find { case (_, ls) => holdsData(fs, ls) }
             .map(_._1).getOrElse(es.head)
           spark.read.parquet(s"$path/${withData.loc}").schema
         }
-        // propagate to the probed sibling members: the read below
-        // applies sch0 to EVERY member anyway (explicit schema), so
-        // memoizing it per sibling commits to nothing this read does
-        // not already commit to — and it is what keeps an all-dirty
-        // maintenance loop hitting wave over wave (each wave's fresh
-        // rev members are the next wave's carried locations; without
-        // propagation the chain re-infers forever)
-        probes.foreach { case (k, mt) => schemaMemo.put((k, mt), sch0) }
+        // propagate to the probed siblings: the read below applies
+        // sch0 to EVERY member anyway, and each wave's fresh members
+        // are the next wave's carried ones, so an all-dirty loop keeps
+        // hitting instead of re-inferring forever
+        probes.foreach(memberSchemas.put(_, sch0))
         sch0
       }
       if (listed.exists(_.exists(isSubdir)))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.ArtifactMemo
 import graft.functions.VectorFns
 
 /** X2 — similarity search over an embedding column (`array<float>`).
@@ -1119,8 +1120,8 @@ object Similarity {
       .foldLeft(0L)(_ ^ _)
 
   /** One model row's term of [[modelFingerprint]]. */
-  private def rowFingerprint(keys: Seq[Long],
-                             v: scala.collection.Seq[Double]): Long = {
+  private[graft] def rowFingerprint(keys: Seq[Long],
+                                    v: scala.collection.Seq[Double]): Long = {
     var h = 0x9E3779B97F4A7C15L
     for (k <- keys)
       h = java.lang.Long.rotateLeft(h ^ k * 0xC2B2AE3D27D4EB4FL, 31)
@@ -1140,19 +1141,17 @@ object Similarity {
       .foldLeft(0L)(_ ^ _)
 
   /** The rows of a WRITTEN centroid store directory, memoized under
-    * [[ProductQuantize.artifactKey]] (location, newest entry mtime,
-    * total bytes, entry count — one listing, so a rewrite in the same
-    * timestamp tick still misses on bytes or count). The rows are a
-    * pure function of the gen-keyed file, and every streaming wave
-    * needs them three times (the fresh rows' cell projection, the
-    * drift kernel's cell vectors, the model fingerprint) — each a
-    * collect job when read through Spark. k rows per entry,
-    * LRU-bounded. */
-  private val centRowsMemo = ProductQuantize.lruMemo[CentRows](64)
+    * the [[ArtifactMemo]] key rule, so a rewrite of the store misses.
+    * The rows are a pure function of the gen-keyed file, and every
+    * streaming wave needs them three times (the fresh rows' cell
+    * projection, the drift kernel's cell vectors, the model
+    * fingerprint) — each a collect job when read through Spark. k rows
+    * per entry. */
+  private val centRowsMemo = new ArtifactMemo[CentRows](64)
 
   private[graft] def centroidRowsAt(
       spark: org.apache.spark.sql.SparkSession, dir: String): CentRows =
-    ProductQuantize.memoized(centRowsMemo, spark, dir)(centroidRows(
+    centRowsMemo.get(spark, dir)(centroidRows(
       spark.read.schema("centroid_id BIGINT, cvec ARRAY<DOUBLE>")
         .parquet(dir)))
 

@@ -925,16 +925,15 @@ object TextAnalysis {
     // The two small writes are independent of each other — overlap
     // them (guide §2.6: actions are only sequential because the
     // driver calls them sequentially); both must land before the seal
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val dictW = Future {
+    val dictW = graft.engine.Steps.future("bm25.append termdict") {
       posted.select(col("term")).distinct()
         .sort(col("term"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$path/${locs("termdict")}")
     }
-    val statsW = Future {
+    val statsW = graft.engine.Steps.future("bm25.append segstats") {
       posted.select(col(idCol), col("dl")).distinct()
         .agg(count(lit(1)).as("n_docs"),
           sum(col("dl")).cast("long").as("sum_dl"))

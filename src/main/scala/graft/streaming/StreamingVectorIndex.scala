@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.engine.ArtifactMemo
 import graft.operators.{ProductQuantize, SegmentManifest, Similarity}
 
 /** X2 × W — CONTINUOUS vector-index maintenance: the streaming
@@ -307,22 +308,19 @@ object StreamingVectorIndex {
   }
 
   // baseline/gen=N is written once per recenter (replay rewrites are
-  // bit-identical), so the two-long read memoizes per (root, gen,
-  // file mtime) — one less per-wave Spark job; the mtime key keeps a
-  // rewritten store (tests, replays) from serving stale values. One
-  // tiny entry per live root × model generation.
-  private val baselineCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Long),
-      (Long, Long)]()
+  // bit-identical), so the two-long read is memoized under the
+  // ArtifactMemo key — one less per-wave Spark job; a rewritten store
+  // (tests, replays) misses and is read again. One tiny entry per live
+  // root × model generation.
+  private val baselines = new ArtifactMemo[(Long, Long)](64)
 
-  private def readBaseline(spark: SparkSession, root: String,
-                           gen: Int): (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/baseline/gen=$gen")
-    val mtime = fsOf(spark, root).getFileStatus(p).getModificationTime
-    baselineCache.computeIfAbsent((root, gen, mtime), _ => {
-      val r = spark.read.parquet(p.toString).head()
+  private[graft] def readBaseline(spark: SparkSession, root: String,
+                                  gen: Int): (Long, Long) = {
+    val loc = s"$root/baseline/gen=$gen"
+    baselines.get(spark, loc) {
+      val r = spark.read.parquet(loc).head()
       (r.getAs[Long]("skew_x100"), r.getAs[Long]("mean_cd_fp"))
-    })
+    }
   }
 
   /** One driftstats-artifact row, held driver-side through the wave's
@@ -341,24 +339,14 @@ object StreamingVectorIndex {
 
   /** The carried-stats memo: [[commitDriftStats]] writes generation
     * g's artifact from driver-side rows, and the very next wave's
-    * [[waveDriftStats]] updates those same rows. Keyed by (root, gen,
-    * file mtime) — the baselineCache rule: the FILE stays the source
-    * of truth, a rewritten artifact (replay, out-of-band tooling)
-    * misses on mtime and re-reads. ≤|cells| rows per entry,
-    * LRU-bounded. */
-  private val statsCache: java.util.Map[(String, Int, Long), Seq[StatRow]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Int, Long), Seq[StatRow]](
-          16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Int, Long), Seq[StatRow]])
-            : Boolean = size() > 64
-      })
+    * [[waveDriftStats]] updates those same rows. Under the
+    * [[ArtifactMemo]] key: the FILE stays the source of truth, a
+    * rewritten artifact (replay, out-of-band tooling) misses and is
+    * read back. ≤|cells| rows per entry. */
+  private[graft] val carriedStats = new ArtifactMemo[Seq[StatRow]](64)
 
-  private def statsMtime(spark: SparkSession, root: String,
-                         gen: Int): Long =
-    fsOf(spark, root).getFileStatus(new org.apache.hadoop.fs.Path(
-      s"$root/driftstats/gen=$gen")).getModificationTime
+  private def statsLoc(root: String, gen: Int): String =
+    s"$root/driftstats/gen=$gen"
 
   /** A stats frame's rows, tagged with `indexGen` (a literal for a
     * fresh scan, the stored column for a written artifact). */
@@ -372,13 +360,18 @@ object StreamingVectorIndex {
         .map(r => StatRow(r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3), r.getLong(4), r.getLong(5))))
 
-  /** A written artifact's rows; None when it lacks the model seal or
-    * the index-generation tag (a legacy artifact — reset, not carried). */
-  private def readStats(spark: SparkSession, root: String,
-                        gen: Int): Option[Seq[StatRow]] = {
-    val df = spark.read.parquet(s"$root/driftstats/gen=$gen")
-    if (!Seq("model_fp", "index_gen").forall(df.columns.contains)) None
-    else Some(collectStats(df, col("index_gen")))
+  /** Generation `gen`'s artifact rows: the memo's when this process
+    * wrote that very file, else read from it; None when it lacks the
+    * model seal or the index-generation tag (a legacy artifact — reset,
+    * not carried). */
+  private[graft] def priorStats(spark: SparkSession, root: String,
+                                gen: Int): Option[Seq[StatRow]] = {
+    val loc = statsLoc(root, gen)
+    carriedStats.peek(ArtifactMemo.keyOf(spark, loc)).orElse {
+      val df = spark.read.parquet(loc)
+      if (!Seq("model_fp", "index_gen").forall(df.columns.contains)) None
+      else Some(collectStats(df, col("index_gen")))
+    }
   }
 
   /** Write generation `gen`'s per-cell drift stats (≤|cells| rows,
@@ -389,15 +382,16 @@ object StreamingVectorIndex {
     * cannot diverge. Prunes stats generations below the keep floor
     * (only the newest is ever read; the floor keeps the previous one
     * for the replay of the current wave). */
-  private def commitDriftStats(spark: SparkSession, root: String,
-                               gen: Int, rows: Seq[StatRow],
-                               keepBelow: Int): (Long, Long) = {
+  private[graft] def commitDriftStats(spark: SparkSession,
+                                      root: String, gen: Int,
+                                      rows: Seq[StatRow],
+                                      keepBelow: Int): (Long, Long) = {
     import spark.implicits._
     rows.toDF().coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/driftstats/gen=$gen")
-    // memoize the rows just written (mtime read AFTER the write so
-    // the key names this attempt's file, not a prior replay's)
-    statsCache.put((root, gen, statsMtime(spark, root, gen)), rows)
+      .parquet(statsLoc(root, gen))
+    // memoize the rows just written (key listed AFTER the write so it
+    // names this attempt's file, not a prior replay's)
+    carriedStats.put(ArtifactMemo.keyOf(spark, statsLoc(root, gen)), rows)
     val fs = fsOf(spark, root)
     for (g <- gens(spark, root, "driftstats")
         if g < gen - math.max(keepBelow, 1)) {
@@ -438,9 +432,7 @@ object StreamingVectorIndex {
     def scan(cells: Option[Seq[Long]]) = collectStats(
       ops.driftStats(spark, root, centsLoc, idCol, cells), lit(r.gen))
     val prior = gens(spark, root, "driftstats").filter(_ < gen).maxOption
-      .flatMap(pg => Option(
-          statsCache.get((root, pg, statsMtime(spark, root, pg))))
-        .orElse(readStats(spark, root, pg)))
+      .flatMap(priorStats(spark, root, _))
     lazy val fpNow = ops.modelFp(spark, root, centsLoc)
     // EVERY carried row must be sealed under the current model and
     // describe the refresh's base — Similarity.requireSameModel's rule:

@@ -285,21 +285,19 @@ class WaveDeltaSpec extends SparkSpec {
         "scan, and equal the full scan") {
       val root = tmp(s"wave_file_$family")
       bootstrap(root, pq)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val waves = Seq(
         Seq((60L, vec(60L), "upsert"), (3L, vec(3L, 0.3), "upsert"),
           (7L, vec(7L), "delete")),
         Seq((11L, vec(11L), "delete"), (12L, vec(12L), "delete")),
         Seq((13L, vec(13L, -0.2), "upsert"), (62L, vec(62L), "upsert")))
       waves.zipWithIndex.foreach { case (rows, w) =>
-        // the carried artifact's mtime moves, so its memo entry misses
-        val carried = new org.apache.hadoop.fs.Path(
-          s"$root/driftstats/gen=$w")
-        fs.setTimes(carried,
-          fs.getFileStatus(carried).getModificationTime + 60000L, -1L)
+        // drop the memo, so the carried rows must come from the file
+        StreamingVectorIndex.carriedStats.clear()
         val ops = new Intercepted(opsOf(pq), identity)
-        wave(root, pq, w.toLong, rows, ops)
+        val labels = wave(root, pq, w.toLong, rows, ops)
+        // a drift.stats job that is no scan: the file read
+        assert(labels.contains("drift.stats"),
+          s"wave $w: the carried rows did not come from the file")
         assert(ops.scans.isEmpty,
           s"wave $w: file-read carried rows took a stats scan " +
             ops.scans.mkString(","))
