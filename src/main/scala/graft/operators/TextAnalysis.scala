@@ -772,17 +772,41 @@ object TextAnalysis {
     * instead of a rebuild-only side layout. tf ≡ size(positions) by
     * construction; the BM25 read paths project positions away, so
     * parquet never materializes the column for pure scoring probes.
-    * Same null-text coalesce contract as [[tfFrame]]. */
+    * Same null-text coalesce contract as [[tfFrame]].
+    *
+    * Returned in the written layout ([[byTerm]], sorted by term). The
+    * term partitioning runs BEFORE the aggregate — a term range also
+    * clusters every (doc, dl, term) group, so the aggregate needs no
+    * shuffle of its own and the frame has one consumer (no cache). */
   private def tfPosFrame(docs: DataFrame, idCol: String,
                          textCol: String): DataFrame = {
     val toks = docs.select(col(idCol),
       tokens(coalesce(col(textCol), lit(""))).as("toks"))
-    val tc = toks.select(col(idCol), size(col("toks")).as("dl"),
-      posexplode(col("toks")).as(Seq("pos", "term")))
-    cached(tc.groupBy(col(idCol), col("dl"), col("term"))
+    byTerm(toks.select(col(idCol), size(col("toks")).as("dl"),
+        posexplode(col("toks")).as(Seq("pos", "term"))), docs)
+      .groupBy(col(idCol), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions")))
+        sort_array(collect_list(col("pos"))).as("positions"))
+      .sortWithinPartitions(col("term"), col(idCol))
   }
+
+  /** `df` partitioned for the postings layout: by term range, so every
+    * written file carries a tight term min/max — or, for an input that
+    * [[fitsOnePartition]], ONE partition with no exchange: the same
+    * single term-sorted file AQE would have coalesced the range
+    * shuffle into, without the range sampling and shuffle jobs. */
+  private def byTerm(df: DataFrame, src: DataFrame): DataFrame =
+    if (fitsOnePartition(src)) df.coalesce(1)
+    else df.repartitionByRange(col("term"))
+
+  /** Whether the optimizer sizes `src` within AQE's minimum partition
+    * size — an input whose shuffle AQE would coalesce into a single
+    * partition anyway, so one task loses no parallelism. */
+  private def fitsOnePartition(src: DataFrame): Boolean =
+    src.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      src.sparkSession.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf
+          .COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 
   /** THE one fixed-point BM25 term-contribution expression — over
     * columns (tf, df, dl, n_docs, avgdl) — shared by every scoring
@@ -880,6 +904,80 @@ object TextAnalysis {
     * away and parquet never reads its pages. */
   def bm25AppendSegment(docs: DataFrame, idCol: String, textCol: String,
                         path: String, segment: Int): Unit = {
+    appendOn(docs, idCol, textCol, path, segment,
+      pinBase(docs.sparkSession, path))
+    ()
+  }
+
+  /** The segstats member schema: one (n_docs, sum_dl) row of exact
+    * integer partials per segment. */
+  private val SegStatsSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("n_docs",
+      org.apache.spark.sql.types.LongType, nullable = false),
+    org.apache.spark.sql.types.StructField("sum_dl",
+      org.apache.spark.sql.types.LongType)))
+
+  /** Write-side memo of segstats members' (n_docs, sum_dl) rows — the
+    * tiered merge's fold decision. Members are write-once, so a wave
+    * fills it with the partial it just wrote and decides with no job;
+    * the [[graft.engine.ArtifactMemo]] key still makes a rewrite in
+    * place (a replayed append) miss and re-read the file. */
+  private val segStats =
+    new graft.engine.ArtifactMemo[Seq[(Long, Long)]](4096)
+
+  /** The (n_docs, sum_dl) rows of the segstats member at `loc`. */
+  private[graft] def segStatsAt(spark: org.apache.spark.sql.SparkSession,
+                                loc: String): Seq[(Long, Long)] =
+    segStats.get(spark, loc) {
+      spark.read.schema(SegStatsSchema).parquet(loc).collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
+        .toSeq
+    }
+
+  /** Write a one-row segstats member at `loc` from the driver and memo
+    * it for the next fold decision. */
+  private def writeSegStats(spark: org.apache.spark.sql.SparkSession,
+                            path: String, loc: String,
+                            nDocs: Long, sumDl: Option[Long]): Unit = {
+    spark.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row(nDocs, sumDl.map(Long.box).orNull)),
+        SegStatsSchema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/$loc")
+    SegmentManifest.declareSchema(spark, path, Seq(loc), SegStatsSchema)
+    segStats.put(graft.engine.ArtifactMemo.keyOf(spark, s"$path/$loc"),
+      Seq((nDocs, sumDl.getOrElse(0L))))
+  }
+
+  /** [[bm25AppendSegment]] on the pinned manifest `base`: the segment
+    * seals as `base.gen + 1`, which is returned. */
+  private def appendOn(docs: DataFrame, idCol: String, textCol: String,
+                       path: String, segment: Int,
+                       base: SegmentManifest.Manifest)
+      : SegmentManifest.Manifest =
+    sealSegment(docs.sparkSession, path, segment, base,
+      writeSegment(docs, idCol, textCol, path, segment, base.gen + 1))
+
+  /** Seal written segment members (layout → location) as the next
+    * generation on `base`, replacing any same-segment entry (a
+    * replayed segment supersedes its earlier attempt; the old
+    * attempt's directory stays pinned-readable). */
+  private def sealSegment(spark: org.apache.spark.sql.SparkSession,
+                          path: String, segment: Int,
+                          base: SegmentManifest.Manifest,
+                          locs: Map[String, String])
+      : SegmentManifest.Manifest =
+    sealNext(spark, path, base) { m =>
+      locs.foldLeft(m) { case (acc, (l, lc)) =>
+        acc.replace(l, Set.empty, Seq(SegmentManifest.Entry(segment, lc)))
+      }
+    }
+
+  /** Write one segment's postings, termdict and segstats members —
+    * unreferenced until [[sealSegment]] — and return their locations;
+    * a rewrite goes under a rev dir labelled generation `gen`. */
+  private def writeSegment(docs: DataFrame, idCol: String,
+                           textCol: String, path: String, segment: Int,
+                           gen: Int): Map[String, String] = {
     val spark = docs.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -888,9 +986,11 @@ object TextAnalysis {
     // overwrite a directory an older sealed generation still
     // references — route the rewrite to a fresh rev dir instead; the
     // seal REPLACES the entry, so the latest generation reads the new
-    // rows and every pinned/as-of generation keeps its old ones
-    lazy val rev = SegmentManifest.revDir(
-      SegmentManifest.latestGen(spark, path).getOrElse(0) + 1)
+    // rows and every pinned/as-of generation keeps its old ones. The
+    // probe stays on the filesystem: after a full merge restarts the
+    // segment clock, an older unvacuumed generation the pinned
+    // manifest does not list can still reference the live directory
+    val rev = SegmentManifest.revDir(gen)
     def loc(l: String): String = {
       val live = s"$l/seg=$segment"
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$live")))
@@ -900,16 +1000,11 @@ object TextAnalysis {
     val locs = Seq("postings", "termdict", "segstats")
       .map(l => l -> loc(l)).toMap
     val tf = tfPosFrame(docs, idCol, textCol)
-    tf.repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term"), col(idCol))
-      .write.mode("overwrite").parquet(s"$path/${locs("postings")}")
+    tf.write.mode("overwrite").parquet(s"$path/${locs("postings")}")
     // the two derived artifacts read the JUST-WRITTEN postings back
-    // (explicit schema — no inference job) instead of re-deriving tf
-    // from source: both are pure projections of tf, and the postings
-    // file IS tf, so re-tokenizing the batch two more times bought
-    // nothing — at batch scale the re-read is two column-pruned
-    // delta-sized scans (term only; id+dl only — parquet never touches
-    // the positional pages) vs two full tokenize+explode passes
+    // (explicit schema — no inference job): each is one single-stage
+    // pass over a column-disjoint projection (term; id+dl — parquet
+    // never touches the positional pages)
     val posted = spark.read.schema(tf.schema)
       .parquet(s"$path/${locs("postings")}")
     // per-segment TERM DICTIONARY (Lucene's terms file): the
@@ -928,20 +1023,23 @@ object TextAnalysis {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     val dictW = graft.engine.Steps.future("bm25.append termdict") {
-      posted.select(col("term")).distinct()
-        .sort(col("term"))
-        .coalesce(1).write.mode("overwrite")
+      posted.select(col("term")).coalesce(1).distinct()
+        .sortWithinPartitions(col("term"))
+        .write.mode("overwrite")
         .parquet(s"$path/${locs("termdict")}")
     }
+    // the segment's exact integer partials, collected (one row) and
+    // written from the driver, so the fold decision has them without
+    // reading the file back
     val statsW = graft.engine.Steps.future("bm25.append segstats") {
-      posted.select(col(idCol), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("dl")).cast("long").as("sum_dl"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/${locs("segstats")}")
+      val st = posted.select(col(idCol), col("dl")).coalesce(1).distinct()
+        .agg(count(lit(1)), sum(col("dl")).cast("long")).head()
+      writeSegStats(spark, path, locs("segstats"), st.getLong(0),
+        if (st.isNullAt(1)) None else Some(st.getLong(1)))
     }
-    Await.result(dictW, Duration.Inf)
-    Await.result(statsW, Duration.Inf)
+    // both land (or fail) before the append returns or throws
+    Seq(dictW, statsW).foreach(Await.ready(_, Duration.Inf))
+    Seq(dictW, statsW).foreach(Await.result(_, Duration.Inf))
     // declare the written schemas so the next maintenance read skips
     // footer inference even when every member of a layout is fresh
     SegmentManifest.declareSchema(spark, path,
@@ -949,28 +1047,24 @@ object TextAnalysis {
     SegmentManifest.declareSchema(spark, path, Seq(locs("termdict")),
       org.apache.spark.sql.types.StructType(
         tf.schema.filter(_.name == "term")))
-    SegmentManifest.declareSchema(spark, path, Seq(locs("segstats")),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("n_docs",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_dl",
-          org.apache.spark.sql.types.LongType))))
-    // seal the append as the next generation — replacing any
-    // same-segment entry (a replayed segment supersedes its earlier
-    // attempt; the old attempt's directory stays pinned-readable)
-    sealNext(spark, path) { m =>
-      locs.foldLeft(m) { case (acc, (l, lc)) =>
-        acc.replace(l, Set.empty,
-          Seq(SegmentManifest.Entry(segment, lc)))
-      }
-    }
-    ()
+    locs
   }
 
   /** Tombstone keys (with their OLD document length, so the corpus
     * stats can be corrected without re-reading the old segments). */
   def bm25Tombstone(keys: DataFrame, idCol: String, dlCol: String,
                     path: String, segment: Int): Unit = {
+    tombstoneOn(keys, idCol, dlCol, path, segment,
+      pinBase(keys.sparkSession, path))
+    ()
+  }
+
+  /** [[bm25Tombstone]] on the pinned manifest `base`: returns the
+    * sealed next generation and the tombstone member's location. */
+  private def tombstoneOn(keys: DataFrame, idCol: String, dlCol: String,
+                          path: String, segment: Int,
+                          base: SegmentManifest.Manifest)
+      : (SegmentManifest.Manifest, String) = {
     val spark = keys.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -981,8 +1075,7 @@ object TextAnalysis {
     val live = s"tombstones/seg=$segment"
     val loc =
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$live")))
-        s"${SegmentManifest.revDir(
-          SegmentManifest.latestGen(spark, path).getOrElse(0) + 1)}/$live"
+        s"${SegmentManifest.revDir(base.gen + 1)}/$live"
       else live
     val tombRows = keys.select(col(idCol).cast("long").as(idCol),
       // null dl fails AT WRITE: the stats correction (probe and
@@ -997,9 +1090,8 @@ object TextAnalysis {
       .parquet(s"$path/$loc")
     SegmentManifest.declareSchema(spark, path, Seq(loc),
       tombRows.schema)
-    sealNext(spark, path)(_.replace("tombstones", Set.empty,
-      Seq(SegmentManifest.Entry(segment, loc))))
-    ()
+    (sealNext(spark, path, base)(_.replace("tombstones", Set.empty,
+      Seq(SegmentManifest.Entry(segment, loc)))), loc)
   }
 
   /** The segmented layout's tombstone frame (idCol, dl, seg). A fresh
@@ -1064,8 +1156,12 @@ object TextAnalysis {
                          asOfGeneration: Option[Int] = None): DataFrame = {
     val qterms = queries.select(col("qid"),
       explode(array_distinct(tokens(col("qtext")))).as("term"))
-    val terms = qterms.select(col("term")).distinct()
-      .collect().map(_.getString(0))
+    // the panel's distinct terms, flattened on the driver: over a local
+    // panel the projection folds into the local relation and the
+    // collect runs no job
+    val terms = queries.select(array_distinct(tokens(col("qtext"))))
+      .collect().flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
+      .distinct
     val (live, stats) = liveScoring(spark,
       pinSeg(spark, path, asOfGeneration), idCol, terms, asOfSegment)
     val dfq = live.groupBy(col("term"))
@@ -1821,21 +1917,34 @@ object TextAnalysis {
                               path: String, idCol: String,
                               maxSegments: Int,
                               protectNewest: Int = 0): (Long, Long) = {
+    val base = pinBase(spark, path)
+    mergeTieredOn(spark, path, idCol, maxSegments, protectNewest, base,
+      readTombstones(spark, SegSnapshot(path, base), idCol))
+  }
+
+  /** [[bm25MergeSegmentsTiered]] on the pinned manifest `base`, whose
+    * tombstone frame is `tombs` (read only when a fold runs). The fold
+    * decision reads the segstats partials from the [[segStats]] memo,
+    * so a wave whose append just wrote its own partial decides with no
+    * job. */
+  private def mergeTieredOn(spark: org.apache.spark.sql.SparkSession,
+                            path: String, idCol: String,
+                            maxSegments: Int, protectNewest: Int,
+                            base: SegmentManifest.Manifest,
+                            tombs: => DataFrame): (Long, Long) = {
     require(maxSegments >= 1,
       s"bm25MergeSegmentsTiered: maxSegments must be >= 1, got $maxSegments")
     require(protectNewest >= 0,
       s"bm25MergeSegmentsTiered: protectNewest must be >= 0, got $protectNewest")
-    import spark.implicits._
-    var base = SegmentManifest.latest(spark, path)
-      .getOrElse(SegmentManifest.bootstrap(spark, path))
-    var segs = SegmentManifest
-      .read(spark, path, base, "segstats")
-      .map(_.select(col("seg").cast("int"), col("n_docs").cast("long"),
-          col("sum_dl").cast("long"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-        .toSeq.sortBy(_._1))
-      .getOrElse(Nil)
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    var m = base
+    var segs = m.entries("segstats").flatMap(e =>
+      segStatsAt(spark, s"$path/${e.loc}").map { case (n, sdl) =>
+        (e.seg, n, sdl) })
+    // the tombstone set is small and the max-per-key aggregate runs in
+    // the broadcast's own stage — one job, no shuffle
+    lazy val tombsOne = tombs.coalesce(1)
     var folds = 0L
     while (segs.length > maxSegments &&
         segs.length - protectNewest >= 2) {
@@ -1845,39 +1954,34 @@ object TextAnalysis {
         .minBy(j => (segs(j)._2 + segs(j + 1)._2, segs(j)._1))
       val (a, na, sa) = segs(i)
       val (b, nb, sb) = segs(i + 1)
-      val snapNow = SegSnapshot(path, base)
-      val gen = base.gen + 1
-      val rev = SegmentManifest.revDir(gen)
-      val tombs = readTombstones(spark, snapNow, idCol)
-      val live = liveAfterTombstones(
-        readLayout(spark, snapNow, "postings")
-          .filter(col("seg") === a || col("seg") === b),
-        tombs, idCol)
+      val rev = SegmentManifest.revDir(m.gen + 1)
+      val pair = readLayout(spark, SegSnapshot(path, m), "postings")
+        .filter(col("seg") === a || col("seg") === b)
+      val live = liveAfterTombstones(pair, tombsOne, idCol)
         .select(col(idCol), col("dl"), col("term"), col("tf"),
           col("positions"))
-      live.repartitionByRange(col("term"))
+      // summed OLD partials, not live counts — retained tombstones
+      // still subtract the dropped rows at probe time; written beside
+      // the postings
+      val statsW = graft.engine.Steps.future("bm25.merge segstats") {
+        writeSegStats(spark, path, s"$rev/segstats/seg=$b", na + nb,
+          Some(sa + sb))
+      }
+      try byTerm(live, pair)
         .sortWithinPartitions(col("term"), col(idCol))
         .write.mode("overwrite")
         .parquet(s"$path/$rev/postings/seg=$b")
-      // summed OLD partials, not live counts — retained tombstones
-      // still subtract the dropped rows at probe time
-      val folded = Seq((na + nb, sa + sb)).toDF("n_docs", "sum_dl")
-      folded.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/$rev/segstats/seg=$b")
+      finally Await.ready(statsW, Duration.Inf)
+      Await.result(statsW, Duration.Inf)
       SegmentManifest.declareSchema(spark, path,
         Seq(s"$rev/postings/seg=$b"), live.schema)
-      SegmentManifest.declareSchema(spark, path,
-        Seq(s"$rev/segstats/seg=$b"), folded.schema)
       // atomic commit of this fold: drop the pair, point b at the
       // folded rev dir — all-or-nothing, no swap window
-      val next = base
+      m = sealNext(spark, path, m)(_
         .replace("postings", Set(a),
           Seq(SegmentManifest.Entry(b, s"$rev/postings/seg=$b")))
         .replace("segstats", Set(a),
-          Seq(SegmentManifest.Entry(b, s"$rev/segstats/seg=$b")))
-        .copy(gen = gen)
-      SegmentManifest.seal(spark, path, next)
-      base = next
+          Seq(SegmentManifest.Entry(b, s"$rev/segstats/seg=$b"))))
       folds += 1
       segs = (segs.take(i) :+ (b, na + nb, sa + sb)) ++
         segs.drop(i + 2)
@@ -1951,19 +2055,26 @@ object TextAnalysis {
         SegSnapshot(path, SegmentManifest.bootstrap(spark, path))
     }
 
-  /** Seal the NEXT generation: load the latest manifest (or
-    * bootstrap generation 0 from the hive tree — the legacy-layout
-    * upgrade path), apply `f` to its composition, and seal it as
-    * gen+1 with [[SegmentManifest.seal]]'s exclusive create — the
-    * machine-checked single-writer rule: a concurrent maintenance op
-    * that sealed first makes this fail loudly with the index intact
-    * and this op's unreferenced output abandoned for the vacuum. */
+  /** The manifest a maintenance op builds on: the latest sealed
+    * generation, or generation 0 bootstrapped from the hive tree (the
+    * legacy-layout upgrade path). A multi-step op pins it ONCE and
+    * threads each step's sealed output into the next. */
+  private def pinBase(spark: org.apache.spark.sql.SparkSession,
+                      path: String): SegmentManifest.Manifest =
+    SegmentManifest.latest(spark, path)
+      .getOrElse(SegmentManifest.bootstrap(spark, path))
+
+  /** Seal the NEXT generation on the pinned `base`: apply `f` to its
+    * composition and seal it as gen+1 with [[SegmentManifest.seal]]'s
+    * exclusive create — the machine-checked single-writer rule: a
+    * concurrent maintenance op that sealed first makes this fail
+    * loudly with the index intact and this op's unreferenced output
+    * abandoned for the vacuum. Returns the sealed manifest, the base
+    * of the op's next step. */
   private def sealNext(spark: org.apache.spark.sql.SparkSession,
-                       path: String)(
+                       path: String, base: SegmentManifest.Manifest)(
       f: SegmentManifest.Manifest => SegmentManifest.Manifest)
       : SegmentManifest.Manifest = {
-    val base = SegmentManifest.latest(spark, path)
-      .getOrElse(SegmentManifest.bootstrap(spark, path))
     val next = f(base).copy(gen = base.gen + 1)
     SegmentManifest.seal(spark, path, next)
     next
@@ -2378,44 +2489,19 @@ object TextAnalysis {
       .select(col(idCol),
         size(tokens(coalesce(col(textCol), lit(""))))
           .cast("long").as("dl"))
-    bm25Tombstone(goneKeys, idCol, "dl", path, segment)
+    // one pinned base: each step builds on the previous step's seal
+    val (afterTomb, _) =
+      tombstoneOn(goneKeys, idCol, "dl", path, segment, base0)
     val fresh = newSnap.join(
       changed.filter(col("status").isin("added", "modified"))
         .select(col(idCol)), Seq(idCol))
-    bm25AppendSegment(fresh, idCol, textCol, path, segment)
-    bm25MergeSegmentsTiered(spark, path, idCol, maxSegments,
-      protectNewest = 1)
+    val afterAppend =
+      appendOn(fresh, idCol, textCol, path, segment, afterTomb)
+    mergeTieredOn(spark, path, idCol, maxSegments, protectNewest = 1,
+      afterAppend, readTombstones(spark, SegSnapshot(path, afterAppend),
+        idCol))
   }
 
-  /** ONE UPSERT/DELETE WAVE applied to a segmented BM25 index WITHOUT
-    * a corpus snapshot — the CRUD-stream maintenance primitive
-    * ([[bm25ApplyRecrawl]] needs the old snapshot for tombstone dl;
-    * here old document lengths come from the index's OWN live
-    * postings, a column-pruned (id, dl, seg) scan): tombstones for
-    * every delta key present in the index (an upsert is
-    * modify-or-add, a delete is remove), a fresh segment for the
-    * upserts, and tiered compaction back to `maxSegments` with the
-    * streaming loop's `protectNewest = 1`.
-    *
-    * REPLAY-safe via the sealed manifest entry: the old-dl
-    * derivation is valid only against the PRE-wave layout — a
-    * replayed wave cannot re-derive it (its own append and the folds
-    * have changed the live set; a re-derived "old" dl would be the
-    * NEW one, silently corrupting the stats correction) — so the
-    * wave SKIPS the tombstone step when the latest manifest already
-    * carries a tombstone entry for `segment`. [[bm25Tombstone]]
-    * seals only after its write completed, so a crash anywhere
-    * before the seal (including a half-written directory) leaves no
-    * entry and re-derives safely — nothing else has run yet, because
-    * the append only starts after the tombstone seal. The append
-    * re-seal and the tiered merge then converge under replay by the
-    * streaming loop's protectNewest argument.
-    *
-    * Generation contract, checked loudly: `segment` must exceed
-    * every pre-existing segment (a tombstone at s kills only
-    * segs < s — reusing a live generation would let the upserts'
-    * old rows survive). Returns the tiered merge's
-    * (folds, segments remaining). */
   /** The wave-replay "committed" signal [[bm25ApplyUpserts]] and
     * [[bm25ApplyRecrawl]] share: the wave's tombstone entry is in the
     * manifest base, and — on the legacy-upgrade path, where the entry
@@ -2435,26 +2521,71 @@ object TextAnalysis {
           s"$path/tombstones/seg=$segment/_SUCCESS"))
       })
 
+  /** ONE UPSERT/DELETE WAVE applied to a segmented BM25 index WITHOUT
+    * a corpus snapshot — the CRUD-stream maintenance primitive
+    * ([[bm25ApplyRecrawl]] needs the old snapshot for tombstone dl;
+    * here old document lengths come from the index's OWN live
+    * postings): tombstones for every delta key present in the index
+    * (an upsert is modify-or-add, a delete is remove), a fresh segment
+    * for the upserts, and tiered compaction back to `maxSegments` with
+    * the streaming loop's `protectNewest = 1`.
+    *
+    * ONE PINNED BASE: the wave reads the latest manifest once; each of
+    * its three steps (job labels `bm25.tombstone`, `bm25.append`,
+    * `bm25.merge`) seals the next generation on the previous step's
+    * sealed output — still an exclusive create of gen+1, so a racing
+    * writer fails the wave loudly.
+    *   - tombstone: the old-dl derivation is bounded by the wave's
+    *     keys — the broadcast key set semi-joins both the postings
+    *     and the tombstone scan before the shared
+    *     [[liveAfterTombstones]] rule, so its aggregate and the
+    *     (id, dl) distinct see wave-sized rows;
+    *   - append: [[bm25AppendSegment]]'s writes, whose segstats
+    *     partial lands in the fold-decision memo. They run on the pool
+    *     beside the tombstone step; the append seals after it;
+    *   - merge: the tiered fold decides from memoized partials (no
+    *     job) and folds against the wave's pinned tombstone read plus
+    *     the member the wave just wrote.
+    *
+    * REPLAY-safe via the sealed manifest entry: the old-dl
+    * derivation is valid only against the PRE-wave layout — a
+    * replayed wave cannot re-derive it (its own append and the folds
+    * have changed the live set; a re-derived "old" dl would be the
+    * NEW one, silently corrupting the stats correction) — so the
+    * wave SKIPS the tombstone step when the latest manifest already
+    * carries a tombstone entry for `segment`. The tombstone seals
+    * only after its write completed, so a crash anywhere before the
+    * seal (including a half-written directory) leaves no entry and
+    * re-derives safely — nothing else has sealed yet: the append's
+    * directories stay unreferenced until its own seal, which waits
+    * for the tombstone's. The append re-seal and the
+    * tiered merge then converge under replay by the streaming loop's
+    * protectNewest argument; a replayed append writes a fresh
+    * directory, so its memoized partial is derived anew.
+    *
+    * Generation contract, checked loudly: `segment` must exceed
+    * every pre-existing segment (a tombstone at s kills only
+    * segs < s — reusing a live generation would let the upserts'
+    * old rows survive). Returns the tiered merge's
+    * (folds, segments remaining). */
   def bm25ApplyUpserts(spark: org.apache.spark.sql.SparkSession,
                        path: String, upserts: DataFrame,
                        deletes: DataFrame, idCol: String,
                        textCol: String, segment: Int,
                        maxSegments: Int): (Long, Long) = {
+    import graft.engine.Steps
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
     val sealedBase = SegmentManifest.latest(spark, path)
     val base = sealedBase
       .getOrElse(SegmentManifest.bootstrap(spark, path))
-    val snap = SegSnapshot(path, base)
-    // the replay skip-signal is the SEALED manifest entry — the seal
-    // happens only after the tombstone write completed, so a crash
-    // anywhere before it re-derives safely (nothing else has run:
-    // the append only starts after the tombstone step), and a crash
-    // after it skips, never re-deriving against a layout its own
-    // append has already changed. On the LEGACY-UPGRADE path the
-    // entry came from bootstrap's directory fold, which carries no
-    // completion evidence — there the live dir must also hold its
-    // _SUCCESS marker, or a half-written tombstone dir from a
-    // pre-manifest crash would masquerade as committed and silently
-    // truncate the wave's kill set / stats correction
+    // the replay skip-signal is the SEALED manifest entry (see the
+    // doc above). On the LEGACY-UPGRADE path the entry came from
+    // bootstrap's directory fold, which carries no completion
+    // evidence — there the live dir must also hold its _SUCCESS
+    // marker, or a half-written tombstone dir from a pre-manifest
+    // crash would masquerade as committed and silently truncate the
+    // wave's kill set / stats correction
     val committed = waveCommitted(spark, path, base, sealedBase,
       segment)
     val maxSeg = base.segs("postings")
@@ -2462,33 +2593,67 @@ object TextAnalysis {
     require(committed || segment > maxSeg,
       s"bm25ApplyUpserts: segment $segment must exceed every live " +
         s"segment (max $maxSeg) — the generation rule")
-    if (!committed) {
-      // a torn (no-_SUCCESS) tombstone dir the bootstrap folded in is
-      // crash garbage, not state: it must not participate in the
-      // re-derive either — its partial kill set would hide its
-      // victims from `live` and truncate the re-derived old-dl join
-      val derive =
-        if (base.segs("tombstones").contains(segment))
-          SegSnapshot(path, base.replace("tombstones", Set(segment), Nil))
-        else snap
-      val live = liveAfterTombstones(
-        readLayout(spark, derive, "postings")
-          .select(col(idCol), col("dl"), col("seg")),
-        readTombstones(spark, derive, idCol), idCol)
-      val allKeys = upserts.select(col(idCol))
-        .unionByName(deletes.select(col(idCol))).distinct()
-      // keys absent from the index (pure adds) simply produce no
-      // tombstone row; an empty tombstone segment still seals, which
-      // is what makes the replay skip-signal unambiguous
-      bm25Tombstone(
-        live.select(col(idCol), col("dl")).distinct()
-          .join(allKeys, Seq(idCol)),
-        idCol, "dl", path, segment)
+    // a torn (no-_SUCCESS) tombstone dir the bootstrap folded in is
+    // crash garbage, not state: it must not participate in the
+    // re-derive either — its partial kill set would hide its victims
+    // from `live` and truncate the re-derived old-dl join
+    val derive = SegSnapshot(path,
+      if (!committed && base.segs("tombstones").contains(segment))
+        base.replace("tombstones", Set(segment), Nil)
+      else base)
+    lazy val tombs = readTombstones(spark, derive, idCol)
+    // the append's WRITES depend on nothing the tombstone step writes:
+    // the old-dl derivation reads the pinned pre-wave layout, and the
+    // segment's directories stay unreferenced until its seal — so they
+    // run overlapped, on the pool. The SEALS stay ordered (tombstone
+    // first), which is all the replay argument above needs
+    val appendW = Steps.scoped("bm25.append") {
+      if (upserts.isEmpty) None
+      else Some(Steps.future("bm25.append") {
+        writeSegment(upserts, idCol, textCol, path, segment,
+          base.gen + (if (committed) 1 else 2))
+      })
     }
-    if (!upserts.isEmpty)
-      bm25AppendSegment(upserts, idCol, textCol, path, segment)
-    bm25MergeSegmentsTiered(spark, path, idCol, maxSegments,
-      protectNewest = 1)
+    val (afterTomb, written) =
+      try {
+        if (committed) (base, None)
+        else Steps.scoped("bm25.tombstone") {
+          val keys = broadcast(upserts.select(col(idCol))
+            .unionByName(deletes.select(col(idCol))))
+          val postings = readLayout(spark, derive, "postings")
+            .select(col(idCol), col("dl"), col("seg"))
+          val scoped = postings.join(keys, Seq(idCol), "left_semi")
+          // a postings layout that fits one partition is scanned by one
+          // task, so the (id, dl) distinct below needs no shuffle
+          val live = liveAfterTombstones(
+            if (fitsOnePartition(postings)) scoped.coalesce(1) else scoped,
+            tombs.join(keys, Seq(idCol), "left_semi").coalesce(1), idCol)
+          // keys absent from the index (pure adds) simply produce no
+          // tombstone row; an empty tombstone segment still seals,
+          // which is what makes the replay skip-signal unambiguous
+          val (m, loc) = tombstoneOn(
+            live.select(col(idCol), col("dl")).distinct(),
+            idCol, "dl", path, segment, base)
+          (m, Some(loc))
+        }
+      } catch { case e: Throwable =>
+        // the failed wave leaves no append writing behind it
+        appendW.foreach(w => scala.util.Try(Await.ready(w, Duration.Inf)))
+        throw e
+      }
+    // the fold's tombstone set: the pinned read plus the member the
+    // wave just sealed
+    lazy val foldTombs = written.fold(tombs)(loc =>
+      tombs.unionByName(readTombstones(spark, SegSnapshot(path,
+        SegmentManifest.Manifest(afterTomb.gen, Map("tombstones" ->
+          Seq(SegmentManifest.Entry(segment, loc))))), idCol)))
+    val afterAppend = appendW.fold(afterTomb)(w =>
+      sealSegment(spark, path, segment, afterTomb,
+        Await.result(w, Duration.Inf)))
+    Steps.scoped("bm25.merge") {
+      mergeTieredOn(spark, path, idCol, maxSegments, protectNewest = 1,
+        afterAppend, foldTombs)
+    }
   }
 
   /** PREFIX term search over a SEGMENTED index (same layout and
@@ -3111,8 +3276,12 @@ object TextAnalysis {
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qterms = queries.select(col("qid"),
       explode(array_distinct(tokens(col("qtext")))).as("term"))
-    val terms = qterms.select(col("term")).distinct()
-      .collect().map(_.getString(0))
+    // the panel's distinct terms, flattened on the driver: over a local
+    // panel the projection folds into the local relation and the
+    // collect runs no job
+    val terms = queries.select(array_distinct(tokens(col("qtext"))))
+      .collect().flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
+      .distinct
     val postings = spark.read.parquet(s"$path/postings")
       .filter(col("term").isin(
         scala.collection.immutable.ArraySeq.unsafeWrapArray(terms): _*))

@@ -25,9 +25,9 @@ import graft.operators.Consolidate
   *  - PERMISSIVE mode + a corrupt-record column reproduces
   *    warn-and-continue (`on_bad_lines='warn'`): bad lines survive as a
   *    row with the raw text in `_corrupt` instead of failing the read;
-  *  - utf-8-sig: Spark reads UTF-8 but keeps a leading BOM in the first
-  *    header name; [[stripBom]] removes it so BOM'd and plain files get
-  *    identical schemas (pandas' utf-8-sig does the same).
+  *  - utf-8-sig: Hadoop's line reader drops a BOM at file start, so
+  *    BOM'd and plain files get identical header names with no rename
+  *    pass (pandas' utf-8-sig does the same).
   *
   * Scale note: a multi-file CSV read is one partitioned scan (splittable
   * per-file). The sniffed reads run one scan per (separator, header)
@@ -61,8 +61,8 @@ object CsvIngest {
     * (all-string) header schema here. */
   private def scan(spark: SparkSession, paths: Seq[String], sep: String,
                    header: StructType): DataFrame =
-    stripBom(reader(spark, sep).schema(header.add(CorruptCol, StringType))
-      .csv(paths: _*))
+    reader(spark, sep).schema(header.add(CorruptCol, StringType))
+      .csv(paths: _*)
 
   /** Spark's header schema for a file whose first non-empty line is
     * `line`, built without a job by Spark's own inference rules
@@ -182,12 +182,12 @@ object CsvIngest {
     * directories at plan time (PartitionFilters in explain). */
   def readPartitioned(spark: SparkSession, path: String,
                       sep: String = ";"): DataFrame =
-    stripBom(spark.read
+    spark.read
       .option("sep", sep)
       .option("header", "true")
       .option("encoding", "UTF-8")
       .option("mode", "PERMISSIVE")
-      .csv(path))
+      .csv(path)
 
   /** S5 × W — the tolerant read at INGEST TIME: a streaming file source
     * with the same PERMISSIVE + corrupt-column contract as [[read]], for
@@ -213,16 +213,6 @@ object CsvIngest {
       .csv(path)
   }
 
-  /** BOM survives Spark's CSV header parse as a `﻿` prefix on the
-    * first column name; rename it away (pandas utf-8-sig parity). */
-  private def stripBom(df: DataFrame): DataFrame = {
-    val bom = "﻿"
-    df.columns.find(_.startsWith(bom)) match {
-      case Some(c) => df.withColumnRenamed(c, c.stripPrefix(bom))
-      case None => df
-    }
-  }
-
   /** K1 — partitioned CSV write. `partitionBy(cidade, ano, mes)` is the
     * engine-side equivalent of the reference's
     * `{cidade}/{cidade}_royalties_{ano}_{mes}.csv` layout, and makes the
@@ -236,7 +226,8 @@ object CsvIngest {
     * driver-side post-pass — a stream-copy per part file, bounded by the
     * write's task count, not a data-plane job (same cost class as the
     * sink's own _SUCCESS/commit bookkeeping). [[read]]/[[readPartitioned]]
-    * strip the BOM, so the roundtrip is lossless either way. */
+    * never see the BOM (the line reader drops it), so the roundtrip is
+    * lossless either way. */
   def write(df: DataFrame, path: String, partitionCols: Seq[String] = Nil,
             sep: String = ";", bom: Boolean = false): Unit = {
     val w = df.write

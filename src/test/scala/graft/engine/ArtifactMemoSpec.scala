@@ -58,6 +58,12 @@ class ArtifactMemoSpec extends SparkSpec {
           statRows(v), keepBelow = 4),
         () => StreamingVectorIndex.priorStats(spark, root, 1),
         v => Some(statRows(v))),
+      Case("segstats partials", s"$root/segstats/seg=1",
+        v => overwrite(Seq((v.toLong, 10L * v)).toDF("n_docs", "sum_dl"),
+          s"$root/segstats/seg=1"),
+        () => graft.operators.TextAnalysis
+          .segStatsAt(spark, s"$root/segstats/seg=1"),
+        v => Seq((v.toLong, 10L * v))),
       Case("member schema", s"$member/cells/seg=1",
         v => overwrite(Seq((1L, v.toLong)).toDF("id", s"c$v"),
           s"$member/cells/seg=1"),

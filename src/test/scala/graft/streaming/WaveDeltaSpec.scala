@@ -1,14 +1,9 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, StepJobs}
 import graft.engine.Steps
 import graft.operators.{ProductQuantize, Similarity}
 
@@ -18,42 +13,7 @@ import graft.operators.{ProductQuantize, Similarity}
   * carried + Δ — equal to the full scan after every wave, and reset by
   * a full scan when a replay pins a later base than the carried rows
   * describe. Jobs are counted per [[Steps]] label. */
-class WaveDeltaSpec extends SparkSpec {
-
-  /** (`graft.step` label or "", job group) of every job started while
-    * `body` runs, from any thread — delimited by two probe jobs, which
-    * the listener sees in submission order. */
-  private def stepsDuring[A](body: => A): (A, Seq[String]) = {
-    val sc = spark.sparkContext
-    val mark = s"steps-${System.nanoTime()}"
-    val seen = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        seen.add((p.flatMap(x => Option(x.getProperty("spark.jobGroup.id")))
-            .getOrElse(""),
-          p.flatMap(x => Option(x.getProperty(Steps.Key))).getOrElse("")))
-      }
-    }
-    def probe(tag: String): Unit = {
-      sc.setJobGroup(s"$mark-$tag", tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      probe("start")
-      val out = body
-      probe("end")
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.asScala.exists(_._1 == s"$mark-end") &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-      val order = seen.asScala.toSeq
-      val from = order.indexWhere(_._1 == s"$mark-start")
-      val to = order.indexWhere(_._1 == s"$mark-end")
-      assert(from >= 0 && to > from, order.mkString(","))
-      (out, order.slice(from + 1, to).map(_._2))
-    } finally sc.removeSparkListener(listener)
-  }
+class WaveDeltaSpec extends SparkSpec with StepJobs {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
