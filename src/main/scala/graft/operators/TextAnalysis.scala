@@ -790,23 +790,30 @@ object TextAnalysis {
       .sortWithinPartitions(col("term"), col(idCol))
   }
 
-  /** `df` partitioned for the postings layout: by term range, so every
-    * written file carries a tight term min/max — or, for an input that
-    * [[fitsOnePartition]], ONE partition with no exchange: the same
-    * single term-sorted file AQE would have coalesced the range
-    * shuffle into, without the range sampling and shuffle jobs. */
-  private def byTerm(df: DataFrame, src: DataFrame): DataFrame =
-    if (fitsOnePartition(src)) df.coalesce(1)
-    else df.repartitionByRange(col("term"))
-
-  /** Whether the optimizer sizes `src` within AQE's minimum partition
-    * size — an input whose shuffle AQE would coalesce into a single
-    * partition anyway, so one task loses no parallelism. */
+  /** THE partitioning rule of the segmented index's write-side passes
+    * (append, tombstone derivation, tiered fold): an input `src` the
+    * optimizer sizes within AQE's minimum partition size — one whose
+    * shuffle AQE would coalesce into a single partition anyway — runs
+    * as ONE task, so a distinct, aggregate or sort over `df` needs no
+    * exchange (and its job no shuffle stage); a larger input keeps the
+    * parallel plan. */
   private def fitsOnePartition(src: DataFrame): Boolean =
     src.queryExecution.optimizedPlan.stats.sizeInBytes <=
       src.sparkSession.sessionState.conf.getConf(
         org.apache.spark.sql.internal.SQLConf
           .COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
+  /** `df` as one partition when `src` [[fitsOnePartition]], else as is. */
+  private def narrow(df: DataFrame, src: DataFrame): DataFrame =
+    if (fitsOnePartition(src)) df.coalesce(1) else df
+
+  /** `df` partitioned for the postings layout: by term range, so every
+    * written file carries a tight term min/max — or, under the
+    * [[fitsOnePartition]] rule, the one term-sorted file AQE would
+    * have coalesced the range shuffle into. */
+  private def byTerm(df: DataFrame, src: DataFrame): DataFrame =
+    if (fitsOnePartition(src)) df.coalesce(1)
+    else df.repartitionByRange(col("term"))
 
   /** THE one fixed-point BM25 term-contribution expression — over
     * columns (tf, df, dl, n_docs, avgdl) — shared by every scoring
@@ -1002,9 +1009,10 @@ object TextAnalysis {
     val tf = tfPosFrame(docs, idCol, textCol)
     tf.write.mode("overwrite").parquet(s"$path/${locs("postings")}")
     // the two derived artifacts read the JUST-WRITTEN postings back
-    // (explicit schema — no inference job): each is one single-stage
-    // pass over a column-disjoint projection (term; id+dl — parquet
-    // never touches the positional pages)
+    // (explicit schema — no inference job): each is one pass over a
+    // column-disjoint projection (term; id+dl — parquet never touches
+    // the positional pages), a single stage when the postings are
+    // [[narrow]]
     val posted = spark.read.schema(tf.schema)
       .parquet(s"$path/${locs("postings")}")
     // per-segment TERM DICTIONARY (Lucene's terms file): the
@@ -1023,17 +1031,17 @@ object TextAnalysis {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     val dictW = graft.engine.Steps.future("bm25.append termdict") {
-      posted.select(col("term")).coalesce(1).distinct()
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite")
+      narrow(posted.select(col("term")), posted).distinct()
+        .sort(col("term"))
+        .coalesce(1).write.mode("overwrite")
         .parquet(s"$path/${locs("termdict")}")
     }
     // the segment's exact integer partials, collected (one row) and
     // written from the driver, so the fold decision has them without
     // reading the file back
     val statsW = graft.engine.Steps.future("bm25.append segstats") {
-      val st = posted.select(col(idCol), col("dl")).coalesce(1).distinct()
-        .agg(count(lit(1)), sum(col("dl")).cast("long")).head()
+      val st = narrow(posted.select(col(idCol), col("dl")), posted)
+        .distinct().agg(count(lit(1)), sum(col("dl")).cast("long")).head()
       writeSegStats(spark, path, locs("segstats"), st.getLong(0),
         if (st.isNullAt(1)) None else Some(st.getLong(1)))
     }
@@ -1156,18 +1164,21 @@ object TextAnalysis {
                          asOfGeneration: Option[Int] = None): DataFrame = {
     val qterms = queries.select(col("qid"),
       explode(array_distinct(tokens(col("qtext")))).as("term"))
-    // the panel's distinct terms, flattened on the driver: over a local
-    // panel the projection folds into the local relation and the
-    // collect runs no job
-    val terms = queries.select(array_distinct(tokens(col("qtext"))))
-      .collect().flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
-      .distinct
+    val terms = panelTerms(queries)
     val (live, stats) = liveScoring(spark,
       pinSeg(spark, path, asOfGeneration), idCol, terms, asOfSegment)
     val dfq = live.groupBy(col("term"))
       .agg(count_distinct(col(idCol)).as("df"))
     bm25Score(live.join(dfq, "term"), qterms, stats, idCol, k, k1, b)
   }
+
+  /** The panel's distinct query terms, flattened on the driver: over a
+    * local panel the projection folds into the local relation and the
+    * collect runs no job. */
+  private def panelTerms(queries: DataFrame): Array[String] =
+    queries.select(array_distinct(tokens(col("qtext"))))
+      .collect().flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
+      .distinct
 
   /** Live scoring rows + exact global stats of a SEGMENTED index for
     * a bounded term set — the shared read path of
@@ -1942,9 +1953,9 @@ object TextAnalysis {
     var segs = m.entries("segstats").flatMap(e =>
       segStatsAt(spark, s"$path/${e.loc}").map { case (n, sdl) =>
         (e.seg, n, sdl) })
-    // the tombstone set is small and the max-per-key aggregate runs in
-    // the broadcast's own stage — one job, no shuffle
-    lazy val tombsOne = tombs.coalesce(1)
+    // a narrow tombstone set's max-per-key aggregate runs in the
+    // broadcast's own stage — one job, no shuffle
+    lazy val tombsNarrow = { val t = tombs; narrow(t, t) }
     var folds = 0L
     while (segs.length > maxSegments &&
         segs.length - protectNewest >= 2) {
@@ -1957,7 +1968,7 @@ object TextAnalysis {
       val rev = SegmentManifest.revDir(m.gen + 1)
       val pair = readLayout(spark, SegSnapshot(path, m), "postings")
         .filter(col("seg") === a || col("seg") === b)
-      val live = liveAfterTombstones(pair, tombsOne, idCol)
+      val live = liveAfterTombstones(pair, tombsNarrow, idCol)
         .select(col(idCol), col("dl"), col("term"), col("tf"),
           col("positions"))
       // summed OLD partials, not live counts — retained tombstones
@@ -2541,8 +2552,9 @@ object TextAnalysis {
     *     [[liveAfterTombstones]] rule, so its aggregate and the
     *     (id, dl) distinct see wave-sized rows;
     *   - append: [[bm25AppendSegment]]'s writes, whose segstats
-    *     partial lands in the fold-decision memo. They run on the pool
-    *     beside the tombstone step; the append seals after it;
+    *     partial lands in the fold-decision memo. On a sealed layout
+    *     they run on the pool beside the tombstone step (on a legacy
+    *     one, after it); the append seals after the tombstone;
     *   - merge: the tiered fold decides from memoized partials (no
     *     job) and folds against the wave's pinned tombstone read plus
     *     the member the wave just wrote.
@@ -2558,7 +2570,9 @@ object TextAnalysis {
     * seal (including a half-written directory) leaves no entry and
     * re-derives safely — nothing else has sealed yet: the append's
     * directories stay unreferenced until its own seal, which waits
-    * for the tombstone's. The append re-seal and the
+    * for the tombstone's (and on a legacy layout, where bootstrap
+    * folds every segment directory in, the append does not start
+    * until then). The append re-seal and the
     * tiered merge then converge under replay by the streaming loop's
     * protectNewest argument; a replayed append writes a fresh
     * directory, so its memoized partial is derived anew.
@@ -2602,17 +2616,20 @@ object TextAnalysis {
         base.replace("tombstones", Set(segment), Nil)
       else base)
     lazy val tombs = readTombstones(spark, derive, idCol)
-    // the append's WRITES depend on nothing the tombstone step writes:
-    // the old-dl derivation reads the pinned pre-wave layout, and the
-    // segment's directories stay unreferenced until its seal — so they
-    // run overlapped, on the pool. The SEALS stay ordered (tombstone
-    // first), which is all the replay argument above needs
-    val appendW = Steps.scoped("bm25.append") {
-      if (upserts.isEmpty) None
-      else Some(Steps.future("bm25.append") {
-        writeSegment(upserts, idCol, textCol, path, segment,
-          base.gen + (if (committed) 1 else 2))
-      })
+    // the append's WRITES depend on nothing the tombstone step writes
+    // (the old-dl derivation reads the pinned pre-wave layout), so on a
+    // SEALED layout they run beside it, on the pool: a failed tombstone
+    // step leaves them unreferenced by every manifest. Its SEAL stays
+    // after the tombstone's, which is all the replay argument above
+    // needs. A LEGACY layout appends after the tombstone step instead:
+    // there the replay's bootstrap would fold a left-behind segment
+    // directory in as live
+    def writeAppend(): Map[String, String] = writeSegment(upserts, idCol,
+      textCol, path, segment, base.gen + (if (committed) 1 else 2))
+    val (hasUpserts, beside) = Steps.scoped("bm25.append") {
+      val has = !upserts.isEmpty
+      (has, if (has && sealedBase.nonEmpty)
+        Some(Steps.future("bm25.append")(writeAppend())) else None)
     }
     val (afterTomb, written) =
       try {
@@ -2622,12 +2639,9 @@ object TextAnalysis {
             .unionByName(deletes.select(col(idCol))))
           val postings = readLayout(spark, derive, "postings")
             .select(col(idCol), col("dl"), col("seg"))
-          val scoped = postings.join(keys, Seq(idCol), "left_semi")
-          // a postings layout that fits one partition is scanned by one
-          // task, so the (id, dl) distinct below needs no shuffle
           val live = liveAfterTombstones(
-            if (fitsOnePartition(postings)) scoped.coalesce(1) else scoped,
-            tombs.join(keys, Seq(idCol), "left_semi").coalesce(1), idCol)
+            narrow(postings.join(keys, Seq(idCol), "left_semi"), postings),
+            narrow(tombs.join(keys, Seq(idCol), "left_semi"), tombs), idCol)
           // keys absent from the index (pure adds) simply produce no
           // tombstone row; an empty tombstone segment still seals,
           // which is what makes the replay skip-signal unambiguous
@@ -2638,18 +2652,20 @@ object TextAnalysis {
         }
       } catch { case e: Throwable =>
         // the failed wave leaves no append writing behind it
-        appendW.foreach(w => scala.util.Try(Await.ready(w, Duration.Inf)))
+        beside.foreach(w => scala.util.Try(Await.ready(w, Duration.Inf)))
         throw e
       }
+    val afterAppend =
+      if (!hasUpserts) afterTomb
+      else sealSegment(spark, path, segment, afterTomb,
+        beside.fold(Steps.scoped("bm25.append")(writeAppend()))(
+          Await.result(_, Duration.Inf)))
     // the fold's tombstone set: the pinned read plus the member the
     // wave just sealed
     lazy val foldTombs = written.fold(tombs)(loc =>
       tombs.unionByName(readTombstones(spark, SegSnapshot(path,
         SegmentManifest.Manifest(afterTomb.gen, Map("tombstones" ->
           Seq(SegmentManifest.Entry(segment, loc))))), idCol)))
-    val afterAppend = appendW.fold(afterTomb)(w =>
-      sealSegment(spark, path, segment, afterTomb,
-        Await.result(w, Duration.Inf)))
     Steps.scoped("bm25.merge") {
       mergeTieredOn(spark, path, idCol, maxSegments, protectNewest = 1,
         afterAppend, foldTombs)
@@ -3276,12 +3292,7 @@ object TextAnalysis {
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qterms = queries.select(col("qid"),
       explode(array_distinct(tokens(col("qtext")))).as("term"))
-    // the panel's distinct terms, flattened on the driver: over a local
-    // panel the projection folds into the local relation and the
-    // collect runs no job
-    val terms = queries.select(array_distinct(tokens(col("qtext"))))
-      .collect().flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
-      .distinct
+    val terms = panelTerms(queries)
     val postings = spark.read.parquet(s"$path/postings")
       .filter(col("term").isin(
         scala.collection.immutable.ArraySeq.unsafeWrapArray(terms): _*))

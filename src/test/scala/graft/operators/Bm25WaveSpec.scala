@@ -153,6 +153,60 @@ class Bm25WaveSpec extends SparkSpec with StepJobs {
     assert(infos(dir) == infos(uncrashed))
   }
 
+  /** Two segments (as a manifest-less hive tree when `legacy`), then
+    * the segment-2 wave with its tombstone step failing, then its
+    * replay. Returns the index. */
+  private def tombstoneFailsThenReplay(legacy: Boolean): String = {
+    import spark.implicits._
+    val built = tmp("bm25wave_tombfail_b")
+    TextAnalysis.bm25AppendSegment(base.take(3).toDF("doc_id", "text"),
+      "doc_id", "text", built, 0)
+    TextAnalysis.bm25AppendSegment(base.drop(3).toDF("doc_id", "text"),
+      "doc_id", "text", built, 1)
+    val dir =
+      if (!legacy) built
+      else {
+        // the hive tree without its manifests: a pre-manifest index
+        val d = tmp("bm25wave_tombfail")
+        for (l <- Seq("postings", "termdict", "segstats"))
+          assert(new java.io.File(s"$built/$l")
+            .renameTo(new java.io.File(s"$d/$l")))
+        d
+      }
+    // the deletes feed only the tombstone step; read from a file, so
+    // the failing id is evaluated when that step runs
+    val src = tmp("bm25wave_deletes")
+    deletes.map(Tuple1(_)).toDF("doc_id")
+      .write.mode("overwrite").parquet(src)
+    def wave() = TextAnalysis.bm25ApplyUpserts(spark, dir,
+      upserts.toDF("doc_id", "text"),
+      spark.read.parquet(src).select(failingId(col("doc_id")).as("doc_id")),
+      "doc_id", "text", segment = 2, maxSegments = 2)
+    failKeys = true
+    try intercept[Exception](wave()) finally failKeys = false
+    if (legacy)
+      assert(!new java.io.File(s"$dir/postings/seg=2").exists(),
+        "the append ran although the tombstone step failed")
+    assert(wave() == ((1L, 2L)))
+    dir
+  }
+
+  test("legacy (manifest-less) layout: a wave whose tombstone step " +
+      "failed leaves no segment directory the replay's bootstrap could " +
+      "fold in; the replay equals the direct scan of the final corpus") {
+    val dir = tombstoneFailsThenReplay(legacy = true)
+    assertProbeIsScan(dir, finalCorpus)
+    assert(infos(dir) == infos(uncrashed))
+  }
+
+  test("sealed layout: a wave whose tombstone step failed beside its " +
+      "append replays to the final corpus: probe equals the direct " +
+      "scan, segmentInfos equal an uncrashed build") {
+    val dir = tombstoneFailsThenReplay(legacy = false)
+    assertProbeIsScan(dir, finalCorpus)
+    assert(infos(dir) == infos(uncrashed))
+  }
+
   test("bm25ProbeSegmented over a local panel submits no job while it " +
       "plans, and its results equal the direct scan") {
     import spark.implicits._
@@ -179,6 +233,14 @@ object Bm25WaveSpec {
   val failing = udf { (t: String) =>
     if (failAppend) throw new IllegalStateException("injected failure")
     t
+  }
+
+  /** Fails every id evaluation while set. */
+  @volatile var failKeys = false
+
+  val failingId = udf { (id: Long) =>
+    if (failKeys) throw new IllegalStateException("injected failure")
+    id
   }
 
   private val Common = Seq("batch", "part", "spark", "line", "column",
