@@ -42,13 +42,6 @@ object TextFns {
     terms.map(t => normalized.contains(lit(t))).reduce(_ || _)
   }
 
-  /** F1 alternative: one pre-compiled regex over the normalized column —
-    * the same fusion the reference does by precompiling its regex at module
-    * level (`aracaju…:37`). Terms must already be normalize()-stable.
-    */
-  def keywordRegex(normalized: Column, terms: Seq[String]): Column =
-    normalized.rlike(terms.map(java.util.regex.Pattern.quote).mkString("|"))
-
   /** The reference's Serigy + Pacatuba royalty keyword sets
     * (`aracaju_barra_pirambu_scraper.py:36`, `pacatuba_scraper.py:32`),
     * post-normalization.

@@ -32,7 +32,7 @@ object Decontaminate {
                   idCol: String, textCol: String, n: Int): DataFrame = {
     // tokens() in its own projection — no subexpr elimination inside
     // HOF lambdas, so slice(toks, …) over the raw split re-tokenizes
-    // per element (6× on the explode pass, measured in NoveltyProbe)
+    // per element (6× on the explode pass, measured in NOTES_r9.md)
     def shingleRows(df: DataFrame) = df
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
       .select(col(idCol),

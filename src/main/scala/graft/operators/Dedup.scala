@@ -69,7 +69,7 @@ object Dedup {
                   shingleN: Int): DataFrame =
     // tokens() in its own projection first (no subexpr elimination
     // inside HOF lambdas — the shingle slice over a raw split would
-    // re-tokenize per element; measured 6× in NoveltyProbe)
+    // re-tokenize per element; measured 6×, NOTES_r9.md)
     // serialized: per-doc shingle-hash ARRAYS are the worst case for
     // deserialized caching (object header per element) — see cachedSer
     cachedSer(docs
@@ -155,15 +155,7 @@ object Dedup {
     * Throws on non-convergence instead of silently returning partial
     * labels (a silently-wrong dedup decision poisons the corpus).
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponentsInstrumented(pairs, maxIter, (_, _) => ())
-
-  /** [[connectedComponents]] with a per-round observer `(round,
-    * seconds)` — the instrumentation seam [[graft.tools.CCScaleProbe]]
-    * hooks, so the probe times THE shipped loop instead of a hand-copy
-    * that can silently drift from it. */
-  def connectedComponentsInstrumented(pairs: DataFrame, maxIter: Int,
-                                      onRound: (Int, Double) => Unit): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     // Lineage-truncation strategy per round: localCheckpoint blocks are
     // lost with an executor, which on a real cluster silently poisons
@@ -177,7 +169,7 @@ object Dedup {
     // full upstream pair-generation plan, and when the upstream's
     // internal caches sit under memory pressure the branches recompute
     // it — measured 85 s vs 13 s on the same 10×-inflated corpus
-    // (CCScaleProbe, round-8). Per-row output is identical. No eager
+    // (round 8, NOTES_r8.md). Per-row output is identical. No eager
     // count(): the round-0 label aggregate below is the first consumer
     // and populates this cache while doing useful work — an up-front
     // count is a whole extra pass over the pair lineage.
@@ -203,7 +195,6 @@ object Dedup {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       val neighborMin = edges
         .join(labels, edges("b") === labels("node"))
         .groupBy(col("a")).agg(min(col("label")).as("nmin"))
@@ -268,7 +259,6 @@ object Dedup {
       labels = next.select(col("node"), col("label"))
       converged = changed == 0
       i += 1
-      onRound(i, (System.nanoTime() - t0) / 1e9)
     }
     if (!converged)
       throw new IllegalStateException(

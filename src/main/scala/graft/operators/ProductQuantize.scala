@@ -46,7 +46,7 @@ object ProductQuantize {
   /** Explicit-schema read of a written codebooks file — the books
     * store has one fixed shape ([[pqTrain]]'s output), and schema
     * inference on it was a hidden footer-read job on every consumer
-    * (one per maintenance wave in the IVF-PQ loop, WaveJobProbe). */
+    * (one per maintenance wave in the IVF-PQ loop, NOTES_r16.md). */
   private[graft] def readBooks(spark: SparkSession,
                                loc: String): DataFrame =
     spark.read.schema("subspace BIGINT, code BIGINT, cvec ARRAY<DOUBLE>")
@@ -719,7 +719,7 @@ object ProductQuantize {
   /** The rows (m·k by contract) of a written codebooks file
     * ([[bookRows]]), memoized: a pure function of the file, but one
     * Spark job per call — per probe, per refresh encode, per wave's
-    * drift stats (r20 WaveJobProbe). */
+    * drift stats (OPTIMIZATION_r20.md). */
   private val bookRowsMemo = new ArtifactMemo[IndexedSeq[BookRow]](64)
 
   private[graft] def bookRowsAt(spark: SparkSession,

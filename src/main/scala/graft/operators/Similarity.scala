@@ -1286,7 +1286,7 @@ object Similarity {
     * skew exceeds `skewFactorX100`% of its baseline — cells bloating
     * toward the scan-cost failure mode, measured the dominant symptom
     * when drifting vectors CONVERGE (they pile into few cells while
-    * corpus-weighted displacement barely moves, IvfDriftProbe) — or
+    * corpus-weighted displacement barely moves, NOTES_r11/r12.md) — or
     * when mean displacement exceeds `cdFactorX100`% of its baseline
     * (vectors WANDERING without converging). Absolute thresholds
     * would misfire on inherently clustered corpora, where a freshly

@@ -189,7 +189,7 @@ object TextAnalysis {
     // tokens() gets its own projection first: Spark does no
     // subexpression elimination inside HOF lambdas, so slice(toks, …)
     // referencing the raw split re-tokenizes per ELEMENT — measured 6×
-    // on the explode pass at sf0.1 (NoveltyProbe).
+    // on the explode pass at sf0.1 (NOTES_r9.md).
     // Serialized persist: this is the corpus-sized exploded relation —
     // deserialized MEMORY_ONLY inflates it several-fold and lands the
     // big-heap first-touch tax (q56's r9 driver regression).
@@ -253,7 +253,7 @@ object TextAnalysis {
   def noveltyProfile(docs: DataFrame, idCol: String, textCol: String,
                      n: Int): DataFrame = {
     // tokens() in its own projection (no subexpr elimination inside HOF
-    // lambdas — 6× on the explode, measured in NoveltyProbe); cached
+    // lambdas — 6× on the explode, measured in NOTES_r9.md); cached
     // because BOTH the min-id aggregate and the join probe side consume
     // this frame — left lazy the explode pipeline runs twice.
     // Serialized for the same big-heap reason as jaccardPairs' relation.

@@ -241,8 +241,9 @@ object PipelineQueries {
 
   /** q102's five-stage curation pipeline over an ARBITRARY docs frame
     * (doc_id, source, text) — the ONE definition both the registered
-    * gate row and `CompositionScaleProbe` run, so the probe can never
-    * desynchronize from the query it claims to measure. Stages:
+    * gate row and the round-10 ×m composition probe (NOTES_r10.md)
+    * ran, so a measurement can never desynchronize from the query it
+    * claims to measure. Stages:
     * quality gate (integer lexical diversity) → exact dedup (md5
     * token-set, keep min id) → span near-dup drop (≥20 shared
     * consecutive tokens drops the higher id) → greedy token-budget
@@ -276,8 +277,8 @@ object PipelineQueries {
   }
 
   /** q106's duplicate-cluster size histogram over an arbitrary docs
-    * frame — shared with `CompositionScaleProbe` (same rule as
-    * [[curationPipeline]]). */
+    * frame — shared with the round-10 ×m composition probe
+    * (NOTES_r10.md; same rule as [[curationPipeline]]). */
   private[graft] def clusterHistogram(docs: DataFrame): DataFrame = {
     val pairs = Dedup.sharedSpans(docs, "doc_id", "text",
         n = 4, minSpan = 20)
@@ -623,11 +624,11 @@ object PipelineQueries {
         .orderBy(col("id1"), col("id2"))
     }),
 
-    // (the 64-bit SimHash q29 was demoted to a SimhashProbe-only
-    // narrow-baseline in round 7: its 16-bit bands admit ~n²/2¹⁶
+    // (the 64-bit SimHash q29 was demoted to an unregistered narrow
+    // baseline in round 7, NOTES_r7.md: its 16-bit bands admit ~n²/2¹⁶
     // accidental candidates — measured 3.1× the wide path's at n=500 —
     // so the registered SimHash operator of record is q47's 128-bit
-    // scheme. Dedup.simhashNearDups stays for the probe + specs.)
+    // scheme. Dedup.simhashNearDups stays for the specs.)
 
     // X1 — embedding-cosine near-dup, blocked by label (block-join, not
     // cartesian): the single most-similar pair per label block.
@@ -1659,7 +1660,7 @@ object PipelineQueries {
       // driver-enforced recall floors (r10 verdict item 1): a recall
       // collapse in any approximate path turns this row err-red in
       // the driver record instead of silently shrinking a rows-only
-      // count. Measured (AnnRecallPanelProbe, 3 seeds × 3 sfs,
+      // count. Measured (NOTES_r11.md, 3 seeds × 3 sfs,
       // PLANS.md round-11/12/13): IVF nProbe=5 54–62%, LSH 96–98%;
       // PQ flat k=16 18–28%, IVF-PQ nProbe=8 16–29%, and residual
       // IVF-PQ nProbe=8 12.6–24.6% (the sf0.1 panel is the hard end —
@@ -2196,7 +2197,7 @@ object PipelineQueries {
     // oracle replays the whole read off the index's and centroids' own
     // parquet (the q90 mechanism), so the gate pins the monitoring
     // arithmetic an operator team would page on. The recenter TRIGGER
-    // composed from these gauges is probed in IvfDriftProbe and spec'd
+    // composed from these gauges is probed in NOTES_r11/r12.md and spec'd
     // (relative-to-baseline, so no absolute threshold to gate here).
     "q123_ivf_drift_stats" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
@@ -2924,8 +2925,8 @@ object PipelineQueries {
     }),
 
     // X2 — the drift-guarded IVF maintenance loop END-TO-END under the
-    // gate (r11 verdict item 8; the IvfDriftProbe scenario, driver-
-    // enforced): build → benign recrawl wave (refresh only, require NO
+    // gate (r11 verdict item 8; the drift scenario of NOTES_r11/r12.md,
+    // driver-enforced): build → benign recrawl wave (refresh only, require NO
     // recenter) → hard-drift wave (gauges breach the fit-time baseline,
     // require recenter + rebuild) → probe the rebuilt index with every
     // cell probed against exact brute force on the final snapshot
@@ -2967,7 +2968,7 @@ object PipelineQueries {
         idxPath, cents0, snap1, changes1, "vec_id", "embedding",
         baseline, k, prevStats = Some(stats0))
       require(!rec1, "q136: benign wave must not recenter")
-      // wave 2 — a third of the corpus drifts hard (the IvfDriftProbe
+      // wave 2 — a third of the corpus drifts hard (the NOTES_r11/r12.md
       // direction at full magnitude): displacement gauge breaches
       val snap2 = snap1.select(col("vec_id"),
         when(col("vec_id") % 3 === 0,
@@ -4566,7 +4567,7 @@ object PipelineQueries {
       // the 1/10 collapse alarm; aggregating the same all-cells
       // measurement over the %29 panel shrinks the variance and lifts
       // the floor to a measured-band alarm (margins on record in
-      // RecallFloorProbe / PLANS.md).
+      // NOTES_r17/r18.md / PLANS.md).
       val panel = graft.engine.Caching.cached(
         e.filter(col("vec_id") % 29 === 1)
           .select(col("vec_id").as("qid"),
@@ -5201,7 +5202,7 @@ object PipelineQueries {
     // argmin, the probed-cell union and the left-semi candidate
     // restriction all execute under the hash. The recall trade of a
     // partial probe is spec-pinned (MaxSimSpec) and measured
-    // (MaxSimRecallProbe); this row pins the pruned MACHINERY.
+    // (NOTES_r17/r18.md); this row pins the pruned MACHINERY.
     "q199_late_interaction_pruned" -> ((s, dir) => {
       import s.implicits._
       val d = Tables(s, dir, "documents")

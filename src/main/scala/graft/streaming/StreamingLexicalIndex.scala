@@ -42,7 +42,7 @@ import graft.operators.TextAnalysis
   * listing that grows LINEARLY with accumulated generations —
   * measured 3.3 ms at 10², 16.6 ms at 10³, 136 ms at 10⁴ sealed
   * generations, while a vacuum walk is sub-second even at 10⁴
-  * (ManifestScaleProbe; PLANS.md round-15 table). Left unvacuumed, a
+  * (PLANS.md round-15 table, NOTES_r15.md). Left unvacuumed, a
   * streaming loop reaches 10⁴ generations in ~3k waves and every
   * probe pays the 136 ms listing tax forever. So both loops vacuum
   * every `vacuumEvery` waves, keeping `keepGenerations` (the

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * grouping); `ordCol` must be long-castable and `rowTieBreak`
   * string-castable — the same column classes q84 merges on.
   *
-  * SIZING THE `delay` DIAL (measured, `tools/SettleCadenceProbe` —
+  * SIZING THE `delay` DIAL (measured, NOTES_r18.md —
   * the settle stage composed with the real index wave loop): a winner
   * only evicts when the watermark passes its event time + delay, and
   * the watermark itself lags max event time by delay plus one batch,

@@ -484,7 +484,7 @@ object StreamingVectorIndex {
 
   /** Explicit-schema read of a model generation — the centroid store
     * has one fixed shape, and schema inference on it was a hidden
-    * footer-read job every wave (WaveJobProbe). */
+    * footer-read job every wave (NOTES_r16.md). */
   private def readCents(spark: SparkSession, root: String,
                         gen: Int): DataFrame =
     spark.read.schema("centroid_id BIGINT, cvec ARRAY<DOUBLE>")

@@ -7,10 +7,10 @@ import graft.engine.Tables
 import graft.operators.TextAnalysis
 
 /** Empirical ×m scaling probe for the LEXICAL index family (r10
-  * verdict item 6) — the vector side's AnnScaleProbe applied to
-  * q114/q115/q122: corpus inflated ×m with tagged tokens
-  * ([[CompositionScaleProbe.inflateWithSource]] — vocabulary grows
-  * ×m, the df aggregate's worst case), written as a SEGMENTED index
+  * verdict item 6) — the vector side's ×m scaling probe (PLANS.md)
+  * applied to q114/q115/q122: corpus inflated ×m with tagged tokens
+  * ([[inflateWithSource]] — vocabulary grows ×m, the df aggregate's
+  * worst case), written as a SEGMENTED index
   * with S ∈ {1,4,16} segments; each segment ≥ 1 also tombstones ~2%
   * of the IMMEDIATELY PREVIOUS segment's keys (S−1 tombstone files
   * total — per-neighbor deletions, not an all-earlier fan-out), then:
@@ -27,6 +27,20 @@ import graft.operators.TextAnalysis
   * Usage: runMain graft.tools.LexicalScaleProbe [sfDir] [mults] [segs]
   */
 object LexicalScaleProbe {
+
+  /** The docs frame stacked ×m with per-copy token tags, carrying
+    * `source` through: copies keep their original source, so the
+    * per-source aggregate keys don't multiply with m. */
+  private def inflateWithSource(docs: DataFrame, m: Int): DataFrame =
+    (0 until m).map { i =>
+      docs.select(
+        (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
+        col("source"),
+        concat_ws(" ",
+          transform(split(coalesce(col("text"), lit("")), " "),
+            t => concat(t, lit(s"_$i")))).as("text"))
+    }.reduce(_.unionByName(_))
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mults = (if (args.length > 1) args(1) else "1,10,20")
@@ -60,7 +74,7 @@ object LexicalScaleProbe {
 
     for (m <- mults) {
       val corpus = graft.engine.Caching.cached(
-        CompositionScaleProbe.inflateWithSource(docs, m)
+        inflateWithSource(docs, m)
           .select(col("doc_id"), coalesce(col("text"), lit("")).as("text")))
       corpus.count()
       for (s <- segCounts) {

@@ -110,13 +110,12 @@ class ArtifactMemoSpec extends SparkSpec {
       "every LRU / concurrent map left is an allowlisted non-memo map") {
     // the maps that hold no derived value: per-index seal locks, the
     // conditional-put adapter instances and the conf each came from,
-    // the abfs once-per-account warning set, and a probe's job table
+    // and the abfs once-per-account warning set
     val allowed = Set(
       "operators/SegmentManifest.scala: locks",
       "operators/SegmentManifest.scala: condPutInstances",
       "operators/SegmentManifest.scala: condPutConfSeen",
-      "operators/SegmentManifest.scala: abfsWarned",
-      "tools/WaveJobProbe.scala: jobs")
+      "operators/SegmentManifest.scala: abfsWarned")
     val mapUse =
       "removeEldestEntry|LinkedHashMap|ConcurrentHashMap|TrieMap".r
     val valName = """val\s+(\w+)""".r
