@@ -15,8 +15,8 @@ import graft.functions.VectorFns
   *     merge of k·partitions rows — no global sort). This is the
   *     baseline AND the honest default: linear, embarrassingly
   *     parallel, no recall loss.
-  *   - [[ivfTopK]] IVF-style ANN: vectors are pre-assigned to their
-  *     nearest of C centroids (the "inverted file"); a query probes only
+  *   - [[ivfTopKCosine]] IVF-style ANN: vectors are pre-assigned to
+  *     their nearest of C centroids (the "inverted file"); a query probes only
   *     the nProbe nearest centroid lists, cutting the scanned fraction
   *     to ~nProbe/C at the cost of recall. At 100 TB the assignment is a
   *     one-off batch job and the probe is a partition-pruned read when
@@ -332,19 +332,6 @@ object Similarity {
     topK(candidates, queryVec, idCol, vecCol, k)
   }
 
-  /** Inverted-file assignment: each vector → nearest centroid by L2.
-    * Broadcast the (small) centroid table; `min_by` picks the argmin
-    * without a window. */
-  def ivfAssign(vectors: DataFrame, cents: DataFrame, idCol: String,
-                vecCol: String): DataFrame =
-    // same projection discipline as [[ivfAssignCosine]]
-    vectors.select(col(idCol),
-        VectorFns.toDouble(col(vecCol)).as("_vd"))
-      .crossJoin(broadcast(cents))
-      .withColumn("d2", VectorFns.sqDist(col("_vd"), col("cvec")))
-      .groupBy(col(idCol))
-      .agg(min_by(col("centroid_id"), col("d2")).as("centroid_id"))
-
   /** IVF probe under COSINE for a PANEL of queries: the corpus is
     * assigned ONCE; each query ranks centroids and scans only its
     * nProbe lists; a per-qid window keeps k. This is the batch-ANN
@@ -379,7 +366,7 @@ object Similarity {
       .select(col("qid"), col(idCol), col("sim"))
   }
 
-  /** LSH-bucketed ANN — the ml-native alternative to [[ivfTopK]]:
+  /** LSH-bucketed ANN — the ml-native alternative to [[ivfTopKCosine]]:
     * random-hyperplane bucketing via `BucketedRandomProjectionLSH`
     * (seeded → deterministic), probe = `approxNearestNeighbors` which
     * scans only colliding buckets. Distance is Euclidean (the ml LSH
@@ -451,17 +438,6 @@ object Similarity {
       .filter(col("rn") <= k)
       .select(col("qid"), col(idCol), round(col("dist"), 4).as("dist"))
   }
-
-  /** Materialize the inverted file: vectors written PARTITIONED BY
-    * centroid list. This is the 100 TB layout the ivfTopK Scaladoc
-    * promises: once the index is on disk, a probe opens only the
-    * nProbe/C partition directories — IO scales with the probe
-    * fraction, not the corpus. */
-  def ivfWriteIndex(vectors: DataFrame, cents: DataFrame, idCol: String,
-                    vecCol: String, path: String): Unit =
-    vectors.join(ivfAssign(vectors, cents, idCol, vecCol), Seq(idCol))
-      .repartition(col("centroid_id")) // one compact file per cell
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
 
   /** Materialize the COSINE inverted file (the learned-centroid
     * production layout): vectors written partitioned by their
@@ -792,27 +768,6 @@ object Similarity {
           .as("qsim"))
       .orderBy(col("qsim").desc, col(idCol))
       .limit(k)
-  }
-
-  /** Probe a materialized L2 index. The probe list is nProbe centroid
-    * ids — a driver-side scalar fetch of the (tiny, broadcast-sized)
-    * centroid ranking, NOT a data-path collect — turned into a literal
-    * `isin` so the scan prunes PARTITION DIRECTORIES (shows as
-    * `PartitionFilters` in the plan), never reading the other lists'
-    * files. Exact top-k on the surviving candidates. */
-  def ivfProbePruned(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, cents: DataFrame,
-                     queryVec: DataFrame, idCol: String, vecCol: String,
-                     k: Int, nProbe: Int): DataFrame = {
-    val probed = cents.crossJoin(broadcast(queryVec))
-      .withColumn("d2", VectorFns.sqDist(col("cvec"), col("qvec")))
-      .orderBy(col("d2"), col("centroid_id"))
-      .limit(nProbe)
-      .select(col("centroid_id")).collect().map(_.getLong(0))
-    val idx = spark.read.parquet(indexPath)
-      .filter(col("centroid_id")
-        .isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(probed): _*))
-    topK(idx, queryVec, idCol, vecCol, k)
   }
 
   /** CELL-INCREMENTAL refresh of a quantized cosine inverted file —
@@ -1586,22 +1541,5 @@ object Similarity {
       .select(col(idCol)).distinct()
     maxSimTopK(dv.join(cands, Seq(idCol), "left_semi"),
       queryVecs, idCol, k)
-  }
-
-  /** IVF probe: query's nProbe nearest centroids → candidate vectors
-    * from those lists only → exact cosine top-k on the candidates. */
-  def ivfTopK(vectors: DataFrame, cents: DataFrame, queryVec: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nProbe: Int): DataFrame = {
-    val probed = cents.crossJoin(broadcast(queryVec))
-      .withColumn("d2", VectorFns.sqDist(col("cvec"), col("qvec")))
-      .orderBy(col("d2"), col("centroid_id"))
-      .limit(nProbe)
-      .select(col("centroid_id"))
-    val assignment = ivfAssign(vectors, cents, idCol, vecCol)
-    val candidates = vectors
-      .join(assignment, Seq(idCol))
-      .join(broadcast(probed), Seq("centroid_id"))
-    topK(candidates, queryVec, idCol, vecCol, k)
   }
 }

@@ -552,8 +552,7 @@ object TextAnalysis {
     // count — exact in both engines.
     val stats = tf.select(col(idCol), col("dl")).distinct()
       .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    val qterms = queries.select(col("qid"),
-      explode(array_distinct(tokens(col("qtext")))).as("term"))
+    val qterms = queryTerms(queries)
     // panel pruning BEFORE the corpus-wide dfreq join: Catalyst will
     // not reorder the inner joins itself, and joining every posting
     // with its df first shuffles the full |doc,term| relation only to
@@ -602,7 +601,6 @@ object TextAnalysis {
                 fields: Seq[(String, Double, Double)],
                 queries: DataFrame, k: Int,
                 k1: Double = 1.2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(fields.nonEmpty, "bm25fTopK: no fields")
     require(fields.map(_._1).distinct.size == fields.size,
       "bm25fTopK: duplicate field column")
@@ -629,8 +627,7 @@ object TextAnalysis {
       .groupBy(col("fld")).agg(avg(col("dl")).as("avgdl_f"))
     val ndocs = tfAll.select(col(idCol)).distinct()
       .agg(count(lit(1)).as("n_docs"))
-    val qterms = queries.select(col("qid"),
-      explode(array_distinct(tokens(col("qtext")))).as("term"))
+    val qterms = queryTerms(queries)
     // per-field weight / b as chained-when literals on the field tag
     val wcol = fields.zipWithIndex.foldLeft(lit(Double.NaN)) {
       case (acc, ((_, w, _), fi)) =>
@@ -648,23 +645,7 @@ object TextAnalysis {
         (lit(1.0) - bcol + bcol * col("dl") / col("avgdl_f")))
       .groupBy(col(idCol), col("term"))
       .agg(sum(col("wtf")).as("ptf"))
-    // document-level df: one row per (doc, term-in-any-field) above
-    val dfq = ptf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col(idCol))
-    ptf.join(broadcast(qterms), "term")
-      .join(broadcast(dfq), "term")
-      .crossJoin(broadcast(ndocs))
-      .withColumn("contrib_fp", floor(
-        (log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
-            (col("df") + 0.5)) *
-          col("ptf") / (col("ptf") + lit(k1)))
-          * lit(1e7) + lit(0.5)).cast("long"))
-      .groupBy(col("qid"), col(idCol))
-      .agg(round(sum(col("contrib_fp")) / lit(1e7), 4).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col(idCol), col("score"))
+    bm25fScore(ptf, qterms, ndocs, idCol, k, k1)
   }
 
   /** BM25F over WRITTEN per-field indexes — [[bm25fTopK]]'s
@@ -693,16 +674,12 @@ object TextAnalysis {
                         fieldPaths: Seq[(String, Double, Double)],
                         queries: DataFrame, k: Int, idCol: String,
                         k1: Double = 1.2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(fieldPaths.nonEmpty, "bm25fProbeIndexed: no fields")
     require(fieldPaths.forall { case (_, w, bf) =>
       w > 0 && bf >= 0 && bf <= 1 },
       "bm25fProbeIndexed: weights must be > 0 and b_f in [0, 1]")
-    val qterms = queries.select(col("qid"),
-      explode(array_distinct(tokens(col("qtext")))).as("term"))
-    // panel-sized collect: the pushed-IN literal for every field scan
-    val terms = qterms.select(col("term")).distinct()
-      .collect().map(_.getString(0))
+    // panel-sized: the pushed-IN literal for every field scan
+    val terms = panelTerms(queries)
     val perField = fieldPaths.zipWithIndex.map {
       case ((path, w, bf), fi) =>
         // one pin PER FIELD INDEX — each field is its own segmented
@@ -724,34 +701,35 @@ object TextAnalysis {
     val ptf = perField.map(_._1).reduce(_ unionByName _)
       .groupBy(col(idCol), col("term"))
       .agg(sum(col("wtf")).as("ptf"))
-    val dfq = ptf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val nd = perField.head._2.select(col("n_docs"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col(idCol))
-    ptf.join(broadcast(qterms), "term")
-      .join(broadcast(dfq), "term")
-      .crossJoin(broadcast(nd))
-      .withColumn("contrib_fp", floor(
-        (log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
-            (col("df") + 0.5)) *
-          col("ptf") / (col("ptf") + lit(k1)))
-          * lit(1e7) + lit(0.5)).cast("long"))
-      .groupBy(col("qid"), col(idCol))
-      .agg(round(sum(col("contrib_fp")) / lit(1e7), 4).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col(idCol), col("score"))
+    bm25fScore(ptf, queryTerms(queries), perField.head._2.select(col("n_docs")),
+      idCol, k, k1)
   }
 
-  /** THE per-(doc, term) frequency relation every BM25 surface builds
-    * on — scan path, monolithic index write, segment append. One
-    * definition: the tokenize/dl/tf derivation decides index≡scan
-    * parity, and three hand-copies of it would let them drift. Null
-    * text coalesces to "" (one empty-string token) so every doc
-    * reaches the frame and the corpus stats — split(NULL) would
-    * silently drop the doc from n_docs/avgdl, diverging from a SQL
-    * oracle that counts it. Returned frame is [[cached]] (every
-    * caller consumes it at least twice). */
+  /** THE BM25F scoring tail of [[bm25fTopK]] and [[bm25fProbeIndexed]]:
+    * document-level df over the pseudo-frequency relation `ptf`
+    * (idCol, term, ptf) — one row per (doc, term-in-any-field) — then
+    * [[idf]] × saturation per query term, ranked by [[topKPerQuery]].
+    * `nDocs` is one row (n_docs). */
+  private def bm25fScore(ptf: DataFrame, qterms: DataFrame,
+                         nDocs: DataFrame, idCol: String, k: Int,
+                         k1: Double): DataFrame = {
+    val dfq = ptf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    topKPerQuery(ptf.join(broadcast(qterms), "term")
+      .join(broadcast(dfq), "term")
+      .crossJoin(broadcast(nDocs))
+      .withColumn("contrib_fp", floor(
+        (idf * col("ptf") / (col("ptf") + lit(k1)))
+          * lit(1e7) + lit(0.5)).cast("long")), idCol, k)
+  }
+
+  /** The per-(doc, term) frequency relation of the scan path
+    * ([[bm25TopK]]); [[tfPosFrame]] is its positional twin for the
+    * segmented index, and the two tokenize/dl/tf derivations decide
+    * index≡scan parity. Null text coalesces to "" (one empty-string
+    * token) so every doc reaches the frame and the corpus stats —
+    * split(NULL) would silently drop the doc from n_docs/avgdl,
+    * diverging from a SQL oracle that counts it. Returned frame is
+    * [[cached]] (the scan path consumes it three times). */
   private def tfFrame(docs: DataFrame, idCol: String,
                       textCol: String): DataFrame = {
     val toks = docs.select(col(idCol),
@@ -815,79 +793,66 @@ object TextAnalysis {
     if (fitsOnePartition(src)) df.coalesce(1)
     else df.repartitionByRange(col("term"))
 
+  /** THE BM25 idf — Lucene's `ln(1 + (N − df + 0.5)/(df + 0.5))` over
+    * columns (n_docs, df) — shared by [[contribFp]], [[bm25fScore]]
+    * and [[moreLikeThis]]'s term selection. */
+  private def idf: Column =
+    log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
+
   /** THE one fixed-point BM25 term-contribution expression — over
     * columns (tf, df, dl, n_docs, avgdl) — shared by every scoring
     * path ([[bm25Score]] and [[booleanSearch]]) so the arithmetic
     * the q97/q114/q115 gates pin can never fork. */
   private def contribFp(k1: Double, b: Double,
                         boost: Column = lit(1.0)): Column = floor(
-    (log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
-        (col("df") + 0.5)) *
+    (idf *
       (col("tf") * (k1 + 1)) /
       (col("tf") +
         lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
       * boost * lit(1e7) + lit(0.5)).cast("long")
 
   /** THE one BM25 scoring definition — shared by the corpus-scan path
-    * ([[bm25TopK]]) and the materialized-index probe
-    * ([[bm25ProbeIndex]]), so the two can never diverge on the
-    * arithmetic the q97/q114 gates pin. `postings` carries
+    * ([[bm25TopK]]) and the segmented-index probe
+    * ([[bm25ProbeSegmented]]), so the two can never diverge on the
+    * arithmetic the q97/q114/q115 gates pin. `postings` carries
     * (term, idCol, tf, dl, df); `stats` one row (n_docs, avgdl). */
   private def bm25Score(postings: DataFrame, qterms: DataFrame,
                         stats: DataFrame, idCol: String, k: Int,
-                        k1: Double, b: Double): DataFrame = {
+                        k1: Double, b: Double): DataFrame =
+    topKPerQuery(postings.join(broadcast(qterms), "term")
+      .crossJoin(broadcast(stats))
+      .withColumn("contrib_fp", contribFp(k1, b)), idCol, k)
+
+  /** THE per-query ranking tail of every panel scorer: the fixed-point
+    * contributions `contrib_fp` summed per (qid, idCol) as integers,
+    * rounded to 4, top `k` per qid by (score DESC, id). */
+  private def topKPerQuery(scored: DataFrame, idCol: String,
+                           k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col(idCol))
-    postings.join(broadcast(qterms), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib_fp", contribFp(k1, b))
-      .groupBy(col("qid"), col(idCol))
+    scored.groupBy(col("qid"), col(idCol))
       .agg(round(sum(col("contrib_fp")) / lit(1e7), 4).as("score"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("qid"), col(idCol), col("score"))
   }
 
-  /** Materialize the lexical INVERTED INDEX — the sparse-retrieval
-    * analog of the quantized IVF file: at corpus scale a BM25 query
-    * must probe a posting-list layout, never re-tokenize and re-scan
-    * the corpus per panel. Layout under `path`:
-    *
-    *   - `postings/`: (term, id, tf, dl, df) range-partitioned and
-    *     sorted by term, so every parquet file/row-group carries tight
-    *     term min/max stats and a term predicate prunes the files the
-    *     probe never needs (the PushedFilters analog of the IVF cell
-    *     directories). df is DENORMALIZED onto each posting — +8
-    *     bytes/row buys the probe one fewer corpus-sized join.
-    *   - `stats/`: one row (n_docs, avgdl) — exact integer-sum
-    *     average, the same derivation as [[bm25TopK]].
-    */
-  def bm25WriteIndex(docs: DataFrame, idCol: String, textCol: String,
-                     path: String): Unit = {
-    // three consumers (the dfreq aggregate, the join probe side, the
-    // stats pass) — without materialization each re-tokenizes the
-    // corpus from source (scope-owned: the Bench/Verify/gate scopes
-    // release it; bare callers keep the historical cache() contract)
-    val tf = graft.engine.Caching.cached(tfFrame(docs, idCol, textCol))
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    tf.join(dfreq, "term")
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term"), col(idCol))
-      .write.mode("overwrite").parquet(s"$path/postings")
-    tf.select(col(idCol), col("dl")).distinct()
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-  }
+  /** A (qid, qtext) panel as (qid, term) rows, one per distinct query
+    * term. */
+  private def queryTerms(queries: DataFrame): DataFrame =
+    queries.select(col("qid"),
+      explode(array_distinct(tokens(col("qtext")))).as("term"))
 
   /** SEGMENTED lexical index — the INCREMENTAL maintenance story for
     * BM25 (the Lucene segment model, relationally): corpus batches
     * append as immutable segments, deletions and modifications
     * tombstone the old rows, and a modification re-appends under a new
     * segment. Nothing is rewritten in place — the 100 TB-friendly
-    * property the monolithic [[bm25WriteIndex]] lacks (a posting
-    * layout partitioned by TERM scatters any per-doc update across
-    * every partition; segments make updates append-only).
+    * property a monolithic term-partitioned layout lacks (it scatters
+    * any per-doc update across every partition; segments make updates
+    * append-only). A one-segment index is the read-only layout: the
+    * q114 fixture is the whole corpus appended as segment 0.
     *
     * Global scoring state is reconstructed at probe time without any
     * full-index work: df for the PANEL's terms is counted from the
@@ -1162,14 +1127,11 @@ object TextAnalysis {
                          b: Double = 0.75,
                          asOfSegment: Option[Int] = None,
                          asOfGeneration: Option[Int] = None): DataFrame = {
-    val qterms = queries.select(col("qid"),
-      explode(array_distinct(tokens(col("qtext")))).as("term"))
-    val terms = panelTerms(queries)
     val (live, stats) = liveScoring(spark,
-      pinSeg(spark, path, asOfGeneration), idCol, terms, asOfSegment)
-    val dfq = live.groupBy(col("term"))
-      .agg(count_distinct(col(idCol)).as("df"))
-    bm25Score(live.join(dfq, "term"), qterms, stats, idCol, k, k1, b)
+      pinSeg(spark, path, asOfGeneration), idCol, panelTerms(queries),
+      asOfSegment)
+    bm25Score(live.join(liveDf(live, idCol), "term"), queryTerms(queries),
+      stats, idCol, k, k1, b)
   }
 
   /** The panel's distinct query terms, flattened on the driver: over a
@@ -1180,40 +1142,76 @@ object TextAnalysis {
       .collect().flatMap(r => Option(r.getSeq[String](0)).getOrElse(Nil))
       .distinct
 
+  /** A term set as the `term IN` predicate the term-sorted postings
+    * scan pushes down. */
+  private def termIn(terms: Iterable[String]): Column =
+    col("term").isin(terms.toSeq: _*)
+
+  /** THE as-of cut (the q161 time-travel rule): drop every row of a
+    * postings, tombstone or segstats read with seg > g. seg is the
+    * partition column (or the manifest entry's literal) on all three
+    * layouts, so the cut prunes whole segments, and an as-of read
+    * replays generation g bit-for-bit — valid back to the last
+    * compaction. */
+  private def asOf(asOfSegment: Option[Int])(df: DataFrame): DataFrame =
+    asOfSegment match {
+      case Some(g) => df.filter(col("seg").cast("int") <= g)
+      case None => df
+    }
+
+  /** THE live-postings read of a SEGMENTED index, shared by every
+    * lexical probe and the full merge: the [[asOf]] cut on postings
+    * and tombstones, the term predicate `termPred` (pushed to the
+    * term-sorted scan), then the segment-scoped
+    * [[liveAfterTombstones]] kill rule → `cols`. One definition, so
+    * every probe sees exactly the live set the BM25 probe scores,
+    * through the same pinned-generation snapshot ([[pinSeg]]). */
+  private def livePostings(spark: org.apache.spark.sql.SparkSession,
+                           snap: SegSnapshot, idCol: String,
+                           cols: Seq[String], termPred: Column,
+                           asOfSegment: Option[Int] = None): DataFrame =
+    liveAfterTombstones(
+      asOf(asOfSegment)(readLayout(spark, snap, "postings"))
+        .filter(termPred)
+        .select((cols :+ "seg").map(col): _*),
+      asOf(asOfSegment)(readTombstones(spark, snap, idCol)), idCol)
+      .select(cols.map(col): _*)
+
+  /** The positional probes' live columns: (id, term, positions) —
+    * every segment row carries its positions ([[tfPosFrame]]). */
+  private def positional(idCol: String): Seq[String] =
+    Seq(idCol, "term", "positions")
+
+  /** Per matching document of positional live postings: the distinct
+    * matched terms and the total occurrences ([[termPrefixSearch]] and
+    * the dictionary-expansion probes). */
+  private def termOccurrences(posts: DataFrame, idCol: String): DataFrame =
+    posts.groupBy(col(idCol))
+      .agg(count_distinct(col("term")).as("n_terms"),
+        sum(size(col("positions")).cast("long")).as("n_occurrences"))
+
+  /** Live document frequency per term of a live-postings frame. */
+  private def liveDf(live: DataFrame, idCol: String): DataFrame =
+    live.groupBy(col("term")).agg(count_distinct(col(idCol)).as("df"))
+
   /** Live scoring rows + exact global stats of a SEGMENTED index for
     * a bounded term set — the shared read path of
-    * [[bm25ProbeSegmented]] and [[booleanSearch]]: pushed `term IN`
-    * posting scan → segment-scoped tombstone kill rule →
+    * [[bm25ProbeSegmented]] and [[booleanSearch]]: [[livePostings]]
     * (id, dl, term, tf), plus the one-row (n_docs, avgdl) frame
     * derived from per-segment exact integer partials minus the
-    * tombstoned rows' (bit-identical to the from-scratch scan — the
-    * q115 contract). The live frame is cached: both callers
-    * re-consume it (df derivation + scoring). */
+    * tombstoned rows' under the same [[asOf]] cut (bit-identical to
+    * the from-scratch scan — the q115 contract). The live frame is
+    * cached: both callers re-consume it (df derivation + scoring). */
   private def liveScoring(spark: org.apache.spark.sql.SparkSession,
                           snap: SegSnapshot, idCol: String,
                           terms: Array[String],
                           asOfSegment: Option[Int] = None)
       : (DataFrame, DataFrame) = {
-    // as-of: the generation cut applies uniformly to postings,
-    // tombstones, and stats partials — seg is the partition column
-    // (or the manifest entry's literal) on all three layouts, so the
-    // cut prunes whole segments
-    def cut(df: DataFrame): DataFrame = asOfSegment match {
-      case Some(g) => df.filter(col("seg").cast("int") <= g)
-      case None => df
-    }
-    val tombs = cut(readTombstones(spark, snap, idCol))
-    val live = cached(liveAfterTombstones(
-      cut(readLayout(spark, snap, "postings"))
-        .filter(col("term").isin(
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(terms): _*))
-        .select(col(idCol), col("dl"), col("term"), col("tf"),
-          col("seg")),
-      tombs, idCol)
-      .select(col(idCol), col("dl"), col("term"), col("tf")))
-    val seg = cut(readLayout(spark, snap, "segstats"))
+    val live = cached(livePostings(spark, snap, idCol,
+      Seq(idCol, "dl", "term", "tf"), termIn(terms), asOfSegment))
+    val seg = asOf(asOfSegment)(readLayout(spark, snap, "segstats"))
       .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
-    val tomb = tombs.agg(
+    val tomb = asOf(asOfSegment)(readTombstones(spark, snap, idCol)).agg(
       coalesce(count(lit(1)), lit(0L)).as("tn"),
       coalesce(sum(col("dl")), lit(0L)).as("ts"))
     val stats = seg.crossJoin(tomb)
@@ -1381,9 +1379,7 @@ object TextAnalysis {
       : DataFrame = {
     val positive = mustD ++ shouldD
     def inSet(set: Seq[String]): Column =
-      if (set.isEmpty) lit(false)
-      else col("term").isin(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(set.toArray): _*)
+      if (set.isEmpty) lit(false) else termIn(set)
     // Lucene's per-term boost: the whole term contribution scales
     // before the ONE fixed-point floor, so boosted scoring stays
     // addend-order-deterministic; a query-sized chained-when literal,
@@ -1391,9 +1387,7 @@ object TextAnalysis {
     val boostCol = boosts.foldLeft(lit(1.0)) {
       case (acc, (t, w)) => when(col("term") === t, lit(w)).otherwise(acc)
     }
-    val dfq = live.filter(inSet(positive))
-      .groupBy(col("term"))
-      .agg(count_distinct(col(idCol)).as("df"))
+    val dfq = liveDf(live.filter(inSet(positive)), idCol)
     // left join: mustNot rows carry no df, and their contribution is
     // masked to 0 below before the null could propagate
     val scored = live.join(broadcast(dfq), Seq("term"), "left")
@@ -1674,8 +1668,7 @@ object TextAnalysis {
     import spark.implicits._
     val cmap = flat.toDF("term", "clause")
     // BM25 df is per TERM (corpus-level), shared across clauses
-    val dfq = live.groupBy(col("term"))
-      .agg(count_distinct(col(idCol)).as("df"))
+    val dfq = liveDf(live, idCol)
     val perClause = live.join(broadcast(dfq), "term")
       .join(broadcast(cmap), "term")
       .crossJoin(broadcast(stats))
@@ -1721,8 +1714,7 @@ object TextAnalysis {
         s"[1, $maxDocs] — the explanation is a bounded-panel primitive")
     val (live, stats) =
       liveScoring(spark, pinSeg(spark, path), idCol, termsD.toArray)
-    val dfq = live.groupBy(col("term"))
-      .agg(count_distinct(col(idCol)).as("df"))
+    val dfq = liveDf(live, idCol)
     live.filter(col(idCol).isin(scala.collection.immutable.ArraySeq
         .unsafeWrapArray(docIds.toArray): _*))
       .join(broadcast(dfq), "term")
@@ -1770,16 +1762,13 @@ object TextAnalysis {
       .agg(max(lit(0.0)).as("score")).limit(0)
     if (seedTerms.isEmpty) empty
     else {
-      val dfq = live.groupBy(col("term"))
-        .agg(count_distinct(col(idCol)).as("df"))
+      val dfq = liveDf(live, idCol)
       // selection rank: seed tf × idf, the same fixed-point discipline
       // as contribFp so the cut is platform-deterministic
       val selected = seedTf.join(dfq, "term")
         .crossJoin(broadcast(stats))
         .withColumn("rank_fp", floor(
-          col("stf") * log(lit(1.0) +
-            (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
-            * lit(1e7) + lit(0.5)).cast("long"))
+          col("stf") * idf * lit(1e7) + lit(0.5)).cast("long"))
         .orderBy(col("rank_fp").desc, col("term"))
         .limit(maxQueryTerms)
         .select(col("term")).collect().map(_.getString(0)).toSeq
@@ -1826,14 +1815,11 @@ object TextAnalysis {
     val segsBefore = base.segs("postings").size.toLong
     val gen = base.gen + 1
     val rev = SegmentManifest.revDir(gen)
-    // ONE live rule shared with the probe (q122's contract is that the
+    // ONE live read shared with the probe (q122's contract is that the
     // merge is invisible to scoring — a drifted copy of the kill rule
     // would break parity silently)
-    val live = cached(liveAfterTombstones(
-      readLayout(spark, snap, "postings"),
-      readTombstones(spark, snap, idCol), idCol)
-      .select(col(idCol), col("dl"), col("term"), col("tf"),
-        col("positions")))
+    val live = cached(livePostings(spark, snap, idCol,
+      Seq(idCol, "dl", "term", "tf", "positions"), lit(true)))
     live.repartitionByRange(col("term"))
       .sortWithinPartitions(col("term"), col(idCol))
       .write.mode("overwrite")
@@ -1856,11 +1842,8 @@ object TextAnalysis {
         sum(col("dl")).cast("long").as("sum_dl"))
       .collect()(0)
     val nLive = statsRow.getLong(0)
-    val sumDl = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    locally { import spark.implicits._
-      Seq((nLive, sumDl)).toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/$rev/segstats/seg=0") }
+    writeSegStats(spark, path, s"$rev/segstats/seg=0", nLive,
+      Some(if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)))
     // the atomic commit: every layout points at the merged rev dir,
     // the tombstone set clears (the merge's scope provably covers
     // every segment a tombstone can reach)
@@ -2105,34 +2088,6 @@ object TextAnalysis {
         s"segmented index at ${snap.path}: generation " +
           s"${snap.manifest.gen} has no $layout members"))
 
-  /** Live positional postings of a SEGMENTED index under a pushed
-    * term predicate — the shared read path of the phrase, proximity
-    * and prefix probes: scan-filtered postings ([[bm25AppendSegment]]
-    * carries positions in every segment row) → the segment-scoped
-    * tombstone kill rule → (id, term, positions). One definition so
-    * all three probes see exactly the live set the BM25 probe scores,
-    * through the same pinned-generation snapshot ([[pinSeg]]). */
-  private def livePositional(spark: org.apache.spark.sql.SparkSession,
-                             snap: SegSnapshot, idCol: String,
-                             termPred: Column,
-                             asOfSegment: Option[Int] = None)
-      : DataFrame = {
-    // the q161 time-travel cut, positional flavor: the generation
-    // bound prunes whole segments on postings and tombstones alike,
-    // so an as-of phrase/proximity/prefix probe replays generation-g
-    // results bit-for-bit — valid back to the last compaction
-    def cut(df: DataFrame): DataFrame = asOfSegment match {
-      case Some(g) => df.filter(col("seg").cast("int") <= g)
-      case None => df
-    }
-    liveAfterTombstones(
-      cut(readLayout(spark, snap, "postings"))
-        .filter(termPred)
-        .select(col(idCol), col("term"), col("positions"), col("seg")),
-      cut(readTombstones(spark, snap, idCol)), idCol)
-      .select(col(idCol), col("term"), col("positions"))
-  }
-
   /** Exact phrase search over a SEGMENTED index
     * ([[bm25AppendSegment]] layout — positions live in the BM25
     * segment postings, so this probe inherits append, tombstones,
@@ -2167,9 +2122,8 @@ object TextAnalysis {
     // cached: the tombstone-filtered live set is re-filtered once per
     // phrase term below — left lazy, the kill-rule join re-runs per
     // term
-    val posts = cached(livePositional(spark, snap, idCol,
-      col("term").isin(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(phrase.distinct.toArray): _*), asOfSegment))
+    val posts = cached(livePostings(spark, snap, idCol, positional(idCol),
+      termIn(phrase.distinct), asOfSegment))
     val frames = phrase.zipWithIndex.map { case (t, i) =>
       posts.filter(col("term") === t)
         .select(col(idCol),
@@ -2184,6 +2138,28 @@ object TextAnalysis {
       .select(col(idCol),
         size(col("_starts")).cast("long").as("n_matches"),
         element_at(col("_starts"), 1).cast("long").as("first_pos"))
+  }
+
+  /** The window probes' per-document event list ([[proximitySearch]],
+    * [[orderedNearSearch]], [[snippetSpans]]): every live occurrence
+    * of `terms` as a (pos, tidx) struct — tidx the term's index in
+    * `terms` — sorted by position into `ev`, with `extra` aggregated
+    * beside it. */
+  private def positionEvents(spark: org.apache.spark.sql.SparkSession,
+                             path: String, terms: Seq[String],
+                             idCol: String, asOfSegment: Option[Int],
+                             extra: Column): DataFrame = {
+    val tidx = terms.zipWithIndex.foldLeft(lit(-1)) {
+      case (c, (t, i)) => when(col("term") === t, lit(i)).otherwise(c)
+    }
+    livePostings(spark, pinSeg(spark, path), idCol, positional(idCol),
+        termIn(terms), asOfSegment)
+      .select(col(idCol), tidx.as("tidx"),
+        explode(col("positions")).as("pos"))
+      .groupBy(col(idCol))
+      .agg(array_sort(collect_list(struct(
+          col("pos").cast("long").as("pos"), col("tidx").as("tidx"))))
+          .as("ev"), extra)
   }
 
   /** PROXIMITY search over a SEGMENTED index (same layout and
@@ -2207,19 +2183,7 @@ object TextAnalysis {
     require(terms.size >= 2 && terms.distinct.size == terms.size,
       "proximitySearch needs >= 2 distinct terms")
     val k = terms.size
-    val posts = livePositional(spark, pinSeg(spark, path), idCol,
-      col("term").isin(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(terms.toArray): _*), asOfSegment)
-    val tidx = terms.zipWithIndex.foldLeft(lit(-1)) {
-      case (c, (t, i)) => when(col("term") === t, lit(i)).otherwise(c)
-    }
-    val events = posts
-      .select(col(idCol), tidx.as("tidx"),
-        explode(col("positions")).as("pos"))
-      .groupBy(col(idCol))
-      .agg(array_sort(collect_list(struct(
-          col("pos").cast("long").as("pos"), col("tidx").as("tidx"))))
-          .as("ev"),
+    val events = positionEvents(spark, path, terms, idCol, asOfSegment,
         count_distinct(col("tidx")).as("_nt"))
       .filter(col("_nt") === k)
     val init = struct(
@@ -2270,19 +2234,7 @@ object TextAnalysis {
       s"orderedNearSearch: maxSpan $maxSpan can never cover " +
         s"${terms.size} ordered terms (min span ${terms.size - 1})")
     val k = terms.size
-    val posts = livePositional(spark, pinSeg(spark, path), idCol,
-      col("term").isin(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(terms.toArray): _*), asOfSegment)
-    val tidx = terms.zipWithIndex.foldLeft(lit(-1)) {
-      case (c, (t, i)) => when(col("term") === t, lit(i)).otherwise(c)
-    }
-    val events = posts
-      .select(col(idCol), tidx.as("tidx"),
-        explode(col("positions")).as("pos"))
-      .groupBy(col(idCol))
-      .agg(array_sort(collect_list(struct(
-          col("pos").cast("long").as("pos"), col("tidx").as("tidx"))))
-          .as("ev"),
+    val events = positionEvents(spark, path, terms, idCol, asOfSegment,
         count_distinct(col("tidx")).as("_nt"))
       .filter(col("_nt") === k)
     val init = struct(
@@ -2336,19 +2288,7 @@ object TextAnalysis {
     require(minMatched >= 1 && minMatched <= terms.size,
       s"snippetSpans: minMatched must be in [1, ${terms.size}]")
     val k = terms.size
-    val posts = livePositional(spark, pinSeg(spark, path), idCol,
-      col("term").isin(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(terms.toArray): _*), asOfSegment)
-    val tidx = terms.zipWithIndex.foldLeft(lit(-1)) {
-      case (c, (t, i)) => when(col("term") === t, lit(i)).otherwise(c)
-    }
-    val events = posts
-      .select(col(idCol), tidx.as("tidx"),
-        explode(col("positions")).as("pos"))
-      .groupBy(col(idCol))
-      .agg(array_sort(collect_list(struct(
-          col("pos").cast("long").as("pos"), col("tidx").as("tidx"))))
-          .as("ev"),
+    val events = positionEvents(spark, path, terms, idCol, asOfSegment,
         collect_set(col("tidx")).as("present"))
       .filter(size(col("present")) >= minMatched)
     val init = struct(
@@ -2402,11 +2342,8 @@ object TextAnalysis {
     * Returns (tombstones dropped, tombstones remaining). */
   def bm25CompactTombstones(spark: org.apache.spark.sql.SparkSession,
                             path: String, idCol: String): (Long, Long) = {
-    import spark.implicits._
-    val base = SegmentManifest.latest(spark, path)
-      .getOrElse(SegmentManifest.bootstrap(spark, path))
-    val snap = SegSnapshot(path, base)
-    val tombs = readTombstones(spark, snap, idCol)
+    val base = pinBase(spark, path)
+    val tombs = readTombstones(spark, SegSnapshot(path, base), idCol)
     val minSeg = base.segs("segstats").headOption.getOrElse(
       throw new IllegalStateException(
         s"bm25CompactTombstones: no segstats at $path"))
@@ -2423,15 +2360,12 @@ object TextAnalysis {
       .agg(count(lit(1)).as("_n"),
         coalesce(sum(col("dl")), lit(0L)).as("_s"))
       .head()
-    val (cn, cs) = (corr.getLong(0), corr.getLong(1))
-    val st = readLayout(spark, snap, "segstats")
-      .filter(col("seg").cast("int") === minSeg)
-      .agg(sum(col("n_docs")).cast("long"),
-        sum(col("sum_dl")).cast("long")).head()
-    Seq((st.getLong(0) - cn, st.getLong(1) - cs))
-      .toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/$rev/segstats/seg=$minSeg")
+    // the lowest segment's partial, from the fold-decision memo
+    val (n, sdl) = base.entries("segstats").filter(_.seg == minSeg)
+      .flatMap(e => segStatsAt(spark, s"$path/${e.loc}"))
+      .foldLeft((0L, 0L)) { case ((a, b), (x, y)) => (a + x, b + y) }
+    writeSegStats(spark, path, s"$rev/segstats/seg=$minSeg",
+      n - corr.getLong(0), Some(sdl - corr.getLong(1)))
     SegmentManifest.seal(spark, path, base
       .replace("segstats", Set(minSeg),
         Seq(SegmentManifest.Entry(minSeg, s"$rev/segstats/seg=$minSeg")))
@@ -2687,11 +2621,8 @@ object TextAnalysis {
                        idCol: String,
                        asOfSegment: Option[Int] = None): DataFrame = {
     require(prefix.nonEmpty, "termPrefixSearch: empty prefix")
-    livePositional(spark, pinSeg(spark, path), idCol,
-        col("term").startsWith(prefix), asOfSegment)
-      .groupBy(col(idCol))
-      .agg(count_distinct(col("term")).as("n_terms"),
-        sum(size(col("positions")).cast("long")).as("n_occurrences"))
+    termOccurrences(livePostings(spark, pinSeg(spark, path), idCol,
+      positional(idCol), col("term").startsWith(prefix), asOfSegment), idCol)
   }
 
   /** FUZZY term search (Lucene's fuzzy query, relationally): expand
@@ -2714,17 +2645,10 @@ object TextAnalysis {
     require(term.nonEmpty, "fuzzyTermSearch: empty term")
     require(maxDist >= 0, s"fuzzyTermSearch: maxDist $maxDist < 0")
     val snap = pinSeg(spark, path)
-    // the length band |len(t) − len(q)| ≤ maxDist is implied by the
-    // edit distance; pushing it lets parquet min/max stats prune term
-    // pages before the per-term levenshtein runs
-    val matched = termDict(spark, snap)
-      .filter(length(col("term"))
-        .between(term.length - maxDist, term.length + maxDist))
-      .filter(levenshtein(col("term"), lit(term)) <= maxDist)
-      .collect().map(_.getString(0)).sorted
-    expandedTermOccurrences(spark, snap, idCol, matched,
-      s"fuzzyTermSearch: '$term'~$maxDist", maxExpansion,
-      "tighten the distance or raise the bound")
+    expandedTermOccurrences(spark, snap, idCol,
+      expandTerms(fuzzyDict(spark, snap, term, maxDist),
+        s"fuzzyTermSearch: '$term'~$maxDist", maxExpansion,
+        "tighten the distance or raise the bound"))
   }
 
   /** Lucene's SegmentInfos, relationally: the per-generation
@@ -2787,30 +2711,14 @@ object TextAnalysis {
     require(maxDist >= 0 && k > 0,
       s"spellSuggest: bad maxDist $maxDist / k $k")
     val snap = pinSeg(spark, path)
-    val matched = termDict(spark, snap)
-      .filter(length(col("term"))
-        .between(term.length - maxDist, term.length + maxDist))
-      .filter(levenshtein(col("term"), lit(term)) <= maxDist)
-      .collect().map(_.getString(0)).sorted
-    require(matched.length <= maxExpansion,
-      s"spellSuggest: '$term'~$maxDist expands to ${matched.length} " +
-        s"terms > maxExpansion $maxExpansion — tighten the distance " +
-        "or raise the bound")
+    val matched = expandTerms(fuzzyDict(spark, snap, term, maxDist),
+      s"spellSuggest: '$term'~$maxDist", maxExpansion,
+      "tighten the distance or raise the bound")
     // as-of cut (the q161/q183 generation rule): the dict is a
     // SUPERSET, so a future-segment term expands into the IN list and
     // its cut-away postings yield no df row — dropped, never surfaced
-    def cutSeg(df: DataFrame): DataFrame = asOfSegment match {
-      case Some(g) => df.filter(col("seg").cast("int") <= g)
-      case None => df
-    }
-    val live = liveAfterTombstones(
-      cutSeg(readLayout(spark, snap, "postings"))
-        .filter(col("term").isin(scala.collection.immutable.ArraySeq
-          .unsafeWrapArray(matched): _*))
-        .select(col(idCol), col("term"), col("seg")),
-      cutSeg(readTombstones(spark, snap, idCol)), idCol)
-    live.groupBy(col("term"))
-      .agg(count_distinct(col(idCol)).as("df"))
+    liveDf(livePostings(spark, snap, idCol, Seq(idCol, "term"),
+        termIn(matched), asOfSegment), idCol)
       .withColumn("dist",
         levenshtein(col("term"), lit(term)).cast("long"))
       .select(col("term"), col("dist"), col("df"))
@@ -2848,24 +2756,18 @@ object TextAnalysis {
     require(qs.nonEmpty, "significantTerms: no query terms")
     require(k > 0 && minDf >= 1, s"significantTerms: bad k $k / minDf $minDf")
     val snap = pinSeg(spark, path)
-    val tombs = readTombstones(spark, snap, idCol)
     // corpus-sized (EVERY live posting, by design) → serialized
     // persist, the big-heap first-touch rationale on Caching.cachedSer
-    val liveAll = cachedSer(liveAfterTombstones(
-      readLayout(spark, snap, "postings")
-        .select(col(idCol), col("term"), col("seg")),
-      tombs, idCol)
-      .select(col(idCol), col("term")))
-    val fgIds = liveAll
-      .filter(col("term").isin(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(qs.toArray): _*))
+    val liveAll = cachedSer(livePostings(spark, snap, idCol,
+      Seq(idCol, "term"), lit(true)))
+    val fgIds = liveAll.filter(termIn(qs))
       .select(col(idCol)).distinct()
     // two 1-row aggregates: foreground size and live corpus size
     val nFg = fgIds.count()
     require(nFg > 0, s"significantTerms: no documents match $qs")
     val seg = readLayout(spark, snap, "segstats")
       .agg(sum(col("n_docs")).as("n")).head().getLong(0)
-    val nBg = seg - tombs.count()
+    val nBg = seg - readTombstones(spark, snap, idCol).count()
     val dfs = liveAll
       .join(fgIds.withColumn("_fg", lit(1)), Seq(idCol), "left")
       .groupBy(col("term"))
@@ -2899,28 +2801,13 @@ object TextAnalysis {
     require(prefix.nonEmpty, "completionSuggest: empty prefix")
     require(k > 0, s"completionSuggest: bad k $k")
     val snap = pinSeg(spark, path)
-    val matched = termDict(spark, snap)
-      .filter(col("term").startsWith(prefix))
-      .collect().map(_.getString(0)).sorted
-    require(matched.length <= maxExpansion,
-      s"completionSuggest: '$prefix*' expands to ${matched.length} " +
-        s"terms > maxExpansion $maxExpansion — lengthen the prefix " +
-        "or raise the bound")
-    // as-of cut (the q161/q183 generation rule): the dict is a
-    // SUPERSET, so a future-segment term expands into the IN list and
-    // its cut-away postings yield no df row — dropped, never surfaced
-    def cutSeg(df: DataFrame): DataFrame = asOfSegment match {
-      case Some(g) => df.filter(col("seg").cast("int") <= g)
-      case None => df
-    }
-    val live = liveAfterTombstones(
-      cutSeg(readLayout(spark, snap, "postings"))
-        .filter(col("term").isin(scala.collection.immutable.ArraySeq
-          .unsafeWrapArray(matched): _*))
-        .select(col(idCol), col("term"), col("seg")),
-      cutSeg(readTombstones(spark, snap, idCol)), idCol)
-    live.groupBy(col("term"))
-      .agg(count_distinct(col(idCol)).as("df"))
+    val matched = expandTerms(
+      termDict(spark, snap).filter(col("term").startsWith(prefix)),
+      s"completionSuggest: '$prefix*'", maxExpansion,
+      "lengthen the prefix or raise the bound")
+    // the same as-of cut and superset argument as [[spellSuggest]]
+    liveDf(livePostings(spark, snap, idCol, Seq(idCol, "term"),
+        termIn(matched), asOfSegment), idCol)
       .orderBy(col("df").desc, col("term"))
       .limit(k)
   }
@@ -3080,9 +2967,7 @@ object TextAnalysis {
       s"percolateIndexed: batch vocabulary ${vocab.length} > " +
         s"maxBatchVocab $maxBatchVocab — percolate smaller doc " +
         "batches (or raise the bound)")
-    val cover = spark.read.parquet(s"$path/qcover")
-      .filter(col("term").isin(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(vocab): _*))
+    val cover = spark.read.parquet(s"$path/qcover").filter(termIn(vocab))
     val cand = cached(dterms.join(cover, "term")
       .select(col(idCol), col("query_id")))
     val qindex = spark.read.parquet(s"$path/qindex")
@@ -3131,19 +3016,42 @@ object TextAnalysis {
       .select(col("term")).distinct()
   }
 
-  /** Shared tail of the dictionary-expansion query family
-    * ([[fuzzyTermSearch]], [[wildcardTermSearch]]): bound the
-    * expansion loudly, then probe the matched terms' posting lists
-    * with the same pushed `term IN` the phrase probe uses, through
-    * the tombstone kill rule, returning per matching document the
-    * distinct matched terms and total occurrences. */
-  private def expandedTermOccurrences(
-      spark: org.apache.spark.sql.SparkSession, snap: SegSnapshot,
-      idCol: String, matched: Array[String], what: String,
-      maxExpansion: Int, remedy: String): DataFrame = {
+  /** THE dictionary expansion of the expansion query family (fuzzy,
+    * wildcard, spell, completion): the terms of `matches`, sorted — a
+    * driver-side fetch bounded by `maxExpansion`, failing loudly
+    * rather than shipping an unbounded literal list into the scan
+    * predicate. */
+  private def expandTerms(matches: DataFrame, what: String,
+                          maxExpansion: Int, remedy: String)
+      : Array[String] = {
+    val matched = matches.collect().map(_.getString(0)).sorted
     require(matched.length <= maxExpansion,
       s"$what expands to ${matched.length} terms > " +
         s"maxExpansion $maxExpansion — $remedy")
+    matched
+  }
+
+  /** The dictionary terms within Levenshtein `maxDist` of `term`
+    * ([[fuzzyTermSearch]], [[spellSuggest]]). The length band
+    * |len(t) − len(q)| ≤ maxDist is implied by the edit distance;
+    * pushing it lets parquet min/max stats prune term pages before
+    * the per-term levenshtein runs. */
+  private def fuzzyDict(spark: org.apache.spark.sql.SparkSession,
+                        snap: SegSnapshot, term: String,
+                        maxDist: Int): DataFrame =
+    termDict(spark, snap)
+      .filter(length(col("term"))
+        .between(term.length - maxDist, term.length + maxDist))
+      .filter(levenshtein(col("term"), lit(term)) <= maxDist)
+
+  /** Shared tail of [[fuzzyTermSearch]] and [[wildcardTermSearch]]:
+    * probe the [[expandTerms]] result's posting lists with the same
+    * pushed `term IN` the phrase probe uses, through the tombstone
+    * kill rule, returning per matching document the distinct matched
+    * terms and total occurrences. */
+  private def expandedTermOccurrences(
+      spark: org.apache.spark.sql.SparkSession, snap: SegSnapshot,
+      idCol: String, matched: Array[String]): DataFrame = {
     if (matched.isEmpty) {
       import org.apache.spark.sql.types.{LongType, StructType}
       val schema = new StructType().add(idCol, LongType)
@@ -3151,12 +3059,8 @@ object TextAnalysis {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else
-      livePositional(spark, snap, idCol,
-        col("term").isin(scala.collection.immutable.ArraySeq
-          .unsafeWrapArray(matched): _*))
-        .groupBy(col(idCol))
-        .agg(count_distinct(col("term")).as("n_terms"),
-          sum(size(col("positions")).cast("long")).as("n_occurrences"))
+      termOccurrences(livePostings(spark, snap, idCol, positional(idCol),
+        termIn(matched)), idCol)
   }
 
   /** WILDCARD term search (Lucene's wildcard query, relationally):
@@ -3187,11 +3091,10 @@ object TextAnalysis {
     val banded =
       if (prefix.nonEmpty) dict.filter(col("term").startsWith(prefix))
       else dict
-    val matched = banded.filter(col("term").like(likePat))
-      .collect().map(_.getString(0)).sorted
-    expandedTermOccurrences(spark, snap, idCol, matched,
-      s"wildcardTermSearch: '$pattern'", maxExpansion,
-      "narrow the pattern or raise the bound")
+    expandedTermOccurrences(spark, snap, idCol,
+      expandTerms(banded.filter(col("term").like(likePat)),
+        s"wildcardTermSearch: '$pattern'", maxExpansion,
+        "narrow the pattern or raise the bound"))
   }
 
   /** FACETED search (the Solr/Lucene facet model, relationally):
@@ -3213,14 +3116,7 @@ object TextAnalysis {
     val termsD = terms.distinct
     require(termsD.nonEmpty, "searchFacets: no terms")
     require(facetCols.nonEmpty, "searchFacets: no facet columns")
-    val snap = pinSeg(spark, path)
-    val ids = liveAfterTombstones(
-      readLayout(spark, snap, "postings")
-        .filter(col("term").isin(scala.collection.immutable.ArraySeq
-          .unsafeWrapArray(termsD.toArray): _*))
-        .select(col(idCol), col("seg")),
-      readTombstones(spark, snap, idCol), idCol)
-      .select(col(idCol)).distinct()
+    val ids = matchingIds(spark, path, idCol, termsD)
     docs.join(ids, Seq(idCol))
       .select(explode(array(facetCols.map(c =>
         struct(lit(c).as("facet"), col(c).cast("string").as("value"))
@@ -3228,6 +3124,15 @@ object TextAnalysis {
       .groupBy(col("fv.facet").as("facet"), col("fv.value").as("value"))
       .agg(count(lit(1)).as("n_docs"))
   }
+
+  /** The live documents holding ≥1 of `terms` (distinct idCol) — the
+    * posting-bounded membership of [[searchFacets]] and
+    * [[searchRangeFacets]]. */
+  private def matchingIds(spark: org.apache.spark.sql.SparkSession,
+                          path: String, idCol: String,
+                          terms: Seq[String]): DataFrame =
+    livePostings(spark, pinSeg(spark, path), idCol, Seq(idCol),
+      termIn(terms)).distinct()
 
   /** NUMERIC RANGE facets (Lucene's LongRangeFacetCounts,
     * relationally): count the FULL matching set — the same
@@ -3259,14 +3164,7 @@ object TextAnalysis {
     ranges.foreach { case (label, lo, hi) =>
       require(lo < hi, s"searchRangeFacets: empty range '$label' " +
         s"[$lo, $hi)") }
-    val snap = pinSeg(spark, path)
-    val ids = liveAfterTombstones(
-      readLayout(spark, snap, "postings")
-        .filter(col("term").isin(scala.collection.immutable.ArraySeq
-          .unsafeWrapArray(termsD.toArray): _*))
-        .select(col(idCol), col("seg")),
-      readTombstones(spark, snap, idCol), idCol)
-      .select(col(idCol)).distinct()
+    val ids = matchingIds(spark, path, idCol, termsD)
     val v = docs.join(ids, Seq(idCol))
       .select(col(valueCol).cast("long").as("_v"))
     val sums = ranges.zipWithIndex.map { case ((_, lo, hi), i) =>
@@ -3279,27 +3177,6 @@ object TextAnalysis {
           struct(lit(label).as("range"), col(s"_r$i").as("n_docs"))
       }: _*)).as("rv"))
       .select(col("rv.range").as("range"), col("rv.n_docs").as("n_docs"))
-  }
-
-  /** Probe a materialized [[bm25WriteIndex]]: the panel's distinct
-    * terms (a panel-sized driver-side fetch, the same boundedness
-    * contract as the IVF centroid ranking) become a pushed-down
-    * `term IN (…)` predicate over the term-sorted postings — IO scales
-    * with the matched posting lists, not the corpus. Scoring is
-    * [[bm25Score]], identical to the scan path by construction. */
-  def bm25ProbeIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String, queries: DataFrame, k: Int,
-                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qterms = queries.select(col("qid"),
-      explode(array_distinct(tokens(col("qtext")))).as("term"))
-    val terms = panelTerms(queries)
-    val postings = spark.read.parquet(s"$path/postings")
-      .filter(col("term").isin(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(terms): _*))
-    val idCol = postings.columns
-      .filterNot(Set("term", "tf", "dl", "df")).head
-    bm25Score(postings, qterms,
-      spark.read.parquet(s"$path/stats"), idCol, k, k1, b)
   }
 
   /** TF-IDF as per-doc SPARSE VECTORS (`HashingTF` → `IDF`) — the

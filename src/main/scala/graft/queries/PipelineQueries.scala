@@ -2358,27 +2358,26 @@ object PipelineQueries {
     }),
 
     // X2/X3 — the MATERIALIZED lexical index under the hash gate (the
-    // sparse analog of q90's quantized IVF file): postings written
-    // term-sorted + range-partitioned, probe reads only the panel's
-    // posting lists via a pushed-down term predicate, scoring shared
-    // with q97's scan path by construction (one bm25Score definition).
-    // The oracle recomputes from the BASE table — index content, probe
-    // pruning, and scoring must all agree with the direct scan.
+    // sparse analog of q90's quantized IVF file): the whole corpus as
+    // ONE term-sorted segment (the shared fixture), the probe reads
+    // only the panel's posting lists via a pushed-down term predicate,
+    // scoring shared with q97's scan path by construction (one
+    // bm25Score definition). The oracle recomputes from the BASE
+    // table — index content, probe pruning, and scoring must all agree
+    // with the direct scan.
     "q114_bm25_index_probe" -> ((s, dir) => {
       import s.implicits._
       val panel = Seq(
         (0L, "sort merge join"), (1L, "query filter scan"),
         (2L, "window batch table"))
         .toDF("qid", "qtext")
-      val path = scratchPath("bm25_idx", dir)
-      TextAnalysis.bm25WriteIndex(Tables(s, dir, "documents"),
-        "doc_id", "text", path)
-      TextAnalysis.bm25ProbeIndex(s, path, panel, k = 15)
+      TextAnalysis.bm25ProbeSegmented(s, fxDocsBm25(s, dir), panel,
+          k = 15, "doc_id")
         .orderBy(col("qid"), col("score").desc, col("doc_id"))
     }),
 
-    // X2/X3 × X1 — the SEGMENTED lexical index under the hash gate
-    // (q114's layout made incremental, the Lucene segment model): a
+    // X2/X3 × X1 — the SEGMENTED lexical index under the hash gate,
+    // maintained incrementally (q114's layout, the Lucene segment model): a
     // recrawl delta lands as segment appends + tombstones — nothing
     // rewritten in place — and the probe reconstructs exact global
     // scoring state (panel-term df from the filtered lists, corpus

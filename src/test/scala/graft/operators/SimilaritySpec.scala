@@ -18,27 +18,6 @@ class SimilaritySpec extends SparkSpec {
     (e, qv, base)
   }
 
-  test("materialized IVF index probe prunes partitions and matches " +
-      "the in-memory probe (L2 + stub centroids)") {
-    val (e, qv, base) = setup()
-    val cents = Similarity.centroids(e, "vec_id", "embedding", step = 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
-    Similarity.ivfWriteIndex(base, cents, "vec_id", "embedding", dir)
-
-    val pruned = Similarity.ivfProbePruned(spark, dir, cents, qv,
-      "vec_id", "embedding", k = 10, nProbe = 3)
-    // the probe literal must reach the scan as a PARTITION filter
-    // (directory pruning), not a row filter
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [centroid_id"),
-      s"probe did not prune partitions:\n${plan.take(1500)}")
-    val inMem = Similarity.ivfTopK(base, cents, qv, "vec_id", "embedding",
-        k = 10, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val out = pruned.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(out == inMem, s"pruned probe diverged: $out vs $inMem")
-  }
-
   test("cosine-materialized index (learned centroids) prunes partitions " +
       "and matches the in-memory cosine probe") {
     val (_, qv, base) = setup()
@@ -312,8 +291,8 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.centroids(e, "vec_id", "embedding", step = 10)
     val exact = Similarity.topK(base, qv, "vec_id", "embedding", 10)
       .collect().map(_.getDouble(1))
-    val approx = Similarity.ivfTopK(base, cents, qv, "vec_id", "embedding",
-        k = 10, nProbe = 2)
+    val approx = Similarity.ivfTopKCosine(base, cents, qv, "vec_id",
+        "embedding", k = 10, nProbe = 2)
       .collect().map(_.getDouble(1))
     assert(approx.length == 10)
     // each approx sim ≤ the best exact sim; top-1 of a probed list can

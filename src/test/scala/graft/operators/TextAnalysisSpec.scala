@@ -121,29 +121,6 @@ class TextAnalysisSpec extends SparkSpec {
       s"got ${out.toSeq}")
   }
 
-  test("bm25 index probe: pushed term predicate reaches the postings " +
-      "scan, and probe results equal the direct-scan path exactly") {
-    import spark.implicits._
-    val docs = graft.engine.Tables(spark, "/root/testdata/sf0.001",
-      "documents")
-    val panel = Seq((0L, "scan table row"), (1L, "query filter"))
-      .toDF("qid", "qtext")
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
-    TextAnalysis.bm25WriteIndex(docs, "doc_id", "text", dir)
-    val probe = TextAnalysis.bm25ProbeIndex(spark, dir, panel, k = 12)
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [In(term"),
-      s"term predicate not pushed to the postings scan:\n${plan.take(1500)}")
-    val direct = TextAnalysis.bm25TopK(docs, "doc_id", "text", panel,
-        k = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val probed = probe
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(probed == direct, "index probe diverged from the direct scan")
-  }
-
   test("segmented bm25: fresh index with NO tombstones dir probes " +
       "fine, and single-segment probe equals the direct scan") {
     import spark.implicits._
@@ -152,8 +129,12 @@ class TextAnalysisSpec extends SparkSpec {
     val panel = Seq((0L, "scan table row")).toDF("qid", "qtext")
     val dir = java.nio.file.Files.createTempDirectory("bm25seg").toString
     TextAnalysis.bm25AppendSegment(docs, "doc_id", "text", dir, 0)
-    val probed = TextAnalysis
+    val probe = TextAnalysis
       .bm25ProbeSegmented(spark, dir, panel, k = 10, "doc_id")
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [In(term"),
+      s"term predicate not pushed to the postings scan:\n${plan.take(1500)}")
+    val probed = probe
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     val direct = TextAnalysis.bm25TopK(docs, "doc_id", "text", panel,
@@ -1776,6 +1757,23 @@ class TextAnalysisSpec extends SparkSpec {
     // asOf at/above the max live segment is exactly the live read
     assert(probe(dir, Some(1)) == probe(dir, None))
     assert(probe(dir, Some(99)) == probe(dir, None))
+    // the phrase and prefix probes read through the same as-of cut:
+    // generation 0 replays the fresh generation-0 index (doc 2 "a a d"
+    // is alive only there)
+    def phrase(path: String, asOf: Option[Int]) = TextAnalysis
+      .phraseSearch(spark, path, Seq("a", "d"), "doc_id", asOf)
+      .as[(Long, Long, Long)].collect().toSet
+    def prefix(path: String, asOf: Option[Int]) = TextAnalysis
+      .termPrefixSearch(spark, path, "a", "doc_id", asOf)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(phrase(dir, Some(0)) == phrase(fresh0, None),
+      "asOf=0 phrase diverged from a fresh generation-0 index")
+    assert(phrase(dir, Some(0)) != phrase(dir, None))
+    assert(prefix(dir, Some(0)) == prefix(fresh0, None),
+      "asOf=0 prefix diverged from a fresh generation-0 index")
+    assert(prefix(dir, None) == prefix(fresh1, None),
+      "live prefix diverged from a fresh final-state index")
+    assert(prefix(dir, Some(0)) != prefix(dir, None))
   }
 
   test("positional time travel: asOf=0 replays a fresh generation-0 " +
