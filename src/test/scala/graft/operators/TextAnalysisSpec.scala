@@ -121,6 +121,30 @@ class TextAnalysisSpec extends SparkSpec {
       s"got ${out.toSeq}")
   }
 
+  test("bm25 index probe: pushed term predicate reaches the postings " +
+      "scan, and probe results equal the direct-scan path exactly") {
+    import spark.implicits._
+    val docs = graft.engine.Tables(spark, "/root/testdata/sf0.001",
+      "documents")
+    val panel = Seq((0L, "scan table row"), (1L, "query filter"))
+      .toDF("qid", "qtext")
+    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    TextAnalysis.bm25AppendSegment(docs, "doc_id", "text", dir, 0)
+    val probe = TextAnalysis
+      .bm25ProbeSegmented(spark, dir, panel, k = 12, "doc_id")
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [In(term"),
+      s"term predicate not pushed to the postings scan:\n${plan.take(1500)}")
+    val direct = TextAnalysis.bm25TopK(docs, "doc_id", "text", panel,
+        k = 12)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet
+    val probed = probe
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet
+    assert(probed == direct, "index probe diverged from the direct scan")
+  }
+
   test("segmented bm25: fresh index with NO tombstones dir probes " +
       "fine, and single-segment probe equals the direct scan") {
     import spark.implicits._
@@ -129,12 +153,8 @@ class TextAnalysisSpec extends SparkSpec {
     val panel = Seq((0L, "scan table row")).toDF("qid", "qtext")
     val dir = java.nio.file.Files.createTempDirectory("bm25seg").toString
     TextAnalysis.bm25AppendSegment(docs, "doc_id", "text", dir, 0)
-    val probe = TextAnalysis
+    val probed = TextAnalysis
       .bm25ProbeSegmented(spark, dir, panel, k = 10, "doc_id")
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [In(term"),
-      s"term predicate not pushed to the postings scan:\n${plan.take(1500)}")
-    val probed = probe
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     val direct = TextAnalysis.bm25TopK(docs, "doc_id", "text", panel,
