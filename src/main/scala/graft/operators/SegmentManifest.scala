@@ -232,381 +232,24 @@ object SegmentManifest {
     }
   }
 
-  /** Hadoop conf key opting a raw object-store scheme into
-    * [[SingleDriverPublisher]] — the documented migration path for
-    * single-driver deployments on stores with no atomic
-    * rename-if-absent (Delta's S3SingleDriverLogStore contract: set
-    * it ONLY when every sealer of the index runs in one driver JVM). */
-  val SingleDriverConfKey = "graft.seal.singledriver"
-
-  /** OPT-IN reference publisher for raw object stores (S3-class, no
-    * atomic rename-if-absent) — Delta Lake's S3SingleDriverLogStore
-    * recipe: mutual exclusion comes from a PROCESS-WIDE lock per
-    * destination path around check-then-put, so two sealers in the
-    * SAME driver JVM (the Structured-Streaming foreachBatch world,
-    * and any single-driver deployment) collide loudly exactly like
-    * the atomic publishers. What the store must still provide is
-    * all-or-nothing object PUT (S3/GCS/Azure all do — an upload
-    * either fully materializes or doesn't exist), which keeps a
-    * crash mid-publish from leaving a torn manifest. What this
-    * publisher does NOT provide is cross-JVM exclusion: a sealer in
-    * ANOTHER driver is not locked out, which is why it is opt-in
-    * ([[SingleDriverConfKey]]) rather than the scheme default —
-    * multi-driver object-store deployments need a store-side
-    * conditional put (the DynamoDB-style LogStore). */
-  private[graft] object SingleDriverPublisher extends SealPublisher {
-    // ONE lock per index (`_gen` parent), not per destination file:
-    // bounded by live indexes instead of growing one entry per sealed
-    // generation forever (a streaming loop seals one+ per
-    // micro-batch), and serializing all of an index's seals is the
-    // single-writer model anyway
-    private val locks =
-      new java.util.concurrent.ConcurrentHashMap[String, Object]()
-    def publish(fs: FileSystem, tmp: Path, dst: Path,
-                lost: String => Exception): Unit = {
-      val lock = locks.computeIfAbsent(
-        String.valueOf(dst.getParent), _ => new Object)
-      lock.synchronized {
-        if (fs.exists(dst)) throw lost(s"$dst already sealed")
-        // create(overwrite = false) sharpens the in-JVM guarantee on
-        // stores that honor it; the object-store PUT itself commits
-        // all-or-nothing on close.
-        //
-        // An exclusive-create REFUSAL means a contract-violating
-        // cross-JVM sealer won between the exists check and the
-        // create: dst is the OTHER writer's validly sealed manifest.
-        // It must surface as a lost seal, NOT fall into the torn-dst
-        // cleanup below — deleting it would convert the loud
-        // collision into a silent lost update (a retry would reseal
-        // the emptied slot), exactly the failure the publisher
-        // contract exists to prevent.
-        val out =
-          try fs.create(dst, false)
-          catch {
-            case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException
-                    | _: java.nio.file.FileAlreadyExistsException) =>
-              throw lost(s"$dst sealed by a concurrent writer " +
-                s"outside this JVM's lock: $e")
-          }
-        try {
-          try {
-            val in = fs.open(tmp)
-            try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536,
-              false)
-            finally in.close()
-          } finally out.close()
-        } catch {
-          case t: Throwable =>
-            // a failed copy must not leave a torn dst occupying the
-            // generation (the close() in the unwinding path completes
-            // whatever partial PUT the store buffered) — delete it
-            // under the held lock so every retry finds a clean slot.
-            // A FAILED cleanup must be loud, not swallowed: a torn
-            // dst that survives here passes every retry's exists
-            // check as "already sealed" and poisons latest() — the
-            // exact permanent wedge this cleanup exists to prevent.
-            val cleaned =
-              try fs.delete(dst, false) || !fs.exists(dst)
-              catch {
-                case c: Throwable => t.addSuppressed(c); false
-              }
-            if (!cleaned) t.addSuppressed(new IllegalStateException(
-              s"cleanup of torn $dst FAILED — the slot is poisoned; " +
-                "remove the file manually before retrying the seal"))
-            throw t
-        }
-      }
-    }
-  }
-
-  /** The store primitive a MULTI-DRIVER object-store deployment must
-    * supply: atomically create `dst` with exactly `bytes` IFF no
-    * object exists there, returning whether THIS call created it.
-    * This is the DynamoDB-style LogStore recipe Delta Lake documents
-    * for S3, reduced to its one load-bearing call — and since S3
-    * itself now offers conditional writes (`If-None-Match: *` on
-    * PUT), an adapter can be a one-liner against the store's own API
-    * with no side table at all.
-    *
-    * Contract (everything the seal protocol guarantees reduces to
-    * these three clauses):
-    *   - EXCLUSIVE: across all drivers, at most one concurrent
-    *     `putIfAbsent(dst, _)` returns true;
-    *   - ALL-OR-NOTHING: after a true return, `dst` is readable
-    *     through the FileSystem with exactly `bytes` — a false return
-    *     or a crash leaves whatever was there before, never a torn
-    *     object;
-    *   - a thrown exception means UNKNOWN outcome and propagates
-    *     as-is (never as a lost-seal) so the operator investigates
-    *     instead of resealing over an undetermined slot. */
-  trait PutIfAbsentStore {
-    def putIfAbsent(dst: Path, bytes: Array[Byte]): Boolean
-  }
-
-  /** Hadoop conf key naming a [[PutIfAbsentStore]] adapter class
-    * (zero-arg constructor; `org.apache.hadoop.conf.Configurable`
-    * adapters receive the FileSystem's conf) — the MULTI-DRIVER
-    * migration path for raw object stores: unlike
-    * [[SingleDriverConfKey]]'s process-wide lock, exclusion here
-    * comes from the store itself, so sealers in different driver
-    * JVMs collide loudly too. */
-  val CondPutConfKey = "graft.seal.condput.store"
-
-  /** Seal publisher over a [[PutIfAbsentStore]]: publish IS the
-    * store's conditional put — no check-then-put window, no JVM
-    * lock, no shared state between publisher instances (two driver
-    * JVMs each build their own; the STORE is the arbiter, which is
-    * exactly what the race spec proves). */
-  private[graft] final class ConditionalPutPublisher(
-      store: PutIfAbsentStore) extends SealPublisher {
-    def publish(fs: FileSystem, tmp: Path, dst: Path,
-                lost: String => Exception): Unit = {
-      val in = fs.open(tmp)
-      val bytes =
-        try {
-          val b = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, b, 65536, false)
-          b.toByteArray
-        } finally in.close()
-      if (!store.putIfAbsent(dst, bytes))
-        throw lost(s"$dst already sealed (conditional put refused)")
-    }
-  }
-
-  /** REFERENCE [[PutIfAbsentStore]] adapter for stores whose
-    * `create(overwrite = false)` is an exclusive create that refuses
-    * an existing destination (the LocalFS/HDFS shape): the
-    * conditional put IS the exclusive create — claim the slot, write
-    * the bytes, close. Named via [[CondPutConfKey]] it exercises the
-    * full conf-key resolution path (Class.forName, the Configurable
-    * conf hand-off, instance caching) against a real FileSystem,
-    * and doubles as the template a production S3/DynamoDB adapter
-    * copies: replace the create call with the store's own
-    * conditional primitive (`If-None-Match: *` PUT / a DynamoDB
-    * conditional write) and the rest carries over.
-    *
-    * Contract coverage, honestly: EXCLUSIVE holds exactly as far as
-    * the store's create(overwrite=false) is atomic (true on HDFS;
-    * local filesystems approximate it). ALL-OR-NOTHING is
-    * approximated the same way [[SingleDriverPublisher]] does it —
-    * a failed write deletes the torn destination loudly — which is
-    * the trust class of the rename publisher, not of a true
-    * object-store conditional PUT. That is the right fidelity for a
-    * REFERENCE adapter: the stores that need this interface in
-    * production supply the atomicity themselves. */
-  final class AtomicCreateStore extends PutIfAbsentStore
-      with org.apache.hadoop.conf.Configurable {
-    private var conf = new org.apache.hadoop.conf.Configuration()
-    override def setConf(c: org.apache.hadoop.conf.Configuration): Unit =
-      if (c != null) conf = c
-    override def getConf: org.apache.hadoop.conf.Configuration = conf
-    def putIfAbsent(dst: Path, bytes: Array[Byte]): Boolean = {
-      val fs = dst.getFileSystem(conf)
-      val created =
-        try Some(fs.create(dst, false))
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            None
-          case _: java.nio.file.FileAlreadyExistsException => None
-        }
-      created match {
-        case None => false
-        case Some(out) =>
-          try {
-            try out.write(bytes) finally out.close()
-            true
-          } catch {
-            case t: Throwable =>
-              // a torn dst must not occupy the slot (it would pass
-              // every retry's conditional put as "already sealed") —
-              // and a FAILED cleanup must be loud, not swallowed
-              val cleaned =
-                try fs.delete(dst, false) || !fs.exists(dst)
-                catch { case c: Throwable => t.addSuppressed(c); false }
-              if (!cleaned) t.addSuppressed(new IllegalStateException(
-                s"cleanup of torn $dst FAILED — the slot is " +
-                  "poisoned; remove the file manually before " +
-                  "retrying the seal"))
-              throw t
-          }
-      }
-    }
-  }
-
-  /** Resolve the [[CondPutConfKey]]-named adapter, if configured.
-    * Loud on a class that exists but is not a [[PutIfAbsentStore]] —
-    * silently falling through would strand the operator on the very
-    * fail-fast the key exists to replace. ONE adapter instance per
-    * class name per JVM: publisherFor resolves on EVERY seal (one+
-    * per micro-batch on the streaming loops), and a real adapter
-    * holds a store client that must not be rebuilt per seal; the
-    * instance is configured from the first resolving FileSystem's
-    * conf (one Hadoop conf per driver is the deployment this key
-    * targets). */
-  private val condPutInstances =
-    new java.util.concurrent.ConcurrentHashMap[String, SealPublisher]()
-
-  /** Test hook: drop cached adapter instances (specs exercise the
-    * creation path repeatedly in one JVM). */
-  private[graft] def condPutReset(): Unit = {
-    condPutInstances.clear()
-    condPutConfSeen.clear()
-  }
-
-  // the conf identity each cached adapter was configured from — a
-  // later FileSystem presenting a DIFFERENT conf (e.g. per-bucket
-  // fs.s3a.bucket.* overrides) would silently arbitrate through the
-  // first bucket's settings; the assumption is checked with one
-  // warning instead of assumed
-  private val condPutConfSeen = new java.util.concurrent
-    .ConcurrentHashMap[String, org.apache.hadoop.conf.Configuration]()
-
-  private[graft] def condPutPublisher(fs: FileSystem)
-      : Option[SealPublisher] =
-    Option(fs.getConf).flatMap(c => Option(c.getTrimmed(CondPutConfKey)))
-      .filter(_.nonEmpty).map { cls =>
-        val seen = condPutConfSeen.putIfAbsent(cls, fs.getConf)
-        if (seen != null && (seen ne fs.getConf))
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "conditional-put adapter {} was configured from an " +
-              "earlier FileSystem's conf; this resolution presents a " +
-              "different Configuration object (per-bucket overrides " +
-              "will not reach the cached adapter)", cls)
-        condPutInstances.computeIfAbsent(cls, _ => {
-          // context classloader first (Spark ships plugin jars via
-          // --jars into the context loader, not this class's), then
-          // our own — Spark's Utils.classForName rule, for the same
-          // reason
-          val loader = Option(
-              Thread.currentThread().getContextClassLoader)
-            .getOrElse(getClass.getClassLoader)
-          val inst = Class.forName(cls, true, loader)
-            .getDeclaredConstructor().newInstance()
-          val store = inst match {
-            case s: PutIfAbsentStore => s
-            case other => throw new IllegalArgumentException(
-              s"$CondPutConfKey=$cls does not implement " +
-                s"${classOf[PutIfAbsentStore].getName} " +
-                s"(got ${other.getClass.getName})")
-          }
-          store match {
-            case c: org.apache.hadoop.conf.Configurable =>
-              c.setConf(fs.getConf)
-            case _ => ()
-          }
-          new ConditionalPutPublisher(store)
-        })
-      }
-
-  /** Resolve the publisher by storage class — and FAIL FAST on stores
-    * with no atomic rename-if-absent (raw S3 and friends): running
-    * the seal there through a best-effort check-then-publish would
-    * silently void the single-writer guarantee, so the raw scheme is
-    * rejected until the operator either names a conditional-put store
-    * adapter via [[CondPutConfKey]] (the multi-driver path: exclusion
-    * arbitrated by the store itself, exactly Delta Lake's documented
-    * storage requirement) or opts into the single-driver recipe via
-    * [[SingleDriverConfKey]]. ADLS Gen2 (`abfs`/`abfss`) is
-    * allowlisted onto the rename publisher: with a hierarchical
-    * namespace — the configuration the abfs connector exists for —
-    * its rename is atomic and refuses an existing destination (the
-    * HDFS contract); a non-HNS blob account must opt into
-    * [[SingleDriverPublisher]] instead. */
-  private[graft] def publisherFor(fs: FileSystem): SealPublisher = {
-    def singleDriverOptIn =
-      fs.getConf != null &&
-        fs.getConf.getBoolean(SingleDriverConfKey, false)
+  /** Resolve the publisher by storage class — the store rule: a hard
+    * link on POSIX local filesystems, an atomic rename on the HDFS
+    * class, and FAIL FAST on every other scheme (the S3, GCS and
+    * Azure object stores included). The exclusive seal needs an
+    * atomic rename-if-absent that the filesystem class guarantees; a
+    * best-effort check-then-publish anywhere else would silently void
+    * the single-writer rule. The scheme alone decides. */
+  private[graft] def publisherFor(fs: FileSystem): SealPublisher =
     fs.getScheme match {
       case "file" => PosixLinkPublisher
       case "hdfs" | "viewfs" | "webhdfs" | "ofs" | "o3fs" =>
         HdfsRenamePublisher
-      case "abfs" | "abfss" =>
-        // the allowlist presumes a hierarchical-namespace account
-        // (atomic rename, the configuration the abfs connector exists
-        // for); a NON-HNS blob account's rename is not atomic, so the
-        // conditional-put and single-driver migration paths stay
-        // reachable for this scheme — without them the old
-        // fail-fast's protection would be silently lost for exactly
-        // the ambiguous configuration
-        condPutPublisher(fs).getOrElse {
-          if (singleDriverOptIn) SingleDriverPublisher
-          else {
-          // best-effort probe: where the connector exposes namespace
-          // support (AzureBlobFileSystem#getIsNamespaceEnabled in
-          // hadoop-azure builds with a zero-arg overload), a non-HNS
-          // account fails FAST here instead of silently running a
-          // non-atomic rename as if it were exclusive; connectors
-          // without the probe get a one-line warning naming the
-          // presumption instead of nothing
-          abfsNamespaceEnabled(fs) match {
-            case Some(false) => throw new UnsupportedOperationException(
-              s"segmented-index seal on ${fs.getUri}: the abfs account " +
-                "has NO hierarchical namespace, so rename is not " +
-                "atomic and the exclusive seal cannot be guaranteed — " +
-                "use an HNS (Data Lake Gen2) account, set " +
-                s"$CondPutConfKey to a conditional-put store adapter " +
-                s"(multi-driver), or set $SingleDriverConfKey=true if " +
-                "every sealer runs in this one driver JVM")
-            case Some(true) => ()
-            case None =>
-              // once per fs URI, not per seal: publisherFor resolves
-              // on every seal (one+ per micro-batch on the streaming
-              // loops) and an identical WARN per batch buries real
-              // warnings
-              if (abfsWarned.putIfAbsent(String.valueOf(fs.getUri),
-                  java.lang.Boolean.TRUE) == null)
-                org.slf4j.LoggerFactory
-                  .getLogger(getClass)
-                  .warn("segmented-index seal on {}: presuming a " +
-                    "hierarchical-namespace (atomic-rename) account — " +
-                    "the connector exposes no namespace probe; on a " +
-                    "non-HNS blob account set {}=true instead",
-                    fs.getUri, SingleDriverConfKey)
-          }
-          HdfsRenamePublisher
-          }
-        }
-      case other =>
-        // migration-path precedence on stores with no atomic
-        // rename-if-absent: a configured conditional-put adapter is
-        // the strongest guarantee (store-arbitrated, multi-driver),
-        // then the single-driver recipe, then fail fast
-        condPutPublisher(fs).getOrElse {
-          if (singleDriverOptIn) SingleDriverPublisher
-          else throw new UnsupportedOperationException(
-            s"segmented-index seal on storage scheme '$other': the " +
-              "store offers no atomic rename-if-absent, so the " +
-              "exclusive seal cannot be guaranteed — set " +
-              s"$CondPutConfKey to a PutIfAbsentStore adapter backed " +
-              "by the store's conditional put (the DynamoDB-style " +
-              "LogStore recipe Delta Lake documents; S3's own " +
-              "If-None-Match PUT also satisfies it), or set " +
-              s"$SingleDriverConfKey=true if every sealer runs in " +
-              "this one driver JVM (the S3SingleDriverLogStore " +
-              "contract)")
-        }
+      case other => throw new UnsupportedOperationException(
+        s"segmented-index seal on storage scheme '$other': the store " +
+          "offers no atomic rename-if-absent, so the exclusive seal " +
+          "cannot be guaranteed — seal on a local filesystem or an " +
+          "HDFS-class store")
     }
-  }
-
-  private val abfsWarned = new java.util.concurrent
-    .ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Reflective namespace probe for the abfs connector: Some(flag)
-    * when the FileSystem exposes a zero-arg `getIsNamespaceEnabled`
-    * (older hadoop-azure builds), None when the method is absent,
-    * takes arguments (newer builds thread a TracingContext), or
-    * throws — the caller then falls back to a named presumption
-    * rather than guessing. Kept reflective so the engine compiles
-    * without hadoop-azure on the classpath. */
-  private[graft] def abfsNamespaceEnabled(fs: FileSystem)
-      : Option[Boolean] =
-    try {
-      val m = fs.getClass.getMethod("getIsNamespaceEnabled")
-      m.invoke(fs) match {
-        case b: java.lang.Boolean => Some(b.booleanValue())
-        case _ => None
-      }
-    } catch { case _: Throwable => None }
 
   /** Seal `m` as generation `m.gen` — EXCLUSIVE publish of a fully
     * written file: a concurrent writer that sealed the same generation
@@ -621,10 +264,11 @@ object SegmentManifest {
     * mid-write can only ever leave an ignored temp file, never a torn
     * manifest occupying the newest generation number (which would
     * poison every subsequent `latest()` with a parse failure no re-run
-    * recovers from). The publisher resolves by storage class
-    * ([[publisherFor]]: POSIX hard-link / HDFS rename / fail-fast on
-    * raw object stores); `publisher` overrides it for stores with
-    * their own atomic-put primitive. */
+    * recovers from). The publisher is [[publisherFor]]'s store rule
+    * (hard link on local filesystems, atomic rename on HDFS-class
+    * stores, fail-fast on any other scheme); `publisher` substitutes
+    * it, which is how the seam spec races two sealers through a
+    * deliberately non-atomic fake. */
   def seal(spark: SparkSession, path: String, m: Manifest,
            publisher: Option[SealPublisher] = None): Unit = {
     val fs = fsOf(spark, path)
@@ -832,8 +476,7 @@ object SegmentManifest {
     *     are the caller's to ship alongside, exactly as they are the
     *     caller's to retain under vacuum. */
   def cloneGeneration(spark: SparkSession, srcPath: String,
-                      dstPath: String, gen: Option[Int] = None,
-                      publisher: Option[SealPublisher] = None)
+                      dstPath: String, gen: Option[Int] = None)
       : Manifest = {
     val m = gen match {
       case Some(g) => load(spark, srcPath, g)
@@ -858,7 +501,7 @@ object SegmentManifest {
     // the member as silent zero rows. A missing referenced member
     // now fails LOUDLY inside the copy job instead.
     copyLocs(spark, srcPath, dstPath, physicalLocs(m))
-    seal(spark, dstPath, m, publisher)
+    seal(spark, dstPath, m)
     m
   }
 
@@ -896,9 +539,7 @@ object SegmentManifest {
     * copied locations (the delta — ≤ the wave's dirty members, the
     * audit the refresh ops also return). */
   def syncClone(spark: SparkSession, srcPath: String, dstPath: String,
-                gen: Option[Int] = None,
-                publisher: Option[SealPublisher] = None)
-      : Seq[String] = {
+                gen: Option[Int] = None): Seq[String] = {
     val m = gen match {
       case Some(g) => load(spark, srcPath, g)
       case None => latest(spark, srcPath).getOrElse(
@@ -954,7 +595,7 @@ object SegmentManifest {
     // member fails loudly in the copy job (see cloneGeneration)
     val delta = physicalLocs(m).filterNot(dstRefd.contains)
     copyLocs(spark, srcPath, dstPath, delta)
-    seal(spark, dstPath, m, publisher)
+    seal(spark, dstPath, m)
     delta
   }
 

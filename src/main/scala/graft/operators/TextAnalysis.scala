@@ -1194,13 +1194,29 @@ object TextAnalysis {
   private def liveDf(live: DataFrame, idCol: String): DataFrame =
     live.groupBy(col("term")).agg(count_distinct(col(idCol)).as("df"))
 
+  /** THE live corpus size of a SEGMENTED index: the one-row
+    * (n_docs, avgdl) frame derived from per-segment exact integer
+    * partials minus the tombstoned rows' under the same [[asOf]] cut
+    * (bit-identical to the from-scratch scan — the q115 contract).
+    * Read by [[liveScoring]] and [[significantTerms]]. */
+  private def liveStats(spark: org.apache.spark.sql.SparkSession,
+                        snap: SegSnapshot, idCol: String,
+                        asOfSegment: Option[Int] = None): DataFrame = {
+    val seg = asOf(asOfSegment)(readLayout(spark, snap, "segstats"))
+      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
+    val tomb = asOf(asOfSegment)(readTombstones(spark, snap, idCol)).agg(
+      coalesce(count(lit(1)), lit(0L)).as("tn"),
+      coalesce(sum(col("dl")), lit(0L)).as("ts"))
+    seg.crossJoin(tomb)
+      .select((col("n") - col("tn")).as("n_docs"),
+        ((col("s") - col("ts")).cast("double") /
+          (col("n") - col("tn")).cast("double")).as("avgdl"))
+  }
+
   /** Live scoring rows + exact global stats of a SEGMENTED index for
     * a bounded term set — the shared read path of
     * [[bm25ProbeSegmented]] and [[booleanSearch]]: [[livePostings]]
-    * (id, dl, term, tf), plus the one-row (n_docs, avgdl) frame
-    * derived from per-segment exact integer partials minus the
-    * tombstoned rows' under the same [[asOf]] cut (bit-identical to
-    * the from-scratch scan — the q115 contract). The live frame is
+    * (id, dl, term, tf), plus [[liveStats]]. The live frame is
     * cached: both callers re-consume it (df derivation + scoring). */
   private def liveScoring(spark: org.apache.spark.sql.SparkSession,
                           snap: SegSnapshot, idCol: String,
@@ -1209,16 +1225,7 @@ object TextAnalysis {
       : (DataFrame, DataFrame) = {
     val live = cached(livePostings(spark, snap, idCol,
       Seq(idCol, "dl", "term", "tf"), termIn(terms), asOfSegment))
-    val seg = asOf(asOfSegment)(readLayout(spark, snap, "segstats"))
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
-    val tomb = asOf(asOfSegment)(readTombstones(spark, snap, idCol)).agg(
-      coalesce(count(lit(1)), lit(0L)).as("tn"),
-      coalesce(sum(col("dl")), lit(0L)).as("ts"))
-    val stats = seg.crossJoin(tomb)
-      .select((col("n") - col("tn")).as("n_docs"),
-        ((col("s") - col("ts")).cast("double") /
-          (col("n") - col("tn")).cast("double")).as("avgdl"))
-    (live, stats)
+    (live, liveStats(spark, snap, idCol, asOfSegment))
   }
 
   /** Lucene's BooleanQuery over a SEGMENTED index, relationally:
@@ -2765,9 +2772,7 @@ object TextAnalysis {
     // two 1-row aggregates: foreground size and live corpus size
     val nFg = fgIds.count()
     require(nFg > 0, s"significantTerms: no documents match $qs")
-    val seg = readLayout(spark, snap, "segstats")
-      .agg(sum(col("n_docs")).as("n")).head().getLong(0)
-    val nBg = seg - readTombstones(spark, snap, idCol).count()
+    val nBg = liveStats(spark, snap, idCol).head().getLong(0)
     val dfs = liveAll
       .join(fgIds.withColumn("_fg", lit(1)), Seq(idCol), "left")
       .groupBy(col("term"))

@@ -108,14 +108,8 @@ class ArtifactMemoSpec extends SparkSpec {
 
   test("no memo mechanism under src/main outside ArtifactMemo.scala: " +
       "every LRU / concurrent map left is an allowlisted non-memo map") {
-    // the maps that hold no derived value: per-index seal locks, the
-    // conditional-put adapter instances and the conf each came from,
-    // and the abfs once-per-account warning set
-    val allowed = Set(
-      "operators/SegmentManifest.scala: locks",
-      "operators/SegmentManifest.scala: condPutInstances",
-      "operators/SegmentManifest.scala: condPutConfSeen",
-      "operators/SegmentManifest.scala: abfsWarned")
+    // no non-memo map is left: a new one must be named here on purpose
+    val allowed = Set.empty[String]
     val mapUse =
       "removeEldestEntry|LinkedHashMap|ConcurrentHashMap|TrieMap".r
     val valName = """val\s+(\w+)""".r

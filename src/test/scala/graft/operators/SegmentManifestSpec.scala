@@ -2,40 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** Conditional-put test adapter — TOP-LEVEL with a zero-arg
-  * constructor so `Class.forName` can instantiate it through the
-  * [[SegmentManifest.CondPutConfKey]] wiring. The arbiter is a
-  * process-wide atomic map (the "DynamoDB table"); a winning put also
-  * materializes the object on the local filesystem so sealed
-  * manifests read back through the normal fs path (the recipe's
-  * marker-in-table / object-in-store split, collapsed for the spec). */
-class MemCondPutStore extends SegmentManifest.PutIfAbsentStore
-    with org.apache.hadoop.conf.Configurable {
-  private var conf: org.apache.hadoop.conf.Configuration = _
-  override def setConf(c: org.apache.hadoop.conf.Configuration): Unit = {
-    conf = c
-    MemCondPutStore.lastConf = c
-  }
-  override def getConf: org.apache.hadoop.conf.Configuration = conf
-  def putIfAbsent(dst: org.apache.hadoop.fs.Path,
-                  bytes: Array[Byte]): Boolean = {
-    val won =
-      MemCondPutStore.arbiter.putIfAbsent(dst.toString, bytes) == null
-    if (won) java.nio.file.Files.write(
-      java.nio.file.Paths.get(dst.toUri.getPath), bytes)
-    won
-  }
-}
-object MemCondPutStore {
-  val arbiter =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-  @volatile var lastConf: org.apache.hadoop.conf.Configuration = _
-}
-
-/** A class that exists but is NOT a PutIfAbsentStore — the loud-wiring
-  * negative case. */
-class NotACondPutStore
-
 /** Commit-protocol unit coverage for [[SegmentManifest]] that the
   * index-level specs don't reach: the legacy-upgrade bootstrap must
   * treat write-once crash debris as invisible, exactly like the
@@ -139,381 +105,36 @@ class SegmentManifestSpec extends SparkSpec {
     }
     assert(SegmentManifest.publisherFor(hdfsLike) eq
       SegmentManifest.HdfsRenamePublisher)
-  }
-
-  test("publisher resolution migration paths: abfs rides the rename " +
-      "publisher (HNS atomic rename), and the single-driver conf key " +
-      "opts a raw scheme into SingleDriverPublisher") {
-    val abfsLike = new org.apache.hadoop.fs.LocalFileSystem() {
-      override def getScheme: String = "abfss"
-    }
-    assert(SegmentManifest.publisherFor(abfsLike) eq
-      SegmentManifest.HdfsRenamePublisher)
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.setBoolean(SegmentManifest.SingleDriverConfKey, true)
-    // RawLocalFileSystem, not LocalFileSystem: the Filter wrapper
-    // delegates getConf to the WRAPPED fs, so setConf on the wrapper
-    // never reaches what publisherFor reads
-    val optedIn = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def getScheme: String = "s3a"
-    }
-    optedIn.setConf(conf)
-    assert(SegmentManifest.publisherFor(optedIn) eq
-      SegmentManifest.SingleDriverPublisher)
-    // the opt-in stays reachable for abfs too — a NON-HNS blob
-    // account's rename is not atomic, and the allowlist must not
-    // silently strand that configuration without the escape hatch
-    val abfsOptedIn = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def getScheme: String = "abfs"
-    }
-    abfsOptedIn.setConf(conf)
-    assert(SegmentManifest.publisherFor(abfsOptedIn) eq
-      SegmentManifest.SingleDriverPublisher)
-  }
-
-  test("SingleDriverPublisher cleans a torn dst when the copy fails " +
-      "mid-publish: the generation slot stays clean and a retry " +
-      "seals it — never a torn manifest poisoning latest()") {
-    val dir = scratch("smf_torn").toString
-    val f = fs(dir)
-    f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_gen"))
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/_gen/m000000001")
-    val missingTmp =
-      new org.apache.hadoop.fs.Path(s"$dir/_gen/.m1.nosuch.tmp")
-    def lost(d: String) = new IllegalStateException(d)
-    intercept[java.io.IOException] {
-      SegmentManifest.SingleDriverPublisher.publish(f, missingTmp,
-        dst, lost)
-    }
-    assert(!f.exists(dst),
-      "a failed copy left a torn dst occupying the generation slot")
-    // the retry finds a clean slot and the sealed manifest parses
-    val m = SegmentManifest.Manifest(1,
-      Map("cells" -> Seq(SegmentManifest.Entry(4, "centroid_id=4"))))
-    SegmentManifest.seal(spark, dir, m,
-      Some(SegmentManifest.SingleDriverPublisher))
-    assert(SegmentManifest.latest(spark, dir).get
-      .entries("cells").map(_.seg) == Seq(4))
-  }
-
-  test("SingleDriverPublisher: two sealers racing in one JVM — " +
-      "exactly one wins, the loser collides loudly, the winner's " +
-      "manifest survives parseable") {
-    val dir = scratch("smf_sdrv").toString
-    val f = fs(dir)
-    f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    f.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val mA = SegmentManifest.Manifest(1,
-      Map("cells" -> Seq(SegmentManifest.Entry(0, "centroid_id=0"))))
-    val mB = SegmentManifest.Manifest(1,
-      Map("cells" -> Seq(SegmentManifest.Entry(7, "centroid_id=7"))))
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val outcomes =
-      new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Int]]()
-    val ts = Seq(mA -> 0, mB -> 7).map { case (m, tag) =>
-      new Thread(() => {
-        gate.await()
-        try {
-          SegmentManifest.seal(spark, dir, m,
-            Some(SegmentManifest.SingleDriverPublisher))
-          outcomes.add(Right(tag)); ()
-        } catch { case t: Throwable => outcomes.add(Left(t)); () }
-      })
-    }
-    ts.foreach(_.start()); gate.countDown(); ts.foreach(_.join())
-    val (losers, winners) =
-      (scala.jdk.CollectionConverters
-        .CollectionHasAsScala(outcomes).asScala.toSeq
-        .partition(_.isLeft))
-    assert(winners.size == 1 && losers.size == 1,
-      s"expected exactly one winner, got $winners / $losers")
-    val loser = losers.head.left.toOption.get
-    assert(loser.getMessage.contains("concurrent writer"),
-      s"wrong loser error: $loser")
-    val sealedSeg = SegmentManifest.latest(spark, dir).get
-      .entries("cells").map(_.seg)
-    assert(sealedSeg == Seq(winners.head.toOption.get),
-      s"sealed composition $sealedSeg is not the winner's")
-    // and a later sequential re-seal of the same generation still
-    // collides (the exists check, not just the in-flight lock)
-    val e = intercept[IllegalStateException] {
-      SegmentManifest.seal(spark, dir, mB,
-        Some(SegmentManifest.SingleDriverPublisher))
-    }
-    assert(e.getMessage.contains("concurrent writer"), s"wrong: $e")
-  }
-
-  test("SingleDriverPublisher: an exclusive-create refusal (a " +
-      "contract-violating cross-JVM sealer won between the exists " +
-      "check and the create) surfaces as a LOST seal and never " +
-      "deletes the other writer's validly sealed manifest") {
-    val dir = scratch("smf_xjvm").toString
-    val f = fs(dir)
-    f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_gen"))
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/_gen/m000000001")
-    // the OTHER JVM's sealed manifest, already on disk
-    val theirs = "gen=1\ncells\t9\tcentroid_id=9\n"
-    val o = f.create(dst, true)
-    try o.write(theirs.getBytes("UTF-8")) finally o.close()
-    // ours, fully staged
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_gen/.m1.ours.tmp")
-    val t = f.create(tmp, true)
-    try t.write("gen=1\ncells\t0\tcentroid_id=0\n".getBytes("UTF-8"))
-    finally t.close()
-    // an fs whose exists() lies about dst (the cross-JVM race window
-    // where the other sealer lands between our check and our create)
-    // and whose exclusive create then refuses like a real store would
-    val racing = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def exists(p: org.apache.hadoop.fs.Path): Boolean =
-        if (p.getName == dst.getName) false else super.exists(p)
-      override def create(p: org.apache.hadoop.fs.Path,
-          overwrite: Boolean): org.apache.hadoop.fs.FSDataOutputStream =
-        if (!overwrite && p.getName == dst.getName)
-          throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-            s"File already exists: $p")
-        else super.create(p, overwrite)
-    }
-    racing.setConf(spark.sparkContext.hadoopConfiguration)
-    racing.initialize(java.net.URI.create("file:///"),
-      spark.sparkContext.hadoopConfiguration)
-    def lost(d: String) =
-      new IllegalStateException(s"concurrent writer: $d")
-    val e = intercept[IllegalStateException] {
-      SegmentManifest.SingleDriverPublisher.publish(racing, tmp, dst,
-        lost)
-    }
-    assert(e.getMessage.contains("concurrent writer"), s"wrong: $e")
-    // the collision stayed loud AND the other writer's manifest is
-    // bit-intact — the old catch-all cleanup deleted it here,
-    // converting the collision into a silent lost update
-    val in = f.open(dst)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    assert(txt == theirs,
-      s"the other writer's sealed manifest was damaged: <$txt>")
-  }
-
-  test("abfs namespace probe: a connector exposing " +
-      "getIsNamespaceEnabled=false fails fast (non-HNS rename is not " +
-      "atomic), true rides the rename publisher, and an absent probe " +
-      "falls back to the named presumption") {
-    class AbfsLike extends org.apache.hadoop.fs.RawLocalFileSystem {
-      override def getScheme: String = "abfs"
-    }
-    val nonHns = new AbfsLike {
-      def getIsNamespaceEnabled: Boolean = false
-    }
-    val e = intercept[UnsupportedOperationException] {
-      SegmentManifest.publisherFor(nonHns)
-    }
-    assert(e.getMessage.contains("hierarchical namespace"), s"got $e")
-    val hns = new AbfsLike {
-      def getIsNamespaceEnabled: Boolean = true
-    }
-    assert(SegmentManifest.publisherFor(hns) eq
-      SegmentManifest.HdfsRenamePublisher)
-    // no probe method at all → warning path, rename publisher
-    assert(SegmentManifest.publisherFor(new AbfsLike) eq
-      SegmentManifest.HdfsRenamePublisher)
-    // and the single-driver opt-in still bypasses the probe entirely
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.setBoolean(SegmentManifest.SingleDriverConfKey, true)
-    val optedIn = new AbfsLike {
-      def getIsNamespaceEnabled: Boolean = false
-    }
-    optedIn.setConf(conf)
-    assert(SegmentManifest.publisherFor(optedIn) eq
-      SegmentManifest.SingleDriverPublisher)
-  }
-
-  test("ConditionalPutPublisher: TWO publisher instances (two driver " +
-      "JVMs — no shared lock) racing through an atomic store — " +
-      "exactly one wins, the loser collides loudly, the winner's " +
-      "manifest reads back; through a deliberately NON-atomic " +
-      "check-then-put store BOTH win (the cross-driver lost update " +
-      "the store's conditional put exists to prevent)") {
-    val dir = scratch("smf_condput").toString
-    val f = fs(dir)
-    f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    f.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    MemCondPutStore.arbiter.clear()
-    val mA = SegmentManifest.Manifest(1,
-      Map("cells" -> Seq(SegmentManifest.Entry(0, "centroid_id=0"))))
-    val mB = SegmentManifest.Manifest(1,
-      Map("cells" -> Seq(SegmentManifest.Entry(7, "centroid_id=7"))))
-    // two INSTANCES — unlike SingleDriverPublisher there is no JVM
-    // lock to share; exclusion must come from the store alone
-    val pubA = new SegmentManifest.ConditionalPutPublisher(
-      new MemCondPutStore)
-    val pubB = new SegmentManifest.ConditionalPutPublisher(
-      new MemCondPutStore)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val outcomes = new java.util.concurrent
-      .ConcurrentLinkedQueue[Either[Throwable, Int]]()
-    val ts = Seq((mA, pubA, 0), (mB, pubB, 7)).map { case (m, p, tag) =>
-      new Thread(() => {
-        gate.await()
-        try {
-          SegmentManifest.seal(spark, dir, m, Some(p))
-          outcomes.add(Right(tag)); ()
-        } catch { case t: Throwable => outcomes.add(Left(t)); () }
-      })
-    }
-    ts.foreach(_.start()); gate.countDown(); ts.foreach(_.join())
-    val (losers, winners) = scala.jdk.CollectionConverters
-      .CollectionHasAsScala(outcomes).asScala.toSeq.partition(_.isLeft)
-    assert(winners.size == 1 && losers.size == 1,
-      s"expected exactly one winner, got $winners / $losers")
-    assert(losers.head.left.toOption.get.getMessage
-      .contains("concurrent writer"))
-    assert(SegmentManifest.latest(spark, dir).get
-      .entries("cells").map(_.seg) ==
-        Seq(winners.head.toOption.get))
-    // and a later re-seal of the same generation from a THIRD
-    // "driver" still collides — the arbiter remembers
-    val e = intercept[IllegalStateException] {
-      SegmentManifest.seal(spark, dir, mB,
-        Some(new SegmentManifest.ConditionalPutPublisher(
-          new MemCondPutStore)))
-    }
-    assert(e.getMessage.contains("concurrent writer"), s"wrong: $e")
-
-    // the NON-atomic fake: check-then-put with a barrier holding both
-    // drivers inside the window between the check and the put — what
-    // a best-effort exists()+PUT against a raw object store actually
-    // is. BOTH sealers "win": the lost update, deterministically.
-    val dir2 = scratch("smf_condput2").toString
-    f.delete(new org.apache.hadoop.fs.Path(dir2), true)
-    f.mkdirs(new org.apache.hadoop.fs.Path(dir2))
-    val window = new java.util.concurrent.CyclicBarrier(2)
-    class NonAtomicStore extends SegmentManifest.PutIfAbsentStore {
-      def putIfAbsent(dst: org.apache.hadoop.fs.Path,
-                      bytes: Array[Byte]): Boolean = {
-        val p = java.nio.file.Paths.get(dst.toUri.getPath)
-        if (java.nio.file.Files.exists(p)) false
-        else {
-          window.await(5, java.util.concurrent.TimeUnit.SECONDS)
-          java.nio.file.Files.write(p, bytes) // plain PUT, no condition
-          true
-        }
+    // ADLS schemes fail fast like any other object store
+    for (scheme <- Seq("abfs", "abfss")) {
+      val adls = new org.apache.hadoop.fs.LocalFileSystem() {
+        override def getScheme: String = scheme
       }
+      val ea = intercept[UnsupportedOperationException] {
+        SegmentManifest.publisherFor(adls)
+      }
+      assert(ea.getMessage.contains("atomic rename-if-absent") &&
+        ea.getMessage.contains(scheme), s"wrong: $ea")
     }
-    val outcomes2 = new java.util.concurrent
-      .ConcurrentLinkedQueue[Either[Throwable, Int]]()
-    val gate2 = new java.util.concurrent.CountDownLatch(1)
-    val ts2 = Seq((mA, 0), (mB, 7)).map { case (m, tag) =>
-      new Thread(() => {
-        gate2.await()
-        try {
-          SegmentManifest.seal(spark, dir2, m,
-            Some(new SegmentManifest.ConditionalPutPublisher(
-              new NonAtomicStore)))
-          outcomes2.add(Right(tag)); ()
-        } catch { case t: Throwable => outcomes2.add(Left(t)); () }
-      })
-    }
-    ts2.foreach(_.start()); gate2.countDown(); ts2.foreach(_.join())
-    val bothWon = scala.jdk.CollectionConverters
-      .CollectionHasAsScala(outcomes2).asScala.toSeq
-    assert(bothWon.count(_.isRight) == 2,
-      s"expected the non-atomic store to demonstrate the lost " +
-        s"update (both sealers succeed), got $bothWon")
-  }
-
-  test("conditional-put conf-key wiring: the named adapter resolves " +
-      "for raw object-store schemes (taking precedence over the " +
-      "single-driver opt-in and the non-HNS abfs fail-fast), receives " +
-      "the fs conf when Configurable, and a non-adapter class fails " +
-      "loudly") {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.set(SegmentManifest.CondPutConfKey,
-      classOf[MemCondPutStore].getName)
-    conf.setBoolean(SegmentManifest.SingleDriverConfKey, true)
-    val s3 = new org.apache.hadoop.fs.RawLocalFileSystem() {
+    // a stale deployment conf naming the retired opt-in keys gets no
+    // silent non-exclusive seal: the scheme alone decides
+    val stale = new org.apache.hadoop.conf.Configuration(false)
+    stale.set("graft.seal.singledriver", "true")
+    stale.set("graft.seal.condput.store",
+      "graft.operators.SegmentManifest$AtomicCreateStore")
+    val s3Stale = new org.apache.hadoop.fs.RawLocalFileSystem() {
       override def getScheme: String = "s3a"
     }
-    s3.setConf(conf)
-    // Configurable adapters get the fs conf at creation (how a real
-    // adapter finds its table name / endpoint)
-    SegmentManifest.condPutReset()
-    MemCondPutStore.lastConf = null
-    val resolved = SegmentManifest.publisherFor(s3)
-    assert(resolved.isInstanceOf[SegmentManifest.ConditionalPutPublisher],
-      s"expected the conditional-put adapter to win precedence, " +
-        s"got $resolved")
-    assert(MemCondPutStore.lastConf eq s3.getConf,
-      "Configurable adapter did not receive the FileSystem's conf")
-    // ONE instance per class per JVM — a streaming loop resolving the
-    // publisher every seal must not rebuild the adapter's store client
-    assert(SegmentManifest.condPutPublisher(s3).get eq resolved,
-      "adapter instance was rebuilt on re-resolution")
-    // the non-HNS abfs account reaches it too
-    val abfsNonHns = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def getScheme: String = "abfs"
-      def getIsNamespaceEnabled: Boolean = false
+    s3Stale.setConf(stale)
+    val es = intercept[UnsupportedOperationException] {
+      SegmentManifest.publisherFor(s3Stale)
     }
-    abfsNonHns.setConf(conf)
-    assert(SegmentManifest.publisherFor(abfsNonHns)
-      .isInstanceOf[SegmentManifest.ConditionalPutPublisher])
-    // a class that is not a PutIfAbsentStore is a loud config error,
-    // not a silent fall-through to fail-fast
-    val bad = new org.apache.hadoop.conf.Configuration(false)
-    bad.set(SegmentManifest.CondPutConfKey,
-      classOf[NotACondPutStore].getName)
-    val s3bad = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def getScheme: String = "s3a"
-    }
-    s3bad.setConf(bad)
-    val e = intercept[IllegalArgumentException] {
-      SegmentManifest.publisherFor(s3bad)
-    }
-    assert(e.getMessage.contains("does not implement"), s"wrong: $e")
-  }
-
-  test("AtomicCreateStore (the reference conf-key adapter): resolves " +
-      "from graft.seal.condput.store by class name for a raw " +
-      "object-store scheme, seals a real manifest through the real " +
-      "FileSystem, reads back intact, and a second sealer of the " +
-      "same generation collides loudly on the store's refusal") {
-    val dir = scratch("smf_atomiccreate").toString
-    val f = fs(dir)
-    f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    f.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    SegmentManifest.condPutReset()
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.set(SegmentManifest.CondPutConfKey,
-      classOf[SegmentManifest.AtomicCreateStore].getName)
-    val s3 = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def getScheme: String = "s3a"
-    }
-    s3.setConf(conf)
-    val resolved = SegmentManifest.publisherFor(s3)
-    assert(resolved
-      .isInstanceOf[SegmentManifest.ConditionalPutPublisher],
-      s"conf-key resolution failed for the reference adapter: " +
-        s"$resolved")
-    val m = SegmentManifest.Manifest(1,
-      Map("cells" -> Seq(SegmentManifest.Entry(4, "centroid_id=4"))))
-    SegmentManifest.seal(spark, dir, m, Some(resolved))
-    assert(SegmentManifest.latest(spark, dir).get
-        .entries("cells").map(_.seg) == Seq(4),
-      "manifest sealed through the adapter did not read back")
-    // a second sealer of the same generation loses on the store's own
-    // conditional refusal — no JVM lock involved
-    val e = intercept[IllegalStateException] {
-      SegmentManifest.seal(spark, dir,
-        m.copy(layouts = Map("cells" ->
-          Seq(SegmentManifest.Entry(9, "centroid_id=9")))),
-        Some(resolved))
-    }
-    assert(e.getMessage.contains("conditional put refused"),
-      s"wrong collision message: $e")
-    // and the WINNER's composition survived the collision
-    assert(SegmentManifest.latest(spark, dir).get
-      .entries("cells").map(_.seg) == Seq(4))
+    assert(es.getMessage.contains("atomic rename-if-absent") &&
+      es.getMessage.contains("s3a"), s"wrong: $es")
+    // and local filesystems hard-link
+    assert(SegmentManifest.publisherFor(
+      new org.apache.hadoop.fs.LocalFileSystem()) eq
+      SegmentManifest.PosixLinkPublisher)
   }
 
   test("read() schema inference recurses one level: a member whose " +

@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard on the dev-tool surface, no Spark: every object under
+/** Source guards on the engine's surface, no Spark. Every object under
   * `src/main/scala/graft/tools` is named where someone finds and runs
   * it — the README, a skill recipe, or a spec. A one-off probe whose
   * findings live only in a ledger belongs in that ledger, not in main
-  * code. */
+  * code. And main code reads no `graft.*` config key: a new one must
+  * be an explicit edit of the literal allowlist below. */
 class ToolsSurfaceSpec extends AnyFunSuite {
 
   private def scalaFiles(root: Path): Seq[Path] =
@@ -50,5 +51,18 @@ class ToolsSurfaceSpec extends AnyFunSuite {
     }
     assert(unnamed.isEmpty,
       s"tools named nowhere a reader would find them: ${unnamed.mkString(", ")}")
+  }
+
+  test("the only \"graft.\" string literals under src/main are the " +
+      "step label key and the codegen'd normalize call: no config key") {
+    val literal = """"(graft\.[\w.]*)""".r
+    val found = scalaFiles(Paths.get("src/main/scala"))
+      .flatMap(f =>
+        literal.findAllMatchIn(Files.readString(f)).map(_.group(1)))
+      .toSet
+    val allowed = Set("graft.step", "graft.functions.NormalizeText.normalize")
+    assert(found == allowed,
+      s"graft.* literal surface drifted: unexpected=${found -- allowed} " +
+        s"gone=${allowed -- found}")
   }
 }
